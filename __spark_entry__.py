@@ -1491,6 +1491,7 @@ def q_ann_ivfpq_topk(spark, sf):
     trained, measured via ann_recall_at_k, where ivfpq is now a
     row)."""
     from concurrent.futures import ThreadPoolExecutor
+    from lswms_forage_etl_spark.lifecycle import await_staged
     from lswms_forage_etl_spark.operators.similarity import (
         ivf_probe_lists, ivfpq_topk, pq_train_codebook_dist)
     emb = _t(spark, sf, "embeddings")
@@ -1507,8 +1508,10 @@ def q_ann_ivfpq_topk(spark, sf):
         f_lists = pool.submit(
             lambda: ivf_probe_lists(emb, f_qv.result(), 16, 4))
         qv, cb, lists = f_qv.result(), f_cb.result(), f_lists.result()
-    return ivfpq_topk(emb, qv, k=10, probes=4, rerank_mult=8,
-                      codebook=cb, lists=lists)
+    out = ivfpq_topk(emb, qv, k=10, probes=4, rerank_mult=8,
+                     codebook=cb, lists=lists)
+    await_staged(lists)   # as in ann_recall_at_k: no cold-cache consumers
+    return out
 
 
 def q_ann_pq_trained(spark, sf):

@@ -191,7 +191,7 @@ def _train_loop(docs, k: int, text_col: str, need_final: bool):
     word table with ALL k merges applied (else the k-th merge is
     skipped: the merges output doesn't need it)."""
     from pyspark.sql import functions as F
-    from lswms_forage_etl_spark.operators.dedup import _ckpt_tracked
+    from lswms_forage_etl_spark.lifecycle import stage_table
 
     words = _word_frequencies(docs, text_col)
     # STAGE the word table and every iteration state (round-11 audit
@@ -202,11 +202,11 @@ def _train_loop(docs, k: int, text_col: str, need_final: bool):
     # (vocab is tiny). Checkpoint truncation makes each iteration read
     # the previous state ONCE: 1 corpus scan, ~2 jobs/iteration, flat
     # at any corpus size.
-    cur = _ckpt_tracked(words.select(
+    cur = stage_table(words.select(
         F.expr("concat('||', array_join(transform(sequence(1, "
                "length(word)), i -> substring(word, i, 1)), '||'), '||')")
         .alias("w"),
-        "n"))
+        "n"), checkpoint=True)
     tops = []
     for it in range(1, k + 1):
         # bind the symbol array to an attribute FIRST: element_at over
@@ -225,18 +225,18 @@ def _train_loop(docs, k: int, text_col: str, need_final: bool):
         # the 1-row winner feeds the output union AND the next merge:
         # eager checkpoint (one tiny job) or both consumers re-run the
         # pair aggregation
-        top = _ckpt_tracked(
+        top = stage_table(
             pc.orderBy(F.col("cnt").desc(), "pair").limit(1)
             .select(F.lit(it).alias("iter"), "pair",
                     F.replace("pair", F.lit("|"), F.lit(""))
                     .alias("new_symbol"),
                     F.col("cnt").cast("long").alias("pair_count")),
-            eager=True)
+            checkpoint=True, sync=True)
         tops.append(top)
         if it < k or need_final:
             # match '|a||b|' (one '|' borrowed from each flanking '||'),
             # emit '|ab|' — the outer retained '|'s restore the '||'
-            cur = _ckpt_tracked(
+            cur = stage_table(
                 cur.crossJoin(F.broadcast(
                     top.select(F.col("pair").alias("_mp"))))
                 .select(F.replace(
@@ -247,7 +247,7 @@ def _train_loop(docs, k: int, text_col: str, need_final: bool):
                     F.concat(F.lit("|"),
                              F.replace("_mp", F.lit("|"), F.lit("")),
                              F.lit("|"))).alias("w"),
-                    "n"))
+                    "n"), checkpoint=True)
     return tops, cur
 
 

@@ -1,34 +1,101 @@
-"""Stage-table lifecycle: deterministic release of persisted intermediates.
+"""Stage tables: the one way to materialize an intermediate, and the
+deterministic release of everything materialized.
 
-Operators that self-join a derived table MUST materialize it first (the
-measured double-eval hazards in `operators/dedup.py` / `similarity.py`),
-but a lazily-returned result means the operator cannot unpersist before
-the caller's consuming action. The contract (VERDICT r4 item 6):
+The forage dataflow hands named tables from stage to stage; in this
+engine each hand-off is a stage table. `stage_table(df, checkpoint=,
+sync=)` makes one and tracks it. The caller runs its consuming action,
+then calls `release_tracked()`, which frees every table tracked since
+the previous call (the release window). `free(df)` frees one table
+early. `assert_no_cached_rdds(spark)` fails anything that skipped
+tracking: the oracle gate calls it after every query.
 
-- every operator/query persist() (and localCheckpoint cleanup) is
-  registered with `track(...)` at the call site;
-- the caller runs its consuming action, then calls `release_tracked()`;
-- `assert_no_cached_rdds(spark)` verifies nothing leaked — the oracle
-  gate calls it after every query, so a persist that skipped track()
-  fails the gate, not a long-lived production session.
+Which job materializes a stage table (est = Catalyst's size estimate of
+the subtree, against `EAGER_STATS_THRESHOLD_BYTES`):
 
-A module-level registry (not per-DataFrame attachment) is deliberate:
-attachments on a DataFrame are lost by ANY derivation (`.where`,
-`.select`), which is exactly how persists leak. The registry is scoped
-to "since the last release" — callers interleaving independent
-pipelines should release at their own pipeline boundaries.
+    storage \\ job   sync (blocks)    background count   no job
+    --------------  ---------------  -----------------  -------------------
+    cache           est >= 8 MiB,    est < 8 MiB,       `stage_lazy` link
+                    or sync=True     or sync=False      of a counted chain
+    checkpoint      est >= 8 MiB,    (none)             est < 8 MiB,
+                    or sync=True                        or sync=False
 
-At 100 TB scale these persists become parquet stage tables with explicit
-TTLs; this module is the local-mode equivalent of that discipline.
+Why, as measured:
+
+- A cache is always counted. A lazily persisted table reports its
+  CHILD plan's estimate to the join planner, and for expression-
+  expanded derivations that is far too low: at the 100x slice the
+  banded LSH self-join planned a ~2 GB broadcast and aborted (round 5);
+  at sf0.1 a 255 KB estimate broadcast a ~50 MB shingle table
+  (text_contamination 2.3 s lazy vs 1.1 s counted). After the count
+  the planner sees the real size, as with a written parquet table.
+- A checkpoint (localCheckpoint) also cuts lineage. Consumers analyze a
+  LogicalRDD instead of the subtree (persisted, dedup_clusters spent
+  1.6 s and simhash 1.85 s building their queries), and its unknown
+  size is never broadcast, so a lazy checkpoint tells no stats lie.
+  Its blocks live on its own RDD, which DataFrame.unpersist() and
+  clearCache() cannot reach, so it is freed by that RDD's id.
+- Sync or not follows the estimate. Below 8 MiB a count runs in the
+  background, overlapping the caller's py4j plan construction
+  (dedup_lsh_pairs 1.28 s sync vs ~1.0 s async at sf0.1); planning
+  reads the stats at the caller's action, after the short count lands,
+  and a table big enough to hurt when mis-broadcast has a child
+  estimate above the broadcast threshold anyway. From 8 MiB the job
+  blocks: it is long, and consumers racing a cold table each re-run its
+  subtree (AQE's concurrent stages: 13 parquet re-scans; at 100x
+  text_contamination 27.4 s lazy vs 12.5 s eager, text_eval_overlap
+  20.9 s async vs 12.0 s sync). A small checkpoint runs no job: at
+  sf0.1 that race costs less than a serialized job (lazy ahead by
+  ~0.2 s; forcing eager cost the LSH family 50-70 %). The LSH base
+  table estimates 255 KB at sf0.1, 2.6 MB at 10x and 30.6 MB at 100x;
+  an unknown size (Long.MaxValue) lands on sync.
+- Counts are ordered per driver thread: none starts before the counts
+  submitted earlier on the same thread have finished. A child staged
+  from a parent whose count is still running would otherwise re-run
+  the parent's whole subtree (r15: four duplicate ~8 s 5-gram explode
+  stages behind text_perplexity_kn5), while the chain still overlaps
+  construction (a sync chain cost +0.7 s at sf0.1). Chains on different
+  driver threads run side by side.
+- `stage_lazy` links (no job) are the interior of a chain whose tail is
+  a counted stage_table: one count of the tail caches every link
+  (kn5's c5 -> cont4 -> cont3 -> cont2: 4 jobs -> 1). It is safe only
+  if the tail's count lands before anything plans against the link and
+  no join is planned in between. A link stays pending for its driver
+  thread until a later stage_table count on that thread lands, and
+  `assert_no_unresolved_lazy` (the oracle gate) fails links left
+  pending. That check is post hoc: a join planned against a link
+  before the tail's count lands goes unseen. Plain reuse caches that
+  need no stats stay `track(df.persist())`.
+- `await_staged(df)` blocks until df's background count has landed.
+  Call it when the returned plan has many concurrent consumers of the
+  table: each consumer of a cold cache recomputes it (r15: ~50 s of
+  duplicated executor work behind kn5's ten broadcast builds).
+
+The registries below live in the module, not on DataFrames, because
+any derivation (`.where`, `.select`) drops an attachment, which is how
+persists leak. Every driver thread shares them; they are read and
+written only under `_LOCK`. At 100 TB scale a stage table becomes a
+parquet table with a TTL; this module is the local-mode equivalent.
 """
 
 from __future__ import annotations
 
+import threading
 from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
-_TRACKED: list = []
+EAGER_STATS_THRESHOLD_BYTES = 8 << 20
+"""Size estimate from which a stage table's job blocks (module doc)."""
+
+COUNT_TIMEOUT_S = 600
+"""How long any join on a background count waits."""
+
+_LOCK = threading.Lock()
+_TRACKED: list = []                     # freed by the next release
+_COUNTS: dict[int, threading.Thread] = {}          # id(table) -> count
+_TAIL: dict[threading.Thread, threading.Thread] = {}  # thread -> last count
+_LAZY_PENDING: dict[threading.Thread, dict[int, str]] = {}
+"""driver thread -> {id(stage_lazy table): plan name} not yet covered."""
 
 H = TypeVar("H")
 
@@ -37,30 +104,42 @@ def track(handle: H) -> H:
     """Register a persisted DataFrame (or a zero-arg cleanup callable)
     for release at the caller's next release_tracked(). Returns the
     handle so persists chain inline:  sig = track(df.persist())."""
-    _TRACKED.append(handle)
+    with _LOCK:
+        _TRACKED.append(handle)
     return handle
 
 
 def release_tracked() -> int:
-    """Unpersist every tracked stage table / run every tracked cleanup,
-    oldest first. Returns the number of handles released. Idempotent —
-    unpersisting an already-released table is a no-op."""
+    """Wait for in-flight counts, then free every tracked table and run
+    every tracked cleanup, oldest first. Returns the number released.
+    Idempotent: freeing a table twice is a no-op."""
+    with _LOCK:
+        handles, counts = list(_TRACKED), list(_COUNTS.values())
+        for reg in (_TRACKED, _COUNTS, _TAIL, _LAZY_PENDING):
+            reg.clear()
+    for t in counts:
+        t.join(COUNT_TIMEOUT_S)
     n = 0
-    for h in _TRACKED:
+    for h in handles:
         try:
-            if isinstance(h, DataFrame):
-                h.unpersist()
-            elif callable(h):
-                h()
+            free(h)
             n += 1
         except Exception:  # noqa: BLE001 — release must never mask results
             pass
-    _TRACKED.clear()
-    # pending-lazy entries die with their query's lifecycle window —
-    # without this, bench runs (which never assert) would accumulate
-    # stale ids across queries
-    _LAZY_PENDING.clear()
     return n
+
+
+def free(h) -> None:
+    """Free one tracked table (or run one cleanup) now instead of at
+    release_tracked(): a superseded loop round, a finished batch."""
+    with _LOCK:
+        _TRACKED[:] = [x for x in _TRACKED if x is not h]
+    if not isinstance(h, DataFrame):
+        h()
+    elif h.is_cached:
+        h.unpersist()
+    else:  # a checkpoint: free its own RDD
+        h._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:
@@ -69,16 +148,6 @@ def persistent_rdd_ids(spark: SparkSession) -> set[int]:
     which `spark.catalog.clearCache()` does NOT touch)."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     return {int(k) for k in jmap.keySet().toArray()}
-
-
-def unpersist_rdd_ids(spark: SparkSession, ids: set[int]) -> None:
-    """Drop cached blocks for the given RDD ids (no-op for ids already
-    cleaned). Used to free superseded localCheckpoint rounds, which have
-    no DataFrame-level unpersist handle."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for k in list(jmap.keySet().toArray()):
-        if int(k) in ids:
-            jmap.get(k).unpersist(False)
 
 
 def assert_no_cached_rdds(spark: SparkSession, context: str = "") -> None:
@@ -92,227 +161,91 @@ def assert_no_cached_rdds(spark: SparkSession, context: str = "") -> None:
             f"registered via lifecycle.track()")
 
 
-EAGER_STATS_THRESHOLD_BYTES = 8 << 20
-"""Estimated-size gate for eager materialization (round-7 adaptive rule).
-
-Both eager-materialization hazards are SCALE hazards, so the decision is
-made from the subtree's Catalyst size estimate instead of a constant:
-
-- a lazily-persisted stage table reports its CHILD plan's estimate to
-  the join planner, and for expression-expanded derivations that lie
-  planned a ~2 GB broadcast at the 100x slice (round-5 lesson) — but a
-  lie about a table that is genuinely tiny picks the same plan eager
-  stats would;
-- AQE's concurrently-submitted exchange stages race a lazy cache's
-  first materialization and each re-evaluate the subtree (13 parquet
-  re-scans measured) — dominant at 100x (text_contamination 27.4 s lazy
-  vs 12.5 s eager) yet cheaper than the serialized eager construction
-  job at sf0.1, where the round-6 A/B put lazy AHEAD by ~0.2 s.
-
-Measured estimates for the LSH base table: 255 KB at sf0.1, 2.6 MB at
-the 10x slice, 30.6 MB at 100x. 8 MiB splits the regimes with margin on
-both sides; Catalyst's unknown-size default (spark.sql.defaultSizeInBytes
-= Long.MaxValue, e.g. LogicalRDD-rooted lineage) lands on eager, the
-safe at-scale choice."""
-
-
-def plan_size_estimate(df: DataFrame) -> int:
-    """Catalyst's optimized-plan size estimate in bytes (file-scan sizes
-    scaled through projections/filters; Long.MaxValue when unknown)."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats()
-               .sizeInBytes())
-
-
-def should_materialize_eagerly(df: DataFrame) -> bool:
-    """The round-7 adaptive eager/lazy rule (see
-    EAGER_STATS_THRESHOLD_BYTES)."""
-    return plan_size_estimate(df) >= EAGER_STATS_THRESHOLD_BYTES
-
-
-_COUNT_THREADS: dict[int, object] = {}
-"""id(staged df) -> its in-flight async count thread (r15). Cleared by
-release_tracked() via the tracked join callables; entries are only read
-by stage_table(after=...) within one operator's construction window."""
-
-_LAZY_PENDING: dict[int, str] = {}
-"""id(stage_lazy df) -> short plan description, while the lazy link has
-NOT yet been covered by a downstream counted stage_table (r16, VERDICT
-r15 item 7). stage_lazy's safety is a calling convention — no join may
-be planned against an uncounted interior link (the round-5 stats-lie
-hazard) and a counted chain tail must materialize it — and this registry
-makes the second half programmatic: a stage_lazy link that no subsequent
-stage_table count ever covers stays pending, and the oracle gate fails
-the query (`assert_no_unresolved_lazy`). Coverage is lexical: a
-stage_table call snapshots the currently-pending ids and clears them
-when its count LANDS (the count job materializes every ancestor cache;
-all current call sites stage their lazies immediately before their chain
-tail). The in-between hazard — a join planned against a pending link
-before the tail count lands — is a planning-time event this post-hoc
-check cannot see; the backstop enforces the structural half of the
-contract."""
-
-
-def stage_table(df: DataFrame, sync: bool | None = None,
-                after: DataFrame | None = None) -> DataFrame:
-    """Persist + EAGERLY materialize + track a stage table.
-
-    Eager, not lazy, because materialization points must carry accurate
-    statistics: a lazily-persisted table's InMemoryRelation reports its
-    CHILD plan's estimate at planning time, and for expression-expanded
-    derivations (banded LSH signatures: small parquet text -> millions
-    of hash rows) that estimate is far below the real size — measured at
-    the 100x slice, the banded self-join chose a broadcast whose build
-    side needed ~2 GB and aborted the job. After an eager materialize
-    the join planner sees the cached table's REAL size and picks
-    broadcast vs shuffle correctly at every scale, which is exactly how
-    a parquet/Delta stage table behaves on a cluster (written once,
-    stats known). The extra action costs one job whose work would have
-    run anyway at first consumption.
-
-    Unlike `_ckpt_tracked` (operators/dedup.py), this stays eager at
-    EVERY scale: the round-7 A/B that made checkpoints adaptive also
-    measured lazy stage tables LOSING at sf0.1 (text_contamination
-    1.1 s eager vs 2.3 s lazy) — with a lazy persist the
-    InMemoryRelation's child-derived estimate (255 KB) sat under the
-    broadcast threshold, so the planner BROADCAST the ~50 MB-real
-    shingle table into each consumer join.
-
-    Whether the count BLOCKS is scale-adaptive (same estimate gate as
-    `_ckpt_tracked`): below the threshold it runs on a BACKGROUND
-    thread — cluster-side work while the caller's next ~0.5 s is
-    driver-side py4j plan construction, so overlapping hides the count
-    entirely (measured: dedup_lsh_pairs 1.28 s sync vs ~1.0 s async at
-    sf0.1). Above the threshold it blocks: there the count is LONG
-    (the subtree is the expensive part) and the caller's consumers
-    reach their action while the cache is still materializing — the
-    racing evaluations cost more than the serialization (measured:
-    text_eval_overlap at the 100x slice, 12.0 s sync vs 20.9 s async).
-    For the async path, stats stay correct for planning because
-    physical planning (where the join planner reads IMR stats) happens
-    at the caller's ACTION, after the short count lands; a mis-planned
-    lost race is bounded — a table big enough for a mis-broadcast to
-    hurt has a child estimate above the broadcast threshold, so the
-    stale estimate still picks the safe shuffle plan. The thread
-    handle is tracked so release_tracked() joins it before unpersist.
-
-    `after` (r15): CHAINED stage tables — when this table DERIVES from
-    another staged table, two independent async counts race and the
-    child's count re-evaluates the parent's whole subtree from source
-    (the round-6 lazy-race lesson, stage_table-chain variant: the r15
-    stage probe measured FOUR duplicate ~8 s 5-gram explode stages
-    behind text_perplexity_kn5). Passing the parent handle makes this
-    table's count wait for the parent's count first, so each chain link
-    reads its parent's materialized cache: no duplicated work (the
-    at-scale / low-core-count win) and no driver serialization (a
-    sync=True chain measured +0.7 s at sf0.1 — the counts' job walls
-    serialize into the query wall)."""
-    import threading
-
-    out = df.persist()
+def stage_table(df: DataFrame, *, checkpoint: bool = False,
+                sync: bool | None = None) -> DataFrame:
+    """Materialize `df` as a cache (or a checkpoint) and track it. The
+    job follows the module docstring's table; `sync` overrides the
+    size estimate."""
     if sync is None:
-        sync = should_materialize_eagerly(df)
-    # this count covers every CURRENTLY-pending stage_lazy link (all
-    # call sites stage interior links immediately before their chain
-    # tail, so the pending set is exactly this chain's ancestors)
-    covered = list(_LAZY_PENDING)
-    if sync:
-        track(out)
-        out.count()
-        for k in covered:
-            _LAZY_PENDING.pop(k, None)
+        est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        sync = int(est) >= EAGER_STATS_THRESHOLD_BYTES
+    me = threading.current_thread()
+    with _LOCK:
+        prev = _TAIL.get(me)
+        covered = list(_LAZY_PENDING.get(me, ()))
+
+    def land(job):
+        # after this thread's earlier counts; covers its pending links
+        if prev is not None:
+            prev.join(COUNT_TIMEOUT_S)
+        out = job()
+        with _LOCK:
+            links = _LAZY_PENDING.get(me, {})
+            for k in covered:
+                links.pop(k, None)
         return out
-    parent_t = (_COUNT_THREADS.get(id(after))
-                if after is not None else None)
 
-    def _run() -> None:
-        if parent_t is not None:
-            parent_t.join(timeout=600)
-        out.count()
-        for k in covered:
-            _LAZY_PENDING.pop(k, None)
-
-    t = threading.Thread(target=_run, daemon=True)
+    if checkpoint:
+        return track(land(lambda: df.localCheckpoint(eager=True)) if sync
+                     else df.localCheckpoint(eager=False))
+    out = track(df.persist())
+    if sync:
+        land(out.count)
+        return out
+    t = threading.Thread(target=land, args=(out.count,), daemon=True)
+    with _LOCK:
+        _COUNTS[id(out)] = _TAIL[me] = t
     t.start()
-    _COUNT_THREADS[id(out)] = t
-
-    def _finish(out_id: int = id(out)) -> None:
-        t.join(timeout=600)
-        _COUNT_THREADS.pop(out_id, None)
-
-    # join tracked BEFORE the persist handle: release_tracked() runs
-    # oldest-first, and the in-flight count must land before unpersist
-    track(_finish)
-    track(out)
     return out
 
 
 def stage_lazy(df: DataFrame) -> DataFrame:
-    """Persist + track WITHOUT a counting job — for the INTERIOR links
-    of a staged derivation chain whose TAIL is a counted `stage_table`
-    (r15): computing any InMemoryRelation partition caches it as a side
-    effect, so one count of the chain tail materializes every parent
-    cache in the SAME job. The per-link count jobs the `after=` chain
-    used to run added only driver round-trips (4 jobs → 1 for the kn5
-    c5→cont4→cont3→cont2 chain). Safe ONLY when (a) a downstream
-    stage_table's count covers this table before any consumer action
-    plans against it (its stats are then real), and (b) no join is
-    planned against it in between (the round-5 lazy stats-lie hazard).
-    Callers must still `await_staged` the chain tail. Misuse of (a) is
-    caught programmatically: the link registers as PENDING and only a
-    subsequent stage_table's landed count clears it — the oracle gate
-    fails any query that leaves a lazy link uncovered
-    (`assert_no_unresolved_lazy`)."""
-    out = df.persist()
-    track(out)
+    """Persist and track with no job: an interior chain link that a
+    later stage_table count on this thread must cover (module doc)."""
+    out = track(df.persist())
     try:
         desc = df._jdf.queryExecution().logical().nodeName()
     except Exception:  # noqa: BLE001 — description is best-effort
         desc = "?"
-    _LAZY_PENDING[id(out)] = desc
+    with _LOCK:
+        _LAZY_PENDING.setdefault(threading.current_thread(),
+                                 {})[id(out)] = desc
     return out
 
 
 def await_staged(df: DataFrame) -> DataFrame:
-    """Block until `df`'s async stage_table count has landed (no-op for
-    sync-staged or unstaged frames). Call at the END of an operator's
-    construction when the returned plan has MANY concurrent consumers
-    of the staged table (broadcast-build futures + AQE stages): each
-    concurrent consumer of a still-cold cache recomputes its partitions
-    independently (in-flight cache-partition computation is not shared
-    across jobs), so ten broadcast builds racing one cold cache cost
-    ten evaluations of its subtree — the r15 stage probe measured ~50 s
-    of duplicated executor work behind text_perplexity_kn5's ten
-    lookup builds. Awaiting here overlaps the count with the caller's
-    plan construction (unlike sync=True, which serializes it before
-    any construction) and guarantees consumers find warm blocks."""
-    t = _COUNT_THREADS.get(id(df))
+    """Block until `df`'s background count has landed (no-op for other
+    frames); see the module docstring for when."""
+    with _LOCK:
+        t = _COUNTS.get(id(df))
     if t is not None:
-        t.join(timeout=600)
+        t.join(COUNT_TIMEOUT_S)
     return df
 
 
 def assert_no_unresolved_lazy(context: str = "") -> None:
-    """Raise if any stage_lazy link was never covered by a downstream
-    counted stage_table (r16, VERDICT r15 item 7 — the programmatic
-    half of the stage_lazy contract). Joins in-flight count threads
-    first so an async tail count that WILL cover a link gets to land.
-    The oracle gate calls this after every query, so a future caller
-    who persists an interior link without chaining a counted tail
-    fails the gate instead of re-exposing the round-5 stats-lie
-    broadcast at 100x."""
-    for t in list(_COUNT_THREADS.values()):
-        try:
-            t.join(timeout=600)
-        except Exception:  # noqa: BLE001
-            pass
-    if _LAZY_PENDING:
-        descs = sorted(_LAZY_PENDING.values())
+    """Raise if a stage_lazy link was never covered by a later counted
+    stage_table. Waits for in-flight counts first, since one may yet
+    cover a link; one still running after COUNT_TIMEOUT_S raises
+    TimeoutError and leaves the pending links in place."""
+    where = f" after {context}" if context else ""
+    with _LOCK:
+        counts = list(_COUNTS.values())
+    for t in counts:
+        t.join(COUNT_TIMEOUT_S)
+    if any(t.is_alive() for t in counts):
+        raise TimeoutError(
+            f"stage_table count still running after {COUNT_TIMEOUT_S} s"
+            f"{where}")
+    with _LOCK:
+        descs = sorted(d for links in _LAZY_PENDING.values()
+                       for d in links.values())
         _LAZY_PENDING.clear()
+    if descs:
         raise AssertionError(
             f"stage_lazy link(s) never covered by a counted stage_table"
-            f"{' after ' + context if context else ''}: {descs} — chain "
-            f"a stage_table tail (its count materializes the link) or "
-            f"use stage_table directly")
+            f"{where}: {descs} — chain a stage_table tail (its count "
+            f"materializes the link) or use stage_table directly")
 
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:

@@ -29,6 +29,8 @@ from pyspark.sql import types as T
 
 from lswms_forage_etl_spark.functions.cleansing import portable_round
 from lswms_forage_etl_spark.functions.text import fingerprint
+from lswms_forage_etl_spark.lifecycle import (
+    await_staged, free, local_df, stage_lazy, stage_table, track)
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text",
@@ -269,39 +271,6 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
     return _expand_sig_pairs(base, banded, pair_fps, id_col)
 
 
-def _ckpt_tracked(df: DataFrame, eager: bool | None = None) -> DataFrame:
-    """localCheckpoint + tracked RDD-id cleanup — the materialization
-    rule for multi-consumer derived tables. Checkpoint (lineage
-    truncation): every DataFrame op eagerly re-analyzes its logical
-    subtree, and with a plain persist the consumers' re-analyses
-    measured ~1s of pure query CONSTRUCTION per instance
-    (dedup_clusters: 1.6s constructing, 0.3s executing); consumers of
-    the LogicalRDD analyze O(1) trees, and the unknown checkpoint size
-    can never be chosen for broadcast (AQE promotes the genuinely-small
-    sides at runtime).
-
-    Eager vs lazy is SCALE-ADAPTIVE (round 7, via
-    `lifecycle.should_materialize_eagerly`): AQE's concurrently-
-    submitted exchange stages race a lazy cache's first materialization
-    and each re-evaluates the whole subtree (runtime_metrics: 13
-    parquet re-scans) — dominant at the 100x slice (text_contamination
-    27.4s lazy vs 12.5s eager), but at sf0.1 the race waste is smaller
-    than the serialized eager construction job (lazy won that A/B by
-    ~0.2s, and hardcoding eager cost the LSH family 50-70 % locally —
-    VERDICT r6 item 1). The threshold rationale lives on
-    `lifecycle.EAGER_STATS_THRESHOLD_BYTES`."""
-    from lswms_forage_etl_spark import lifecycle
-
-    spark = df.sparkSession
-    if eager is None:
-        eager = lifecycle.should_materialize_eagerly(df)
-    ids0 = lifecycle.persistent_rdd_ids(spark)
-    out = df.localCheckpoint(eager=eager)
-    ck = lifecycle.persistent_rdd_ids(spark) - ids0
-    lifecycle.track(lambda: lifecycle.unpersist_rdd_ids(spark, ck))
-    return out
-
-
 def _banded_sig_pairs(base: DataFrame, bands: int,
                       max_bucket_size: int | None = None):
     """Distinct-signature banding core, shared by MinHash
@@ -323,8 +292,6 @@ def _banded_sig_pairs(base: DataFrame, bands: int,
     boundaries differ per band so the first-match proof doesn't hold
     and a distinct over the (small) signature-pair list dedupes
     instead — and _bhs is not carried at all (nothing reads it)."""
-    from lswms_forage_etl_spark import lifecycle
-
     keep = ["_sfp", "_bhs"] if max_bucket_size is None else ["_sfp"]
     banded = (base.select("_sfp", "_bhs").distinct()
               .select(*keep,
@@ -337,7 +304,7 @@ def _banded_sig_pairs(base: DataFrame, bands: int,
                              / F.lit(int(max_bucket_size))))
     else:
         banded = banded.withColumn("chunk", F.lit(0))
-    banded = lifecycle.track(banded.persist())
+    banded = track(banded.persist())
     a, b = banded.alias("a"), banded.alias("b")
     fa, fb = F.col("a._sfp"), F.col("b._sfp")
     joined = a.join(b, ["band_id", "band_hash", "chunk"]).where(fa < fb)
@@ -390,15 +357,16 @@ def _lsh_banding(signatures: DataFrame, id_col: str, bands: int,
     """MinHash front-end for the shared banding core: builds the
     membership base (id, _sfp, _bhs) from a `minhash` column — _sfp is
     the md5 of the full signature (the uniform join key; joining on the
-    16-long array itself would shuffle 4x the bytes) — materializes it
-    (_ckpt_tracked), and returns (base, banded, pair_fps). Kept as a
+    16-long array itself would shuffle 4x the bytes) — stages it as a
+    checkpoint, and returns (base, banded, pair_fps). Kept as a
     named seam so scale diagnostics (tools/skew_measure.py) can count
     the candidates entering verification separately from the
     output-bound doc-pair expansion."""
     sig_fp = F.md5(F.concat_ws(
         "|", F.transform(F.col("minhash"), lambda v: v.cast("string"))))
-    base = _ckpt_tracked(signatures.select(
-        F.col(id_col), sig_fp.alias("_sfp"), band_arr.alias("_bhs")))
+    base = stage_table(signatures.select(
+        F.col(id_col), sig_fp.alias("_sfp"), band_arr.alias("_bhs")),
+        checkpoint=True)
     banded, pair_fps = _banded_sig_pairs(base, bands, max_bucket_size)
     return base, banded, pair_fps
 
@@ -527,8 +495,6 @@ def prefix_filter_pairs(docs: DataFrame, text_col: str = "text",
     carries the estimate (plans/corpus.py near_dup="auto" catches it
     and routes to LSH). Cost: one extra count-style job over an
     already-persisted table — nothing corpus-sized recomputes."""
-    from lswms_forage_etl_spark.lifecycle import (await_staged,
-                                                  stage_lazy, stage_table)
     from pyspark.sql import Window
 
     num, den = threshold
@@ -581,10 +547,6 @@ def prefix_filter_pairs(docs: DataFrame, text_col: str = "text",
     tok = sets.select("rep", F.explode("sh64").alias("s64"))
     # STAGED: dfreq is corpus-sized (near one row per distinct shingle)
     # but its post-agg estimate lies small — see docstring
-    # chained async counts (r15, the lm.py chain discipline): dfreq
-    # derives from marked and prefix from dfreq — unchained, each
-    # async count races its parent's and re-evaluates the parent's
-    # whole subtree (the shingle-hash pass) from parquet
     dfreq = stage_table(
         tok.groupBy("s64").agg(F.count(F.lit(1)).alias("dfq")))
 
@@ -601,7 +563,7 @@ def prefix_filter_pairs(docs: DataFrame, text_col: str = "text",
     # self-join (round-4 lesson: persist before self-joining)
     prefix = stage_table(
         ranked.where(F.col("pos") <= p)
-        .select("rep", "s64", "n", "pos"), after=dfreq)
+        .select("rep", "s64", "n", "pos"))
 
     if fan_budget is not None:
         # the estimate collect would otherwise race prefix's async
@@ -614,7 +576,7 @@ def prefix_filter_pairs(docs: DataFrame, text_col: str = "text",
         est = int(est_row["est"] or 0)
         if est > fan_budget:
             for t in (marked, dfreq, prefix):
-                t.unpersist()
+                free(t)
             raise PrefixFanExceeded(est, fan_budget)
 
     a = prefix.toDF("rep_a", "s64", "n_a", "pos_a")
@@ -692,7 +654,6 @@ def minhash_dedup(docs: DataFrame, text_col: str = "text",
     signatures -> banded candidates -> exact jaccard verify -> near-dup
     pairs above threshold. At production scale the shingle/signature
     tables are written to parquet stage tables instead of persist()."""
-    from lswms_forage_etl_spark.lifecycle import stage_table
     sh = stage_table(shingle_table(docs, text_col, id_col, k))
     sigs = minhash_signatures(docs, text_col, id_col, k, num_hashes,
                               shingles=sh)
@@ -748,16 +709,11 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
     checkpoint(reliable storage) if executor loss during the loop must
     be survivable; the cut lineage is the point either way.
 
-    Storage lifecycle (VERDICT r4 item 6): localCheckpoint blocks are
-    RDD-level — DataFrame.unpersist() and spark.catalog.clearCache() do
-    NOT free them — so superseded rounds are freed explicitly by RDD id
-    inside the loop, and the FINAL label table's blocks (which must
-    outlive this call) are registered as a lifecycle cleanup for the
-    caller's release_tracked()."""
-    from lswms_forage_etl_spark import lifecycle
-
+    Storage lifecycle (VERDICT r4 item 6): every checkpoint is a
+    lazy checkpoint stage table; superseded rounds are freed inside the
+    loop, and the FINAL label table (which must outlive this call) is
+    left for the caller's release_tracked()."""
     spark = pairs.sparkSession
-    ids0 = lifecycle.persistent_rdd_ids(spark)
     # ONE reference to `pairs`: embedding the upstream pipeline plan
     # (LSH shingles/signatures/verify) several times makes Catalyst
     # optimize every copy — measured ~3s of the 4.3s sf0.1 wall was
@@ -766,14 +722,14 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
     # pair table. The normalized distinct pair list is checkpointed:
     # it is both the gate count's input and the edge source.
     a, b = F.col(id_a), F.col(id_b)
-    upairs = (pairs.select(F.least(a, b).alias("_pa"),
-                           F.greatest(a, b).alias("_pb"))
-              .distinct().localCheckpoint(eager=False))
-    upair_ids = lifecycle.persistent_rdd_ids(spark) - ids0
+    upairs = stage_table(
+        pairs.select(F.least(a, b).alias("_pa"),
+                     F.greatest(a, b).alias("_pb")).distinct(),
+        checkpoint=True, sync=False)
 
     if small_graph_edges and upairs.count() <= small_graph_edges:
         rows = upairs.collect()   # bounded by the small_graph_edges gate
-        lifecycle.unpersist_rdd_ids(spark, upair_ids)
+        free(upairs)
         parent: dict = {}
 
         def find(x):
@@ -803,17 +759,15 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
             T.StructField("doc_id", id_type),
             T.StructField("rep_id", id_type),
             T.StructField("cluster_size", T.LongType())])
-        return lifecycle.local_df(spark, out, schema)
+        return local_df(spark, out, schema)
 
-    edges = (upairs.select(F.explode(F.array(
+    edges = stage_table(upairs.select(F.explode(F.array(
         F.struct(F.col("_pa").alias("src"), F.col("_pb").alias("dst")),
         F.struct(F.col("_pb").alias("src"), F.col("_pa").alias("dst")),
         F.struct(F.col("_pa").alias("src"), F.col("_pa").alias("dst")),
         F.struct(F.col("_pb").alias("src"), F.col("_pb").alias("dst"))))
         .alias("e"))
-        .select("e.src", "e.dst")
-        .distinct().localCheckpoint(eager=False))
-    edge_ids = lifecycle.persistent_rdd_ids(spark) - ids0 - upair_ids
+        .select("e.src", "e.dst").distinct(), checkpoint=True, sync=False)
     lbl_sum = F.sum(F.col("lbl").cast("decimal(38,0)"))
 
     def min_step(lbls: DataFrame) -> DataFrame:
@@ -825,9 +779,8 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
 
     # seed: every node's min direct neighbor (self-loops make it total).
     # NOT materialized — iteration 0's single job computes it inline.
-    labels = edges.groupBy(F.col("src").alias("id")) \
+    labels = seed = edges.groupBy(F.col("src").alias("id")) \
         .agg(F.min("dst").alias("lbl"))
-    kept: set[int] = set()   # previous iteration's checkpoint RDD ids
     converged = False
     for _ in range(max_rounds):
         # min-step; persisted (lazily) because the pointer-doubling
@@ -845,7 +798,7 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
         # was the fixpoint and `nxt` IS that fixpoint, already
         # materialized and checkpoint-backed. Otherwise it seeds the next
         # iteration — no propagation work is wasted either way.
-        nxt = min_step(prop).localCheckpoint(eager=False)
+        nxt = stage_table(min_step(prop), checkpoint=True, sync=False)
         sums = {r["k"]: r["s"] for r in
                 prop.agg(lbl_sum.alias("s"))
                 .select(F.lit(0).alias("k"), "s")
@@ -855,10 +808,8 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
         s_prop, s_nxt = sums[0], sums[1]
         one.unpersist()
         prop.unpersist()
-        fresh = (lifecycle.persistent_rdd_ids(spark)
-                 - ids0 - edge_ids - kept)   # == this iteration's ckpt
-        lifecycle.unpersist_rdd_ids(spark, kept)   # superseded iteration
-        kept = fresh
+        if labels is not seed:
+            free(labels)   # superseded iteration
         labels = nxt
         if s_nxt == s_prop:
             converged = True
@@ -868,10 +819,10 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
             f"connected components did not converge in {max_rounds} rounds")
     # the final labels table is checkpoint-backed, so the edge table's
     # blocks are no longer reachable from the result plan — free them now
-    lifecycle.unpersist_rdd_ids(spark, edge_ids | upair_ids)
+    free(edges)
+    free(upairs)
     sizes = labels.groupBy(F.col("lbl").alias("rep_id")) \
         .agg(F.count(F.lit(1)).alias("cluster_size"))
-    lifecycle.track(lambda: lifecycle.unpersist_rdd_ids(spark, kept))
     return (labels.select(F.col("id").alias("doc_id"),
                           F.col("lbl").alias("rep_id"))
             .join(sizes, "rep_id")
@@ -1031,21 +982,13 @@ def simhash_near_dups(sigs: DataFrame, id_col: str = "doc_id",
     # with persist() the four consumers below (uniq, cross x2, within x2)
     # each embed the full tree and query CONSTRUCTION alone measured
     # 1.85s at sf0.1. The lazy checkpoint truncates lineage to a
-    # LogicalRDD so downstream analysis is O(consumer), not O(tree);
-    # blocks are freed via the tracked RDD-id cleanup (same pattern as
-    # duplicate_clusters).
-    from lswms_forage_etl_spark import lifecycle
-
-    spark = sigs.sparkSession
-    _ids0 = lifecycle.persistent_rdd_ids(spark)
-    sig_tbl = sigs.localCheckpoint(eager=False)
-    _ck_ids = lifecycle.persistent_rdd_ids(spark) - _ids0
-    lifecycle.track(lambda: lifecycle.unpersist_rdd_ids(spark, _ck_ids))
+    # LogicalRDD so downstream analysis is O(consumer), not O(tree).
+    sig_tbl = stage_table(sigs, checkpoint=True, sync=False)
     uniq = sig_tbl.select("simhash").distinct()
     # lazy persist is SAFE here (no eager stage_table): sig_tbl is a
     # LogicalRDD whose unknown size defaults to defaultSizeInBytes, so
     # the planner can never choose to broadcast this self-join side
-    chunks = lifecycle.track(uniq.select(
+    chunks = track(uniq.select(
         "simhash",
         F.posexplode(F.array(*[
             F.shiftrightunsigned(F.col("simhash"), width * i)
@@ -1166,8 +1109,6 @@ def duplicate_spans(docs: DataFrame, text_col: str = "text",
     wins = F.transform(ngram_array(toks, window),
                        lambda s: F.conv(F.substring(F.md5(s), 1, 15),
                                         16, 10).cast("long"))
-    from lswms_forage_etl_spark.lifecycle import stage_table
-
     # materialization point: the fp table feeds BOTH the duplicate test
     # and the join back — unpersisted, each reference re-tokenizes and
     # re-hashes every window (the shingle_table hazard; at real scale
@@ -1274,8 +1215,6 @@ def incremental_dedup(docs: DataFrame, is_new, text_col: str = "text",
     exact_dedup over the existing index first (the plans/corpus.py
     composition) to collapse clone groups before probing."""
     from pyspark.sql import Window as W
-
-    from lswms_forage_etl_spark.lifecycle import stage_table, track
 
     flagged = _spread(docs).withColumn("_new", is_new)
     # r15: 60-bit int64 shingles through the staged index + verify joins
@@ -1394,8 +1333,6 @@ def bloom_incremental_dedup(docs: DataFrame, is_new, text_col: str = "text",
     finding: sf0.01 documents contain no exact-dup texts at all). The
     Bloom layer still prunes the hits side; the miss rows join back on
     the batch's own id column, output-bound by the batch size."""
-    from lswms_forage_etl_spark.lifecycle import stage_table
-
     flagged = _spread(docs).select(
         F.col(id_col), is_new.alias("_new"),
         fingerprint(text_col).alias("fp"))

@@ -27,7 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from lswms_forage_etl_spark.lifecycle import await_staged, stage_table
+from lswms_forage_etl_spark.lifecycle import (
+    await_staged, stage_lazy, stage_table)
 from lswms_forage_etl_spark.operators.dedup import _spread
 
 BACKOFF_PENALTY_BITS = 4
@@ -374,9 +375,8 @@ def fivegram_kn_surprisal(docs: DataFrame, train_sources: list[str],
     train = ng.where(F.col(source_col).isin(list(train_sources)))
     # lazy interior link: materialized (and stats realized) by the
     # chain tail cont2's single counting job below
-    from lswms_forage_etl_spark.lifecycle import stage_lazy as _sl
-    c5 = _sl(train.groupBy(lang_col, "a", "b", "c", "d", "e")
-             .agg(F.count(F.lit(1)).alias("c5")))
+    c5 = stage_lazy(train.groupBy(lang_col, "a", "b", "c", "d", "e")
+                    .agg(F.count(F.lit(1)).alias("c5")))
     # order-5 context: token count + distinct continuations
     ctx4 = (c5.groupBy(lang_col, "a", "b", "c", "d")
             .agg(F.sum("c5").alias("c1234"),
@@ -397,7 +397,6 @@ def fivegram_kn_surprisal(docs: DataFrame, train_sources: list[str],
     # and re-ran the 5-gram explode 4x — the round-6 lazy-race lesson)
     # collapse to one. No join is planned before `await_staged(cont2)`
     # lands, so the interior tables never expose lazy stats.
-    from lswms_forage_etl_spark.lifecycle import stage_lazy
     cont4 = stage_lazy(c5.groupBy(lang_col, "b", "c", "d", "e")
                        .agg(F.count(F.lit(1)).alias("n1p_bcde")))
     mid4 = (cont4.groupBy(lang_col, "b", "c", "d")
@@ -502,7 +501,6 @@ def bigram_lm_surprisal_scaled(docs: DataFrame,
         binned_quantiles
     per_doc = surprisal_per_doc(docs, train_sources, penalty, id_col,
                                 text_col, lang_col, source_col)
-    from lswms_forage_etl_spark.lifecycle import stage_table
     per_doc = stage_table(per_doc, sync=True)  # scored once (sync: its
     # count IS the expensive bigram scoring pass — an async count races
     # the consuming action and re-runs the whole pass, r15 probe)

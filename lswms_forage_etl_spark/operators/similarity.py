@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lswms_forage_etl_spark.functions.cleansing import portable_round
+from lswms_forage_etl_spark.lifecycle import local_df, stage_table, track
 
 
 def _dot(a, b):
@@ -366,17 +367,17 @@ def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.95,
     differently).
     """
     from lswms_forage_etl_spark.operators.dedup import (
-        _banded_sig_pairs, _ckpt_tracked, _expand_sig_pairs, _spread)
+        _banded_sig_pairs, _expand_sig_pairs, _spread)
 
     sigs_udf = band_signatures_udf(num_planes, dim, seed, num_bands)
     sig_fp = F.md5(F.concat_ws(
         "|", F.transform(F.col("_bhs"), lambda v: v.cast("string"))))
     # membership base, lineage-truncated, scale-adaptive eager/lazy
-    # (_ckpt_tracked doc)
-    base = _ckpt_tracked(
+    base = stage_table(
         _spread(embeddings)   # b*r dots/row must use every core
         .select(F.col(id_col), sigs_udf(F.col(vec_col)).alias("_bhs"))
-        .select(F.col(id_col), F.col("_bhs"), sig_fp.alias("_sfp")))
+        .select(F.col(id_col), F.col("_bhs"), sig_fp.alias("_sfp")),
+        checkpoint=True)
     banded, pair_fps = _banded_sig_pairs(base, num_bands, max_bucket_size)
     cand = _expand_sig_pairs(base, banded, pair_fps, id_col)
 
@@ -742,8 +743,6 @@ def topk_join_lsh(queries: DataFrame, corpus: DataFrame, k: int = 3,
                 m |= 1 << b
             masks.append(m)
 
-    from lswms_forage_etl_spark.lifecycle import track
-
     sigs = band_signatures_udf(num_planes, dim, seed, num_bands=1)
     # materialize both bucketed sides so the Arrow signature pass runs
     # exactly once per side (unpersisted, the join re-evaluates the UDF
@@ -799,7 +798,6 @@ def semantic_dedup(embeddings: DataFrame, threshold: float = 0.95,
     # persisted: referenced by reps, the rep-vector lookup, AND the main
     # join — unpersisted, the Arrow assignment would run three times
     # (at real scale this is the materialized IVF index table)
-    from lswms_forage_etl_spark.lifecycle import track
     assigned = track(_ivf_assign(embeddings, cents, id_col, vec_col)
                      .persist())
 
@@ -970,7 +968,6 @@ def ivf_probe_lists(embeddings: DataFrame, query_vec: list[float],
     inside `ivfpq_topk` (the assignment sits ABOVE the `_spread`
     exchange, so exchange reuse cannot dedupe it). Assignments are
     deterministic, so staging changes no graded row."""
-    from lswms_forage_etl_spark.lifecycle import stage_table
     cents = ivf_centroid_rows(embeddings, num_centroids, id_col,
                               vec_col)
     probe_ids = _ivf_probe_ids(cents, query_vec, probes)
@@ -1392,7 +1389,6 @@ def pca_power_top(emb: DataFrame, id_col: str = "vec_id",
         maxw = float(max(abs(x) for x in w.values()))
         u14 = {i: math.floor(float(x) / maxw * float(1 << 14))
                for i, x in w.items()}
-    from lswms_forage_etl_spark.lifecycle import local_df
     u = local_df(emb.sparkSession,
                  sorted(u14.items()), "dim int, u14 long")
     norm = F.sqrt(F.sum(F.col("u14").cast("double") * F.col("u14"))

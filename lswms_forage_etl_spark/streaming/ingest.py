@@ -40,6 +40,7 @@ from lswms_forage_etl_spark.functions.text import (
     quality_score,
     token_count,
 )
+from lswms_forage_etl_spark.lifecycle import free, stage_table
 
 DOCS_SCHEMA = ("doc_id long, text string, lang string, source string, "
                "n_chars long")
@@ -322,7 +323,7 @@ def _gate_and_land(batch_df: DataFrame, known_fp_table: str,
     # (round-9 measured: 0-row signature appends). The checkpoint
     # pins the batch as a LogicalRDD with no path dependency.
     if sig_index_table is None:
-        survivors = fresh.localCheckpoint()
+        survivors = stage_table(fresh, checkpoint=True, sync=True)
     else:
         fresh = fresh.persist()
         try:
@@ -330,65 +331,69 @@ def _gate_and_land(batch_df: DataFrame, known_fp_table: str,
             flagged = near_dup_flagged(fresh.drop("fp"), sig_index,
                                        threshold=near_dup_threshold,
                                        num_hashes=num_hashes, bands=bands)
-            survivors = fresh.join(flagged, "doc_id", "left_anti") \
-                .localCheckpoint()
+            survivors = stage_table(
+                fresh.join(flagged, "doc_id", "left_anti"),
+                checkpoint=True, sync=True)
         finally:
             fresh.unpersist()
-    if not survivors.head(1):
-        return
-    (survivors.drop("fp").write.mode("append")
-     .partitionBy("lang").parquet(out_dir))
-    if bloom_table is not None:
-        from lswms_forage_etl_spark.operators.dedup import (
-            bloom_filter_table)
-        new_bits = bloom_filter_table(survivors.select("fp"), "fp",
-                                      bloom_m_bits, bloom_k)
-        merged = (spark.read.parquet(bloom_table).unionByName(new_bits)
-                  .groupBy("word_idx")
-                  .agg(F.bit_or("bits").alias("bits")))
-        _swap_table(spark, bloom_table, merged)
-    if zonemap_table is not None:
-        # O(batch) zone-map maintenance: the survivors' per-shard
-        # min/max/count rows APPEND; zone maps are mergeable (min of
-        # mins, max of maxes, sum of counts), so readers fold the
-        # accumulated rows with `merged_zonemap` and prune exactly as
-        # over a freshly-built manifest. IDEMPOTENT on replay (round
-        # 14, closing the r13 watch-list n_rows double-count): rows
-        # are keyed by the foreachBatch batch_id — Spark replays a
-        # crashed batch under the SAME id, so if rows for this id are
-        # already present (crash landed between this append and the
-        # known_fp append below) the append is skipped; the replayed
-        # survivor set is identical because the fp index hasn't
-        # advanced. Reading the manifest here is O(manifest), not
-        # O(corpus) — it is the Delta-log-sized table. Legacy
-        # manifests without the batch_id column are treated as
-        # never-seen (one pre-upgrade replay may still double-count).
-        from lswms_forage_etl_spark.functions.layout import zonemap_stats
-        stats = zonemap_stats(
-            survivors,
-            F.floor(F.col("doc_id") / F.lit(1024)).cast("long"),
-            "doc_id").withColumn("batch_id", F.lit(int(batch_id)))
-        fs, hpath = _index_fs(spark, zonemap_table)
-        if fs.exists(hpath(zonemap_table)):
-            # Existence is checked via the FS API (like _ensure_bloom)
-            # so a transient read error on an EXISTING manifest
-            # propagates instead of silently re-enabling the
-            # double-append the batch_id key prevents (ADVICE r14).
-            existing = spark.read.parquet(zonemap_table)
-            seen = ("batch_id" in existing.columns
-                    and bool(existing.where(
-                        F.col("batch_id") == int(batch_id)).head(1)))
-        else:                             # manifest not created yet
-            seen = False
-        if not seen:
-            stats.write.mode("append").parquet(zonemap_table)
-    survivors.select("fp").write.mode("append").parquet(known_fp_table)
-    if sig_index_table is not None:
-        from lswms_forage_etl_spark.operators.dedup import (
-            minhash_signatures)
-        minhash_signatures(survivors.select("doc_id", "text"),
-                           num_hashes=num_hashes) \
-            .write.mode("append").parquet(sig_index_table)
+    try:
+        if not survivors.head(1):
+            return
+        (survivors.drop("fp").write.mode("append")
+         .partitionBy("lang").parquet(out_dir))
+        if bloom_table is not None:
+            from lswms_forage_etl_spark.operators.dedup import (
+                bloom_filter_table)
+            new_bits = bloom_filter_table(survivors.select("fp"), "fp",
+                                          bloom_m_bits, bloom_k)
+            merged = (spark.read.parquet(bloom_table).unionByName(new_bits)
+                      .groupBy("word_idx")
+                      .agg(F.bit_or("bits").alias("bits")))
+            _swap_table(spark, bloom_table, merged)
+        if zonemap_table is not None:
+            # O(batch) zone-map maintenance: the survivors' per-shard
+            # min/max/count rows APPEND; zone maps are mergeable (min of
+            # mins, max of maxes, sum of counts), so readers fold the
+            # accumulated rows with `merged_zonemap` and prune exactly as
+            # over a freshly-built manifest. IDEMPOTENT on replay (round
+            # 14, closing the r13 watch-list n_rows double-count): rows
+            # are keyed by the foreachBatch batch_id — Spark replays a
+            # crashed batch under the SAME id, so if rows for this id are
+            # already present (crash landed between this append and the
+            # known_fp append below) the append is skipped; the replayed
+            # survivor set is identical because the fp index hasn't
+            # advanced. Reading the manifest here is O(manifest), not
+            # O(corpus) — it is the Delta-log-sized table. Legacy
+            # manifests without the batch_id column are treated as
+            # never-seen (one pre-upgrade replay may still double-count).
+            from lswms_forage_etl_spark.functions.layout import zonemap_stats
+            stats = zonemap_stats(
+                survivors,
+                F.floor(F.col("doc_id") / F.lit(1024)).cast("long"),
+                "doc_id").withColumn("batch_id", F.lit(int(batch_id)))
+            fs, hpath = _index_fs(spark, zonemap_table)
+            if fs.exists(hpath(zonemap_table)):
+                # Existence is checked via the FS API (like _ensure_bloom)
+                # so a transient read error on an EXISTING manifest
+                # propagates instead of silently re-enabling the
+                # double-append the batch_id key prevents (ADVICE r14).
+                existing = spark.read.parquet(zonemap_table)
+                seen = ("batch_id" in existing.columns
+                        and bool(existing.where(
+                            F.col("batch_id") == int(batch_id)).head(1)))
+            else:                             # manifest not created yet
+                seen = False
+            if not seen:
+                stats.write.mode("append").parquet(zonemap_table)
+        survivors.select("fp").write.mode("append").parquet(known_fp_table)
+        if sig_index_table is not None:
+            from lswms_forage_etl_spark.operators.dedup import (
+                minhash_signatures)
+            minhash_signatures(survivors.select("doc_id", "text"),
+                               num_hashes=num_hashes) \
+                .write.mode("append").parquet(sig_index_table)
+    finally:
+        free(survivors)
 
 
 def run_ingest_once(spark: SparkSession, input_dir: str,

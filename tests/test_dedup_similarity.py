@@ -508,8 +508,7 @@ def test_embedding_cap_keeps_identical_vector_recall(spark):
     import numpy as np
 
     from lswms_forage_etl_spark import lifecycle
-    from lswms_forage_etl_spark.operators.dedup import (
-        _banded_sig_pairs, _ckpt_tracked)
+    from lswms_forage_etl_spark.operators.dedup import _banded_sig_pairs
     from pyspark.sql import functions as SF
 
     from lswms_forage_etl_spark.operators.similarity import \
@@ -527,10 +526,11 @@ def test_embedding_cap_keeps_identical_vector_recall(spark):
             rows, "vec_id long, embedding array<float>")
         sig_fp = SF.md5(SF.concat_ws(
             "|", SF.transform(SF.col("_bhs"), lambda v: v.cast("string"))))
-        base = _ckpt_tracked(
+        base = lifecycle.stage_table(
             emb.select(SF.col("vec_id"),
                        sigs_udf(SF.col("embedding")).alias("_bhs"))
-            .select("vec_id", "_bhs", sig_fp.alias("_sfp")))
+            .select("vec_id", "_bhs", sig_fp.alias("_sfp")),
+            checkpoint=True)
         banded, _ = _banded_sig_pairs(base, bands, max_bucket_size=cap)
         clone_fp = base.where("vec_id = 0").first()["_sfp"]
         chunk0 = banded.where((SF.col("band_id") == 0)

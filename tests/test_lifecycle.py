@@ -70,10 +70,10 @@ def test_untracked_persist_trips_the_gate(spark):
 
 
 def test_chained_stage_counts_and_await(spark):
-    """r15: stage_table(after=parent) must run the child's async count
-    AFTER the parent's (so the child reads the parent's materialized
-    cache instead of re-evaluating its subtree), and await_staged must
-    block until the chain tail's count has landed — consumers of the
+    """Counts staged on one driver thread run in order: a child's count
+    starts only after its parent's has landed (so it reads the parent's
+    cache instead of re-evaluating its subtree), and await_staged
+    blocks until the chain tail's count has landed — consumers of the
     returned frame always find warm blocks."""
     lifecycle.release_tracked()
     spark.catalog.clearCache()
@@ -81,12 +81,14 @@ def test_chained_stage_counts_and_await(spark):
         F.col("id"), (F.col("id") % 7).alias("k"))
     parent = lifecycle.stage_table(
         base.groupBy("k").agg(F.count(F.lit(1)).alias("n")), sync=False)
+    parent_count = lifecycle._COUNTS[id(parent)]
     child = lifecycle.stage_table(
         parent.groupBy((F.col("k") % 2).alias("p"))
-        .agg(F.sum("n").alias("s")), sync=False, after=parent)
+        .agg(F.sum("n").alias("s")), sync=False)
     lifecycle.await_staged(child)
-    # after await, BOTH caches must hold live blocks (the chain ran
-    # parent-first, and the tail join covers the whole chain)
+    # the tail's landed count implies its parent's landed first
+    assert not parent_count.is_alive()
+    # after await, BOTH caches must hold live blocks
     live = lifecycle.persistent_rdd_ids(spark)
     assert len(live) >= 2
     got = {r["p"]: r["s"] for r in child.collect()}
@@ -95,6 +97,36 @@ def test_chained_stage_counts_and_await(spark):
     lifecycle.assert_no_cached_rdds(spark, context="chain-test")
     # await on an unstaged/foreign frame is a no-op
     lifecycle.await_staged(base)
+
+
+def test_chain_order_waits_for_the_earlier_count(spark):
+    """The next count on a driver thread waits for the thread's previous
+    count: while an earlier count is blocked, a sync stage_table does
+    not start its job."""
+    import threading
+
+    lifecycle.release_tracked()
+    spark.catalog.clearCache()
+    gate = threading.Event()
+    blocker = threading.Thread(target=gate.wait, daemon=True)
+    blocker.start()
+    done = threading.Event()
+
+    def stage_after():
+        # the blocked thread stands in for this thread's earlier count
+        with lifecycle._LOCK:
+            lifecycle._TAIL[threading.current_thread()] = blocker
+        lifecycle.stage_table(spark.range(10), sync=True)
+        done.set()
+
+    t = threading.Thread(target=stage_after, daemon=True)
+    t.start()
+    assert not done.wait(1.0)      # held back by the earlier count
+    gate.set()
+    assert done.wait(60)
+    t.join()
+    lifecycle.release_tracked()
+    lifecycle.assert_no_cached_rdds(spark, context="order-test")
 
 
 def test_stage_lazy_chain_tail_materializes_parents(spark):
@@ -147,6 +179,124 @@ def test_uncovered_stage_lazy_trips_the_backstop(spark):
     lifecycle.assert_no_unresolved_lazy(context="backstop-test")
     lifecycle.release_tracked()
     lifecycle.assert_no_cached_rdds(spark, context="backstop-test")
+
+
+def _on_thread(fn):
+    """Run fn on a fresh driver thread and return its result."""
+    import threading
+
+    box = []
+    t = threading.Thread(target=lambda: box.append(fn()))
+    t.start()
+    t.join()
+    return box[0]
+
+
+def test_other_threads_count_leaves_lazy_link_pending(spark):
+    """A stage_lazy link belongs to the driver thread that staged it:
+    a stage_table count landing on ANOTHER thread must not cover it
+    (that count never touched the link), so the backstop still fails."""
+    lifecycle.release_tracked()
+    spark.catalog.clearCache()
+    base = spark.range(100).select((F.col("id") % 5).alias("k"))
+    lifecycle.stage_lazy(
+        base.groupBy("k").agg(F.count(F.lit(1)).alias("n")))
+    _on_thread(lambda: lifecycle.stage_table(
+        spark.range(50).select((F.col("id") * 3).alias("x")), sync=True))
+    with pytest.raises(AssertionError, match="stage_lazy"):
+        lifecycle.assert_no_unresolved_lazy(context="thread-test")
+    lifecycle.release_tracked()
+    lifecycle.assert_no_cached_rdds(spark, context="thread-test")
+
+
+def _ckpt_rdd_id(df) -> int:
+    return df._jdf.queryExecution().analyzed().rdd().id()
+
+
+def test_free_checkpoint_leaves_other_threads_checkpoint_live(spark):
+    """Freeing one checkpoint stage table frees exactly its own RDD: a
+    second checkpoint, staged on another driver thread, stays live
+    until release_tracked()."""
+    lifecycle.release_tracked()
+    spark.catalog.clearCache()
+    mine = lifecycle.stage_table(
+        spark.range(500).select((F.col("id") % 9).alias("k")),
+        checkpoint=True, sync=True)
+    theirs = _on_thread(lambda: lifecycle.stage_table(
+        spark.range(700).select((F.col("id") % 4).alias("k")),
+        checkpoint=True, sync=True))
+    ids = {_ckpt_rdd_id(mine), _ckpt_rdd_id(theirs)}
+    assert ids <= lifecycle.persistent_rdd_ids(spark)
+    lifecycle.free(mine)
+    live = lifecycle.persistent_rdd_ids(spark)
+    assert _ckpt_rdd_id(mine) not in live
+    assert _ckpt_rdd_id(theirs) in live
+    assert theirs.count() == 700
+    assert lifecycle.release_tracked() == 1     # `mine` left the window
+    lifecycle.assert_no_cached_rdds(spark, context="free-test")
+
+
+def test_running_count_is_reported_as_timeout(spark, monkeypatch):
+    """A count still running after COUNT_TIMEOUT_S is a timeout, not an
+    uncovered link: the backstop says so and keeps the pending links,
+    which the count may still cover."""
+    import threading
+
+    lifecycle.release_tracked()
+    spark.catalog.clearCache()
+    monkeypatch.setattr(lifecycle, "COUNT_TIMEOUT_S", 0.2)
+    lifecycle.stage_lazy(spark.range(10).select(F.col("id") + 1))
+    gate = threading.Event()
+    stuck = threading.Thread(target=gate.wait, daemon=True)
+    stuck.start()
+    with lifecycle._LOCK:
+        lifecycle._COUNTS[-1] = stuck
+    with pytest.raises(TimeoutError,
+                       match="count still running after 0.2 s"):
+        lifecycle.assert_no_unresolved_lazy(context="timeout-test")
+    gate.set()
+    stuck.join()
+    # the pending link survived the timeout; now it is reported as such
+    with pytest.raises(AssertionError, match="never covered"):
+        lifecycle.assert_no_unresolved_lazy(context="timeout-test")
+    lifecycle.release_tracked()
+    lifecycle.assert_no_cached_rdds(spark, context="timeout-test")
+
+
+def test_registries_hold_under_concurrent_driver_threads(spark):
+    """Many driver threads (more than cores) staging and tracking at
+    once, with a tiny switch interval: no registration is lost, every
+    link lands under its own thread, and one release frees them all."""
+    import sys
+    import threading
+
+    lifecycle.release_tracked()
+    spark.catalog.clearCache()
+    n_threads, per = 12, 6
+
+    def work(k):
+        for i in range(per):
+            lifecycle.stage_lazy(spark.range(k * per + i + 1))
+            lifecycle.track(lambda: None)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(k,))
+                   for k in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(old)
+    with lifecycle._LOCK:
+        per_thread = sorted(len(v) for v in
+                            lifecycle._LAZY_PENDING.values())
+    assert per_thread == [per] * n_threads
+    assert lifecycle.release_tracked() == 2 * n_threads * per
+    lifecycle.assert_no_cached_rdds(spark, context="stress-test")
 
 
 def test_local_df_matches_tuple_path(spark):

@@ -88,3 +88,38 @@ def test_allowlisted_empty_query_passes(gate, capsys):
     out = capsys.readouterr().out
     assert rc == 0
     assert "PASS  stub_query: 0 rows" in out
+
+
+class _LeakyLazyEntry(_StubEntry):
+    """A query that leaves an uncovered stage_lazy link, then a good
+    one: the lifecycle failure must fail only its own query."""
+
+    def __init__(self):
+        super().__init__(empty=False)
+
+    def queries(self):
+        from lswms_forage_etl_spark import lifecycle
+
+        def bad(spark, sf_dir):
+            df = spark.read.parquet(f"{sf_dir}/region.parquet")
+            return lifecycle.stage_lazy(
+                df.selectExpr("r_regionkey", "r_name"))
+        return {"uncovered_lazy": bad, **super().queries()}
+
+    def oracle_sql(self):
+        return {"uncovered_lazy": "SELECT r_regionkey, r_name FROM region",
+                **super().oracle_sql()}
+
+
+def test_lifecycle_failure_fails_one_query_and_gate_continues(
+        gate, capsys, spark):
+    from lswms_forage_etl_spark import lifecycle
+
+    rc = gate(_LeakyLazyEntry())
+    out = capsys.readouterr().out
+    assert rc == 1
+    assert ("FAIL  uncovered_lazy: stage_lazy link(s) never covered"
+            in out)
+    assert "PASS  stub_query" in out
+    assert "1 pass, 1 fail" in out
+    lifecycle.assert_no_cached_rdds(spark, context="gate-continue-test")

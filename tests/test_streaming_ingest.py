@@ -73,6 +73,27 @@ def test_ingest_gates_dedups_and_resumes(spark, tmp_path):
     assert spark.read.parquet(out).count() == 2
 
 
+def test_ingest_batch_frees_its_checkpoint(spark, tmp_path):
+    """A landed batch frees the checkpoint it staged its survivors in:
+    no RDD holds blocks after run_ingest_once that did not before (a
+    long-running stream would otherwise leak one checkpoint per
+    batch, out of release_tracked()'s reach)."""
+    from lswms_forage_etl_spark.functions.text import fingerprint
+    from lswms_forage_etl_spark.lifecycle import persistent_rdd_ids
+
+    inp = str(tmp_path / "in")
+    idx = str(tmp_path / "fp_index")
+    spark.createDataFrame([(GOOD,)], "text string") \
+        .select(fingerprint("text").alias("fp")) \
+        .write.mode("overwrite").parquet(idx)
+    _write_docs(spark, inp, [(2, OTHER, "en", "src0", len(OTHER))])
+    before = persistent_rdd_ids(spark)
+    run_ingest_once(spark, inp, idx, str(tmp_path / "corpus"),
+                    str(tmp_path / "ckpt"))
+    assert spark.read.parquet(str(tmp_path / "corpus")).count() == 1
+    assert persistent_rdd_ids(spark) == before
+
+
 def test_ingest_dedup_state_evicted_after_watermark(spark, tmp_path):
     """dropDuplicatesWithinWatermark bounds the in-stream state: a
     fingerprint re-arriving AFTER the watermark passed its TTL window is

@@ -133,28 +133,36 @@ def main():
         if only and name not in only:
             continue
         t0 = time.time()
+        err = None
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             sdtypes = sdf.dtypes
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
-            print(f"FAIL  {name}: spark error: {e}")
-            n_fail += 1
-            continue
-        finally:
-            # lifecycle gate (VERDICT r4 item 6): every operator persist /
-            # localCheckpoint must have been registered via lifecycle.track;
-            # release them and then assert NOTHING still holds cached
-            # blocks (clearCache would mask DF-level leaks, and cannot
-            # free RDD-level localCheckpoint blocks at all)
-            # r16 stage_lazy backstop (VERDICT r15 item 7): a lazy
-            # interior link never covered by a counted chain tail is a
-            # latent round-5 stats-lie — fail loudly BEFORE release
-            # clears the registry
+            err = f"spark error: {e}"
+        # lifecycle gate (VERDICT r4 item 6): every stage table and
+        # tracked persist is released, then NOTHING may still hold
+        # cached blocks (clearCache would mask DF-level leaks, and
+        # cannot free RDD-level checkpoint blocks at all). The
+        # stage_lazy backstop runs BEFORE release clears the registry.
+        # A lifecycle failure fails this query only: leftovers are
+        # dropped so the next query is graded on its own.
+        try:
             lifecycle.assert_no_unresolved_lazy(context=name)
             lifecycle.release_tracked()
             lifecycle.assert_no_cached_rdds(spark, context=name)
+        except (AssertionError, TimeoutError) as e:
+            err = f"{err}; {e}" if err else str(e)
+            lifecycle.release_tracked()
+            spark.catalog.clearCache()
+            jmap = spark.sparkContext._jsc.getPersistentRDDs()
+            for k in list(jmap.keySet().toArray()):
+                jmap.get(k).unpersist(False)
+        if err:
+            print(f"FAIL  {name}: {err}")
+            n_fail += 1
+            continue
         if not srows and name not in EMPTY_OK:
             print(f"FAIL  {name}: trivially empty (0 spark rows — an "
                   f"empty result hash-passes vacuously; add to EMPTY_OK "
