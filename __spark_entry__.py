@@ -1151,16 +1151,17 @@ def _zone_series_from_orders(spark, sf, zones=50, tail=24):
 
 
 def q_model_gp_forecast(spark, sf):
-    """M2 — per-zone Gaussian-process forecast (applyInPandas): last
-    in-sample point + 16/32/48-day horizons per zone. Deterministic
+    """M2 — per-zone Gaussian-process forecast (one applyInPandas call
+    per bucket of zones): last in-sample point + 16/32/48-day horizons
+    per zone. Deterministic
     (exact posterior mean, no SVI seed sensitivity)."""
     from lswms_forage_etl_spark.models.gp import gp_forecast
     return gp_forecast(_zone_series_from_orders(spark, sf))
 
 
 def q_model_hindcast_lag(spark, sf):
-    """W2/W3 — expanding-window GP refits per zone (applyInPandas) pivoted
-    into the lag matrix."""
+    """W2/W3 — expanding-window GP refits per zone (one applyInPandas
+    call per bucket of zones) pivoted into the lag matrix."""
     from lswms_forage_etl_spark.operators.hindcast import (
         hindcast_tall, lag_matrix)
     series = _zone_series_from_orders(spark, sf, zones=20, tail=16)

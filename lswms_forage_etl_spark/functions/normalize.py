@@ -15,12 +15,16 @@ quotes/dashes/ellipsis (not NFKC, but what every web-text pipeline
 folds), NBSP/ideographic space, zero-width strip. Accented letters are
 kept as-is (repair fixes their mojibake forms; we do not asciify).
 
-Order matters and is fixed: (1) mojibake repair FIRST (the damaged
-sequences contain characters like 'â' that later folds would touch),
-longest damaged sequence first; (2) multi-char folds; (3) one
-`translate` pass for every 1:1 fold and every deletion; (4) control
-strip. All four stages are built-in string functions — whole-stage
-codegen on Spark, same functions in DuckDB.
+Order matters and is fixed, so that one pass is a fixed point on its
+own output: (1) strip controls, zero-widths and the BOM — a deletion
+made after repair could join the two halves of a damaged sequence that
+a second pass would then repair; (2) repair the damaged forms that
+contain a soft hyphen, then strip soft hyphens; (3) mojibake repair
+(the damaged sequences contain characters like 'â' that later folds
+would touch), longest damaged sequence first; (4) multi-char folds;
+(5) one `translate` pass for every 1:1 fold. All stages are built-in
+string functions — whole-stage codegen on Spark, same functions in
+DuckDB.
 """
 
 from __future__ import annotations
@@ -75,15 +79,18 @@ FOLD_ONE.update({
     "‘": "'", "’": "'", "‚": "'",
     "“": '"', "”": '"', "„": '"',
     "–": "-", "—": "-", "−": "-",
-    "­": "",           # soft hyphen: strip
-    "​": "", "‌": "", "‍": "",  # zero-widths: strip
-    "﻿": "",           # BOM / ZWNBSP: strip
 })
 _TR_SRC = "".join(FOLD_ONE.keys())
-_TR_DST = "".join(FOLD_ONE.values())   # shorter: tail of src deletes
+_TR_DST = "".join(FOLD_ONE.values())
 
-# C0 controls except \t \n \r, plus DEL — stripped
-CTRL_PATTERN = r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]"
+# stripped before repair: C0 controls except \t \n \r, DEL, the
+# zero-widths and the BOM / ZWNBSP. None of them occurs in a damaged
+# sequence (those are cp1252 decodes of bytes >= 0x80).
+STRIP_PATTERN = "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F\u200b\u200c\u200d\ufeff]"
+# the soft hyphen is byte 0xAD in cp1252, so it does occur in damaged
+# sequences ('í' -> 'Ã\xad'): those are repaired before it is stripped
+SOFT_HYPHEN = "\xad"
+SOFT_HYPHEN_REPAIRS = [(b, g) for b, g in MOJIBAKE_REPAIRS if SOFT_HYPHEN in b]
 
 
 # ---------------------------------------------------------- Spark side
@@ -94,13 +101,15 @@ def _c(col: Column | str) -> Column:
 
 
 def normalize_text(col: Column | str) -> Column:
-    c = _c(col)
+    c = F.regexp_replace(_c(col), STRIP_PATTERN, "")
+    for bad, good in SOFT_HYPHEN_REPAIRS:
+        c = F.replace(c, F.lit(bad), F.lit(good))
+    c = F.replace(c, F.lit(SOFT_HYPHEN), F.lit(""))
     for bad, good in MOJIBAKE_REPAIRS:
         c = F.replace(c, F.lit(bad), F.lit(good))
     for src, dst in FOLD_MULTI:
         c = F.replace(c, F.lit(src), F.lit(dst))
-    c = F.translate(c, _TR_SRC, _TR_DST)
-    return F.regexp_replace(c, CTRL_PATTERN, "")
+    return F.translate(c, _TR_SRC, _TR_DST)
 
 
 # ------------------------------------------------------------ SQL twin
@@ -111,14 +120,16 @@ def _sql_lit(s: str) -> str:
 
 
 def normalize_sql(expr: str) -> str:
+    expr = f"regexp_replace({expr}, {_sql_lit(STRIP_PATTERN)}, '', 'g')"
+    for bad, good in SOFT_HYPHEN_REPAIRS:
+        expr = f"replace({expr}, {_sql_lit(bad)}, {_sql_lit(good)})"
+    expr = f"replace({expr}, {_sql_lit(SOFT_HYPHEN)}, '')"
     for bad, good in MOJIBAKE_REPAIRS:
         expr = f"replace({expr}, {_sql_lit(bad)}, {_sql_lit(good)})"
     for src, dst in FOLD_MULTI:
         expr = f"replace({expr}, {_sql_lit(src)}, {_sql_lit(dst)})"
-    expr = (f"translate({expr}, {_sql_lit(_TR_SRC)}, "
+    return (f"translate({expr}, {_sql_lit(_TR_SRC)}, "
             f"{_sql_lit(_TR_DST)})")
-    return (f"regexp_replace({expr}, {_sql_lit(CTRL_PATTERN)}, "
-            f"'', 'g')")
 
 
 # ------------------------------------------------- deterministic dirt

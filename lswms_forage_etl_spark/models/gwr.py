@@ -15,6 +15,10 @@ distance to the bw-th nearest calibration neighbor. The engine therefore:
   2. broadcasts it,
   3. scores with `mapInPandas`: each Arrow batch solves its own WLS systems
      vectorized in numpy — embarrassingly parallel over the full table.
+     Per chunk of prediction rows the kernel weights come from squared
+     distances computed in place, every normal-equation entry from one
+     GEMM against the calibration set's [vec(x xᵀ), x·y] matrix, and the
+     small (p x p) systems from one batched solve.
 
 Bandwidth selection is a golden-section search over leave-one-out CV RMSE
 (mgwr optimizes AICc; same shape — bit-exact parity with mgwr's iterative
@@ -38,41 +42,53 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 
-def _weights(d: np.ndarray, bw_k: int) -> np.ndarray:
-    """Adaptive gaussian kernel: scale = distance to the bw_k-th NN."""
-    h = np.partition(d, min(bw_k, d.shape[-1] - 1), axis=-1)[
-        ..., min(bw_k, d.shape[-1] - 1)]
-    h = np.maximum(h, 1e-9)
-    return np.exp(-0.5 * (d / h[..., None]) ** 2)
-
-
 def _wls_predict(coords_cal: np.ndarray, x_cal: np.ndarray, y_cal: np.ndarray,
                  coords_pred: np.ndarray, x_pred: np.ndarray,
                  bw_k: int) -> np.ndarray:
-    """Batched weighted least squares (gaussian GWR): prediction points are
-    processed in chunks with einsum-batched normal equations — no Python
-    loop per point. Chunk size bounds the (chunk x n_cal x p) workspace to
-    ~tens of MB regardless of calibration size."""
-    n, p1 = len(coords_cal), x_cal.shape[1] + 1
+    """Batched weighted least squares (gaussian GWR) with an adaptive
+    kernel whose scale h is the distance to the bw_k-th nearest
+    calibration point.
+
+    Every normal-equation entry is a kernel-weighted sum over the
+    calibration rows of one column of G = [vec(x xᵀ), x·y], so a chunk of
+    prediction rows gets all of them from one GEMM, w @ G. The chunk's
+    squared distances are turned into weights in place; h² is read from
+    d² (the order statistic is the same), so no square root is taken.
+    Chunk size bounds the two (chunk x n_cal) buffers to ~2 MB each, so
+    the passes over them stay in cache."""
+    n, p = len(coords_cal), x_cal.shape[1] + 1
     m = len(coords_pred)
     xt = np.hstack([np.ones((n, 1)), x_cal])                # intercept
     xp = np.hstack([np.ones((m, 1)), x_pred])
+    g = np.hstack([(xt[:, :, None] * xt[:, None, :]).reshape(n, p * p),
+                   xt * y_cal[:, None]])                    # (n, p²+p)
+    k = min(bw_k, n - 1)
     out = np.empty(m)
-    chunk = max(8, int(2_000_000 / max(n, 1)))
+    chunk = max(8, 250_000 // max(n, 1))
+    buf_w = np.empty((min(chunk, m), n))
+    buf_t = np.empty_like(buf_w)
     for lo in range(0, m, chunk):
         hi = min(lo + chunk, m)
-        cp = coords_pred[lo:hi]
-        d = np.hypot(coords_cal[None, :, 0] - cp[:, 0, None],
-                     coords_cal[None, :, 1] - cp[:, 1, None])   # (c, n)
-        w = _weights(d, bw_k)                                   # (c, n)
-        xw = xt[None, :, :] * w[:, :, None]                     # (c, n, p)
-        a = np.einsum("cnp,nq->cpq", xw, xt)                    # (c, p, p)
-        b = np.einsum("cnp,n->cp", xw, y_cal)                   # (c, p)
+        c = hi - lo
+        w, t = buf_w[:c], buf_t[:c]
+        np.subtract(coords_cal[None, :, 0], coords_pred[lo:hi, 0, None], out=w)
+        np.multiply(w, w, out=w)
+        np.subtract(coords_cal[None, :, 1], coords_pred[lo:hi, 1, None], out=t)
+        np.multiply(t, t, out=t)
+        w += t                                              # (c, n) d²
+        np.copyto(t, w)
+        t.partition(k, axis=1)
+        h2 = np.maximum(t[:, k], 1e-18)
+        w *= (-0.5 / h2)[:, None]
+        np.exp(w, out=w)                                    # (c, n) weights
+        s = w @ g                                           # (c, p²+p)
+        a = s[:, :p * p].reshape(c, p, p)
+        b = s[:, p * p:]
         try:
             beta = np.linalg.solve(a, b[..., None])[..., 0]
         except np.linalg.LinAlgError:                            # rare: fall
             beta = np.stack([np.linalg.lstsq(a[i], b[i], rcond=None)[0]
-                             for i in range(len(a))])            # back per row
+                             for i in range(c)])                 # back per row
         out[lo:hi] = np.einsum("cp,cp->c", xp[lo:hi], beta)
     return out
 

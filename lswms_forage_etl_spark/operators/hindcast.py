@@ -5,11 +5,13 @@ halfway index (capped at min(100, n/2) refits, :43), fit the GP on rows
 [:cut] and predict 4 horizons; horizon h is stored diagonally at row cut+h,
 column h — yielding the '0/16/32/48 day lag time' matrix (:67-69, 91-94).
 
-Engine form: one `applyInPandas` per zone emits TALL rows
-(zone_id, date, horizon_days, value); the diagonal positional write becomes
-a keyed pivot — fragile index arithmetic replaced by (zone, date, horizon)
-keys (SURVEY §2.4 J5). Zones parallelize; each group's refit loop is
-internal numpy (the same cut-point semantics, no cross-zone state).
+Engine form: the zone buckets and panels of `models.gp` (one pandas call
+per bucket of zones; zones with the same day offsets share a panel) emit
+TALL rows (zone_id, date, horizon_days, value); the diagonal positional
+write becomes a keyed pivot — fragile index arithmetic replaced by (zone,
+date, horizon) keys (SURVEY §2.4 J5). The refit loop runs per panel, not
+per zone: each cut is one solve with the panel's zones as right-hand
+sides (the same cut-point semantics, no cross-zone state).
 """
 
 from __future__ import annotations
@@ -23,7 +25,10 @@ from pyspark.sql.types import (
     DateType, DoubleType, IntegerType, StringType, StructField, StructType,
 )
 
-from lswms_forage_etl_spark.models.gp import HORIZON_DAYS, gp_posterior_mean
+from lswms_forage_etl_spark.models.gp import (
+    HORIZON_DAYS, LEADS, gp_posterior_mean, map_zone_buckets, panel_rows,
+    zone_panels,
+)
 
 HINDCAST_SCHEMA = StructType([
     StructField("zone_id", StringType(), False),
@@ -35,32 +40,23 @@ HINDCAST_SCHEMA = StructType([
 MAX_REFITS = 100  # reference cap min(100, n/2) at BiomassHindcasts.py:43
 
 
-def _hindcast_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.dropna(subset=["biomass"]).sort_values("date")
-    n = len(pdf)
-    if n < 4:
-        return pd.DataFrame(columns=[f.name for f in HINDCAST_SCHEMA.fields])
-    dates = pd.to_datetime(pdf["date"])
-    x = (dates - dates.iloc[0]).dt.days.to_numpy(float)
-    y = pdf["biomass"].to_numpy(float)
-    start = n // 2                       # halfway index (:38-39)
-    n_refits = min(MAX_REFITS, n - start)
-    rows = []
-    zone = pdf["zone_id"].iloc[0]
-    for cut in range(start, start + n_refits):
-        xs = np.array([x[cut - 1] + h for h in (0, *HORIZON_DAYS)])
-        mean = gp_posterior_mean(x[:cut], y[:cut], xs)
-        for h, m in zip((0, *HORIZON_DAYS), mean):
-            rows.append((zone,
-                         (dates.iloc[0] + pd.Timedelta(days=int(x[cut - 1] + h))).date(),
-                         int(h), float(m)))
-    return pd.DataFrame(rows, columns=[f.name for f in HINDCAST_SCHEMA.fields])
+def _hindcast_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+    out = []
+    for x, zones, t0, y in zone_panels(pdf, min_len=4):
+        n = len(x)
+        start = n // 2                   # halfway index (:38-39)
+        for cut in range(start, start + min(MAX_REFITS, n - start)):
+            xs = x[cut - 1] + np.array(LEADS, dtype=float)
+            mean = gp_posterior_mean(x[:cut], y[:cut], xs)
+            out.append(panel_rows(zones, t0, xs, mean))
+    if not out:
+        return pd.DataFrame(columns=HINDCAST_SCHEMA.fieldNames())
+    return pd.concat(out, ignore_index=True)
 
 
 def hindcast_tall(zone_series: DataFrame) -> DataFrame:
     """W2 — tall (zone_id, date, horizon_days, value) hindcast rows."""
-    return (zone_series.where(F.col("biomass").isNotNull())
-            .groupBy("zone_id").applyInPandas(_hindcast_group, HINDCAST_SCHEMA))
+    return map_zone_buckets(zone_series, _hindcast_bucket, HINDCAST_SCHEMA)
 
 
 def lag_matrix(tall: DataFrame) -> DataFrame:

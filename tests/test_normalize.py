@@ -26,6 +26,7 @@ ADVERSARIAL = [
     "quotes ‘a’ “b” „c‚ and dashes – — −",
     "already clean é è ü ñ",
     "Ã©Ã¨ double Ã¼",
+    "split Ã\x07© and â€\xadœ and Ã\xad",
 ]
 
 
@@ -50,6 +51,10 @@ def test_normalize_sql_known_cases():
     assert _sql_one(con, "ﬁne…") == "fine..."
     assert _sql_one(con, "a​b\x07c") == "abc"
     assert _sql_one(con, "keep\tws\r\n") == "keep\tws\r\n"
+    # a deletion inside a damaged sequence is made before repair
+    assert _sql_one(con, "Ã\x07©") == "é"
+    assert _sql_one(con, "â€\xadœ") == '"'
+    assert _sql_one(con, "Ã\xad") == "í"
 
 
 def test_spark_matches_duckdb(spark):

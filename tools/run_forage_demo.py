@@ -17,10 +17,15 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in, for the driver and the Python workers
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -137,18 +142,23 @@ def main():
     t0 = time.time()
     out = pipe.run(spark, ctx)
     marks = {}
-    for name in ("combined", "results", "zone_series", "forecast"):
+    for name in ("combined", "results", "zone_series", "hindcast_wide",
+                 "forecast"):
         if name not in out:
             # the pipeline's F7 empty-guard cascade skips downstream
             # stages when an input produces no rows (e.g. < 16 days
             # cannot complete a composite period) — report, don't crash
-            marks[name] = ("skipped (empty-guard)", 0.0)
+            marks[name] = 0.0
             continue
+        # the noop sink computes every column; count() may prune the
+        # unused ones out of the plan
         t1 = time.time()
-        marks[name] = (out[name].count(), round(time.time() - t1, 1))
+        out[name].write.format("noop").mode("overwrite").save()
+        marks[name] = round(time.time() - t1, 1)
     total = round(time.time() - t0, 1)
-    for name, (n, secs) in marks.items():
-        shown = f"{n:>9,} rows" if isinstance(n, int) else str(n)
+    for name, secs in marks.items():
+        shown = (f"{out[name].count():>9,} rows" if name in out
+                 else "skipped (empty-guard)")
         print(f"  {name:12s} {shown}  (+{secs}s)")
     print(f"pipeline total: {total}s for {n_days} days "
           f"({[r.status for r in pipe.results]})")
