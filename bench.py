@@ -1,12 +1,18 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Benchmark harness: runs the headline queries (or the registry queries
+named on the command line) at $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
+line: {"metric": ..., "value": total_sec, "unit": "sec",
+"queries": {name: sec}, "spread": {name: {min, median, max, construct_s,
+action_s}}, "sf": ..., "host": {...}}, then the compact driver-tail
+line(s).
 
-Each query is forced to full execution via a count-style noop write
-(`df.write.format('noop')`) so the timing includes the whole plan, not
-just planning. A warmup query pre-initializes the JVM/session so the
-first measured query isn't charged for startup.
+Usage: python bench.py [query ...]
+
+Each query is timed best-of-3 by tools/measure.py: warmed once at the
+smallest sf, its staged tables released before every run, its DataFrame
+build (construct_s) and noop-sink action (action_s) timed apart, so the
+wall covers the whole plan, not just planning. "host" is perfbench's
+fingerprint plus the wall of its fixed calibration job (calib_s).
 """
 
 from __future__ import annotations
@@ -14,12 +20,15 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                                "tools"))
 
-import __spark_entry__ as entrymod
-from lswms_forage_etl_spark import get_spark, lifecycle
+import measure  # noqa: E402  (first: puts this checkout on both paths)
+
+import __spark_entry__ as entrymod  # noqa: E402
+from lswms_forage_etl_spark import get_spark  # noqa: E402
+from perfbench.run import calibrate, fingerprint  # noqa: E402
 
 # Headline set: one per operator family, weighted toward shuffle/join/agg
 # heavy paths that dominate at scale.
@@ -144,25 +153,19 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    qs = entrymod.queries()
+    names = sys.argv[1:] or HEADLINE
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Warmup (not counted): JVM + Python/Arrow worker pool spawn, then one
-    # pass of every headline query at the smallest sf so whole-stage
-    # codegen is compiled and JIT'd — measured numbers then reflect the
-    # engine's steady-state throughput, not one-time HotSpot compilation
-    # (the md5-heavy dedup plan alone costs ~8s of first-run codegen).
-    qs = entrymod.queries()
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, schema="id long").write.format("noop").mode(
-        "overwrite").save()
-    warm_sf = "/root/testdata/sf0.001"
-    for name in HEADLINE:
-        try:
-            qs[name](spark, warm_sf).write.format("noop").mode(
-                "overwrite").save()
-        except Exception:
-            pass  # warmup is best-effort
+    # Warmup (not counted): the md5-heavy dedup plan alone costs ~8s of
+    # first-run codegen, so measured numbers are steady-state only after
+    # one pass of every query at the smallest sf.
+    measure.warm(spark, qs, names)
+    host = {**fingerprint(), "calib_s": round(calibrate(spark), 3)}
 
     # Failure isolation: one broken query must never abort the whole bench
     # (round-2 lesson — a partial bench beats no bench). Errors are recorded
@@ -170,38 +173,30 @@ def main() -> None:
     timings: dict[str, object] = {}
     spreads: dict[str, dict[str, float]] = {}
     errors = 0
-    for name in HEADLINE:
-        runs: list[float] = []
-        try:
-            # best-of-3 (was best-of-2 through round 3): identical code
-            # measured 13.9s-18.4s across runs on this host — ambient
-            # noise, not the engine; min-of-3 converges much tighter
-            for _ in range(3):
-                # queries that persist() stage tables (dedup family) must not
-                # leak cached blocks into the next measurement — tracked
-                # handles released first (covers localCheckpoint storage,
-                # which clearCache cannot free), clearCache as backstop
-                lifecycle.release_tracked()
-                spark.catalog.clearCache()
-                t0 = time.time()
-                qs[name](spark, sf_dir).write.format("noop") \
-                    .mode("overwrite").save()
-                runs.append(time.time() - t0)
-            runs.sort()
-            timings[name] = round(runs[0], 3)
-            # per-query spread (VERDICT r4 item 7): min is the headline
-            # number; median and max make round-over-round regressions
-            # decidable without re-running (a +30% min inside last round's
-            # min..max band is noise; outside it is real)
-            spreads[name] = {
-                "min": round(runs[0], 3),
-                "median": round(runs[len(runs) // 2], 3),
-                "max": round(runs[-1], 3),
-            }
-        except Exception as exc:  # noqa: BLE001 - isolate per query
+    for name in names:
+        # best-of-3 (was best-of-2 through round 3): identical code
+        # measured 13.9s-18.4s across runs on this host — ambient
+        # noise, not the engine; min-of-3 converges much tighter
+        rec = measure.best_of(spark, qs[name], sf_dir, 3)
+        if "error" in rec:
             errors += 1
-            msg = str(exc).split("\n", 1)[0][:200]
-            timings[name] = f"ERROR: {type(exc).__name__}: {msg}"
+            timings[name] = f"ERROR: {rec['error']}"
+            continue
+        runs = rec["walls"]
+        timings[name] = round(runs[0], 3)
+        # per-query spread (VERDICT r4 item 7): min is the headline
+        # number; median and max make round-over-round regressions
+        # decidable without re-running (a +30% min inside last round's
+        # min..max band is noise; outside it is real). The best run's
+        # split says whether its wall went to building the query or to
+        # the action.
+        spreads[name] = {
+            "min": round(runs[0], 3),
+            "median": round(runs[len(runs) // 2], 3),
+            "max": round(runs[-1], 3),
+            "construct_s": round(rec["construct_s"], 3),
+            "action_s": round(rec["action_s"], 3),
+        }
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     total = round(sum(v for v in timings.values()
@@ -213,6 +208,7 @@ def main() -> None:
         "queries": timings,
         "spread": spreads,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "host": host,
     }
     if errors:
         out["errors"] = errors

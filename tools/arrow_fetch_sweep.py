@@ -22,9 +22,11 @@ Usage: python tools/arrow_fetch_sweep.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))  # the checkout this file lives in
 
 
 def main() -> int:

@@ -25,9 +25,11 @@ Usage: python tools/explain_audit.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))  # the checkout this file lives in
 
 JOIN_NODES = (
     "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",

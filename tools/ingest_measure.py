@@ -26,13 +26,15 @@ Output: one JSON line per (mode, scale, batch).
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
 import time
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))  # the checkout this file lives in
 
 SLICES = {
     "1x": "/root/testdata/sf0.1/documents.parquet",

@@ -28,22 +28,15 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-import urllib.request
 
-sys.path.insert(0, "/root/repo")
+import measure
 
-SNAPSHOT_DEFAULT = "/root/repo/METRICS_sf001.jsonl"
-
-
-def _api(base: str, path: str):
-    with urllib.request.urlopen(f"{base}{path}", timeout=10) as r:
-        return json.loads(r.read())
+SNAPSHOT_DEFAULT = os.path.join(measure.ROOT, "METRICS_sf001.jsonl")
 
 
 def main() -> None:
     import __spark_entry__ as entrymod
-    from lswms_forage_etl_spark import get_spark, lifecycle
+    from lswms_forage_etl_spark import get_spark
 
     argv = sys.argv[1:]
     sync_path = None
@@ -93,37 +86,25 @@ def main() -> None:
     spark = get_spark("runtime-metrics",
                       extra_conf={"spark.ui.enabled": "true"})
     spark.sparkContext.setLogLevel("ERROR")
-    ui = spark.sparkContext.uiWebUrl
-    if not ui:
+    base = measure.ui_base(spark)
+    if not base:
         print("Spark UI disabled; cannot read runtime metrics",
               file=sys.stderr)
         sys.exit(1)
-    app_id = spark.sparkContext.applicationId
-    base = f"{ui}/api/v1/applications/{app_id}"
 
     errored = []
     for name, fn in entrymod.queries().items():
         if only and name not in only:
             continue
-        lifecycle.release_tracked()
-        spark.catalog.clearCache()
-        seen_stages = {s["stageId"] for s in _api(base, "/stages")}
-        seen_jobs = {j["jobId"] for j in _api(base, "/jobs")}
-        t0 = time.time()
-        try:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        except Exception as e:  # noqa: BLE001 - isolate per query
-            print(json.dumps({"query": name, "error": str(e)[:200]}))
+        rec, jobs, stages = measure.run_with_ui(spark, base, fn, sf_dir)
+        if "error" in rec:
+            print(json.dumps({"query": name, "error": rec["error"]}))
             errored.append(name)
             continue
-        wall = time.time() - t0
-        stages = [s for s in _api(base, "/stages")
-                  if s["stageId"] not in seen_stages
-                  and s["status"] != "SKIPPED"]
-        jobs = [j for j in _api(base, "/jobs") if j["jobId"] not in seen_jobs]
+        stages = [s for s in stages if s["status"] != "SKIPPED"]
         line = json.dumps({
             "query": name,
-            "wall_s": round(wall, 3),
+            "wall_s": round(rec["wall_s"], 3),
             "jobs": len(jobs),
             "stages": len(stages),
             "tasks": sum(s.get("numCompleteTasks", 0) for s in stages),

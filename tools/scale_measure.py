@@ -16,12 +16,11 @@ from __future__ import annotations
 
 import math
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+import measure  # first: puts this checkout on both import paths
 
 import __spark_entry__ as entrymod
-from lswms_forage_etl_spark import get_spark, lifecycle
+from lswms_forage_etl_spark import get_spark
 
 QUERIES = [
     "dedup_lsh_pairs",
@@ -201,19 +200,12 @@ def make_embedding_query(n_vecs: int):
     return q, planes
 
 
-def best_of(fn, sf_dir, spark, n=2):
-    best = 9e9
-    for _ in range(n):
-        lifecycle.release_tracked()
-        spark.catalog.clearCache()
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        best = min(best, time.time() - t0)
-    rows = fn(spark, sf_dir).count()
-    lifecycle.release_tracked()
-    spark.catalog.clearCache()
-    return best, rows
+def wall_and_rows(spark, fn, sf_dir) -> str:
+    """'<best-of-2 wall> | <rows>' table cells, or the error and no rows."""
+    rec = measure.best_of(spark, fn, sf_dir, 2)
+    if "error" in rec:
+        return f"{rec['error']} | "
+    return f"{rec['wall_s']:.2f} | {measure.count_rows(spark, fn, sf_dir)}"
 
 
 def main() -> None:
@@ -243,12 +235,7 @@ def main() -> None:
         names = only
     else:
         names = list(QUERIES)
-    for name in names:  # warm codegen/JIT at the small sf
-        try:
-            qs[name](spark, "/root/testdata/sf0.001").write.format(
-                "noop").mode("overwrite").save()
-        except Exception:
-            pass
+    measure.warm(spark, qs, names)
     print("| query | dir | wall s | rows |")
     print("|---|---|---|---|")
     for name in names:
@@ -260,8 +247,8 @@ def main() -> None:
                     f"{d}/embeddings.parquet").count()
                 fn, planes = make_embedding_query(n_vecs)
                 label = f"{name}(r={planes})"
-            t, rows = best_of(fn, d, spark)
-            print(f"| {label} | {d} | {t:.2f} | {rows} |", flush=True)
+            print(f"| {label} | {d} | {wall_and_rows(spark, fn, d)} |",
+                  flush=True)
 
 
 if __name__ == "__main__":

@@ -19,14 +19,14 @@ Usage: python tools/skew_measure.py [dir ...]
 from __future__ import annotations
 
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+import measure  # first: puts this checkout on both import paths
 
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 from lswms_forage_etl_spark import get_spark, lifecycle
+from scale_measure import wall_and_rows
 
 WALL_QUERIES = ["dedup_lsh_pairs", "dedup_clusters", "dedup_simhash",
                 "corpus_vocab"]
@@ -59,28 +59,13 @@ def candidate_counts(spark, sf_dir):
     base, _banded, pair_fps = _lsh_banding(sigs, "doc_id", 4, band_arr)
     sig_pairs = pair_fps.count()
     n_sigs = base.select("_sfp").distinct().count()
-    lifecycle.release_tracked()
-    spark.catalog.clearCache()
+    measure.release(spark)
     return doc_banded, sig_pairs, n_sigs
 
 
-def wall(fn, spark, sf_dir, n=2):
-    best = 9e9
-    for _ in range(n):
-        lifecycle.release_tracked()
-        spark.catalog.clearCache()
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        best = min(best, time.time() - t0)
-    rows = fn(spark, sf_dir).count()
-    lifecycle.release_tracked()
-    spark.catalog.clearCache()
-    return best, rows
-
-
 def giant_group(spark, sf_dir):
-    """salted two-phase vs plain groupBy count on the 95%-'en' column."""
+    """salted two-phase vs plain groupBy count on the 95%-'en' column:
+    '<salted wall> / <plain wall> | <rows>' table cells."""
     from lswms_forage_etl_spark.operators.skew import salted_agg_count
 
     def salted(spark, d):
@@ -93,10 +78,13 @@ def giant_group(spark, sf_dir):
             .select("lang", "doc_id")
         return docs.groupBy("lang").agg(F.count(F.lit(1)).alias("count"))
 
-    ts, rs = wall(salted, spark, sf_dir)
-    tp, rp = wall(plain, spark, sf_dir)
-    assert rs == rp
-    return ts, tp, rs
+    recs = [measure.best_of(spark, fn, sf_dir, 2) for fn in (salted, plain)]
+    errors = [r["error"] for r in recs if "error" in r]
+    if errors:
+        return f"{errors[0]} | "
+    rows = measure.count_rows(spark, salted, sf_dir)
+    assert rows == measure.count_rows(spark, plain, sf_dir)
+    return f"{recs[0]['wall_s']:.2f} / {recs[1]['wall_s']:.2f} | {rows}"
 
 
 def main() -> None:
@@ -105,14 +93,8 @@ def main() -> None:
     spark = get_spark("skew-measure")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
-    for name in WALL_QUERIES:  # warm codegen/JIT
-        try:
-            qs[name](spark, "/root/testdata/sf0.001").write.format(
-                "noop").mode("overwrite").save()
-        except Exception:
-            pass
-    lifecycle.release_tracked()
-    spark.catalog.clearCache()
+    measure.warm(spark, qs, WALL_QUERIES)
+    measure.release(spark)
 
     print("| dir | doc-banded cand (r5 shape) | sig-pair cand (shipped) "
           "| distinct sigs |")
@@ -126,12 +108,11 @@ def main() -> None:
     print("|---|---|---|---|")
     for name in WALL_QUERIES:
         for d in dirs:
-            t, rows = wall(qs[name], spark, d)
-            print(f"| {name} | {d} | {t:.2f} | {rows} |", flush=True)
+            print(f"| {name} | {d} | {wall_and_rows(spark, qs[name], d)} |",
+                  flush=True)
     for d in dirs:
-        ts, tp, rows = giant_group(spark, d)
-        print(f"| giant_group salted/plain | {d} | {ts:.2f} / {tp:.2f} "
-              f"| {rows} |", flush=True)
+        print(f"| giant_group salted/plain | {d} | {giant_group(spark, d)} |",
+              flush=True)
 
 
 if __name__ == "__main__":

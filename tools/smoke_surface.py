@@ -4,8 +4,8 @@ registry automatically; 179 as of round 13) to completion against a
 directory (default /root/scale100x) — the zero-failure-at-100x claim
 SCALE.md records per round (round 10: 138/138 in 1488 s; round 11:
 142/142 in 702 s, plus the adversarial-skew slices, VERDICT r10
-item 1). Prints OK/FAIL per query and a DONE summary; exit code =
-number of failures.
+item 1). Prints OK/FAIL per query and a DONE summary (queries ok,
+sum of their walls); exit code = number of failures.
 
 Usage: python tools/smoke_surface.py [sf_dir] [--out walls.jsonl]
   --out appends one JSON line per query: {"dir", "query", "wall_s"}
@@ -17,14 +17,13 @@ from __future__ import annotations
 
 import json
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+import measure
 
 
 def main() -> int:
     import __spark_entry__ as em
-    from lswms_forage_etl_spark import get_spark, lifecycle
+    from lswms_forage_etl_spark import get_spark
 
     args = sys.argv[1:]
     out_path = None
@@ -39,34 +38,24 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     qs = em.queries()
     fails = []
-    t_all = time.time()
+    total = 0.0
     for i, (name, fn) in enumerate(qs.items()):
-        t0 = time.time()
-        try:
-            fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite").save()
-            wall = time.time() - t0
-            print(f"OK   {name} [{wall:.1f}s] "
-                  f"({i + 1}/{len(qs)})", flush=True)
-            if outf:
-                outf.write(json.dumps(
-                    {"dir": sf_dir, "query": name,
-                     "wall_s": round(wall, 2)}) + "\n")
-                outf.flush()
-        except Exception as e:  # noqa: BLE001 - isolate per query
+        rec = measure.run_once(spark, fn, sf_dir)
+        total += rec["wall_s"]
+        if "error" in rec:
             fails.append(name)
-            print(f"FAIL {name}: {type(e).__name__}: {str(e)[:160]}",
-                  flush=True)
-            if outf:
-                outf.write(json.dumps(
-                    {"dir": sf_dir, "query": name,
-                     "error": f"{type(e).__name__}: {str(e)[:160]}"})
-                    + "\n")
-                outf.flush()
-        lifecycle.release_tracked()
-        spark.catalog.clearCache()
+            print(f"FAIL {name}: {rec['error']}", flush=True)
+            line = {"dir": sf_dir, "query": name, "error": rec["error"]}
+        else:
+            print(f"OK   {name} [{rec['wall_s']:.1f}s] "
+                  f"({i + 1}/{len(qs)})", flush=True)
+            line = {"dir": sf_dir, "query": name,
+                    "wall_s": round(rec["wall_s"], 2)}
+        if outf:
+            outf.write(json.dumps(line) + "\n")
+            outf.flush()
     print(f"DONE {len(qs) - len(fails)}/{len(qs)} ok in "
-          f"{time.time() - t_all:.0f}s; fails={fails}", flush=True)
+          f"{total:.0f}s; fails={fails}", flush=True)
     return len(fails)
 
 

@@ -11,51 +11,31 @@ Usage: python tools/stage_probe.py <sf_dir> <query> [query ...]
 
 from __future__ import annotations
 
-import json
 import sys
-import urllib.request
 
-sys.path.insert(0, "/root/repo")
-
-
-def _api(base: str, path: str):
-    with urllib.request.urlopen(f"{base}{path}", timeout=10) as r:
-        return json.loads(r.read())
+import measure
 
 
 def main() -> None:
     import __spark_entry__ as entrymod
-    from lswms_forage_etl_spark import get_spark, lifecycle
+    from lswms_forage_etl_spark import get_spark
 
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
     spark = get_spark("stage_probe", extra_conf={
         "spark.ui.enabled": "true", "spark.ui.port": "4050"})
     spark.sparkContext.setLogLevel("ERROR")
-    base = f"http://localhost:{spark.sparkContext.uiWebUrl.rsplit(':')[-1]}" \
-        if spark.sparkContext.uiWebUrl else "http://localhost:4050"
-    app_id = spark.sparkContext.applicationId
+    base = measure.ui_base(spark)
     qs = entrymod.queries()
+    # warm at the smallest sf so codegen/Arrow cold cost doesn't distort
+    # the probed runs' walls (task counts unaffected either way)
+    measure.warm(spark, qs, names)
     for name in names:
-        # warm once at the smallest sf so codegen/Arrow cold cost doesn't
-        # distort the probed run's walls (task counts unaffected either way)
-        try:
-            qs[name](spark, "/root/testdata/sf0.001").write.format(
-                "noop").mode("overwrite").save()
-        except Exception:
-            pass
-        lifecycle.release_tracked()
-        spark.catalog.clearCache()
-        before = {s["stageId"] for s in _api(
-            base, f"/api/v1/applications/{app_id}/stages")}
         spark.sparkContext.setJobDescription(f"probe:{name}")
-        qs[name](spark, sf_dir).write.format("noop") \
-            .mode("overwrite").save()
-        lifecycle.release_tracked()
-        stages = [s for s in _api(
-            base, f"/api/v1/applications/{app_id}/stages")
-            if s["stageId"] not in before]
-        stages.sort(key=lambda s: s["stageId"])
+        rec, _, stages = measure.run_with_ui(spark, base, qs[name], sf_dir)
+        if "error" in rec:
+            print(f"=== {name}: ERROR {rec['error']}")
+            continue
         print(f"=== {name}: {len(stages)} stages")
         for s in stages:
             ms = s.get("executorRunTime", 0)
