@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import datetime as dt
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -154,11 +155,38 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # =============================================================================
 # Query implementations. Each fn: (spark, sf_dir) -> DataFrame.
-# Naming: q_<family>_<name>; oracle key = <family>_<name>.
+# Naming: q_<family>_<name>; registry and oracle key = <family>_<name>.
 # =============================================================================
+
+class Declaration(NamedTuple):
+    name: str
+    fn: Callable[[SparkSession, str], DataFrame]
+    graded: bool
+    headline: bool
+    rows_only: bool
+
+
+# filled once, at import, by @query in definition order; read-only after
+_DECLARED: list[Declaration] = []
+
+
+def query(*, graded: bool = False, headline: bool = False,
+          rows_only: bool = False):
+    """Register q_<name> as registry query <name>.
+
+    graded: in the driver's graded window, the first 50 entries of
+    queries(). headline: timed by a bare `bench.py`. rows_only: has no
+    oracle_sql() entry, so the gate checks its rows only."""
+    def register(fn):
+        _DECLARED.append(Declaration(fn.__name__.removeprefix("q_"), fn,
+                                     graded, headline, rows_only))
+        return fn
+    return register
+
 
 # --- scans / filters / projections (S1, F1-F3) -------------------------------
 
+@query(graded=True)
 def q_scan_pushdown_filter(spark, sf):
     """S1/F1/F3 — date-range + predicate filter with column pruning; both
     filters reach the parquet scan (PushedFilters)."""
@@ -169,6 +197,7 @@ def q_scan_pushdown_filter(spark, sf):
             .select("l_orderkey", "l_partkey", "l_quantity"))
 
 
+@query(graded=True)
 def q_filter_bitmask(spark, sf):
     """F4 — bitmask cloud-filter semantics: (k & 3) >= 2 AND
     ((k >> 2) & 3) <= 1 (reference data_extraction_v2.py:143-158)."""
@@ -178,6 +207,7 @@ def q_filter_bitmask(spark, sf):
             .select("l_orderkey", "l_linenumber", "l_quantity"))
 
 
+@query(graded=True)
 def q_filter_sentinel_mask(spark, sf):
     """F5 — sentinel-nodata set -> NULL (BiomassAggregate.py:136-148):
     synthesize sentinels from events.value deterministically, then mask."""
@@ -191,6 +221,7 @@ def q_filter_sentinel_mask(spark, sf):
         pround(mask_sentinels(v), 4).alias("masked_value"))
 
 
+@query(graded=True)
 def q_filter_zero_jitter(spark, sf):
     """F10 — conditional zero-jitter (gwr_model.py:42-59) with a
     hash-derived deterministic uniform instead of rand(seed): engines agree
@@ -213,6 +244,7 @@ def q_filter_zero_jitter(spark, sf):
 
 # --- scalar functions (C1-C22) -----------------------------------------------
 
+@query(graded=True)
 def q_scalar_ndvi_calibration(spark, sf):
     """C1/C10 — normalized difference + linear biomass calibration."""
     li = _t(spark, sf, "lineitem")
@@ -224,6 +256,7 @@ def q_scalar_ndvi_calibration(spark, sf):
         pround(biomass_calibration(F.col("l_discount")), 6).alias("biom"))
 
 
+@query(graded=True)
 def q_scalar_date_codec(spark, sf):
     """C2/C3/C7 — date <-> int yyyymmdd round-trip + component extraction."""
     o = _t(spark, sf, "orders")
@@ -236,6 +269,7 @@ def q_scalar_date_codec(spark, sf):
         F.dayofmonth(d).alias("dom"))
 
 
+@query(graded=True)
 def q_scalar_grid_snap(spark, sf):
     """C22 — the affine pixel<->coord transform on synthetic lon/lat derived
     from keys; round-trips through (row, col) to cell centers."""
@@ -250,6 +284,7 @@ def q_scalar_grid_snap(spark, sf):
         pround(cell_to_lat(lat_to_row("lat")), 4).alias("cell_lat"))
 
 
+@query()
 def q_scalar_strings(spark, sf):
     """C13/C14/C15 — regex date-extract from filenames, string cleanup,
     filename formatting."""
@@ -262,6 +297,7 @@ def q_scalar_strings(spark, sf):
         F.regexp_replace(F.col("o_orderpriority"), "-", "_").alias("prio_clean"))
 
 
+@query()
 def q_scalar_round_abs(spark, sf):
     """C8/C9 — round/abs chains (rasterize.py:47-48 round(abs(biom),2))."""
     li = _t(spark, sf, "lineitem")
@@ -270,6 +306,7 @@ def q_scalar_round_abs(spark, sf):
                      pround(F.abs(signed), 2).alias("round_abs"))
 
 
+@query(graded=True)
 def q_scalar_json(spark, sf):
     """C21 — JSON parse of events.props + re-serialize (from_json/to_json)."""
     ev = _events(spark, sf)
@@ -284,6 +321,7 @@ def q_scalar_json(spark, sf):
 
 # --- joins (J1-J5) -----------------------------------------------------------
 
+@query(graded=True, headline=True)
 def q_join_merge_inner(spark, sf):
     """J1 — chained inner equi-join (ndvi ⋈ sm ⋈ preci shape):
     lineitem ⋈ orders ⋈ customer with projection; join keys exact ints
@@ -296,6 +334,7 @@ def q_join_merge_inner(spark, sf):
                     F.col("o_orderstatus").alias("status")))
 
 
+@query(graded=True)
 def q_join_snap_grid(spark, sf):
     """J2/J3 — snap-to-grid nearest-sample join: synthetic points (from
     customer) equi-joined to a synthetic raster (from part) on the snapped
@@ -318,6 +357,7 @@ def q_join_snap_grid(spark, sf):
             .select("c_custkey", "row", "col", "cell_value"))
 
 
+@query(graded=True)
 def q_join_semi_anti(spark, sf):
     """Semi/anti joins (§2.4 'exposed for free'): customers with orders
     above 300k (semi) tagged against those without (anti), via a union."""
@@ -330,6 +370,7 @@ def q_join_semi_anti(spark, sf):
     return semi.unionByName(anti)
 
 
+@query(graded=True, headline=True)
 def q_join_zonal_broadcast(spark, sf):
     """J4/A3 — zonal mean+count: fact rows mapped to zones through a small
     broadcast dimension (nation as the 'zone coverage' table)."""
@@ -344,6 +385,7 @@ def q_join_zonal_broadcast(spark, sf):
                  F.count(F.lit(1)).alias("cell_count")))
 
 
+@query(graded=True, headline=True)
 def q_join_asof_nearest(spark, sf):
     """As-of join (J2's general temporal form): each event matched to the
     latest order at-or-before its timestamp within the same key bucket.
@@ -376,6 +418,7 @@ def q_join_asof_nearest(spark, sf):
         .select("event_id", "edate", "odate", "n_orders"))
 
 
+@query()
 def q_join_asof_forward(spark, sf):
     """FORWARD as-of join — the directional complement of
     join_asof_nearest (the at-or-BEFORE form): each view event matched
@@ -413,206 +456,7 @@ def q_join_asof_forward(spark, sf):
                 "next_purchase_id", "purchase_ts"))
 
 
-# --- aggregations (A1-A8) ----------------------------------------------------
-
-def q_agg_pricing_summary(spark, sf):
-    """TPC-H-Q1-shaped flagship: grouped multi-aggregate with scalar
-    arithmetic; sums exact via scaled-bigint; avgs rounded."""
-    li = _t(spark, sf, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (li.where(F.col("l_shipdate") <= "1998-09-02")
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(
-                (F.sum((F.col("l_quantity") * 100).cast("long")) / 100.0).alias("sum_qty"),
-                (F.sum(F.floor(disc_price * 100 + 0.5).cast("long")) / 100.0).alias("sum_disc_price"),
-                scaled_mean(F.col("l_quantity"), 2, 4).alias("avg_qty"),
-                scaled_mean(F.col("l_discount"), 4, 6).alias("avg_disc"),
-                F.count(F.lit(1)).alias("count_order"))
-            .orderBy("l_returnflag", "l_linestatus"))
-
-
-def q_agg_temporal_mean_composite(spark, sf):
-    """A1 — 16-day mean composite over events keyed by user bucket,
-    stamped with the period-end date (W1 periods via broadcast range
-    join — year-reset walk generated driver-side)."""
-    ev = _events(spark, sf)
-    periods = composite_periods(dt.date(2024, 1, 3), dt.date(2024, 12, 31))
-    e = ev.select(F.pmod(F.col("user_id"), F.lit(100)).alias("cell"),
-                  F.col("ts").cast("date").alias("d"), "value")
-    j = assign_period(e, periods, date_col="d")
-    return (j.groupBy("cell", F.col("end").alias("date"))
-            .agg(scaled_mean(F.col("value"), 6, 4).alias("value_mean"),
-                 F.count(F.lit(1)).alias("n_obs")))
-
-
-def q_agg_temporal_sum_composite(spark, sf):
-    """A2 — 16-day sum composite (precipitation_sum shape), null-skipping
-    sum via scaled-bigint for exactness."""
-    ev = _events(spark, sf)
-    periods = composite_periods(dt.date(2024, 1, 3), dt.date(2024, 12, 31))
-    v = F.when(F.col("event_type") == "error", F.lit(None)).otherwise(F.col("value"))
-    e = ev.select(F.pmod(F.col("user_id"), F.lit(100)).alias("cell"),
-                  F.col("ts").cast("date").alias("d"), v.alias("v"))
-    j = assign_period(e, periods, date_col="d")
-    return (j.groupBy("cell", F.col("end").alias("date"))
-            .agg((F.coalesce(
-                F.sum(F.floor(F.col("v") * 10000 + 0.5).cast("long")),
-                F.lit(0).cast("long")) / 10000.0)
-                 .alias("value_sum")))
-
-
-def q_agg_conditional_fraction(spark, sf):
-    """A4 — global conditional fraction: % of lineitems with zero tax
-    (gwr_model.py:44-46 nonzero-% precheck shape)."""
-    li = _t(spark, sf, "lineitem")
-    return li.agg(
-        pround(F.avg((F.col("l_tax") == 0).cast("double")) * 100, 4)
-        .alias("pct_zero_tax"),
-        F.count(F.lit(1)).alias("n_rows"))
-
-
-def q_agg_max_resume_date(spark, sf):
-    """A5 — resume-point derivation: max processed date from a filename
-    column (regex date extract then max; data_extraction_v2.py:407-425)."""
-    o = _t(spark, sf, "orders")
-    fname = raster_filename(F.col("o_orderdate").cast("date"))
-    return o.select(fname.alias("f")).select(
-        yyyymmdd_to_date(F.regexp_extract("f", r"(\d{8})", 1)).alias("d")
-    ).agg(F.max("d").alias("max_date"),
-          F.date_add(F.max("d"), 1).alias("next_start"))
-
-
-def q_agg_distinct_dates(spark, sf):
-    """A8 — distinct date driver (rasterize.py:80-82 loop keys)."""
-    li = _t(spark, sf, "lineitem")
-    return (li.select(F.col("l_shipdate").cast("date").alias("ship_date"))
-            .distinct())
-
-
-def q_agg_rollup(spark, sf):
-    """Grouping-sets surface (§2.5 'Spark provides natively'): rollup over
-    (returnflag, linestatus) with exact scaled sums."""
-    li = _t(spark, sf, "lineitem")
-    return (li.rollup("l_returnflag", "l_linestatus")
-            .agg((F.sum((F.col("l_quantity") * 100).cast("long")) / 100.0)
-                 .alias("sum_qty"),
-                 F.count(F.lit(1)).alias("n"))
-            .select(F.coalesce("l_returnflag", F.lit("ALL")).alias("rf"),
-                    F.coalesce("l_linestatus", F.lit("ALL")).alias("ls"),
-                    "sum_qty", "n"))
-
-
-# --- windows (W1-W6) ---------------------------------------------------------
-
-def q_window_composite_periods(spark, sf):
-    """W1 — the year-reset 16-day period table itself (golden oracle for
-    get_composite_periods, data_extraction_v2.py:85-106). sf-independent."""
-    periods = composite_periods(dt.date(2023, 12, 1), dt.date(2024, 3, 1))
-    from lswms_forage_etl_spark.lifecycle import local_df
-    return local_df(spark,
-                    [(p, s, e) for p, s, e in periods],
-                    "period_id INT, start DATE, end DATE")
-
-
-def q_window_lag_lead(spark, sf):
-    """W3 — lag/lead over per-customer order sequences (the hindcast lag
-    matrix's window primitive)."""
-    o = _t(spark, sf, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return o.select(
-        "o_custkey", "o_orderkey",
-        pround(F.lag("o_totalprice", 1).over(w), 2).alias("prev_price"),
-        pround(F.lead("o_totalprice", 1).over(w), 2).alias("next_price"),
-        F.datediff(F.col("o_orderdate"),
-                   F.lag("o_orderdate", 1).over(w)).alias("days_since_prev"))
-
-
-def q_window_tail_k(spark, sf):
-    """W4 — tail-k per group: last 4 orders per customer
-    (BiomassForecast.py:78 tail-4 shape). Deterministic tie-break."""
-    o = _t(spark, sf, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_orderdate").desc(), F.col("o_orderkey").desc())
-    return (o.withColumn("rn", F.row_number().over(w)).where("rn <= 4")
-            .select("o_custkey", "o_orderkey", "rn"))
-
-
-def q_window_expanding_mean(spark, sf):
-    """W2's relational core — expanding (cumulative) mean per group ordered
-    by date: the hindcast cut-point state expressed as a running window."""
-    o = _t(spark, sf, "orders")
-    w = (Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    total = F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")).over(w)
-    cnt = F.count(F.lit(1)).over(w)
-    return o.select("o_custkey", "o_orderkey",
-                    pround(total / 100.0 / cnt, 4).alias("expanding_avg"))
-
-
-def q_window_days_since_start(spark, sf):
-    """C4 — days since series start per group (BiomassHindcasts.py:57)."""
-    o = _t(spark, sf, "orders")
-    w = Window.partitionBy("o_custkey")
-    return o.select(
-        "o_custkey", "o_orderkey",
-        F.datediff(F.col("o_orderdate"),
-                   F.min(F.col("o_orderdate")).over(w)).alias("t_days"))
-
-
-def q_window_neighborhood_mean(spark, sf):
-    """W6 — 3x3 neighborhood mean on a synthetic grid via offset-explode +
-    self-join-free aggregation (the centroid-fallback primitive)."""
-    p = _t(spark, sf, "part")
-    cells = (p.select(
-        F.pmod(F.col("p_partkey") * 3, F.lit(40)).cast("int").alias("col"),
-        F.pmod(F.col("p_partkey") * 11, F.lit(40)).cast("int").alias("row"),
-        F.col("p_retailprice").alias("v"))
-        .groupBy("row", "col").agg(scaled_mean(F.col("v"), 2, 4).alias("v")))
-    off = F.expr("flatten(transform(sequence(-1,1), dr -> "
-                 "transform(sequence(-1,1), dc -> struct(dr, dc))))")
-    spread = (cells.withColumn("o", F.explode(off))
-              .select((F.col("row") + F.col("o.dr")).alias("row"),
-                      (F.col("col") + F.col("o.dc")).alias("col"), "v"))
-    return (spread.groupBy("row", "col")
-            .agg(scaled_mean(F.col("v"), 4, 4).alias("nbr_mean"),
-                 F.count(F.lit(1)).alias("nbr_n"))
-            .join(cells.select("row", "col"), ["row", "col"], "left_semi"))
-
-
-def q_window_sliding_mean(spark, sf):
-    """Sliding (hopping) window aggregate: 4-day windows every 2 days over
-    events. Each row explodes into exactly width/hop = 2 window starts —
-    bounded fan-out computed map-side (the streaming twin is
-    `window(ts, '4 days', '2 days')`)."""
-    ev = _events(spark, sf)
-    hop_d, width_hops = 2, 2  # 4-day window, 2-day hop
-    d = F.col("ts").cast("date")
-    hop_idx = F.floor(F.datediff(d, F.lit("2024-01-01")) / hop_d)
-    starts = F.transform(
-        F.sequence(F.lit(0), F.lit(width_hops - 1)),
-        lambda k: F.date_add(F.lit("2024-01-01"),
-                             ((hop_idx - k) * hop_d).cast("int")))
-    e = ev.select(d.alias("d"), "value",
-                  F.explode(starts).alias("window_start"))
-    e = e.where(F.col("d") < F.date_add(F.col("window_start"),
-                                        hop_d * width_hops))
-    return (e.groupBy("window_start")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 scaled_mean(F.col("value"), 6, 4).alias("value_mean")))
-
-
-def q_window_sessionize(spark, sf):
-    """Gap-based sessionization (30-min inactivity splits) + per-session
-    rollup — one shuffle on user_id, two window passes."""
-    ev = _events(spark, sf)
-    s = sessionize(ev, gap_minutes=30, order_cols=("event_id",))
-    return (s.groupBy("user_id", "session_idx")
-            .agg(F.count(F.lit(1)).alias("n_events"),
-                 F.min("event_id").alias("first_event"),
-                 (F.sum(F.floor(F.col("value") * 10000 + 0.5).cast("long"))
-                  / 10000.0).alias("value_sum")))
-
-
+@query(graded=True, headline=True)
 def q_join_range_bucketed(spark, sf):
     """Generic non-uniform range join at scale: lineitem prices binned into
     irregular bands via a broadcast HASH join on a coarse block key (bands
@@ -645,6 +489,234 @@ def q_join_range_bucketed(spark, sf):
                  .alias("qty_sum")))
 
 
+# --- aggregations (A1-A8) ----------------------------------------------------
+
+@query(graded=True, headline=True)
+def q_agg_pricing_summary(spark, sf):
+    """TPC-H-Q1-shaped flagship: grouped multi-aggregate with scalar
+    arithmetic; sums exact via scaled-bigint; avgs rounded."""
+    li = _t(spark, sf, "lineitem")
+    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    return (li.where(F.col("l_shipdate") <= "1998-09-02")
+            .groupBy("l_returnflag", "l_linestatus")
+            .agg(
+                (F.sum((F.col("l_quantity") * 100).cast("long")) / 100.0).alias("sum_qty"),
+                (F.sum(F.floor(disc_price * 100 + 0.5).cast("long")) / 100.0).alias("sum_disc_price"),
+                scaled_mean(F.col("l_quantity"), 2, 4).alias("avg_qty"),
+                scaled_mean(F.col("l_discount"), 4, 6).alias("avg_disc"),
+                F.count(F.lit(1)).alias("count_order"))
+            .orderBy("l_returnflag", "l_linestatus"))
+
+
+@query(graded=True, headline=True)
+def q_agg_temporal_mean_composite(spark, sf):
+    """A1 — 16-day mean composite over events keyed by user bucket,
+    stamped with the period-end date (W1 periods via broadcast range
+    join — year-reset walk generated driver-side)."""
+    ev = _events(spark, sf)
+    periods = composite_periods(dt.date(2024, 1, 3), dt.date(2024, 12, 31))
+    e = ev.select(F.pmod(F.col("user_id"), F.lit(100)).alias("cell"),
+                  F.col("ts").cast("date").alias("d"), "value")
+    j = assign_period(e, periods, date_col="d")
+    return (j.groupBy("cell", F.col("end").alias("date"))
+            .agg(scaled_mean(F.col("value"), 6, 4).alias("value_mean"),
+                 F.count(F.lit(1)).alias("n_obs")))
+
+
+@query(graded=True)
+def q_agg_temporal_sum_composite(spark, sf):
+    """A2 — 16-day sum composite (precipitation_sum shape), null-skipping
+    sum via scaled-bigint for exactness."""
+    ev = _events(spark, sf)
+    periods = composite_periods(dt.date(2024, 1, 3), dt.date(2024, 12, 31))
+    v = F.when(F.col("event_type") == "error", F.lit(None)).otherwise(F.col("value"))
+    e = ev.select(F.pmod(F.col("user_id"), F.lit(100)).alias("cell"),
+                  F.col("ts").cast("date").alias("d"), v.alias("v"))
+    j = assign_period(e, periods, date_col="d")
+    return (j.groupBy("cell", F.col("end").alias("date"))
+            .agg((F.coalesce(
+                F.sum(F.floor(F.col("v") * 10000 + 0.5).cast("long")),
+                F.lit(0).cast("long")) / 10000.0)
+                 .alias("value_sum")))
+
+
+@query(graded=True)
+def q_agg_conditional_fraction(spark, sf):
+    """A4 — global conditional fraction: % of lineitems with zero tax
+    (gwr_model.py:44-46 nonzero-% precheck shape)."""
+    li = _t(spark, sf, "lineitem")
+    return li.agg(
+        pround(F.avg((F.col("l_tax") == 0).cast("double")) * 100, 4)
+        .alias("pct_zero_tax"),
+        F.count(F.lit(1)).alias("n_rows"))
+
+
+@query(graded=True)
+def q_agg_max_resume_date(spark, sf):
+    """A5 — resume-point derivation: max processed date from a filename
+    column (regex date extract then max; data_extraction_v2.py:407-425)."""
+    o = _t(spark, sf, "orders")
+    fname = raster_filename(F.col("o_orderdate").cast("date"))
+    return o.select(fname.alias("f")).select(
+        yyyymmdd_to_date(F.regexp_extract("f", r"(\d{8})", 1)).alias("d")
+    ).agg(F.max("d").alias("max_date"),
+          F.date_add(F.max("d"), 1).alias("next_start"))
+
+
+@query(graded=True)
+def q_agg_distinct_dates(spark, sf):
+    """A8 — distinct date driver (rasterize.py:80-82 loop keys)."""
+    li = _t(spark, sf, "lineitem")
+    return (li.select(F.col("l_shipdate").cast("date").alias("ship_date"))
+            .distinct())
+
+
+@query(graded=True)
+def q_agg_rollup(spark, sf):
+    """Grouping-sets surface (§2.5 'Spark provides natively'): rollup over
+    (returnflag, linestatus) with exact scaled sums."""
+    li = _t(spark, sf, "lineitem")
+    return (li.rollup("l_returnflag", "l_linestatus")
+            .agg((F.sum((F.col("l_quantity") * 100).cast("long")) / 100.0)
+                 .alias("sum_qty"),
+                 F.count(F.lit(1)).alias("n"))
+            .select(F.coalesce("l_returnflag", F.lit("ALL")).alias("rf"),
+                    F.coalesce("l_linestatus", F.lit("ALL")).alias("ls"),
+                    "sum_qty", "n"))
+
+
+@query(graded=True)
+def q_agg_salted_count(spark, sf):
+    """Skew-safe two-phase count: lineitem grouped by a deliberately
+    skewed key (suppkey floor-div — few giant groups) via salt -> partial
+    -> final. The oracle is the PLAIN group-by count: the salted plan must
+    be semantically identical."""
+    li = _t(spark, sf, "lineitem")
+    keyed = li.select((F.col("l_suppkey") % 7).alias("skey"),
+                      "l_orderkey", "l_linenumber")
+    return salted_agg_count(keyed, "skey", num_salts=8)
+
+
+# --- windows (W1-W6) ---------------------------------------------------------
+
+@query(graded=True)
+def q_window_composite_periods(spark, sf):
+    """W1 — the year-reset 16-day period table itself (golden oracle for
+    get_composite_periods, data_extraction_v2.py:85-106). sf-independent."""
+    periods = composite_periods(dt.date(2023, 12, 1), dt.date(2024, 3, 1))
+    from lswms_forage_etl_spark.lifecycle import local_df
+    return local_df(spark,
+                    [(p, s, e) for p, s, e in periods],
+                    "period_id INT, start DATE, end DATE")
+
+
+@query()
+def q_window_lag_lead(spark, sf):
+    """W3 — lag/lead over per-customer order sequences (the hindcast lag
+    matrix's window primitive)."""
+    o = _t(spark, sf, "orders")
+    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    return o.select(
+        "o_custkey", "o_orderkey",
+        pround(F.lag("o_totalprice", 1).over(w), 2).alias("prev_price"),
+        pround(F.lead("o_totalprice", 1).over(w), 2).alias("next_price"),
+        F.datediff(F.col("o_orderdate"),
+                   F.lag("o_orderdate", 1).over(w)).alias("days_since_prev"))
+
+
+@query(graded=True, headline=True)
+def q_window_tail_k(spark, sf):
+    """W4 — tail-k per group: last 4 orders per customer
+    (BiomassForecast.py:78 tail-4 shape). Deterministic tie-break."""
+    o = _t(spark, sf, "orders")
+    w = Window.partitionBy("o_custkey").orderBy(
+        F.col("o_orderdate").desc(), F.col("o_orderkey").desc())
+    return (o.withColumn("rn", F.row_number().over(w)).where("rn <= 4")
+            .select("o_custkey", "o_orderkey", "rn"))
+
+
+@query(graded=True, headline=True)
+def q_window_expanding_mean(spark, sf):
+    """W2's relational core — expanding (cumulative) mean per group ordered
+    by date: the hindcast cut-point state expressed as a running window."""
+    o = _t(spark, sf, "orders")
+    w = (Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    total = F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")).over(w)
+    cnt = F.count(F.lit(1)).over(w)
+    return o.select("o_custkey", "o_orderkey",
+                    pround(total / 100.0 / cnt, 4).alias("expanding_avg"))
+
+
+@query()
+def q_window_days_since_start(spark, sf):
+    """C4 — days since series start per group (BiomassHindcasts.py:57)."""
+    o = _t(spark, sf, "orders")
+    w = Window.partitionBy("o_custkey")
+    return o.select(
+        "o_custkey", "o_orderkey",
+        F.datediff(F.col("o_orderdate"),
+                   F.min(F.col("o_orderdate")).over(w)).alias("t_days"))
+
+
+@query(graded=True)
+def q_window_neighborhood_mean(spark, sf):
+    """W6 — 3x3 neighborhood mean on a synthetic grid via offset-explode +
+    self-join-free aggregation (the centroid-fallback primitive)."""
+    p = _t(spark, sf, "part")
+    cells = (p.select(
+        F.pmod(F.col("p_partkey") * 3, F.lit(40)).cast("int").alias("col"),
+        F.pmod(F.col("p_partkey") * 11, F.lit(40)).cast("int").alias("row"),
+        F.col("p_retailprice").alias("v"))
+        .groupBy("row", "col").agg(scaled_mean(F.col("v"), 2, 4).alias("v")))
+    off = F.expr("flatten(transform(sequence(-1,1), dr -> "
+                 "transform(sequence(-1,1), dc -> struct(dr, dc))))")
+    spread = (cells.withColumn("o", F.explode(off))
+              .select((F.col("row") + F.col("o.dr")).alias("row"),
+                      (F.col("col") + F.col("o.dc")).alias("col"), "v"))
+    return (spread.groupBy("row", "col")
+            .agg(scaled_mean(F.col("v"), 4, 4).alias("nbr_mean"),
+                 F.count(F.lit(1)).alias("nbr_n"))
+            .join(cells.select("row", "col"), ["row", "col"], "left_semi"))
+
+
+@query(graded=True, headline=True)
+def q_window_sessionize(spark, sf):
+    """Gap-based sessionization (30-min inactivity splits) + per-session
+    rollup — one shuffle on user_id, two window passes."""
+    ev = _events(spark, sf)
+    s = sessionize(ev, gap_minutes=30, order_cols=("event_id",))
+    return (s.groupBy("user_id", "session_idx")
+            .agg(F.count(F.lit(1)).alias("n_events"),
+                 F.min("event_id").alias("first_event"),
+                 (F.sum(F.floor(F.col("value") * 10000 + 0.5).cast("long"))
+                  / 10000.0).alias("value_sum")))
+
+
+@query(graded=True)
+def q_window_sliding_mean(spark, sf):
+    """Sliding (hopping) window aggregate: 4-day windows every 2 days over
+    events. Each row explodes into exactly width/hop = 2 window starts —
+    bounded fan-out computed map-side (the streaming twin is
+    `window(ts, '4 days', '2 days')`)."""
+    ev = _events(spark, sf)
+    hop_d, width_hops = 2, 2  # 4-day window, 2-day hop
+    d = F.col("ts").cast("date")
+    hop_idx = F.floor(F.datediff(d, F.lit("2024-01-01")) / hop_d)
+    starts = F.transform(
+        F.sequence(F.lit(0), F.lit(width_hops - 1)),
+        lambda k: F.date_add(F.lit("2024-01-01"),
+                             ((hop_idx - k) * hop_d).cast("int")))
+    e = ev.select(d.alias("d"), "value",
+                  F.explode(starts).alias("window_start"))
+    e = e.where(F.col("d") < F.date_add(F.col("window_start"),
+                                        hop_d * width_hops))
+    return (e.groupBy("window_start")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 scaled_mean(F.col("value"), 6, 4).alias("value_mean")))
+
+
+@query()
 def q_agg_percentile(spark, sf):
     """Exact interpolated percentiles per group (sort-based, so fully
     deterministic and engine-portable, unlike floating aggregation)."""
@@ -657,6 +729,7 @@ def q_agg_percentile(spark, sf):
                  F.count(F.lit(1)).alias("n")))
 
 
+@query()
 def q_agg_corr_exact(spark, sf):
     """Pearson correlation from exact scaled-BIGINT moments: sums of x, y,
     x^2, y^2, xy quantized to integers commute across partitions, so the
@@ -681,17 +754,7 @@ def q_agg_corr_exact(spark, sf):
         .alias("corr_qty_disc"))
 
 
-def q_agg_salted_count(spark, sf):
-    """Skew-safe two-phase count: lineitem grouped by a deliberately
-    skewed key (suppkey floor-div — few giant groups) via salt -> partial
-    -> final. The oracle is the PLAIN group-by count: the salted plan must
-    be semantically identical."""
-    li = _t(spark, sf, "lineitem")
-    keyed = li.select((F.col("l_suppkey") % 7).alias("skey"),
-                      "l_orderkey", "l_linenumber")
-    return salted_agg_count(keyed, "skey", num_salts=8)
-
-
+@query()
 def q_agg_cube(spark, sf):
     """CUBE grouping sets over (returnflag, tax-class) with exact scaled
     sums — §2.5's 'Spark provides natively' surface."""
@@ -709,6 +772,7 @@ def q_agg_cube(spark, sf):
 
 # --- set ops / top-k (U1, §2.8) ----------------------------------------------
 
+@query(graded=True)
 def q_set_union_except(spark, sf):
     """U1 + except: union of two event slices minus an excluded slice."""
     ev = _events(spark, sf)
@@ -718,6 +782,7 @@ def q_set_union_except(spark, sf):
     return a.unionByName(b).exceptAll(c)
 
 
+@query(graded=True, headline=True)
 def q_topk_global(spark, sf):
     """Global top-k with deterministic tie-break — per-partition top-k +
     driver merge, no full sort."""
@@ -729,6 +794,7 @@ def q_topk_global(spark, sf):
 
 # --- text analysis -----------------------------------------------------------
 
+@query(graded=True, headline=True)
 def q_text_stats(spark, sf):
     """Token count, BPE-ish piece count, punct ratio, quality score —
     all scan-side expressions over documents."""
@@ -741,12 +807,14 @@ def q_text_stats(spark, sf):
         T.quality_score("text").alias("quality"))
 
 
+@query(graded=True)
 def q_text_lang_id(spark, sf):
     """Language-ID heuristic (stopword markers over {en,es,fr,de})."""
     d = _t(spark, sf, "documents")
     return d.select("doc_id", "lang", T.lang_id("text").alias("lang_pred"))
 
 
+@query()
 def q_text_tokens(spark, sf):
     """BPE-ish piece count (portable match-all regex) + per-language
     stopword ratio over distinct tokens."""
@@ -757,6 +825,7 @@ def q_text_tokens(spark, sf):
         pround(T.stopword_ratio("text", "en"), 6).alias("stop_ratio_en"))
 
 
+@query()
 def q_window_lag_pivot(spark, sf):
     """W3 — the hindcast lag-matrix shape: tall (key, date, horizon, value)
     rows pivoted to lag_{0,16,32,48}_day columns keyed on (key, date)
@@ -777,12 +846,14 @@ def q_window_lag_pivot(spark, sf):
                       for h in (0, 16, 32, 48)]))
 
 
+@query()
 def q_text_fingerprint(spark, sf):
     """Document fingerprint: md5 over normalized text (exact-dedup key)."""
     d = _t(spark, sf, "documents")
     return d.select("doc_id", T.fingerprint("text").alias("fp"))
 
 
+@query()
 def q_text_pii_scrub(spark, sf):
     """PII redaction pass: emails / SSNs / phones / IPv4s -> typed
     placeholders. The synthetic corpus carries no PII, so the query splices
@@ -806,6 +877,7 @@ def q_text_pii_scrub(spark, sf):
         F.md5(T.redact_pii(aug)).alias("red_fp"))
 
 
+@query()
 def q_text_repeated_ngrams(spark, sf):
     """Gopher-style repetition signal: fraction of word 2-grams / 3-grams
     that repeat an earlier gram in the same document. Scan-side array
@@ -819,11 +891,13 @@ def q_text_repeated_ngrams(spark, sf):
 
 # --- dedup -------------------------------------------------------------------
 
+@query(graded=True, headline=True)
 def q_dedup_exact(spark, sf):
     """Exact dedup: min doc_id + dup_count per content fingerprint."""
     return exact_dedup(_t(spark, sf, "documents"))
 
 
+@query(graded=True)
 def q_dedup_minhash_sig(spark, sf):
     """MinHash signatures (16 hashes over word 3-shingles, md5-portable);
     projected to first/last hash for a stable wide-row check."""
@@ -834,6 +908,7 @@ def q_dedup_minhash_sig(spark, sf):
                        F.col("minhash")[15].alias("mh_15"))
 
 
+@query(graded=True, headline=True)
 def q_dedup_lsh_pairs(spark, sf):
     """MinHash-LSH candidate pairs (4 bands x 4 rows) verified with exact
     n-gram jaccard >= 0.5. Shingles and signatures are persisted
@@ -847,24 +922,7 @@ def q_dedup_lsh_pairs(spark, sf):
         F.col("jaccard") >= 0.5)
 
 
-def q_sample_stratified(spark, sf):
-    """Deterministic stratified downsample: halve the dominant language,
-    quarter 'de', keep the tail — decisions are md5(key) threshold
-    compares, so retries/oracles reproduce the exact sample (no rand())."""
-    from lswms_forage_etl_spark.operators.sampling import stratified_sample
-    docs = _t(spark, sf, "documents").select("doc_id", "lang", "source")
-    return stratified_sample(docs, "lang", {"en": 0.5, "de": 0.25},
-                             key_col="doc_id", default_rate=1.0)
-
-
-def q_sample_group_cap(spark, sf):
-    """Deterministic reservoir: at most 12 docs per source, picked by hash
-    order — the skew-safe way to cap a dominant domain at 100 TB."""
-    from lswms_forage_etl_spark.operators.sampling import group_cap
-    docs = _t(spark, sf, "documents").select("doc_id", "source")
-    return group_cap(docs, ["source"], k=12, key_col="doc_id")
-
-
+@query(headline=True)
 def q_text_clean_pipeline(spark, sf):
     """The C4-style cleaning pass in one plan: quality-score gate +
     language identified (not 'und') + exact-dedup keep-min-id — the
@@ -884,6 +942,110 @@ def q_text_clean_pipeline(spark, sf):
             .select("doc_id", "lang_pred", "quality"))
 
 
+@query(graded=True, headline=True)
+def q_dedup_clusters(spark, sf):
+    """Duplicate clusters: the LSH near-dup pairs (jaccard >= 0.5) resolved
+    into connected components by iterative min-label propagation ->
+    (doc_id, canonical rep_id, cluster_size). The oracle replays the
+    closure with a recursive CTE — same fixpoint, different algorithm."""
+    docs = _t(spark, sf, "documents")
+    sh = stage_table(shingle_table(docs))
+    sigs = minhash_signatures(docs, num_hashes=16, shingles=sh)
+    pairs = lsh_candidate_pairs(sigs, bands=4, num_hashes=16)
+    dups = ngram_jaccard(docs, pairs, shingles=sh).where(
+        F.col("jaccard") >= 0.5)
+    return duplicate_clusters(dups)
+
+
+@query(graded=True)
+def q_dedup_ngram_jaccard(spark, sf):
+    """Exact word-3-gram jaccard for a deterministic candidate pair set
+    (doc_id vs doc_id+7, plus doc_id vs doc_id+100) — the LSH verify stage
+    in isolation, over a non-trivial pair list."""
+    docs = _t(spark, sf, "documents")
+    ids = docs.select("doc_id")
+    pairs = (ids.select(F.col("doc_id").alias("id_a"),
+                        (F.col("doc_id") + 7).alias("id_b"))
+             .unionByName(ids.select(F.col("doc_id").alias("id_a"),
+                                     (F.col("doc_id") + 100).alias("id_b")))
+             .join(ids.select(F.col("doc_id").alias("id_b")), "id_b")
+             .select("id_a", "id_b"))
+    sh = stage_table(shingle_table(docs))
+    return ngram_jaccard(docs, pairs, shingles=sh)
+
+
+@query()
+def q_dedup_minhash_estimate(spark, sf):
+    """The MinHash ESTIMATOR against its ground truth: for a
+    deterministic pair set (doc vs doc+7), the fraction of agreeing
+    signature components (E[est] = jaccard, the Broder guarantee)
+    alongside the exact shingle jaccard — the accuracy-vs-cost check a
+    pipeline runs before trusting signatures at 100 TB, where exact
+    verification of every pair is unaffordable. Shingles and
+    signatures read once from the cached shingle table; four
+    broadcast-eligible joins by id."""
+    from lswms_forage_etl_spark.operators.dedup import jaccard_expr
+    docs = _t(spark, sf, "documents")
+    ids = docs.select("doc_id")
+    pairs = (ids.select(F.col("doc_id").alias("id_a"),
+                        (F.col("doc_id") + 7).alias("id_b"))
+             .join(ids.select(F.col("doc_id").alias("id_b")), "id_b")
+             .select("id_a", "id_b"))
+    # ONE staged table carries both shingles and the signature, so the
+    # minhash fold runs once and the pair expansion is TWO joins (the
+    # oracle's own m-CTE shape; a separate sigs table re-ran the fold
+    # per join side — round-6 review catch)
+    sh = stage_table(shingle_table(docs))
+    tbl = stage_table(sh.join(
+        minhash_signatures(docs, num_hashes=16, shingles=sh), "doc_id"))
+    joined = (pairs
+              .join(tbl.toDF("id_a", "sh_a", "mh_a"), "id_a")
+              .join(tbl.toDF("id_b", "sh_b", "mh_b"), "id_b"))
+    matches = F.size(F.filter(
+        F.zip_with("mh_a", "mh_b", lambda x, y: x == y), lambda v: v))
+    return joined.select(
+        "id_a", "id_b",
+        pround(matches / F.lit(16.0), 6).alias("est_jaccard"),
+        jaccard_expr("sh_a", "sh_b").alias("jaccard"))
+
+
+@query(graded=True, headline=True)
+def q_dedup_simhash(spark, sf):
+    """SimHash near-dup pairs: portable md5-derived 64-bit signatures (one
+    hash per token, all 64 bit-votes in a single fold), 4x16-bit banded
+    candidate join, exact hamming verify <= 3 — the radius the 4-chunk
+    pigeonhole banding is recall-complete for (ADVICE r1). Oracle-checked:
+    DuckDB recomputes the identical signatures from the md5 hex."""
+    docs = _t(spark, sf, "documents")
+    sigs = simhash(docs)
+    return simhash_near_dups(sigs, max_hamming=3)
+
+
+@query(graded=True, headline=True)
+def q_dedup_embedding(spark, sf):
+    """Embedding-cosine near-dup pairs: banded multi-table hyperplane LSH
+    (4 independent tables — recall ~0.89 at s=0.95 vs ~0.43 for one
+    table), candidate dedup, exact cosine verify >= 0.3. No O(n^2) cross
+    join; no single fixed bucketing (VERDICT r1 weak item).
+
+    Plane count is SCALE-ADAPTIVE (VERDICT r10 item 2): derived from the
+    corpus row count by the exact-integer re-index rule
+    `adaptive_num_planes` (~log2(n/2), clamped [6,16]) — 8 at the gate
+    sf (unchanged hashes), 10 at sf0.1, 16 at 100x, so the graded
+    instance no longer saturates at scale (594 s pinned vs 78-101 s
+    re-indexed in the round-10 smoke). The count is a 1-row driver
+    aggregate (parquet metadata count); the oracle SQL computes the SAME
+    integer from COUNT(*) via length(bin(...)), boundary-tested in
+    tests/test_dedup_similarity.py."""
+    from lswms_forage_etl_spark.operators.similarity import (
+        adaptive_num_planes)
+    emb = _t(spark, sf, "embeddings")
+    planes = adaptive_num_planes(emb.count())
+    return embedding_near_dups(emb, threshold=0.3, num_bands=4,
+                               num_planes=planes)
+
+
+@query(graded=True, headline=True)
 def q_text_contamination(spark, sf):
     """Train/eval contamination sweep: sources split by parity into
     train/eval, LSH candidates crossing the split, directional n-gram
@@ -919,83 +1081,44 @@ def q_text_contamination(spark, sf):
     return j.where(F.col("containment") >= 0.2)
 
 
-def q_dedup_clusters(spark, sf):
-    """Duplicate clusters: the LSH near-dup pairs (jaccard >= 0.5) resolved
-    into connected components by iterative min-label propagation ->
-    (doc_id, canonical rep_id, cluster_size). The oracle replays the
-    closure with a recursive CTE — same fixpoint, different algorithm."""
-    docs = _t(spark, sf, "documents")
-    sh = stage_table(shingle_table(docs))
-    sigs = minhash_signatures(docs, num_hashes=16, shingles=sh)
-    pairs = lsh_candidate_pairs(sigs, bands=4, num_hashes=16)
-    dups = ngram_jaccard(docs, pairs, shingles=sh).where(
-        F.col("jaccard") >= 0.5)
-    return duplicate_clusters(dups)
+@query(graded=True)
+def q_sample_stratified(spark, sf):
+    """Deterministic stratified downsample: halve the dominant language,
+    quarter 'de', keep the tail — decisions are md5(key) threshold
+    compares, so retries/oracles reproduce the exact sample (no rand())."""
+    from lswms_forage_etl_spark.operators.sampling import stratified_sample
+    docs = _t(spark, sf, "documents").select("doc_id", "lang", "source")
+    return stratified_sample(docs, "lang", {"en": 0.5, "de": 0.25},
+                             key_col="doc_id", default_rate=1.0)
 
 
-def q_dedup_ngram_jaccard(spark, sf):
-    """Exact word-3-gram jaccard for a deterministic candidate pair set
-    (doc_id vs doc_id+7, plus doc_id vs doc_id+100) — the LSH verify stage
-    in isolation, over a non-trivial pair list."""
-    docs = _t(spark, sf, "documents")
-    ids = docs.select("doc_id")
-    pairs = (ids.select(F.col("doc_id").alias("id_a"),
-                        (F.col("doc_id") + 7).alias("id_b"))
-             .unionByName(ids.select(F.col("doc_id").alias("id_a"),
-                                     (F.col("doc_id") + 100).alias("id_b")))
-             .join(ids.select(F.col("doc_id").alias("id_b")), "id_b")
-             .select("id_a", "id_b"))
-    sh = stage_table(shingle_table(docs))
-    return ngram_jaccard(docs, pairs, shingles=sh)
-
-
-def q_dedup_minhash_estimate(spark, sf):
-    """The MinHash ESTIMATOR against its ground truth: for a
-    deterministic pair set (doc vs doc+7), the fraction of agreeing
-    signature components (E[est] = jaccard, the Broder guarantee)
-    alongside the exact shingle jaccard — the accuracy-vs-cost check a
-    pipeline runs before trusting signatures at 100 TB, where exact
-    verification of every pair is unaffordable. Shingles and
-    signatures read once from the cached shingle table; four
-    broadcast-eligible joins by id."""
-    from lswms_forage_etl_spark.operators.dedup import jaccard_expr
-    docs = _t(spark, sf, "documents")
-    ids = docs.select("doc_id")
-    pairs = (ids.select(F.col("doc_id").alias("id_a"),
-                        (F.col("doc_id") + 7).alias("id_b"))
-             .join(ids.select(F.col("doc_id").alias("id_b")), "id_b")
-             .select("id_a", "id_b"))
-    # ONE staged table carries both shingles and the signature, so the
-    # minhash fold runs once and the pair expansion is TWO joins (the
-    # oracle's own m-CTE shape; a separate sigs table re-ran the fold
-    # per join side — round-6 review catch)
-    sh = stage_table(shingle_table(docs))
-    tbl = stage_table(sh.join(
-        minhash_signatures(docs, num_hashes=16, shingles=sh), "doc_id"))
-    joined = (pairs
-              .join(tbl.toDF("id_a", "sh_a", "mh_a"), "id_a")
-              .join(tbl.toDF("id_b", "sh_b", "mh_b"), "id_b"))
-    matches = F.size(F.filter(
-        F.zip_with("mh_a", "mh_b", lambda x, y: x == y), lambda v: v))
-    return joined.select(
-        "id_a", "id_b",
-        pround(matches / F.lit(16.0), 6).alias("est_jaccard"),
-        jaccard_expr("sh_a", "sh_b").alias("jaccard"))
-
-
-def q_dedup_simhash(spark, sf):
-    """SimHash near-dup pairs: portable md5-derived 64-bit signatures (one
-    hash per token, all 64 bit-votes in a single fold), 4x16-bit banded
-    candidate join, exact hamming verify <= 3 — the radius the 4-chunk
-    pigeonhole banding is recall-complete for (ADVICE r1). Oracle-checked:
-    DuckDB recomputes the identical signatures from the md5 hex."""
-    docs = _t(spark, sf, "documents")
-    sigs = simhash(docs)
-    return simhash_near_dups(sigs, max_hamming=3)
+@query(graded=True, headline=True)
+def q_sample_group_cap(spark, sf):
+    """Deterministic reservoir: at most 12 docs per source, picked by hash
+    order — the skew-safe way to cap a dominant domain at 100 TB."""
+    from lswms_forage_etl_spark.operators.sampling import group_cap
+    docs = _t(spark, sf, "documents").select("doc_id", "source")
+    return group_cap(docs, ["source"], k=12, key_col="doc_id")
 
 
 # --- corpus build: packing / budgets / chunking / representatives ------------
 
+@query(graded=True)
+def q_sample_token_budget(spark, sf):
+    """Per-language token budgets ('so many en tokens, so many de'),
+    filled in deterministic hash order; each stratum budget splits across
+    4 shards so the window partition for a dominant language stays
+    bounded at web scale."""
+    d = _t(spark, sf, "documents").select(
+        "doc_id", "lang", T.bpe_ish_token_count("text").alias("n_tok"))
+    out = token_budget_sample(d, "lang", "n_tok",
+                              budgets={"en": 20000, "de": 8000},
+                              key_col="doc_id", default_budget=4000,
+                              n_shards=4)
+    return out.select("doc_id", "lang", "shard", "n_tokens")
+
+
+@query(graded=True, headline=True)
 def q_pack_sequences(spark, sf):
     """Concat-and-split sequence packing: documents land in 4 hash-shard
     streams, each cut into 256-token packs. Pure integer window math —
@@ -1008,6 +1131,7 @@ def q_pack_sequences(spark, sf):
                           n_shards=4)
 
 
+@query()
 def q_pack_manifest(spark, sf):
     """Per-shard manifest of the packing layout — what a training
     launcher reads to size workers. The shard count is DATA-SIZED
@@ -1032,20 +1156,7 @@ def q_pack_manifest(spark, sf):
     return shard_manifest(packed)
 
 
-def q_sample_token_budget(spark, sf):
-    """Per-language token budgets ('so many en tokens, so many de'),
-    filled in deterministic hash order; each stratum budget splits across
-    4 shards so the window partition for a dominant language stays
-    bounded at web scale."""
-    d = _t(spark, sf, "documents").select(
-        "doc_id", "lang", T.bpe_ish_token_count("text").alias("n_tok"))
-    out = token_budget_sample(d, "lang", "n_tok",
-                              budgets={"en": 20000, "de": 8000},
-                              key_col="doc_id", default_budget=4000,
-                              n_shards=4)
-    return out.select("doc_id", "lang", "shard", "n_tokens")
-
-
+@query(graded=True)
 def q_text_chunks(spark, sf):
     """Context-window chunking: 64-token windows every 48 tokens, one row
     per chunk with a chunk fingerprint — map-side explode, no shuffle."""
@@ -1053,6 +1164,7 @@ def q_text_chunks(spark, sf):
     return chunk_documents(d, "text", "doc_id", size=64, stride=48)
 
 
+@query()
 def q_dedup_representatives(spark, sf):
     """Cluster-representative selection: resolve LSH near-dup clusters,
     then keep the best document per cluster — highest quality score, ties
@@ -1077,6 +1189,7 @@ def q_dedup_representatives(spark, sf):
                     (F.col("doc_id") == F.col("keeper_id")).alias("keep")))
 
 
+@query()
 def q_corpus_stats(spark, sf):
     """Corpus report card: ROLLUP(lang, source) totals — docs, BPE-ish
     tokens, scaled-integer mean quality, distinct fingerprints. The
@@ -1094,6 +1207,7 @@ def q_corpus_stats(spark, sf):
                  F.countDistinct("fp").alias("n_uniq")))
 
 
+@query(headline=True)
 def q_ann_quantize(spark, sf):
     """Symmetric int8 embedding quantization: per-vector scale =
     max|x|/127, q_i = round(x_i/scale) — the 4x storage cut before an
@@ -1150,6 +1264,7 @@ def _zone_series_from_orders(spark, sf, zones=50, tail=24):
                     "date", "biomass"))
 
 
+@query(rows_only=True)
 def q_model_gp_forecast(spark, sf):
     """M2 — per-zone Gaussian-process forecast (one applyInPandas call
     per bucket of zones): last in-sample point + 16/32/48-day horizons
@@ -1159,6 +1274,7 @@ def q_model_gp_forecast(spark, sf):
     return gp_forecast(_zone_series_from_orders(spark, sf))
 
 
+@query(rows_only=True)
 def q_model_hindcast_lag(spark, sf):
     """W2/W3 — expanding-window GP refits per zone (one applyInPandas
     call per bucket of zones) pivoted into the lag matrix."""
@@ -1168,6 +1284,7 @@ def q_model_hindcast_lag(spark, sf):
     return lag_matrix(hindcast_tall(series))
 
 
+@query(rows_only=True)
 def q_model_gwr_score(spark, sf):
     """M1 — GWR fit-small/score-distributed (mapInPandas): synthetic
     spatial regression over customer-derived coordinates."""
@@ -1186,31 +1303,14 @@ def q_model_gwr_score(spark, sf):
 
 # --- multimodal --------------------------------------------------------------
 
-def q_mm_metadata(spark, sf):
-    """Multimodal scan-side stats: opaque binary payload + typed metadata
-    struct, projected without touching the payload bytes (column pruning
-    keeps the 100 TB payload column out of this scan entirely)."""
-    return media_stats(synth_media(_t(spark, sf, "documents")))
-
-
+@query()
 def q_mm_frame_sample(spark, sf):
     """Video frame-sampling plan: every 10th frame index per video, via
     explode(sequence()) — pure JVM expressions."""
     return frame_index(synth_media(_t(spark, sf, "documents")), every_n=10)
 
 
-def q_mm_byte_histogram(spark, sf):
-    """Arrow-batched featurizer over binary payloads (mapInPandas) —
-    projected to 3 stable histogram bins. Oracle-checked: DuckDB replays
-    the byte histogram by hex-decoding the payload blob (2 hex chars per
-    byte) with portable 9-dp rounding on both sides."""
-    h = byte_histogram(synth_media(_t(spark, sf, "documents")), bins=16)
-    return h.select("media_id",
-                    F.col("features")[0].alias("bin_0"),
-                    F.col("features")[7].alias("bin_7"),
-                    F.col("features")[15].alias("bin_15"))
-
-
+@query()
 def q_scalar_zorder(spark, sf):
     """Z-order (Morton) layout key: bit-interleave two join/filter
     dimensions into one linear clustering key (functions/layout.py) —
@@ -1227,6 +1327,7 @@ def q_scalar_zorder(spark, sf):
         zorder_key(x, y, bits=10).alias("zkey"))
 
 
+@query()
 def q_text_gopher(spark, sf):
     """Gopher-style quality gate (Rae et al. 2021): word-count band,
     mean-word-length band, symbol-to-word ratio cap, minimum distinct
@@ -1247,6 +1348,7 @@ def q_text_gopher(spark, sf):
                     F.col("g.keep").alias("keep")))
 
 
+@query()
 def q_dedup_chunks(spark, sf):
     """Sub-document chunk-level dedup statistic (RefinedWeb/FineWeb
     line-dedup shape): non-overlapping 32-token chunks, md5 fingerprints,
@@ -1264,6 +1366,7 @@ def _query_vec(spark, sf) -> list[float]:
     return [float(x) for x in row["embedding"]]
 
 
+@query(graded=True, headline=True)
 def q_ann_bruteforce_topk(spark, sf):
     """Brute-force cosine top-10 against vec_id=0's embedding — JVM-side
     zip_with/aggregate dot products, deterministic tie-break."""
@@ -1271,6 +1374,7 @@ def q_ann_bruteforce_topk(spark, sf):
     return brute_force_topk(emb, _query_vec(spark, sf), k=10)
 
 
+@query()
 def q_ann_pairwise_label_sim(spark, sf):
     """Pairwise cosine within a bounded slice (vec_id < 50 — candidate
     verification shape): id pair + rounded cosine."""
@@ -1287,6 +1391,7 @@ def q_ann_pairwise_label_sim(spark, sf):
             .where(F.col("cosine_sim") > 0.2))
 
 
+@query(graded=True)
 def q_ann_lsh_topk(spark, sf):
     """LSH-bucketed ANN top-10: random-hyperplane signatures; only vectors
     whose bucket is within hamming distance 1 of the query's bucket are
@@ -1296,6 +1401,7 @@ def q_ann_lsh_topk(spark, sf):
     return lsh_topk(emb, _query_vec(spark, sf), k=10)
 
 
+@query(graded=True, headline=True)
 def q_ann_ivf_topk(spark, sf):
     """IVF ANN top-10: 16 deterministic coarse centroids, vectors assigned
     to nearest list once (pre-materializable), query probes 4 lists."""
@@ -1304,6 +1410,7 @@ def q_ann_ivf_topk(spark, sf):
                     num_centroids=16, probes=4)
 
 
+@query(headline=True)
 def q_ann_topk_join(spark, sf):
     """Batched retrieval: top-3 corpus neighbors for each of the 8 query
     vectors (vec_id < 8) in one plan — broadcast queries, map-side
@@ -1313,6 +1420,7 @@ def q_ann_topk_join(spark, sf):
     return topk_join(emb.where(F.col("vec_id") < 8), emb, k=3)
 
 
+@query()
 def q_ann_topk_join_lsh(spark, sf):
     """Bucketed batched retrieval — the large-|Q| scale path for
     ann_topk_join: hyperplane buckets on both sides, multiprobe (hamming
@@ -1323,6 +1431,7 @@ def q_ann_topk_join_lsh(spark, sf):
     return topk_join_lsh(emb.where(F.col("vec_id") < 8), emb, k=3)
 
 
+@query()
 def q_ann_label_centroids(spark, sf):
     """Per-label class centroids: distributed element-wise vector mean
     with exact scaled-integer sums (order-independent under partial
@@ -1336,29 +1445,7 @@ def q_ann_label_centroids(spark, sf):
                     F.col("centroid")[63].alias("c63"))
 
 
-def q_dedup_embedding(spark, sf):
-    """Embedding-cosine near-dup pairs: banded multi-table hyperplane LSH
-    (4 independent tables — recall ~0.89 at s=0.95 vs ~0.43 for one
-    table), candidate dedup, exact cosine verify >= 0.3. No O(n^2) cross
-    join; no single fixed bucketing (VERDICT r1 weak item).
-
-    Plane count is SCALE-ADAPTIVE (VERDICT r10 item 2): derived from the
-    corpus row count by the exact-integer re-index rule
-    `adaptive_num_planes` (~log2(n/2), clamped [6,16]) — 8 at the gate
-    sf (unchanged hashes), 10 at sf0.1, 16 at 100x, so the graded
-    instance no longer saturates at scale (594 s pinned vs 78-101 s
-    re-indexed in the round-10 smoke). The count is a 1-row driver
-    aggregate (parquet metadata count); the oracle SQL computes the SAME
-    integer from COUNT(*) via length(bin(...)), boundary-tested in
-    tests/test_dedup_similarity.py."""
-    from lswms_forage_etl_spark.operators.similarity import (
-        adaptive_num_planes)
-    emb = _t(spark, sf, "embeddings")
-    planes = adaptive_num_planes(emb.count())
-    return embedding_near_dups(emb, threshold=0.3, num_bands=4,
-                               num_planes=planes)
-
-
+@query()
 def q_ann_embedding_norms(spark, sf):
     """Vector norms + dims — the similarity layer's scan-side stats."""
     emb = _t(spark, sf, "embeddings")
@@ -1370,6 +1457,7 @@ def q_ann_embedding_norms(spark, sf):
                       pround(norm, 4).alias("l2_norm"))
 
 
+@query()
 def q_corpus_order(spark, sf):
     """Epoch-seeded deterministic training order: every document gets a
     (shard, pos_in_shard) dataloader address from a reproducible hash
@@ -1380,6 +1468,7 @@ def q_corpus_order(spark, sf):
     return training_order(docs, "doc_id", n_shards=8, seed=0, epoch=1)
 
 
+@query(headline=True)
 def q_dedup_semantic(spark, sf):
     """SemDeDup-style semantic dedup: coarse IVF clustering, then flag
     members redundant with their cluster's lowest-id representative
@@ -1390,6 +1479,7 @@ def q_dedup_semantic(spark, sf):
     return semantic_dedup(emb, threshold=0.5, num_centroids=16)
 
 
+@query(headline=True)
 def q_dedup_substrings(spark, sf):
     """Maximal duplicated-substring spans (Lee et al. 2022 exact-substring
     dedup, re-expressed as overlapping 4-token window fingerprints + a
@@ -1401,6 +1491,7 @@ def q_dedup_substrings(spark, sf):
     return duplicate_spans(docs, window=4)
 
 
+@query(headline=True)
 def q_dedup_remove_spans(spark, sf):
     """Exact-substring dedup APPLIED (Lee et al. 2022, both halves):
     duplicate_spans detects maximal duplicated 4-token-window runs,
@@ -1415,6 +1506,7 @@ def q_dedup_remove_spans(spark, sf):
     return remove_spans(docs, spans).where(F.col("n_removed") > 0)
 
 
+@query()
 def q_ann_pq_codes(spark, sf):
     """Product-quantization encode: 64-dim float32 vectors (256 bytes)
     -> 8x4-bit codes packed in one long (4 bytes, 64x compression — the
@@ -1428,6 +1520,7 @@ def q_ann_pq_codes(spark, sf):
     return pq_encode(emb, pq_codebook(emb))
 
 
+@query(headline=True)
 def q_ann_pq_topk(spark, sf):
     """PQ asymmetric-distance top-10: the query's m x ks distance table
     is computed driver-side; the scan touches only 4-byte codes (literal
@@ -1438,6 +1531,7 @@ def q_ann_pq_topk(spark, sf):
     return pq_adc_topk(emb, _query_vec(spark, sf), k=10)
 
 
+@query(headline=True)
 def q_ann_lsh_hamming(spark, sf):
     """Hamming-rank ANN top-10 (round 14, VERDICT r13 next #3): a
     192-plane hyperplane signature packed into 3 int64 words (one
@@ -1455,6 +1549,7 @@ def q_ann_lsh_hamming(spark, sf):
                             num_planes=192, rerank_mult=5)
 
 
+@query(headline=True)
 def q_ann_pq_rerank(spark, sf):
     """PQ ADC shortlist + exact re-rank (round 14, VERDICT r13 next
     #3 — the FAISS practice): ADC over the DISTRIBUTED-trained
@@ -1476,6 +1571,7 @@ def q_ann_pq_rerank(spark, sf):
     return pq_adc_topk(emb, qv, k=10, codebook=cb, rerank_mult=8)
 
 
+@query(headline=True)
 def q_ann_ivfpq_topk(spark, sf):
     """IVF-PQ COMPOSED index (round 15, VERDICT r14 next #3): coarse
     inverted lists (deterministic seed centroids, portable-rounded
@@ -1515,6 +1611,7 @@ def q_ann_ivfpq_topk(spark, sf):
     return out
 
 
+@query()
 def q_ann_pq_trained(spark, sf):
     """PQ codes from the DISTRIBUTED-trained codebook (2 full-corpus
     Lloyd iterations per subspace, pq_train_codebook_dist): every
@@ -1530,6 +1627,7 @@ def q_ann_pq_trained(spark, sf):
     return pq_encode(emb, cb)
 
 
+@query()
 def q_corpus_cluster_balance(spark, sf):
     """Diversity-balanced selection (the SemDeDup/DoReMi-family shape):
     cluster the embedding space with the distributed k-means trainer,
@@ -1546,6 +1644,7 @@ def q_corpus_cluster_balance(spark, sf):
     return group_cap(asg, ["cent_id"], k=30, key_col="vec_id")
 
 
+@query(headline=True)
 def q_kmeans_assign(spark, sf):
     """Distributed k-means (k=8, 2 full Lloyd iterations) + final
     assignment: every pass scans the whole corpus — Arrow scaled-int L2
@@ -1560,6 +1659,7 @@ def q_kmeans_assign(spark, sf):
     return l2_assign(emb, cents).select("vec_id", "cent_id", "l2_scaled")
 
 
+@query(headline=True)
 def q_text_rarity(spark, sf):
     """Rare-token-density quality signal (TF-IDF-shaped, log-free): per
     document, the mean over token occurrences of the scaled inverse
@@ -1606,6 +1706,7 @@ def q_text_rarity(spark, sf):
                     .alias("rarity")))
 
 
+@query()
 def q_sample_global_k(spark, sf):
     """Deterministic GLOBAL reservoir: exactly k=200 documents chosen by
     md5-hash order (ties by id) — Spark's orderBy+limit is a
@@ -1621,6 +1722,7 @@ def q_sample_global_k(spark, sf):
             .select("doc_id", "lang", "source"))
 
 
+@query(headline=True)
 def q_sample_weighted_k(spark, sf):
     """Weight-proportional sampling WITHOUT replacement (Efraimidis-
     Spirakis exponential keys): k=100 documents weighted by n_chars —
@@ -1641,6 +1743,7 @@ REBALANCE_TARGETS = {"en": 0.4, "de": 0.15, "fr": 0.15, "es": 0.15,
                      "zh": 0.15}
 
 
+@query(headline=True)
 def q_sample_rebalance(spark, sf):
     """Rebalance the corpus to a target language mix (40 % en, 15 %
     each other) by DERIVED per-group keep-rates — downsample-only,
@@ -1679,6 +1782,7 @@ def _rebalance_sql(targets: dict[str, float]) -> str:
 BM25_QUERY_TERMS = ("vector", "stream", "window")
 
 
+@query(headline=True)
 def q_text_bm25_topk(spark, sf):
     """Okapi BM25 top-20 retrieval for a literal term query — the
     sparse-lexical complement to the ANN family (hard-negative mining,
@@ -1697,6 +1801,7 @@ def q_text_bm25_topk(spark, sf):
         .alias("bm25"))
 
 
+@query(headline=True)
 def q_sketch_hll_distinct(spark, sf):
     """From-scratch HyperLogLog distinct sketch per language (operators/
     sketches.py) next to the exact count: the register table, the exact
@@ -1760,6 +1865,7 @@ def _hll_sql(p: int = 8) -> str:
     """
 
 
+@query(headline=True)
 def q_text_bm25_join(spark, sf):
     """Batched BM25 retrieval — the inverted-index join shape for a
     whole QUERY TABLE (operators/retrieval.bm25_join): odd-parity
@@ -1831,6 +1937,7 @@ def _bm25_join_sql(k: int = 5, k1: float = 1.2, b: float = 0.75,
     """
 
 
+@query(headline=True)
 def q_sketch_kmv_jaccard(spark, sf):
     """Cross-language shingle-set similarity via k-minimum-values
     sketches (operators/sketches.py): per language, the KMV sketch
@@ -1966,6 +2073,7 @@ def _kmv_sql(k: int = 256) -> str:
     """
 
 
+@query(headline=True)
 def q_sketch_cms_counts(spark, sf):
     """Count-Min Sketch frequency estimation (operators/sketches.py):
     build the d=4 x w=1024 integer sketch over token occurrences, then
@@ -2058,6 +2166,28 @@ def _bm25_sql(terms, k: int = 20, k1: float = 1.2, b: float = 0.75) -> str:
     """
 
 
+@query(graded=True, headline=True)
+def q_mm_byte_histogram(spark, sf):
+    """Arrow-batched featurizer over binary payloads (mapInPandas) —
+    projected to 3 stable histogram bins. Oracle-checked: DuckDB replays
+    the byte histogram by hex-decoding the payload blob (2 hex chars per
+    byte) with portable 9-dp rounding on both sides."""
+    h = byte_histogram(synth_media(_t(spark, sf, "documents")), bins=16)
+    return h.select("media_id",
+                    F.col("features")[0].alias("bin_0"),
+                    F.col("features")[7].alias("bin_7"),
+                    F.col("features")[15].alias("bin_15"))
+
+
+@query(graded=True)
+def q_mm_metadata(spark, sf):
+    """Multimodal scan-side stats: opaque binary payload + typed metadata
+    struct, projected without touching the payload bytes (column pruning
+    keeps the 100 TB payload column out of this scan entirely)."""
+    return media_stats(synth_media(_t(spark, sf, "documents")))
+
+
+@query()
 def q_mm_patches(spark, sf):
     """ViT-style patch tiling: payload bytes as a 32-wide row-major
     image, 8x8 patches, per-patch byte count + mean intensity — one row
@@ -2069,6 +2199,7 @@ def q_mm_patches(spark, sf):
                       width=32, patch=8)
 
 
+@query()
 def q_mm_decode_ppm(spark, sf):
     """REAL image decode end-to-end: each document becomes a valid
     binary PPM (P6) via pure JVM expressions (header + first w*h*3 text
@@ -2088,6 +2219,7 @@ def q_mm_decode_ppm(spark, sf):
         pround(F.col("mean_intensity"), 9).alias("mean_intensity"))
 
 
+@query(headline=True)
 def q_mm_decode_png(spark, sf):
     """REAL compressed-format decode end-to-end: each document's first
     w*9 text bytes become the raster of a spec-conformant PNG (zlib
@@ -2108,6 +2240,7 @@ def q_mm_decode_png(spark, sf):
         pround(F.col("mean_intensity"), 9).alias("mean_intensity"))
 
 
+@query(headline=True)
 def q_mm_decode_jpeg(spark, sf):
     """REAL lossy-format decode end-to-end (VERDICT r11 missing #2):
     each document's first 2*nb text bytes (evened: & 0xFE) become the
@@ -2131,6 +2264,7 @@ def q_mm_decode_jpeg(spark, sf):
         pround(F.col("mean_intensity"), 9).alias("mean_intensity"))
 
 
+@query(headline=True)
 def q_mm_decode_wav(spark, sf):
     """REAL audio decode end-to-end: each document's first
     frames*channels*(bits/8) text bytes become the PCM data of a
@@ -2150,6 +2284,7 @@ def q_mm_decode_wav(spark, sf):
         "n_frames", pround(F.col("mean_amp"), 9).alias("mean_amp"))
 
 
+@query()
 def q_mm_decode_wav_ext(spark, sf):
     """Extended audio decode (VERDICT r11 missing #4): even docs land
     as 24-bit signed-LE integer PCM, odd docs as IEEE-float32 PCM
@@ -2168,6 +2303,7 @@ def q_mm_decode_wav_ext(spark, sf):
         synth_wav_ext_media(_t(spark, sf, "documents")))
 
 
+@query()
 def q_mm_decode_wav_law(spark, sf):
     """G.711 companded audio decode: even docs mu-law, odd docs A-law
     (format codes 7/6) — the telephony corpus transport forms. Text
@@ -2182,6 +2318,7 @@ def q_mm_decode_wav_law(spark, sf):
         synth_wav_law_media(_t(spark, sf, "documents")))
 
 
+@query(headline=True)
 def q_mm_decode_wav_adpcm(spark, sf):
     """IMA/DVI ADPCM WAV decode (round 13 — closes the last audio
     honest raise): text bytes map to int16 samples, compress through
@@ -2198,6 +2335,7 @@ def q_mm_decode_wav_adpcm(spark, sf):
         synth_wav_adpcm_media(_t(spark, sf, "documents")))
 
 
+@query()
 def q_mm_audio_energy(spark, sf):
     """Audio feature extraction over REAL decoded WAV payloads:
     non-overlapping 16-frame windows, exact int64 sum-of-squares energy
@@ -2214,6 +2352,7 @@ def q_mm_audio_energy(spark, sf):
                       "is_silence")
 
 
+@query(headline=True)
 def q_dedup_incremental(spark, sf):
     """Incremental (nightly-batch) dedup: sources src15+ are the new
     batch, src0-14 the existing corpus; each new doc is LSH-probed
@@ -2237,6 +2376,7 @@ def q_dedup_incremental(spark, sf):
 EVAL_OVERLAP_KEY_HEX = 16
 
 
+@query()
 def q_text_eval_overlap(spark, sf, key_hex_chars: int | None = None):
     """The canonical n-gram decontamination recipe (GPT-3 appendix /
     Llama): flag every TRAIN document sharing ANY 8-token n-gram with
@@ -2311,6 +2451,7 @@ def _eval_overlap_sql(key_hex_chars: int) -> str:
     """
 
 
+@query(headline=True)
 def q_dedup_bloom_probe(spark, sf):
     """Bloom-prefiltered incremental exact dedup: sources src15+ are the
     new batch; the existing corpus's fingerprint Bloom table (codegen
@@ -2330,6 +2471,7 @@ def q_dedup_bloom_probe(spark, sf):
         emit_all=True)
 
 
+@query()
 def q_sample_split(spark, sf):
     """Deterministic train/val/test split (90/5/5): each doc's md5 u32
     falls into cumulative-fraction buckets — an exact pure function of
@@ -2342,6 +2484,7 @@ def q_sample_split(spark, sf):
         docs, {"train": 0.9, "val": 0.05, "test": 0.05})
 
 
+@query()
 def q_corpus_mix(spark, sf):
     """Pile/Dolma-style source reweighting: deterministic up/down-sampling
     to hit per-language mix weights (en 1.5x, de 2.25x, fr 0.5x, rest
@@ -2353,6 +2496,7 @@ def q_corpus_mix(spark, sf):
                       "doc_id")
 
 
+@query()
 def q_corpus_vocab(spark, sf):
     """Corpus vocabulary report: top-100 tokens by document frequency
     (ties broken by token). Two-phase aggregation is the skew story: the
@@ -2372,6 +2516,7 @@ def q_corpus_vocab(spark, sf):
             .limit(100))
 
 
+@query(headline=True)
 def q_events_funnel(spark, sf):
     """Ordered conversion funnel (view -> click -> purchase): each step
     is reached only STRICTLY AFTER the previous step's reach time.
@@ -2384,6 +2529,7 @@ def q_events_funnel(spark, sf):
                           ["view", "click", "purchase"])
 
 
+@query()
 def q_events_retention(spark, sf):
     """Weekly cohort retention matrix: cohort = ISO week of each user's
     first event; one row per (cohort_week, week_offset) with distinct
@@ -2393,6 +2539,7 @@ def q_events_retention(spark, sf):
     return cohort_retention(_events(spark, sf))
 
 
+@query()
 def q_agg_pivot_events(spark, sf):
     """Daily event-type pivot with an EXPLICIT value list — the implicit
     form runs a distinct scan over the corpus first to discover pivot
@@ -2403,6 +2550,7 @@ def q_agg_pivot_events(spark, sf):
         ["click", "error", "purchase", "signup", "view"])
 
 
+@query()
 def q_agg_unpivot(spark, sf):
     """UNPIVOT (melt) — the inverse of agg_pivot_events: the wide daily
     per-type count table back to (day, event_type, n_events) rows via
@@ -2416,6 +2564,7 @@ def q_agg_unpivot(spark, sf):
         pivot_event_counts(_events(spark, sf), types), "day", types)
 
 
+@query(headline=True)
 def q_events_markov(spark, sf):
     """First-order Markov transition matrix over per-user event
     streams: one lag window on the uniform user key + one bounded
@@ -2427,6 +2576,7 @@ def q_events_markov(spark, sf):
     return markov_transitions(_events(spark, sf))
 
 
+@query(headline=True)
 def q_text_source_divergence(spark, sf):
     """Distribution-shift monitor: per source, the total-variation
     distance between the source's token distribution and the corpus
@@ -2440,6 +2590,7 @@ def q_text_source_divergence(spark, sf):
     return source_divergence(_t(spark, sf, "documents"))
 
 
+@query(headline=True)
 def q_text_textrank(spark, sf):
     """TextRank keyword ranking: 10 fixed-point iterations of damped
     PageRank over the adjacent-token co-occurrence graph, vocab-capped
@@ -2454,6 +2605,7 @@ def q_text_textrank(spark, sf):
                            vocab_size=24, iterations=10)
 
 
+@query(headline=True)
 def q_text_phrase_search(spark, sf):
     """Exact phrase query ('hash join') via positional-posting
     intersection: postings filtered to the phrase terms inside the
@@ -2464,6 +2616,7 @@ def q_text_phrase_search(spark, sf):
     return phrase_search(_t(spark, sf, "documents"), ["hash", "join"])
 
 
+@query(headline=True)
 def q_text_collocations(spark, sf):
     """Collocation detection: ordered adjacent bigrams scored by the
     exact-integer Dice coefficient (ppm). The bigram tail is pruned by
@@ -2476,6 +2629,7 @@ def q_text_collocations(spark, sf):
                              min_pair_count=20)
 
 
+@query()
 def q_text_char_diversity(spark, sf):
     """Character-collision (Simpson) index per doc as exact-integer
     ppm — the distribution-based gibberish gate (a 'aaaa...' doc
@@ -2486,6 +2640,7 @@ def q_text_char_diversity(spark, sf):
     return char_diversity(_t(spark, sf, "documents"))
 
 
+@query(headline=True)
 def q_join_multiway_topk(spark, sf):
     """TPC-H Q3-shaped three-table star join: filtered customer
     dimension BROADCAST into orders, the orders-lineitem join shuffling
@@ -2519,6 +2674,7 @@ def q_join_multiway_topk(spark, sf):
                     "o_orderpriority"))
 
 
+@query(headline=True)
 def q_sketch_hll_sliding(spark, sf):
     """7-day sliding distinct users via HLL register MERGE: each day
     is sketched once, registers explode to the W window-ends they
@@ -2535,6 +2691,7 @@ def q_sketch_hll_sliding(spark, sf):
                       pround(F.col("hll_est"), 4).alias("hll_est"))
 
 
+@query(headline=True)
 def q_sketch_quantile_bins(spark, sf):
     """Mergeable fixed-width-bin quantile sketch (the deterministic
     cousin of KLL/t-digest): histogram state merges by sum, the rank
@@ -2548,6 +2705,7 @@ def q_sketch_quantile_bins(spark, sf):
                             [500000, 900000, 990000], bin_width=100)
 
 
+@query()
 def q_events_anomaly(spark, sf):
     """Trailing-window z-score anomaly flags on daily event counts,
     evaluated with cleared denominators — (m*x-s)^2 > sigma^2 *
@@ -2558,6 +2716,7 @@ def q_events_anomaly(spark, sf):
     return anomaly_flags(_events(spark, sf), sigma=2, trailing_days=7)
 
 
+@query()
 def q_join_outer_full(spark, sf):
     """Full-outer join completeness: BUILDING-segment customers vs
     per-customer order counts — rows survive from EITHER side, keys
@@ -2581,6 +2740,7 @@ def q_join_outer_full(spark, sf):
         (F.col("n_orders").isNotNull()).alias("has_orders"))
 
 
+@query()
 def q_agg_grouping_sets(spark, sf):
     """Arbitrary GROUPING SETS (beyond rollup/cube): per-returnflag,
     per-linestatus, and grand-total aggregates in ONE pass — Spark
@@ -2601,6 +2761,7 @@ def q_agg_grouping_sets(spark, sf):
     """)
 
 
+@query()
 def q_window_ntile_rank(spark, sf):
     """Ranking-window completeness: ntile quartiles, percent_rank and
     cume_dist per group over a total (tie-broken) order. percent_rank
@@ -2620,6 +2781,7 @@ def q_window_ntile_rank(spark, sf):
         pround(F.cume_dist().over(w), 9).alias("cume"))
 
 
+@query()
 def q_join_fuzzy_tokens(spark, sf):
     """Edit-distance-1 typo pairs over the corpus vocabulary — fuzzy
     self-join with LENGTH BLOCKING: levenshtein(a,b) <= 1 requires
@@ -2651,6 +2813,7 @@ def q_join_fuzzy_tokens(spark, sf):
     return j.select("tok_a", "tok_b", "ca", "cb")
 
 
+@query(headline=True)
 def q_quality_audit(spark, sf):
     """Warehouse data-quality audit: FK orphans (left-anti joins on
     natural keys), key uniqueness, domain and null checks — ONE bounded
@@ -2663,6 +2826,7 @@ def q_quality_audit(spark, sf):
     return referential_audit(tables)
 
 
+@query()
 def q_scalar_clip_outliers(spark, sf):
     """Per-group winsorization at sketch quantiles (p1/p99 bin edges
     from the mergeable binned sketch, broadcast back — one row per
@@ -2680,6 +2844,7 @@ def q_scalar_clip_outliers(spark, sf):
         .alias("price_clipped"))
 
 
+@query(headline=True)
 def q_events_assoc_rules(spark, sf):
     """Market-basket association rules over 30-min sessions: support /
     confidence / lift for ordered event-type pairs co-present in a
@@ -2692,6 +2857,7 @@ def q_events_assoc_rules(spark, sf):
                                min_pair_sessions=2)
 
 
+@query(headline=True)
 def q_text_bigram_novelty(spark, sf):
     """Bigram-novelty quality gate (the count-based stand-in for LM
     perplexity filtering): exact-ppm fraction of each doc's bigram
@@ -2702,6 +2868,7 @@ def q_text_bigram_novelty(spark, sf):
     return bigram_novelty(_t(spark, sf, "documents"), rare_threshold=25)
 
 
+@query(headline=True)
 def q_graph_triangles(spark, sf):
     """Triangle census + global clustering coefficient of the token
     co-occurrence graph via the ORIENTED-EDGE recipe (edges point
@@ -2714,6 +2881,7 @@ def q_graph_triangles(spark, sf):
     return token_triangle_stats(_t(spark, sf, "documents"))
 
 
+@query()
 def q_ann_dim_standardize(spark, sf):
     """Per-dimension z-score standardization of the embedding matrix:
     exact int64 moments per dim (quantized components), one IEEE
@@ -2725,6 +2893,7 @@ def q_ann_dim_standardize(spark, sf):
     return out.select("vec_id", "dim", pround(F.col("z"), 6).alias("z"))
 
 
+@query()
 def q_events_attribution(spark, sf):
     """Interval attribution join (batch run of the stream-stream
     operator in streaming/joins.py): every purchase attributed to the
@@ -2740,6 +2909,7 @@ def q_events_attribution(spark, sf):
         window_minutes=30)
 
 
+@query(headline=True)
 def q_events_attr_last(spark, sf):
     """LAST-TOUCH attribution — the whale-safe scale path next to the
     pair-level interval join: one merged per-user timeline, a running
@@ -2756,6 +2926,7 @@ def q_events_attr_last(spark, sf):
         window_minutes=30)
 
 
+@query(headline=True)
 def q_events_attr_topk(spark, sf):
     """BOUNDED pair attribution (VERDICT r11 item 6): each purchase
     gets its up-to-3 most recent in-window views with a recency rank —
@@ -2775,6 +2946,7 @@ def q_events_attr_topk(spark, sf):
         k=3, window_minutes=30)
 
 
+@query()
 def q_events_twap(spark, sf):
     """Per (user, day) TIME-WEIGHTED average value: each observation
     weighted by the whole seconds it stayed current (last one holds to
@@ -2785,6 +2957,7 @@ def q_events_twap(spark, sf):
     return time_weighted_daily(_events(spark, sf))
 
 
+@query()
 def q_events_resample_ffill(spark, sf):
     """Daily-grid resample with forward fill: every user gets a row per
     calendar day (users x sequence explode, never a cross join through
@@ -2796,6 +2969,7 @@ def q_events_resample_ffill(spark, sf):
                                 dt.date(2024, 1, 1), dt.date(2024, 1, 30))
 
 
+@query()
 def q_set_bag_ops(spark, sf):
     """Bag-semantics set operations (INTERSECT ALL / EXCEPT ALL):
     multiset part-key overlap between the 1996 and 1997 ship years —
@@ -2811,6 +2985,7 @@ def q_set_bag_ops(spark, sf):
                 .select(F.lit("except").alias("op"), "l_partkey")))
 
 
+@query(headline=True)
 def q_graph_bfs_hops(spark, sf):
     """BFS hop distance from 'join' over the token co-occurrence
     graph — the iterative-frontier family next to PageRank, checked
@@ -2822,6 +2997,7 @@ def q_graph_bfs_hops(spark, sf):
     return bfs_hops(pairs, "join", max_hops=10)
 
 
+@query()
 def q_events_scd2(spark, sf):
     """SCD type-2 historization: each user's value stream collapsed to
     validity intervals [valid_from, valid_to) at (quantized) value
@@ -2831,6 +3007,7 @@ def q_events_scd2(spark, sf):
     return scd2_history(_events(spark, sf))
 
 
+@query(headline=True)
 def q_text_tokens_bpe(spark, sf):
     """Subword (BPE-style) token accounting: per-doc greedy
     longest-match subword count over the engine's fixed vocab
@@ -2852,6 +3029,7 @@ def q_text_tokens_bpe(spark, sf):
                     .alias("bpe_ratio")))
 
 
+@query()
 def q_sample_token_budget_bpe(spark, sf):
     """Per-language token budgets denominated in SUBWORD tokens — the
     unit training actually buys — instead of whitespace words (same
@@ -2873,6 +3051,7 @@ def q_sample_token_budget_bpe(spark, sf):
                       F.col("n_tokens").alias("n_bpe_tokens"))
 
 
+@query()
 def q_pack_sequences_bpe(spark, sf):
     """Sequence packing denominated in SUBWORD tokens: the pack
     boundaries a dataloader actually needs fall at model-token
@@ -2890,6 +3069,7 @@ def q_pack_sequences_bpe(spark, sf):
                           n_shards=4)
 
 
+@query(headline=True)
 def q_corpus_bpe_train(spark, sf):
     """Distributed BPE merge TRAINING: learn the corpus's top-6 merges
     (Sennrich BPE over the distinct-word frequency table) entirely as
@@ -2904,6 +3084,7 @@ def q_corpus_bpe_train(spark, sf):
     return bpe_train_merges(_t(spark, sf, "documents"), k=6)
 
 
+@query(headline=True)
 def q_corpus_bpe_train_scaled(spark, sf):
     """BPE training at REAL merge counts (VERDICT r11 item 1): the
     distributed per-iteration plan is right for small k but cannot
@@ -2921,6 +3102,7 @@ def q_corpus_bpe_train_scaled(spark, sf):
     return bpe_train_scaled(spark, _t(spark, sf, "documents"), k=32)
 
 
+@query()
 def q_corpus_bpe_encode(spark, sf):
     """BPE ENCODE under learned merges: train k=6 in-plan, then read
     out the final word table (word, n, n_tokens) — what the corpus
@@ -2940,6 +3122,7 @@ DSIR_TARGET_SOURCES = ["src0", "src1"]
 """Target-domain slice for DSIR importance weighting."""
 
 
+@query(headline=True)
 def q_text_perplexity_bucket(spark, sf):
     """CCNet-style perplexity filter (Wenzek et al. 2020): per-language
     bigram LM trained on the LM_TRAIN_SOURCES reference slice, every
@@ -2955,6 +3138,7 @@ def q_text_perplexity_bucket(spark, sf):
                                LM_TRAIN_SOURCES)
 
 
+@query(headline=True)
 def q_text_perplexity_scaled(spark, sf):
     """The 100 TB form of the CCNet bucketing: same exact-integer
     surprisal scores as text_perplexity_bucket, but tertile THRESHOLDS
@@ -2968,6 +3152,7 @@ def q_text_perplexity_scaled(spark, sf):
                                       LM_TRAIN_SOURCES)
 
 
+@query(headline=True)
 def q_text_perplexity_kn(spark, sf):
     """Trigram KNESER-NEY perplexity scoring — the higher-fidelity LM
     filter (CCNet's recipe uses 5-gram KenLM; this is the order-3
@@ -2983,6 +3168,7 @@ def q_text_perplexity_kn(spark, sf):
                                 LM_TRAIN_SOURCES)
 
 
+@query(headline=True)
 def q_text_perplexity_kn5(spark, sf):
     """5-gram KNESER-NEY perplexity scoring (round 14, VERDICT r13
     next #4) — the order the CCNet recipe actually names (Wenzek et
@@ -2998,6 +3184,7 @@ def q_text_perplexity_kn5(spark, sf):
                                  LM_TRAIN_SOURCES)
 
 
+@query(headline=True)
 def q_ann_recall_at_k(spark, sf):
     """ANN RECALL ACCOUNTING (VERDICT r12 missing #4): the number a
     user tuning nprobe/planes actually needs — for each approximate
@@ -3117,6 +3304,7 @@ def q_ann_recall_at_k(spark, sf):
                     F.expr("n_hits * 1000000 div k").alias("recall_ppm")))
 
 
+@query(headline=True)
 def q_corpus_unigram_train(spark, sf):
     """Unigram-LM (SentencePiece-style) tokenizer TRAINING (VERDICT
     r12 missing #2) — the prune-down complement to BPE's merge-up:
@@ -3137,6 +3325,7 @@ def q_corpus_unigram_train(spark, sf):
                                 prune_per_round=12)
 
 
+@query(headline=True)
 def q_corpus_unigram_encode(spark, sf):
     """Distributed ENCODE under the trained unigram vocab: per-doc
     Viterbi token counts (min-cost segmentation — NOT greedy munch) in
@@ -3158,6 +3347,7 @@ def q_corpus_unigram_encode(spark, sf):
         "doc_id", cnt(F.col("text")).alias("n_tokens")))
 
 
+@query()
 def q_mm_scan_mp4(spark, sf):
     """MP4/ISO-BMFF container scan (VERDICT r12 missing #5): every 8
     documents synthesize one conformant single-track mp4 (ftyp + full
@@ -3173,6 +3363,7 @@ def q_mm_scan_mp4(spark, sf):
     return scan_mp4_boxes(synth_mp4_media(_t(spark, sf, "documents")))
 
 
+@query()
 def q_mm_mp4_frames(spark, sf):
     """REAL frame sampling from a real container (upgrades the
     synthetic-payload mm_frame_sample): per-sample timing from stts,
@@ -3186,6 +3377,7 @@ def q_mm_mp4_frames(spark, sf):
                            every_n=5)
 
 
+@query(headline=True)
 def q_mm_mp4_fragmented(spark, sf):
     """FRAGMENTED MP4 frame extraction (round 14, VERDICT r13 missing
     #4 — the streaming-delivery layout real crawled video ships in):
@@ -3203,6 +3395,7 @@ def q_mm_mp4_fragmented(spark, sf):
         synth_mp4_frag_media(_t(spark, sf, "documents")))
 
 
+@query(headline=True)
 def q_text_quality_classifier(spark, sf):
     """fastText-style hashed linear quality classifier (Joulin et al.
     2017): unigram + adjacent-bigram features, md5-derived integer
@@ -3214,6 +3407,7 @@ def q_text_quality_classifier(spark, sf):
     return hashed_linear_quality(_t(spark, sf, "documents"))
 
 
+@query(headline=True)
 def q_mm_decode_gif(spark, sf):
     """REAL palette-format decode end-to-end (completes the image
     codec family: netpbm/BMP/PNG/JPEG/GIF): each document's first w*9
@@ -3234,6 +3428,7 @@ def q_mm_decode_gif(spark, sf):
         pround(F.col("mean_intensity"), 9).alias("mean_intensity"))
 
 
+@query(headline=True)
 def q_mm_decode_webp(spark, sf):
     """REAL lossless-WebP (VP8L) decode end-to-end (closes the last
     image-format honest raise, round 13): each document's first w*9
@@ -3255,6 +3450,7 @@ def q_mm_decode_webp(spark, sf):
         pround(F.col("mean_intensity"), 9).alias("mean_intensity"))
 
 
+@query(headline=True)
 def q_mm_scan_zip(spark, sf):
     """Archive-container ingest, zip: every 8 documents become ONE
     spec-conformant zip (stdlib-zipfile writer — an INDEPENDENT
@@ -3270,6 +3466,7 @@ def q_mm_scan_zip(spark, sf):
     return scan_zip_members(synth_zip_media(_t(spark, sf, "documents")))
 
 
+@query(headline=True)
 def q_mm_scan_warc(spark, sf):
     """Archive-container ingest, WARC (the Common Crawl convention):
     every 8 documents become one .warc.gz capture (one byte-
@@ -3283,6 +3480,7 @@ def q_mm_scan_warc(spark, sf):
     return scan_warc_records(synth_warc_media(_t(spark, sf, "documents")))
 
 
+@query(headline=True)
 def q_text_html_extract(spark, sf):
     """HTML -> TEXT EXTRACTION over WARC captures (round 15, VERDICT
     r14 next #1 — the stage every Common Crawl pipeline runs before
@@ -3312,6 +3510,7 @@ def q_text_html_extract(spark, sf):
         F.md5(F.encode("txt", "UTF-8")).alias("text_fp"))
 
 
+@query(headline=True)
 def q_text_normalize(spark, sf):
     """UNICODE NORMALIZATION + MOJIBAKE REPAIR (round 15, VERDICT r14
     next #5) — the corpus-cleaning pass ahead of dedup/tokenization:
@@ -3340,6 +3539,7 @@ def q_text_normalize(spark, sf):
         F.md5(F.encode("norm", "UTF-8")).alias("norm_fp"))
 
 
+@query(headline=True)
 def q_text_hybrid_rerank(spark, sf):
     """Hybrid retrieval (the two-stage RAG-prep shape): exact-integer
     BM25 top-20 candidates, then a dense rerank by the exact int64
@@ -3356,6 +3556,7 @@ def q_text_hybrid_rerank(spark, sf):
                          k_bm25=20, prf=3, k_out=10)
 
 
+@query(headline=True)
 def q_mm_gif_frames(spark, sf):
     """ANIMATED GIF frame-table decode (the video-shaped multimodal
     path): each document's first w*9 text bytes become a three-frame
@@ -3376,6 +3577,7 @@ def q_mm_gif_frames(spark, sf):
         pround(F.col("mean_intensity"), 9).alias("mean_intensity"))
 
 
+@query(headline=True)
 def q_mm_scan_tar(spark, sf):
     """Archive-container ingest, tar: every 8 documents become ONE
     POSIX ustar tar (stdlib-tarfile writer — independent), then the
@@ -3388,6 +3590,7 @@ def q_mm_scan_tar(spark, sf):
     return scan_tar_members(synth_tar_media(_t(spark, sf, "documents")))
 
 
+@query(headline=True)
 def q_mm_scan_targz(spark, sf):
     """Archive-container ingest, .tar.gz (round 14, VERDICT r13
     missing #5 — the common on-disk composite): stdlib tarfile +
@@ -3402,6 +3605,7 @@ def q_mm_scan_targz(spark, sf):
         synth_targz_media(_t(spark, sf, "documents")))
 
 
+@query(headline=True)
 def q_mm_webp_frames(spark, sf):
     """ANIMATED WebP frame-table decode (round 15, VERDICT r14 next
     #8 — closing the webp.py ANMF gate): each document's first w*9
@@ -3427,6 +3631,7 @@ def q_mm_webp_frames(spark, sf):
         pround(F.col("mean_intensity"), 9).alias("mean_intensity"))
 
 
+@query(headline=True)
 def q_text_web_pipeline(spark, sf):
     """The COMPOSED Common-Crawl-style cleaning pipeline, graded end
     to end (round 15): documents get deterministic mojibake/unicode
@@ -3467,6 +3672,7 @@ def q_text_web_pipeline(spark, sf):
                     F.md5(F.encode("txt", "UTF-8")).alias("text_fp")))
 
 
+@query(headline=True)
 def q_mm_scan_jsonl(spark, sf):
     """JSONL-shard corpus ingest (round 15) — the `.jsonl.gz` dump
     format every public LLM corpus ships in: stdlib json + gzip as
@@ -3483,6 +3689,7 @@ def q_mm_scan_jsonl(spark, sf):
     return scan_jsonl_docs(synth_jsonl_media(_t(spark, sf, "documents")))
 
 
+@query(headline=True)
 def q_mm_decode_vp8(spark, sf):
     """REAL lossy-WebP (VP8 key frame) decode end-to-end (round 15,
     VERDICT r14 next #4 — the last big real-world format gap): each
@@ -3508,6 +3715,7 @@ def q_mm_decode_vp8(spark, sf):
     return vp8_luma_table(synth_vp8_media(_t(spark, sf, "documents")))
 
 
+@query(headline=True)
 def q_mm_scan_tarbz2(spark, sf):
     """Archive-container ingest, .tar.bz2 (round 15, VERDICT r14 next
     #2): stdlib tarfile + stdlib bz2 as INDEPENDENT writers (odd
@@ -3522,6 +3730,7 @@ def q_mm_scan_tarbz2(spark, sf):
         synth_tarbz2_media(_t(spark, sf, "documents")))
 
 
+@query(headline=True)
 def q_mm_scan_tarxz(spark, sf):
     """Archive-container ingest, .tar.xz (round 15, VERDICT r14 next
     #2): stdlib tarfile + stdlib lzma as INDEPENDENT writers (odd
@@ -3537,6 +3746,7 @@ def q_mm_scan_tarxz(spark, sf):
         synth_tarxz_media(_t(spark, sf, "documents")))
 
 
+@query(headline=True)
 def q_corpus_dsir_weights(spark, sf):
     """DSIR importance weights (Xie et al. 2023): unigram + bigram
     occurrences hashed into 1024 buckets, target (DSIR_TARGET_SOURCES)
@@ -3551,6 +3761,7 @@ def q_corpus_dsir_weights(spark, sf):
                            DSIR_TARGET_SOURCES)
 
 
+@query(headline=True)
 def q_events_intervals_merge(spark, sf):
     """Overlapping-interval merge (gaps-and-islands): each event opens
     a (1 + event_id % 7)-hour validity interval; per user the
@@ -3566,6 +3777,7 @@ def q_events_intervals_merge(spark, sf):
     return merge_intervals(ev, order_cols=("event_id",))
 
 
+@query(headline=True)
 def q_events_pattern_match(spark, sf):
     """Row-pattern matching (MATCH_RECOGNIZE-lite): each 30-min
     session's ordered event types become one code string and a regex
@@ -3581,6 +3793,7 @@ def q_events_pattern_match(spark, sf):
          "error": "e", "signup": "s"})
 
 
+@query(headline=True)
 def q_sketch_cms_heavy(spark, sf):
     """phi-heavy hitters over word tokens via Count-Min (d=4, w=16384,
     phi = 1/30 of total occurrences): 100% recall by the
@@ -3598,6 +3811,7 @@ def q_sketch_cms_heavy(spark, sf):
     return cms_heavy_hitters(occ, "g", phi=(1, 30))
 
 
+@query(headline=True)
 def q_layout_compact(spark, sf):
     """Small-file compaction planning (OPTIMIZE bin packing): the
     per-shard manifest (one groupBy pass) feeds a contiguous
@@ -3613,6 +3827,7 @@ def q_layout_compact(spark, sf):
                         target=2000)
 
 
+@query(headline=True)
 def q_corpus_mix_temperature(spark, sf):
     """Temperature-flattened source mix at tau = 1/2 (mBERT/XLM-R/
     GPT-3 style): derived targets sqrt(n_g), keep rate
@@ -3626,6 +3841,7 @@ def q_corpus_mix_temperature(spark, sf):
     return temperature_rebalance(docs, "lang", "doc_id")
 
 
+@query(headline=True)
 def q_ann_pca_power(spark, sf):
     """Dominant PCA eigenvector by 8 power-iteration rounds over the
     EXACT integer covariance table — every round is floor-pinned
@@ -3637,6 +3853,7 @@ def q_ann_pca_power(spark, sf):
     return pca_power_top(_t(spark, sf, "embeddings"), iters=8)
 
 
+@query(headline=True)
 def q_ann_covariance(spark, sf):
     """Exact covariance matrix of the embedding table (the moments
     pass behind PCA/whitening): per-partition int64 numpy Gram
@@ -3649,6 +3866,7 @@ def q_ann_covariance(spark, sf):
     return covariance_upper(_t(spark, sf, "embeddings"))
 
 
+@query(headline=True)
 def q_scan_zonemap_prune(spark, sf):
     """Zone-map data skipping (parquet row-group stats / Delta file
     stats / Snowflake micro-partitions, as a first-class operator):
@@ -3678,6 +3896,7 @@ def q_scan_zonemap_prune(spark, sf):
         "n_matched")
 
 
+@query(headline=True)
 def q_events_cdc_apply(spark, sf):
     """CDC changelog apply (the MERGE INTO primitive): events become a
     change stream on the user key ('error' = delete tombstone, all
@@ -3693,6 +3912,7 @@ def q_events_cdc_apply(spark, sf):
     return cdc_apply(ev)
 
 
+@query(headline=True)
 def q_dedup_prefix_filter(spark, sf):
     """EXACT near-dup pairs via PPJoin-style prefix filtering — the
     recall-lossless complement to dedup_lsh_pairs: order each doc's
@@ -3711,231 +3931,25 @@ def q_dedup_prefix_filter(spark, sf):
 
 # =============================================================================
 
+def declared() -> list[Declaration]:
+    """Every @query declaration in registry order: the graded ones in
+    definition order, then the others in definition order."""
+    return sorted(_DECLARED, key=lambda d: not d.graded)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registry order matters: the driver grades the FIRST 50 entries, so
-    positions 1-50 carry one representative of every SURVEY §2 family AND
-    every LLM-pipeline family (dedup, embedding/ANN, packing, multimodal,
-    sampling, contamination). Near-duplicate in-family variants and the
-    rows-only model fits sit past position 50."""
-    return {
-        # ---- graded window (first 50): one per family ----
-        # scans / filters
-        "scan_pushdown_filter": q_scan_pushdown_filter,
-        "filter_bitmask": q_filter_bitmask,
-        "filter_sentinel_mask": q_filter_sentinel_mask,
-        "filter_zero_jitter": q_filter_zero_jitter,
-        # scalars
-        "scalar_ndvi_calibration": q_scalar_ndvi_calibration,
-        "scalar_date_codec": q_scalar_date_codec,
-        "scalar_grid_snap": q_scalar_grid_snap,
-        "scalar_json": q_scalar_json,
-        # joins
-        "join_merge_inner": q_join_merge_inner,
-        "join_snap_grid": q_join_snap_grid,
-        "join_semi_anti": q_join_semi_anti,
-        "join_zonal_broadcast": q_join_zonal_broadcast,
-        "join_asof_nearest": q_join_asof_nearest,
-        "join_range_bucketed": q_join_range_bucketed,
-        # aggregations
-        "agg_pricing_summary": q_agg_pricing_summary,
-        "agg_temporal_mean_composite": q_agg_temporal_mean_composite,
-        "agg_temporal_sum_composite": q_agg_temporal_sum_composite,
-        "agg_conditional_fraction": q_agg_conditional_fraction,
-        "agg_max_resume_date": q_agg_max_resume_date,
-        "agg_distinct_dates": q_agg_distinct_dates,
-        "agg_rollup": q_agg_rollup,
-        "agg_salted_count": q_agg_salted_count,
-        # windows
-        "window_composite_periods": q_window_composite_periods,
-        "window_tail_k": q_window_tail_k,
-        "window_expanding_mean": q_window_expanding_mean,
-        "window_neighborhood_mean": q_window_neighborhood_mean,
-        "window_sessionize": q_window_sessionize,
-        "window_sliding_mean": q_window_sliding_mean,
-        # set ops / top-k
-        "set_union_except": q_set_union_except,
-        "topk_global": q_topk_global,
-        # text analysis
-        "text_stats": q_text_stats,
-        "text_lang_id": q_text_lang_id,
-        # dedup (exact / minhash-LSH / jaccard / simhash / embedding / CC)
-        "dedup_exact": q_dedup_exact,
-        "dedup_minhash_sig": q_dedup_minhash_sig,
-        "dedup_lsh_pairs": q_dedup_lsh_pairs,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_simhash": q_dedup_simhash,
-        "dedup_embedding": q_dedup_embedding,
-        # contamination
-        "text_contamination": q_text_contamination,
-        # deterministic sampling
-        "sample_stratified": q_sample_stratified,
-        "sample_group_cap": q_sample_group_cap,
-        "sample_token_budget": q_sample_token_budget,
-        # corpus build / packing
-        "pack_sequences": q_pack_sequences,
-        "text_chunks": q_text_chunks,
-        # similarity / ANN
-        "ann_bruteforce_topk": q_ann_bruteforce_topk,
-        "ann_lsh_topk": q_ann_lsh_topk,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        # multimodal
-        "mm_byte_histogram": q_mm_byte_histogram,
-        "mm_metadata": q_mm_metadata,
-        # ---- past the graded window: in-family variants ----
-        "scalar_strings": q_scalar_strings,
-        "scalar_round_abs": q_scalar_round_abs,
-        "scalar_zorder": q_scalar_zorder,
-        "agg_cube": q_agg_cube,
-        "agg_percentile": q_agg_percentile,
-        "agg_corr_exact": q_agg_corr_exact,
-        "window_lag_lead": q_window_lag_lead,
-        "window_days_since_start": q_window_days_since_start,
-        "window_lag_pivot": q_window_lag_pivot,
-        "text_fingerprint": q_text_fingerprint,
-        "text_tokens": q_text_tokens,
-        "text_pii_scrub": q_text_pii_scrub,
-        "text_repeated_ngrams": q_text_repeated_ngrams,
-        "text_clean_pipeline": q_text_clean_pipeline,
-        "dedup_representatives": q_dedup_representatives,
-        "corpus_stats": q_corpus_stats,
-        "ann_quantize": q_ann_quantize,
-        "ann_pairwise_label_sim": q_ann_pairwise_label_sim,
-        "ann_embedding_norms": q_ann_embedding_norms,
-        "ann_topk_join": q_ann_topk_join,
-        "ann_topk_join_lsh": q_ann_topk_join_lsh,
-        "ann_label_centroids": q_ann_label_centroids,
-        "mm_frame_sample": q_mm_frame_sample,
-        "text_gopher": q_text_gopher,
-        "dedup_chunks": q_dedup_chunks,
-        "dedup_semantic": q_dedup_semantic,
-        "corpus_order": q_corpus_order,
-        "dedup_substrings": q_dedup_substrings,
-        "corpus_mix": q_corpus_mix,
-        "corpus_vocab": q_corpus_vocab,
-        "dedup_incremental": q_dedup_incremental,
-        "ann_pq_codes": q_ann_pq_codes,
-        "ann_pq_topk": q_ann_pq_topk,
-        "mm_patches": q_mm_patches,
-        "text_rarity": q_text_rarity,
-        "sample_global_k": q_sample_global_k,
-        "sample_weighted_k": q_sample_weighted_k,
-        "text_bm25_topk": q_text_bm25_topk,
-        "sketch_hll_distinct": q_sketch_hll_distinct,
-        "sketch_cms_counts": q_sketch_cms_counts,
-        "text_bm25_join": q_text_bm25_join,
-        "sample_rebalance": q_sample_rebalance,
-        "sketch_kmv_jaccard": q_sketch_kmv_jaccard,
-        "dedup_remove_spans": q_dedup_remove_spans,
-        "kmeans_assign": q_kmeans_assign,
-        "dedup_bloom_probe": q_dedup_bloom_probe,
-        "sample_split": q_sample_split,
-        "ann_pq_trained": q_ann_pq_trained,
-        "corpus_cluster_balance": q_corpus_cluster_balance,
-        "text_eval_overlap": q_text_eval_overlap,
-        "pack_manifest": q_pack_manifest,
-        "dedup_minhash_estimate": q_dedup_minhash_estimate,
-        "mm_decode_ppm": q_mm_decode_ppm,
-        "mm_decode_png": q_mm_decode_png,
-        "events_funnel": q_events_funnel,
-        "events_retention": q_events_retention,
-        "agg_pivot_events": q_agg_pivot_events,
-        "agg_unpivot": q_agg_unpivot,
-        "join_asof_forward": q_join_asof_forward,
-        "events_markov": q_events_markov,
-        "text_source_divergence": q_text_source_divergence,
-        "events_attr_last": q_events_attr_last,
-        "text_textrank": q_text_textrank,
-        "text_phrase_search": q_text_phrase_search,
-        "text_collocations": q_text_collocations,
-        "text_char_diversity": q_text_char_diversity,
-        "join_multiway_topk": q_join_multiway_topk,
-        "sketch_hll_sliding": q_sketch_hll_sliding,
-        "sketch_quantile_bins": q_sketch_quantile_bins,
-        "events_anomaly": q_events_anomaly,
-        "join_outer_full": q_join_outer_full,
-        "agg_grouping_sets": q_agg_grouping_sets,
-        "window_ntile_rank": q_window_ntile_rank,
-        "join_fuzzy_tokens": q_join_fuzzy_tokens,
-        "quality_audit": q_quality_audit,
-        "scalar_clip_outliers": q_scalar_clip_outliers,
-        "events_assoc_rules": q_events_assoc_rules,
-        "text_bigram_novelty": q_text_bigram_novelty,
-        "graph_triangles": q_graph_triangles,
-        "ann_dim_standardize": q_ann_dim_standardize,
-        "events_attribution": q_events_attribution,
-        "events_twap": q_events_twap,
-        "events_resample_ffill": q_events_resample_ffill,
-        "set_bag_ops": q_set_bag_ops,
-        "graph_bfs_hops": q_graph_bfs_hops,
-        "events_scd2": q_events_scd2,
-        # model operators (rows-only by design)
-        "model_gp_forecast": q_model_gp_forecast,
-        "model_hindcast_lag": q_model_hindcast_lag,
-        "model_gwr_score": q_model_gwr_score,
-        # round-11 additions (registry tail — the graded first-50
-        # prefix stays frozen)
-        "text_tokens_bpe": q_text_tokens_bpe,
-        "sample_token_budget_bpe": q_sample_token_budget_bpe,
-        "mm_decode_wav": q_mm_decode_wav,
-        "pack_sequences_bpe": q_pack_sequences_bpe,
-        "corpus_bpe_train": q_corpus_bpe_train,
-        "mm_audio_energy": q_mm_audio_energy,
-        # round-12 additions
-        "corpus_bpe_train_scaled": q_corpus_bpe_train_scaled,
-        "corpus_bpe_encode": q_corpus_bpe_encode,
-        "mm_decode_jpeg": q_mm_decode_jpeg,
-        "mm_decode_wav_ext": q_mm_decode_wav_ext,
-        "events_attr_topk": q_events_attr_topk,
-        "mm_decode_wav_law": q_mm_decode_wav_law,
-        "text_perplexity_bucket": q_text_perplexity_bucket,
-        "text_quality_classifier": q_text_quality_classifier,
-        "corpus_dsir_weights": q_corpus_dsir_weights,
-        "mm_decode_gif": q_mm_decode_gif,
-        "mm_scan_zip": q_mm_scan_zip,
-        "mm_scan_warc": q_mm_scan_warc,
-        "mm_scan_tar": q_mm_scan_tar,
-        "mm_gif_frames": q_mm_gif_frames,
-        "text_hybrid_rerank": q_text_hybrid_rerank,
-        "text_perplexity_scaled": q_text_perplexity_scaled,
-        "dedup_prefix_filter": q_dedup_prefix_filter,
-        "events_cdc_apply": q_events_cdc_apply,
-        "scan_zonemap_prune": q_scan_zonemap_prune,
-        "ann_covariance": q_ann_covariance,
-        "ann_pca_power": q_ann_pca_power,
-        "layout_compact": q_layout_compact,
-        "corpus_mix_temperature": q_corpus_mix_temperature,
-        "sketch_cms_heavy": q_sketch_cms_heavy,
-        "events_pattern_match": q_events_pattern_match,
-        "events_intervals_merge": q_events_intervals_merge,
-        "text_perplexity_kn": q_text_perplexity_kn,
-        "ann_recall_at_k": q_ann_recall_at_k,
-        "corpus_unigram_train": q_corpus_unigram_train,
-        "corpus_unigram_encode": q_corpus_unigram_encode,
-        "mm_scan_mp4": q_mm_scan_mp4,
-        "mm_mp4_frames": q_mm_mp4_frames,
-        "mm_decode_webp": q_mm_decode_webp,
-        "mm_decode_wav_adpcm": q_mm_decode_wav_adpcm,
-        "ann_lsh_hamming": q_ann_lsh_hamming,
-        "ann_pq_rerank": q_ann_pq_rerank,
-        "text_perplexity_kn5": q_text_perplexity_kn5,
-        "mm_mp4_fragmented": q_mm_mp4_fragmented,
-        "mm_scan_targz": q_mm_scan_targz,
-        # round-15 additions
-        "text_html_extract": q_text_html_extract,
-        "text_normalize": q_text_normalize,
-        "mm_scan_tarbz2": q_mm_scan_tarbz2,
-        "mm_scan_tarxz": q_mm_scan_tarxz,
-        "ann_ivfpq_topk": q_ann_ivfpq_topk,
-        "mm_decode_vp8": q_mm_decode_vp8,
-        "mm_webp_frames": q_mm_webp_frames,
-        "mm_scan_jsonl": q_mm_scan_jsonl,
-        "text_web_pipeline": q_text_web_pipeline,
-    }
+    """Registry order matters: the driver grades the FIRST 50 entries,
+    which are the graded=True declarations. They carry one representative
+    of every SURVEY §2 family AND every LLM-pipeline family (dedup,
+    embedding/ANN, packing, multimodal, sampling, contamination).
+    Near-duplicate in-family variants and the rows-only model fits sit
+    past position 50."""
+    return {d.name: d.fn for d in declared()}
 
 
 # =============================================================================
-# DuckDB oracles. Keys match queries(); column aliases match exactly.
+# DuckDB oracles. Keys match queries() minus the rows_only declarations;
+# column aliases match exactly.
 # =============================================================================
 
 def _periods_values(start: dt.date, cur: dt.date) -> str:

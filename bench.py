@@ -30,125 +30,9 @@ import __spark_entry__ as entrymod  # noqa: E402
 from lswms_forage_etl_spark import get_spark  # noqa: E402
 from perfbench.run import calibrate, fingerprint  # noqa: E402
 
-# Headline set: one per operator family, weighted toward shuffle/join/agg
-# heavy paths that dominate at scale.
-HEADLINE = [
-    "agg_pricing_summary",
-    "join_merge_inner",
-    "join_zonal_broadcast",
-    "join_asof_nearest",
-    "join_range_bucketed",
-    "agg_temporal_mean_composite",
-    "window_expanding_mean",
-    "window_tail_k",
-    "window_sessionize",
-    "topk_global",
-    "dedup_exact",
-    "dedup_lsh_pairs",
-    "dedup_clusters",
-    "dedup_embedding",
-    "ann_bruteforce_topk",
-    "ann_ivf_topk",
-    "ann_topk_join",
-    "text_stats",
-    "text_clean_pipeline",
-    "sample_group_cap",
-    "mm_byte_histogram",
-    # round-2 additions with no timing evidence until now
-    "pack_sequences",
-    "text_contamination",
-    "dedup_simhash",
-    # round-4 addition
-    "dedup_semantic",
-    # round-5 additions
-    "dedup_substrings",
-    "dedup_incremental",
-    "ann_pq_topk",
-    # round-6 additions
-    "dedup_remove_spans",
-    "kmeans_assign",
-    "dedup_bloom_probe",
-    # round-9 additions
-    "text_bm25_topk",
-    "sample_weighted_k",
-    "sketch_hll_distinct",
-    "text_bm25_join",
-    "sketch_cms_counts",
-    "sample_rebalance",
-    "sketch_kmv_jaccard",
-    # round-9 session-2 additions
-    "events_funnel",
-    "text_textrank",
-    "text_collocations",
-    "text_phrase_search",
-    "join_multiway_topk",
-    "sketch_hll_sliding",
-    "sketch_quantile_bins",
-    # round-10 additions
-    "mm_decode_png",
-    "graph_triangles",
-    "text_bigram_novelty",
-    "graph_bfs_hops",
-    "events_assoc_rules",
-    "quality_audit",
-    "events_markov",
-    "text_source_divergence",
-    "events_attr_last",
-    # round-11 additions
-    "text_tokens_bpe",
-    "mm_decode_wav",
-    "corpus_bpe_train",
-    # round-11 perf-fixed heavies (track them from now on)
-    "text_rarity",
-    "ann_quantize",
-    # round-12 additions
-    "corpus_bpe_train_scaled",
-    "mm_decode_jpeg",
-    "events_attr_topk",
-    "text_perplexity_bucket",
-    "text_quality_classifier",
-    "corpus_dsir_weights",
-    "mm_decode_gif",
-    "mm_scan_zip",
-    "mm_scan_warc",
-    "mm_scan_tar",
-    "mm_gif_frames",
-    "text_hybrid_rerank",
-    "text_perplexity_scaled",
-    "dedup_prefix_filter",
-    "events_cdc_apply",
-    "scan_zonemap_prune",
-    "ann_covariance",
-    "ann_pca_power",
-    "layout_compact",
-    "corpus_mix_temperature",
-    "sketch_cms_heavy",
-    "events_pattern_match",
-    "events_intervals_merge",
-    # round-13 additions
-    "text_perplexity_kn",
-    "ann_recall_at_k",
-    "corpus_unigram_train",
-    "corpus_unigram_encode",
-    "mm_decode_webp",
-    "mm_decode_wav_adpcm",
-    # round-14 additions
-    "ann_lsh_hamming",
-    "ann_pq_rerank",
-    "text_perplexity_kn5",
-    "mm_mp4_fragmented",
-    "mm_scan_targz",
-    # round-15 additions
-    "text_html_extract",
-    "text_normalize",
-    "mm_scan_tarbz2",
-    "mm_scan_tarxz",
-    "ann_ivfpq_topk",
-    "mm_decode_vp8",
-    "mm_webp_frames",
-    "mm_scan_jsonl",
-    "text_web_pipeline",
-]
+# Headline set (@query(headline=True)): one per operator family, weighted
+# toward shuffle/join/agg heavy paths that dominate at scale.
+HEADLINE = [d.name for d in entrymod.declared() if d.headline]
 
 
 def main() -> None:

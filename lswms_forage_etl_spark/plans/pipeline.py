@@ -79,17 +79,20 @@ class Pipeline:
 
         A stage whose `requires` are missing or empty is skipped; its
         outputs never enter ctx, so downstream stages requiring them skip
-        too (the F7 cascade). A raised exception triggers `on_failure`
-        then re-raises — the orchestrator never swallows errors."""
+        too (the F7 cascade). A raised exception, from the stage or from
+        the emptiness probe of its inputs, fails that stage, triggers
+        `on_failure` then re-raises — the orchestrator never swallows
+        errors."""
         self.results = []
         for st in self.stages:
-            missing = [r for r in st.requires
-                       if r not in ctx or ctx[r].isEmpty()]
-            if missing:
-                self.results.append(StageResult(
-                    st.name, "skipped", f"empty/missing inputs: {missing}"))
-                continue
             try:
+                missing = [r for r in st.requires
+                           if r not in ctx or ctx[r].isEmpty()]
+                if missing:
+                    self.results.append(StageResult(
+                        st.name, "skipped",
+                        f"empty/missing inputs: {missing}"))
+                    continue
                 updates = st.fn(spark, ctx)
             except Exception as exc:
                 self.results.append(StageResult(st.name, "failed", str(exc)))

@@ -1,7 +1,8 @@
 """SparkSession factory with scale-oriented defaults.
 
-Defaults chosen for the local[32] test harness but expressed so the same
-settings are correct on a 1000-executor cluster:
+Defaults chosen for a local[N] harness, N = $SPARK_GRAFT_CPUS or else the
+CPUs this process may run on, but expressed so the same settings are
+correct on a 1000-executor cluster:
 
 - AQE on (runtime shuffle-partition coalescing, skew-join splitting,
   broadcast-join demotion/promotion) — the engine relies on AQE instead of
@@ -19,15 +20,14 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_spark(app_name: str = "lswms_forage_etl_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -36,7 +36,7 @@ def get_spark(app_name: str = "lswms_forage_etl_spark",
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions",
-                str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+                str(shuffle_partitions or cpus))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

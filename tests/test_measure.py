@@ -89,6 +89,26 @@ def test_construct_and_action_split_the_wall_with_no_extra_planning(spark):
     assert [s.read for s in spies] == [["write"], ["write"]]
 
 
+def test_run_with_ui_reports_only_the_stages_that_ran(monkeypatch):
+    """A SKIPPED stage (zero tasks, e.g. one a broadcast's future job
+    lists but never runs) is not in run_with_ui's stage list."""
+    ran = []
+    jobs = {False: [{"jobId": 0}], True: [{"jobId": 0}, {"jobId": 1}]}
+    stages = {False: [{"stageId": 0, "status": "COMPLETE"}],
+              True: [{"stageId": 0, "status": "COMPLETE"},
+                     {"stageId": 3, "status": "COMPLETE"},
+                     {"stageId": 1, "status": "SKIPPED"},
+                     {"stageId": 2, "status": "COMPLETE"}]}
+    monkeypatch.setattr(measure, "_api", lambda base, path: (
+        jobs if path == "/jobs" else stages)[bool(ran)])
+    monkeypatch.setattr(measure, "release", lambda spark: None)
+    monkeypatch.setattr(measure, "run_once",
+                        lambda spark, fn, sf: ran.append(1) or {"wall_s": 1})
+    rec, new_jobs, new_stages = measure.run_with_ui(None, "base", None, None)
+    assert rec == {"wall_s": 1}
+    assert [j["jobId"] for j in new_jobs] == [1]
+    assert [s["stageId"] for s in new_stages] == [2, 3]
+
 @pytest.mark.skipif(not os.path.isdir(SF), reason=f"{SF} not present")
 def test_bench_named_mode_prints_full_and_tail_lines():
     env = {**os.environ, "SPARK_GRAFT_SF_DIR": SF, "SPARK_GRAFT_CPUS": "2",

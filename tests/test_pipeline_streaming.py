@@ -47,6 +47,23 @@ def test_pipeline_failure_hook(spark):
     assert p.results[0].status == "failed"
 
 
+def test_pipeline_failure_hook_covers_requires_probe(spark):
+    """The emptiness probe of a required input runs inside the stage that
+    requires it: a probe that raises fails that stage and reaches the
+    hook. A failing filter is used because a failing projection is
+    pruned out of the LIMIT-1 probe and never runs."""
+    seen = {}
+    p = Pipeline(stages=[
+        Stage("a", lambda s, c: {
+            "x": s.range(3).where("raise_error('boom') IS NULL")}),
+        Stage("b", lambda s, c: {}, requires=("x",)),
+    ], on_failure=lambda name, exc: seen.update({name: str(exc)}))
+    with pytest.raises(Exception, match="boom"):
+        p.run(spark, {})
+    assert list(seen) == ["b"] and "boom" in seen["b"]
+    assert [(r.name, r.status) for r in p.results] == [
+        ("a", "ok"), ("b", "failed")]
+
 def _obs_cells(spark, value_base, n_days=40, n_cells=25):
     rows = []
     for d in range(n_days):

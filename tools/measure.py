@@ -12,8 +12,8 @@ run from a copy of another commit measures that commit on both sides.
                build and its noop write apart
   best_of      the fastest of n run_once records
   count_rows   the query's row count, off the clock
-  run_with_ui  run_once plus the jobs and stages it added, read from the
-               local Spark UI REST API at ui_base(spark)
+  run_with_ui  run_once plus the jobs and executed stages it added, read
+               from the local Spark UI REST API at ui_base(spark)
 
 A query function is `fn(spark, sf_dir) -> DataFrame`, as in
 `__spark_entry__.queries()`. A failing run gives a record with an
@@ -123,8 +123,10 @@ def _api(base: str, path: str) -> list:
 
 def run_with_ui(spark, base: str, fn,
                 sf_dir: str) -> tuple[dict, list, list]:
-    """run_once, plus the jobs and stages (in id order, skipped ones
-    included) the UI at `base` saw added by it."""
+    """run_once, plus the jobs and the executed stages (in id order) the
+    UI at `base` saw added by it. SKIPPED stages are left out: they run
+    no task, and how many of them a broadcast's future job lists varies
+    from run to run."""
     # release before the snapshot: a count still in flight from an
     # earlier run must land before it, not inside this run's diff
     release(spark)
@@ -132,5 +134,6 @@ def run_with_ui(spark, base: str, fn,
     stages0 = {s["stageId"] for s in _api(base, "/stages")}
     rec = run_once(spark, fn, sf_dir)
     jobs = [j for j in _api(base, "/jobs") if j["jobId"] not in jobs0]
-    stages = [s for s in _api(base, "/stages") if s["stageId"] not in stages0]
+    stages = [s for s in _api(base, "/stages")
+              if s["stageId"] not in stages0 and s["status"] != "SKIPPED"]
     return rec, jobs, sorted(stages, key=lambda s: s["stageId"])

@@ -101,7 +101,6 @@ def main() -> None:
             print(json.dumps({"query": name, "error": rec["error"]}))
             errored.append(name)
             continue
-        stages = [s for s in stages if s["status"] != "SKIPPED"]
         line = json.dumps({
             "query": name,
             "wall_s": round(rec["wall_s"], 3),
