@@ -29,6 +29,11 @@ from pyspark.sql import functions as F
 
 _TIERS = ("strict", "touched", "c0", "c3")
 
+# Zone means are summed exactly in decimal and divided once. A double sum
+# follows the shuffle-read order, and a 32-cell zone's mean (k/3200) can
+# sit on a 6-dp half boundary, so its rounding flipped from run to run.
+_EXACT = "decimal(28,12)"
+
 
 def _tier_flagged_coverage(coverage: DataFrame,
                            centroids: DataFrame | None,
@@ -83,7 +88,7 @@ def zonal_stats(cells: DataFrame, coverage: DataFrame,
     cov = _tier_flagged_coverage(coverage, centroids, neighborhood)
     j = cells.join(F.broadcast(cov), ["row", "col"], "inner")
 
-    v = F.col(value_col)
+    v = F.col(value_col).cast(_EXACT)
     aggs = []
     for t in _TIERS:
         cond = F.when(F.col(t), v)
@@ -98,7 +103,7 @@ def zonal_stats(cells: DataFrame, coverage: DataFrame,
             F.when(F.col("count_touched") > 0, F.col("mean_touched")),
             F.when(F.col("count_c0") > 0, F.col("mean_c0")),
             F.when(F.col("count_c3") > 0, F.col("mean_c3")),
-        ).alias("biomass_mean"),
+        ).cast("double").alias("biomass_mean"),
         F.col("count_strict").alias("pixel_count"),
         (F.col("count_strict") == 0).alias("retried_all_touched"),
         ((F.col("count_strict") == 0)

@@ -88,6 +88,34 @@ def test_zone_series_nan_to_zero(spark):
     assert out[0]["biomass"] == 0.0
 
 
+def test_zonal_mean_independent_of_summation_order(spark):
+    # a 32-cell zone of 2-dp values whose exact mean, 4.7015625, sits on a
+    # 6-dp half boundary: a double sum in ascending order lands on one
+    # side of it and in descending order on the other. The zone mean must
+    # not depend on the order in which a task reads the cells.
+    import functools
+    import operator
+    import random
+    from fractions import Fraction
+
+    rng = random.Random(4)
+    vals = sorted(round(rng.uniform(0.5, 9.5), 2) for _ in range(32))
+    asc = functools.reduce(operator.add, vals, 0.0)
+    desc = functools.reduce(operator.add, vals[::-1], 0.0)
+    assert asc != desc                      # the order matters in double
+    cov = spark.createDataFrame(
+        [("Z", 0, c, "strict") for c in range(32)],
+        "zone_id string, row int, col int, coverage string")
+    means = []
+    for ordered in (vals, vals[::-1]):
+        cells = spark.createDataFrame(
+            [(D1, 0, c, v) for c, v in enumerate(ordered)],
+            "date date, row int, col int, value double").coalesce(1)
+        means.append(zonal_stats(cells, cov).collect()[0]["biomass_mean"])
+    assert means[0] == means[1]
+    assert means[0] == float(sum(map(Fraction, map(str, vals))) / 32)
+
+
 def test_rasterize_dense_fill(spark):
     pts = spark.createDataFrame(
         [(36.02, 14.98, D1, 1.234), (36.02, 14.98, D1, 2.346),  # same cell
