@@ -23,6 +23,7 @@ from lswms_forage_etl_spark.functions.cleansing import (
     biomass_calibration,
     mask_sentinels,
     normalized_difference,
+    portable_round,
 )
 from lswms_forage_etl_spark.functions.dates import (
     date_to_yyyymmdd,
@@ -113,17 +114,8 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-def pround(c, digits: int):
-    """Engine-portable round: floor(x*10^d + 0.5)/10^d — identical on any
-    IEEE-754 engine (Spark round() goes through BigDecimal shortest-repr
-    HALF_UP; DuckDB rounds the raw binary double; they disagree on
-    half-boundary representations)."""
-    s = float(10 ** digits)
-    return F.floor(c * F.lit(s) + F.lit(0.5)) / F.lit(s)
-
-
 def _pr(expr: str, digits: int) -> str:
-    """SQL twin of pround()."""
+    """SQL twin of portable_round() (functions/cleansing.py)."""
     s = 10 ** digits
     return f"floor(({expr}) * {s} + 0.5) / {s}.0"
 
@@ -134,7 +126,7 @@ def scaled_mean(c, digits: int, out_digits: int = 4):
     portable-round the single division result."""
     s = 10 ** digits
     total = F.sum(F.floor(c * F.lit(float(s)) + F.lit(0.5)).cast("long"))
-    return pround(total / F.lit(float(s)) / F.count(c), out_digits)
+    return portable_round(total / F.lit(float(s)) / F.count(c), out_digits)
 
 
 def _sm(expr: str, digits: int, out_digits: int = 4) -> str:
@@ -218,7 +210,7 @@ def q_filter_sentinel_mask(spark, sf):
          .otherwise(F.col("value"))
     return ev.select(
         "event_id",
-        pround(mask_sentinels(v), 4).alias("masked_value"))
+        portable_round(mask_sentinels(v), 4).alias("masked_value"))
 
 
 @query(graded=True)
@@ -237,7 +229,7 @@ def q_filter_zero_jitter(spark, sf):
     jit = F.lit(0.001) + u_mag * F.lit(0.009)
     return z.select(
         "event_id",
-        pround(F.when((F.col("v") == 0) & (u_pick < 0.1),
+        portable_round(F.when((F.col("v") == 0) & (u_pick < 0.1),
                       F.col("v") + jit).otherwise(F.col("v")), 6)
         .alias("jittered"))
 
@@ -252,8 +244,8 @@ def q_scalar_ndvi_calibration(spark, sf):
                                F.col("l_extendedprice") * F.col("l_discount"))
     return li.select(
         "l_orderkey", "l_linenumber",
-        pround(nd, 6).alias("ndvi"),
-        pround(biomass_calibration(F.col("l_discount")), 6).alias("biom"))
+        portable_round(nd, 6).alias("ndvi"),
+        portable_round(biomass_calibration(F.col("l_discount")), 6).alias("biom"))
 
 
 @query(graded=True)
@@ -280,8 +272,8 @@ def q_scalar_grid_snap(spark, sf):
     return df.select(
         "c_custkey",
         lon_to_col("lon").alias("col"), lat_to_row("lat").alias("row"),
-        pround(cell_to_lon(lon_to_col("lon")), 4).alias("cell_lon"),
-        pround(cell_to_lat(lat_to_row("lat")), 4).alias("cell_lat"))
+        portable_round(cell_to_lon(lon_to_col("lon")), 4).alias("cell_lon"),
+        portable_round(cell_to_lat(lat_to_row("lat")), 4).alias("cell_lat"))
 
 
 @query()
@@ -303,7 +295,7 @@ def q_scalar_round_abs(spark, sf):
     li = _t(spark, sf, "lineitem")
     signed = F.col("l_extendedprice") * (F.lit(1.0) - F.lit(2.0) * F.col("l_discount")) - 50000.0
     return li.select("l_orderkey", "l_linenumber",
-                     pround(F.abs(signed), 2).alias("round_abs"))
+                     portable_round(F.abs(signed), 2).alias("round_abs"))
 
 
 @query(graded=True)
@@ -330,7 +322,7 @@ def q_join_merge_inner(spark, sf):
     return (li.join(o, li["l_orderkey"] == o["o_orderkey"])
             .join(c, o["o_custkey"] == c["c_custkey"])
             .select("l_orderkey", "l_linenumber", "c_custkey",
-                    pround(F.col("l_extendedprice"), 2).alias("price"),
+                    portable_round(F.col("l_extendedprice"), 2).alias("price"),
                     F.col("o_orderstatus").alias("status")))
 
 
@@ -348,7 +340,7 @@ def q_join_snap_grid(spark, sf):
     cells = p.select(
         F.pmod(F.col("p_partkey") * 3, F.lit(260)).cast("int").alias("col"),
         F.pmod(F.col("p_partkey") * 11, F.lit(300)).cast("int").alias("row"),
-        pround(F.col("p_retailprice") / 1000.0, 4).alias("cell_value"))
+        portable_round(F.col("p_retailprice") / 1000.0, 4).alias("cell_value"))
     cells = cells.groupBy("row", "col").agg(
         scaled_mean(F.col("cell_value"), 4).alias("cell_value"))
     snapped = pts.withColumn("col", lon_to_col("lon")).withColumn(
@@ -546,7 +538,7 @@ def q_agg_conditional_fraction(spark, sf):
     (gwr_model.py:44-46 nonzero-% precheck shape)."""
     li = _t(spark, sf, "lineitem")
     return li.agg(
-        pround(F.avg((F.col("l_tax") == 0).cast("double")) * 100, 4)
+        portable_round(F.avg((F.col("l_tax") == 0).cast("double")) * 100, 4)
         .alias("pct_zero_tax"),
         F.count(F.lit(1)).alias("n_rows"))
 
@@ -618,8 +610,8 @@ def q_window_lag_lead(spark, sf):
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return o.select(
         "o_custkey", "o_orderkey",
-        pround(F.lag("o_totalprice", 1).over(w), 2).alias("prev_price"),
-        pround(F.lead("o_totalprice", 1).over(w), 2).alias("next_price"),
+        portable_round(F.lag("o_totalprice", 1).over(w), 2).alias("prev_price"),
+        portable_round(F.lead("o_totalprice", 1).over(w), 2).alias("next_price"),
         F.datediff(F.col("o_orderdate"),
                    F.lag("o_orderdate", 1).over(w)).alias("days_since_prev"))
 
@@ -645,7 +637,7 @@ def q_window_expanding_mean(spark, sf):
     total = F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")).over(w)
     cnt = F.count(F.lit(1)).over(w)
     return o.select("o_custkey", "o_orderkey",
-                    pround(total / 100.0 / cnt, 4).alias("expanding_avg"))
+                    portable_round(total / 100.0 / cnt, 4).alias("expanding_avg"))
 
 
 @query()
@@ -722,9 +714,9 @@ def q_agg_percentile(spark, sf):
     deterministic and engine-portable, unlike floating aggregation)."""
     li = _t(spark, sf, "lineitem")
     return (li.groupBy("l_returnflag")
-            .agg(pround(F.expr("percentile(l_extendedprice, 0.5)"), 4)
+            .agg(portable_round(F.expr("percentile(l_extendedprice, 0.5)"), 4)
                  .alias("p50"),
-                 pround(F.expr("percentile(l_extendedprice, 0.9)"), 4)
+                 portable_round(F.expr("percentile(l_extendedprice, 0.9)"), 4)
                  .alias("p90"),
                  F.count(F.lit(1)).alias("n")))
 
@@ -750,7 +742,7 @@ def q_agg_corr_exact(spark, sf):
     vary = n * F.col("syy") - sy * sy
     return agg.select(
         "l_linestatus", "n",
-        pround(cov / F.sqrt(varx.cast("double") * vary.cast("double")), 6)
+        portable_round(cov / F.sqrt(varx.cast("double") * vary.cast("double")), 6)
         .alias("corr_qty_disc"))
 
 
@@ -789,7 +781,7 @@ def q_topk_global(spark, sf):
     o = _t(spark, sf, "orders")
     return (o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
             .limit(25)
-            .select("o_orderkey", pround(F.col("o_totalprice"), 2).alias("price")))
+            .select("o_orderkey", portable_round(F.col("o_totalprice"), 2).alias("price")))
 
 
 # --- text analysis -----------------------------------------------------------
@@ -803,7 +795,7 @@ def q_text_stats(spark, sf):
         "doc_id",
         T.token_count("text").alias("n_tokens"),
         F.length("text").alias("n_chars_check"),
-        pround(T.punct_ratio("text"), 4).alias("punct_ratio"),
+        portable_round(T.punct_ratio("text"), 4).alias("punct_ratio"),
         T.quality_score("text").alias("quality"))
 
 
@@ -822,7 +814,7 @@ def q_text_tokens(spark, sf):
     return d.select(
         "doc_id",
         T.bpe_ish_token_count("text").alias("n_pieces"),
-        pround(T.stopword_ratio("text", "en"), 6).alias("stop_ratio_en"))
+        portable_round(T.stopword_ratio("text", "en"), 6).alias("stop_ratio_en"))
 
 
 @query()
@@ -837,7 +829,7 @@ def q_window_lag_pivot(spark, sf):
                      .cast("int").alias("horizon"),
                      F.col("o_totalprice"))
             .groupBy("zone", "date", "horizon")
-            .agg(pround(F.min("o_totalprice"), 2).alias("v")))
+            .agg(portable_round(F.min("o_totalprice"), 2).alias("v")))
     return (tall.groupBy("zone", "date")
             .pivot("horizon", [0, 16, 32, 48])
             .agg(F.first("v"))
@@ -885,8 +877,8 @@ def q_text_repeated_ngrams(spark, sf):
     d = _t(spark, sf, "documents")
     return d.select(
         "doc_id",
-        pround(T.dup_ngram_frac("text", 2), 6).alias("dup2_frac"),
-        pround(T.dup_ngram_frac("text", 3), 6).alias("dup3_frac"))
+        portable_round(T.dup_ngram_frac("text", 2), 6).alias("dup2_frac"),
+        portable_round(T.dup_ngram_frac("text", 3), 6).alias("dup3_frac"))
 
 
 # --- dedup -------------------------------------------------------------------
@@ -1005,7 +997,7 @@ def q_dedup_minhash_estimate(spark, sf):
         F.zip_with("mh_a", "mh_b", lambda x, y: x == y), lambda v: v))
     return joined.select(
         "id_a", "id_b",
-        pround(matches / F.lit(16.0), 6).alias("est_jaccard"),
+        portable_round(matches / F.lit(16.0), 6).alias("est_jaccard"),
         jaccard_expr("sh_a", "sh_b").alias("jaccard"))
 
 
@@ -1077,7 +1069,7 @@ def q_text_contamination(spark, sf):
         F.when(nb > 0, inter / nb).otherwise(0.0)).otherwise(
         F.when(na > 0, inter / na).otherwise(0.0))
     j = out.select("id_a", "id_b",
-                   pround(containment, 6).alias("containment"))
+                   portable_round(containment, 6).alias("containment"))
     return j.where(F.col("containment") >= 0.2)
 
 
@@ -1242,10 +1234,10 @@ def q_ann_quantize(spark, sf):
                                         * F.col("scale")))
     return b.select(
         "vec_id",
-        pround(F.col("scale"), 9).alias("qscale"),
+        portable_round(F.col("scale"), 9).alias("qscale"),
         F.aggregate("q", F.lit(0).cast("long"),
                     lambda a, x: a + x).alias("qsum"),
-        pround(F.array_max(err), 9).alias("qmax_err"))
+        portable_round(F.array_max(err), 9).alias("qmax_err"))
 
 
 # --- model operators (M1/M2 — rows-only: iterative numeric fits are not
@@ -1298,7 +1290,7 @@ def q_model_gwr_score(spark, sf):
                   sm.alias("sm"), preci.alias("preci"),
                   (F.lit(0.3) * sm + F.lit(0.1) * preci).alias("ndvi"))
     scored = gwr_fit_score(df, bandwidth=60)
-    return scored.select("c_custkey", pround(F.col("pred"), 4).alias("pred"))
+    return scored.select("c_custkey", portable_round(F.col("pred"), 4).alias("pred"))
 
 
 # --- multimodal --------------------------------------------------------------
@@ -1338,7 +1330,7 @@ def q_text_gopher(spark, sf):
     return (d.select("doc_id", g.alias("g"))
             .select("doc_id",
                     F.col("g.n_words").alias("n_words"),
-                    pround(F.col("g.mean_word_len"), 4)
+                    portable_round(F.col("g.mean_word_len"), 4)
                     .alias("mean_word_len"),
                     F.col("g.stop_hits").alias("stop_hits"),
                     F.col("g.words_ok").alias("words_ok"),
@@ -1387,7 +1379,7 @@ def q_ann_pairwise_label_sim(spark, sf):
     vb = F.transform(F.col("vb"), lambda x: x.cast("double"))
     return (a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b",
-                    pround(cosine(va, vb), 6).alias("cosine_sim"))
+                    portable_round(cosine(va, vb), 6).alias("cosine_sim"))
             .where(F.col("cosine_sim") > 0.2))
 
 
@@ -1454,7 +1446,7 @@ def q_ann_embedding_norms(spark, sf):
                               F.lit(0.0), lambda a, x: a + x))
     return emb.select("vec_id", "label",
                       F.size("embedding").alias("dim"),
-                      pround(norm, 4).alias("l2_norm"))
+                      portable_round(norm, 4).alias("l2_norm"))
 
 
 @query()
@@ -1701,7 +1693,7 @@ def q_text_rarity(spark, sf):
             .agg(F.count(F.lit(1)).cast("long").alias("n_tokens"),
                  F.sum(F.col("_idf").cast("decimal(38,0)")).alias("_s"))
             .select("doc_id", "n_tokens",
-                    pround(F.col("_s").cast("double")
+                    portable_round(F.col("_s").cast("double")
                            / (F.col("n_tokens") * F.lit(1_000_000.0)), 6)
                     .alias("rarity")))
 
@@ -1736,7 +1728,7 @@ def q_sample_weighted_k(spark, sf):
     out = weighted_sample_k(docs, 100, "n_chars", "doc_id")
     return out.select(
         "doc_id", "n_chars",
-        pround(F.col("_ekey") * F.lit(1000.0), 6).alias("ekey_milli"))
+        portable_round(F.col("_ekey") * F.lit(1000.0), 6).alias("ekey_milli"))
 
 
 REBALANCE_TARGETS = {"en": 0.4, "de": 0.15, "fr": 0.15, "es": 0.15,
@@ -1797,7 +1789,7 @@ def q_text_bm25_topk(spark, sf):
                     list(BM25_QUERY_TERMS), k=20)
     return out.select(
         "doc_id", "score12",
-        pround(F.col("score12").cast("double") / F.lit(1e12), 6)
+        portable_round(F.col("score12").cast("double") / F.lit(1e12), 6)
         .alias("bm25"))
 
 
@@ -1818,7 +1810,7 @@ def q_sketch_hll_distinct(spark, sf):
         F.countDistinct("fp").alias("n_exact"))
     return (out.join(exact, "lang")
             .select("lang", "n_exact", "n_zero_regs", "hll_sum48",
-                    pround(F.col("hll_est"), 4).alias("hll_est")))
+                    portable_round(F.col("hll_est"), 4).alias("hll_est")))
 
 
 def _hll_sql(p: int = 8) -> str:
@@ -1883,7 +1875,7 @@ def q_text_bm25_join(spark, sf):
     out = bm25_join(queries, corpus, k=5)
     return out.select(
         "query_id", "doc_id", "rank", "score12",
-        pround(F.col("score12").cast("double") / F.lit(1e12), 6)
+        portable_round(F.col("score12").cast("double") / F.lit(1e12), 6)
         .alias("bm25"))
 
 
@@ -1999,11 +1991,11 @@ def q_sketch_kmv_jaccard(spark, sf):
                             F.col("n").alias("n_b")), "lang_b")
             .select("lang_a", "lang_b", "n_a", "n_b",
                     ni.alias("n_inter"),
-                    pround(ni.cast("double")
+                    portable_round(ni.cast("double")
                            / (F.col("n_a") + F.col("n_b") - ni)
                            .cast("double"), 6).alias("jaccard_exact"),
                     "m_size", "n_shared",
-                    pround(F.col("kmv_jaccard"), 6)
+                    portable_round(F.col("kmv_jaccard"), 6)
                     .alias("kmv_jaccard")))
 
 
@@ -2216,7 +2208,7 @@ def q_mm_decode_ppm(spark, sf):
                        fake=False)
     return out.select(
         "media_id", "decoded_width", "decoded_height",
-        pround(F.col("mean_intensity"), 9).alias("mean_intensity"))
+        portable_round(F.col("mean_intensity"), 9).alias("mean_intensity"))
 
 
 @query(headline=True)
@@ -2237,7 +2229,7 @@ def q_mm_decode_png(spark, sf):
                        fake=False)
     return out.select(
         "media_id", "decoded_width", "decoded_height",
-        pround(F.col("mean_intensity"), 9).alias("mean_intensity"))
+        portable_round(F.col("mean_intensity"), 9).alias("mean_intensity"))
 
 
 @query(headline=True)
@@ -2261,7 +2253,7 @@ def q_mm_decode_jpeg(spark, sf):
                        fake=False)
     return out.select(
         "media_id", "decoded_width", "decoded_height",
-        pround(F.col("mean_intensity"), 9).alias("mean_intensity"))
+        portable_round(F.col("mean_intensity"), 9).alias("mean_intensity"))
 
 
 @query(headline=True)
@@ -2281,7 +2273,7 @@ def q_mm_decode_wav(spark, sf):
     out = decode_audio(synth_wav_media(_t(spark, sf, "documents")))
     return out.select(
         "media_id", "sample_rate", "n_channels", "bits_per_sample",
-        "n_frames", pround(F.col("mean_amp"), 9).alias("mean_amp"))
+        "n_frames", portable_round(F.col("mean_amp"), 9).alias("mean_amp"))
 
 
 @query()
@@ -2348,7 +2340,7 @@ def q_mm_audio_energy(spark, sf):
         audio_energy, synth_wav_media)
     out = audio_energy(synth_wav_media(_t(spark, sf, "documents")))
     return out.select("media_id", "win_idx", "n_samples", "ssq",
-                      pround(F.col("rms"), 9).alias("rms"),
+                      portable_round(F.col("rms"), 9).alias("rms"),
                       "is_silence")
 
 
@@ -2688,7 +2680,7 @@ def q_sketch_hll_sliding(spark, sf):
     out = hll_sliding_distinct(ev, "user_id", F.col("ts"),
                                window_days=7, p=8)
     return out.select("window_end", "n_zero_regs", "hll_sum48",
-                      pround(F.col("hll_est"), 4).alias("hll_est"))
+                      portable_round(F.col("hll_est"), 4).alias("hll_est"))
 
 
 @query(headline=True)
@@ -2726,7 +2718,7 @@ def q_join_outer_full(spark, sf):
     cust = (_t(spark, sf, "customer")
             .where(F.col("c_mktsegment") == "BUILDING")
             .select("c_custkey",
-                    pround(F.col("c_acctbal"), 2).alias("acctbal")))
+                    portable_round(F.col("c_acctbal"), 2).alias("acctbal")))
     oc = (_t(spark, sf, "orders")
           .groupBy(F.col("o_custkey").alias("c_custkey"))
           .agg(F.count(F.lit(1)).alias("n_orders")))
@@ -2777,8 +2769,8 @@ def q_window_ntile_rank(spark, sf):
     return li.select(
         "l_returnflag", "l_orderkey", "l_linenumber",
         F.ntile(4).over(w).alias("quartile"),
-        pround(F.percent_rank().over(w), 9).alias("pct_rank"),
-        pround(F.cume_dist().over(w), 9).alias("cume"))
+        portable_round(F.percent_rank().over(w), 9).alias("pct_rank"),
+        portable_round(F.cume_dist().over(w), 9).alias("cume"))
 
 
 @query()
@@ -2840,7 +2832,7 @@ def q_scalar_clip_outliers(spark, sf):
                     lo_ppm=10000, hi_ppm=990000, bin_width=100)
     return out.select(
         "l_orderkey", "l_linenumber", "l_returnflag",
-        pround(F.col("l_extendedprice_clipped"), 2)
+        portable_round(F.col("l_extendedprice_clipped"), 2)
         .alias("price_clipped"))
 
 
@@ -2890,7 +2882,7 @@ def q_ann_dim_standardize(spark, sf):
     from lswms_forage_etl_spark.operators.similarity import (
         standardize_dims)
     out = standardize_dims(_t(spark, sf, "embeddings"))
-    return out.select("vec_id", "dim", pround(F.col("z"), 6).alias("z"))
+    return out.select("vec_id", "dim", portable_round(F.col("z"), 6).alias("z"))
 
 
 @query()
@@ -3025,7 +3017,7 @@ def q_text_tokens_bpe(spark, sf):
                      c(F.col("text")).alias("n_bpe"))
             .where(F.col("n_words") > 0)
             .select("doc_id", "n_words", "n_bpe",
-                    pround(F.col("n_bpe") / F.col("n_words"), 4)
+                    portable_round(F.col("n_bpe") / F.col("n_words"), 4)
                     .alias("bpe_ratio")))
 
 
@@ -3425,7 +3417,7 @@ def q_mm_decode_gif(spark, sf):
                        fake=False)
     return out.select(
         "media_id", "decoded_width", "decoded_height",
-        pround(F.col("mean_intensity"), 9).alias("mean_intensity"))
+        portable_round(F.col("mean_intensity"), 9).alias("mean_intensity"))
 
 
 @query(headline=True)
@@ -3447,7 +3439,7 @@ def q_mm_decode_webp(spark, sf):
                        fake=False)
     return out.select(
         "media_id", "decoded_width", "decoded_height",
-        pround(F.col("mean_intensity"), 9).alias("mean_intensity"))
+        portable_round(F.col("mean_intensity"), 9).alias("mean_intensity"))
 
 
 @query(headline=True)
@@ -3574,7 +3566,7 @@ def q_mm_gif_frames(spark, sf):
     return out.select(
         "media_id", "frame_idx", "delay_cs", "decoded_width",
         "decoded_height",
-        pround(F.col("mean_intensity"), 9).alias("mean_intensity"))
+        portable_round(F.col("mean_intensity"), 9).alias("mean_intensity"))
 
 
 @query(headline=True)
@@ -3628,7 +3620,7 @@ def q_mm_webp_frames(spark, sf):
     return out.select(
         "media_id", "frame_idx", "duration_ms", "decoded_width",
         "decoded_height",
-        pround(F.col("mean_intensity"), 9).alias("mean_intensity"))
+        portable_round(F.col("mean_intensity"), 9).alias("mean_intensity"))
 
 
 @query(headline=True)
@@ -3661,7 +3653,7 @@ def q_text_web_pipeline(spark, sf):
     return (txt.select("doc_id", "txt", g.alias("g"))
             .select("doc_id",
                     F.col("g.n_words").alias("n_words"),
-                    pround(F.col("g.mean_word_len"), 4)
+                    portable_round(F.col("g.mean_word_len"), 4)
                     .alias("mean_word_len"),
                     F.col("g.stop_hits").alias("stop_hits"),
                     F.col("g.words_ok").alias("words_ok"),
@@ -5664,7 +5656,7 @@ def oracle_sql() -> dict[str, str]:
 
     # trained-PQ replay: 2 unrolled per-subspace Lloyd iterations. Same
     # portable conventions as kmeans_assign (scaled-int distances,
-    # exact integer sums, pround means); empty (code, j) cells keep the
+    # exact integer sums, portable_round means); empty (code, j) cells keep the
     # previous codeword value via the grid LEFT JOIN.
     def _pq_iter(i: int, prev: str) -> str:
         return f"""
@@ -6040,7 +6032,7 @@ def oracle_sql() -> dict[str, str]:
     # oracle replays the decoded raster straight from the source text
     # bytes (hex-decode, even-ing). The mean divides the SAME two
     # integers the Arrow stage divides (64*sum / 128*nb) so the IEEE
-    # quotients are bit-identical before pround.
+    # quotients are bit-identical before portable_round.
     sql["mm_decode_jpeg"] = f"""
         WITH m AS (SELECT doc_id AS media_id,
                           CAST(doc_id % 8 + 4 AS INT) AS nb,

@@ -17,8 +17,7 @@ Five families, all shuffle-conscious:
                   operators/similarity.py.
 
 Hash choice: md5 (deterministic, engine-portable — the DuckDB oracle
-computes the identical value) for correctness-checked paths; xxhash64 is the
-faster JVM-native alternative for production and is exposed via `fast=`.
+computes the identical value).
 """
 
 from __future__ import annotations
@@ -30,7 +29,7 @@ from pyspark.sql import types as T
 from lswms_forage_etl_spark.functions.cleansing import portable_round
 from lswms_forage_etl_spark.functions.text import fingerprint
 from lswms_forage_etl_spark.lifecycle import (
-    await_staged, free, local_df, stage_lazy, stage_table, track)
+    free, local_df, stage_lazy, stage_table, track)
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text",
@@ -211,8 +210,7 @@ def band_hash_arr(bands: int, sig_col: str = "minhash"):
 
 def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
                         bands: int = 4,
-                        num_hashes: int | None = None,
-                        max_bucket_size: int | None = None) -> DataFrame:
+                        num_hashes: int | None = None) -> DataFrame:
     """Band DISTINCT signatures, bucket-join on (band_id, band_hash),
     then expand signature pairs back to candidate doc pairs (a < b) via
     output-bound membership joins. The banded self-join only ever sees
@@ -238,15 +236,6 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
     final distinct; dedupe the input instead of paying a full-output
     shuffle).
 
-    `max_bucket_size` salts oversized buckets of DISTINCT signatures
-    into deterministic chunks (the shared-core cap the embedding path
-    uses): hot buckets formed by many DIFFERENT signatures colliding on
-    one band value — e.g. template pages differing only in a footer —
-    are bounded at the documented recall cost (cross-chunk pairs of
-    different signatures rely on the other bands; identical-signature
-    pairs are NEVER lost, they bypass banding via the membership
-    expansion).
-
     The signature width must be a positive multiple of `bands`: a zero
     rows-per-band slice would hash every document into the same bucket
     and silently degenerate to the O(n^2) cross join this operator
@@ -267,58 +256,39 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
                 F.lit(f"signature width not a positive multiple of "
                       f"bands={bands}: "), n.cast("string"))))
     base, banded, pair_fps = _lsh_banding(signatures, id_col, bands,
-                                          band_arr, max_bucket_size)
+                                          band_arr)
     return _expand_sig_pairs(base, banded, pair_fps, id_col)
 
 
-def _banded_sig_pairs(base: DataFrame, bands: int,
-                      max_bucket_size: int | None = None):
+def _banded_sig_pairs(base: DataFrame, bands: int):
     """Distinct-signature banding core, shared by MinHash
     (lsh_candidate_pairs) and hyperplane LSH (embedding_near_dups).
     `base` carries (_sfp: uniform fingerprint of the full signature,
     _bhs: per-band bucket array). Returns (banded, pair_fps):
 
-    banded    persisted (_sfp[, _bhs], band_id, band_hash[, chunk]) —
-              exactly ONE row per (distinct signature, band); lazy
-              persist is safe (its estimate derives from the
-              materialized base) and avoids re-running the distinct
-              per self-join side.
+    banded    persisted (_sfp, _bhs, band_id, band_hash) — exactly ONE
+              row per (distinct signature, band); lazy persist is safe
+              (its estimate derives from the materialized base) and
+              avoids re-running the distinct per self-join side.
     pair_fps  distinct signature pairs (_fa < _fb) sharing a bucket.
 
-    Uncapped: multi-band duplicate emissions are dropped by the
-    first-matching-band codegen predicate over the carried _bhs arrays
-    (no distinct shuffle). With `max_bucket_size`, oversized buckets of
-    DISTINCT signatures salt into deterministic chunks; chunk
-    boundaries differ per band so the first-match proof doesn't hold
-    and a distinct over the (small) signature-pair list dedupes
-    instead — and _bhs is not carried at all (nothing reads it)."""
-    keep = ["_sfp", "_bhs"] if max_bucket_size is None else ["_sfp"]
-    banded = (base.select("_sfp", "_bhs").distinct()
-              .select(*keep,
-                      F.posexplode("_bhs").alias("band_id", "band_hash")))
-    if max_bucket_size is not None:
-        from pyspark.sql import Window
-        w = Window.partitionBy("band_id", "band_hash").orderBy("_sfp")
-        banded = banded.withColumn(
-            "chunk", F.floor((F.row_number().over(w) - 1)
-                             / F.lit(int(max_bucket_size))))
-    else:
-        banded = banded.withColumn("chunk", F.lit(0))
-    banded = track(banded.persist())
+    Multi-band duplicate emissions are dropped by the first-matching-
+    band codegen predicate over the carried _bhs arrays (no distinct
+    shuffle)."""
+    banded = track(base.select("_sfp", "_bhs").distinct()
+                   .select("_sfp", "_bhs",
+                           F.posexplode("_bhs").alias("band_id", "band_hash"))
+                   .persist())
     a, b = banded.alias("a"), banded.alias("b")
     fa, fb = F.col("a._sfp"), F.col("b._sfp")
-    joined = a.join(b, ["band_id", "band_hash", "chunk"]).where(fa < fb)
-    if max_bucket_size is None:
-        first_match = F.lit(None).cast("int")
-        for i in reversed(range(bands)):
-            first_match = F.when(
-                F.col("a._bhs")[i] == F.col("b._bhs")[i], F.lit(i)
-            ).otherwise(first_match)
-        pair_fps = (joined.where(F.col("band_id") == first_match)
-                    .select(fa.alias("_fa"), fb.alias("_fb")))
-    else:
-        pair_fps = (joined.select(fa.alias("_fa"), fb.alias("_fb"))
-                    .distinct())
+    first_match = F.lit(None).cast("int")
+    for i in reversed(range(bands)):
+        first_match = F.when(
+            F.col("a._bhs")[i] == F.col("b._bhs")[i], F.lit(i)
+        ).otherwise(first_match)
+    pair_fps = (a.join(b, ["band_id", "band_hash"])
+                .where((fa < fb) & (F.col("band_id") == first_match))
+                .select(fa.alias("_fa"), fb.alias("_fb")))
     return banded, pair_fps
 
 
@@ -326,10 +296,8 @@ def _expand_sig_pairs(base: DataFrame, banded: DataFrame,
                       pair_fps: DataFrame, id_col: str) -> DataFrame:
     """ONE membership expansion for both pair kinds: identical-signature
     pairs ride along as (sfp, sfp) rows sourced from the banded table's
-    band-0 slice — band 0 holds exactly one row per distinct signature
-    REGARDLESS of its chunk (a chunk filter here silently dropped every
-    clone pair whose band-0 row salted past chunk 0 — round-6 review
-    catch), so no extra shuffle is needed. Cross pairs keep every
+    band-0 slice — band 0 holds exactly one row per distinct signature,
+    so no extra shuffle is needed. Cross pairs keep every
     member combination (least/greatest restores id order); identical-
     signature pairs keep one orientation via ida < idb. The output is
     duplicate-free by construction and re-spread on its unique pair key
@@ -353,7 +321,7 @@ def _expand_sig_pairs(base: DataFrame, banded: DataFrame,
 
 
 def _lsh_banding(signatures: DataFrame, id_col: str, bands: int,
-                 band_arr, max_bucket_size: int | None = None):
+                 band_arr):
     """MinHash front-end for the shared banding core: builds the
     membership base (id, _sfp, _bhs) from a `minhash` column — _sfp is
     the md5 of the full signature (the uniform join key; joining on the
@@ -367,7 +335,7 @@ def _lsh_banding(signatures: DataFrame, id_col: str, bands: int,
     base = stage_table(signatures.select(
         F.col(id_col), sig_fp.alias("_sfp"), band_arr.alias("_bhs")),
         checkpoint=True)
-    banded, pair_fps = _banded_sig_pairs(base, bands, max_bucket_size)
+    banded, pair_fps = _banded_sig_pairs(base, bands)
     return base, banded, pair_fps
 
 
@@ -427,28 +395,10 @@ def ngram_containment(docs: DataFrame, pairs: DataFrame,
         .alias("containment_a_in_b"))
 
 
-class PrefixFanExceeded(ValueError):
-    """prefix_filter_pairs' candidate-fan estimate exceeded the caller's
-    budget: the corpus vocabulary is too low-diversity for prefix
-    filtering (candidate fan = sum over prefix shingles of (df choose
-    2) — quadratic when even rare shingles have df ~ O(n)). Carries the
-    measured estimate so callers can report it or route to the
-    MinHash-LSH generator (`plans/corpus.py` near_dup="auto")."""
-
-    def __init__(self, estimate: int, budget: int):
-        self.estimate = estimate
-        self.budget = budget
-        super().__init__(
-            f"prefix-filter candidate fan estimate {estimate} exceeds "
-            f"budget {budget}: vocabulary too low-diversity for exact "
-            f"PPJoin — use the MinHash-LSH generator instead")
-
-
 def prefix_filter_pairs(docs: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", k: int = 3,
                         threshold: tuple[int, int] = (1, 2),
-                        shingles: DataFrame | None = None,
-                        fan_budget: int | None = None) -> DataFrame:
+                        shingles: DataFrame | None = None) -> DataFrame:
     """EXACT all-pairs Jaccard >= num/den via prefix + positional
     filtering — the SSJoin/PPJoin candidate-generation pattern
     (Chaudhuri et al. 2006, Xiao et al. 2008), the recall-lossless
@@ -485,16 +435,7 @@ def prefix_filter_pairs(docs: DataFrame, text_col: str = "text",
     real corpora the prefix df stays O(1) and the join is linear;
     where the vocab is corpus-invariant, use the MinHash-LSH family
     instead — this operator's value is EXACTNESS, and it says so
-    rather than silently degrading. Returns (id_a, id_b, jaccard).
-
-    ``fan_budget`` makes that limit a GUARD instead of a docstring
-    (VERDICT r12 missing #3): one bounded aggregate over the staged
-    prefix table computes the exact candidate-pair upper bound
-    sum_s (prefix_df(s) choose 2) BEFORE the self-join; past the
-    budget the staged tables are released and ``PrefixFanExceeded``
-    carries the estimate (plans/corpus.py near_dup="auto" catches it
-    and routes to LSH). Cost: one extra count-style job over an
-    already-persisted table — nothing corpus-sized recomputes."""
+    rather than silently degrading. Returns (id_a, id_b, jaccard)."""
     from pyspark.sql import Window
 
     num, den = threshold
@@ -564,20 +505,6 @@ def prefix_filter_pairs(docs: DataFrame, text_col: str = "text",
     prefix = stage_table(
         ranked.where(F.col("pos") <= p)
         .select("rep", "s64", "n", "pos"))
-
-    if fan_budget is not None:
-        # the estimate collect would otherwise race prefix's async
-        # count thread and evaluate the chain twice
-        await_staged(prefix)
-        est_row = (prefix.groupBy("s64")
-                   .agg(F.count(F.lit(1)).alias("c"))
-                   .agg(F.sum(F.expr("c * (c - 1) div 2"))
-                        .alias("est")).collect()[0])
-        est = int(est_row["est"] or 0)
-        if est > fan_budget:
-            for t in (marked, dfreq, prefix):
-                free(t)
-            raise PrefixFanExceeded(est, fan_budget)
 
     a = prefix.toDF("rep_a", "s64", "n_a", "pos_a")
     b = prefix.toDF("rep_b", "s64", "n_b", "pos_b")
@@ -830,35 +757,24 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
 
 
 def simhash(docs: DataFrame, text_col: str = "text",
-            id_col: str = "doc_id", bits: int = 64,
-            fast: bool = False) -> DataFrame:
+            id_col: str = "doc_id", bits: int = 64) -> DataFrame:
     """64-bit SimHash from word tokens: per-token 64-bit hash, +/-1 vote
     per bit, sign of the vote sum -> signature bit (Charikar).
 
     Each token is hashed exactly ONCE and all `bits` votes are extracted
     from that single hash in one `aggregate` fold (VERDICT r1: the first
-    cut re-hashed every token per bit — 64 md5/xxhash evals per token).
+    cut re-hashed every token per bit — 64 md5 evals per token).
 
-    Default hash is md5-derived (first 16 hex chars as a big-endian 64-bit
+    The hash is md5-derived (first 16 hex chars as a big-endian 64-bit
     value) — engine-portable, so the DuckDB oracle reproduces the exact
-    signatures. `fast=True` swaps in JVM xxhash64 for production (same
-    plan shape, Spark-only values)."""
+    signatures."""
     toks = F.array_distinct(F.filter(
         F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda t: t != ""))
 
-    if fast:
-        # xxhash64(NULL) returns the seed (42), not NULL — an unguarded
-        # fast path would give empty/whitespace-only docs signature 42
-        # while the md5 path gives 0 (ADVICE r3). NULL-guard so both
-        # paths agree: NULL votes -> all-zero signature.
-        h64 = F.when(F.col("_tok").isNull(),
-                     F.lit(None).cast("long")).otherwise(
-            F.xxhash64(F.col("_tok")))
-    else:
-        h16 = F.substring(F.md5(F.col("_tok")), 1, 16)
-        hi = F.conv(F.substring(h16, 1, 8), 16, 10).cast("long")
-        lo = F.conv(F.substring(h16, 9, 8), 16, 10).cast("long")
-        h64 = F.shiftleft(hi, 32).bitwiseOR(lo)
+    h16 = F.substring(F.md5(F.col("_tok")), 1, 16)
+    hi = F.conv(F.substring(h16, 1, 8), 16, 10).cast("long")
+    lo = F.conv(F.substring(h16, 9, 8), 16, 10).cast("long")
+    h64 = F.shiftleft(hi, 32).bitwiseOR(lo)
 
     # Explode tokens -> one hash row per token -> packed-lane SUM buffers.
     # A previous cut folded 64 votes per token inside F.aggregate/zip_with;

@@ -42,8 +42,7 @@ def merge_point_tables(dfs: list[DataFrame],
 
 
 def sample_raster_at_points(points: DataFrame, raster_cells: DataFrame,
-                            value_cols: list[str] | None = None,
-                            broadcast_points: bool = True) -> DataFrame:
+                            value_cols: list[str] | None = None) -> DataFrame:
     """J2/J3 — snap points to the grid and equi-join against the long-format
     raster table on (row, col[, date]).
 
@@ -53,10 +52,10 @@ def sample_raster_at_points(points: DataFrame, raster_cells: DataFrame,
     the raster side — the 100 TB side at scale — is never shuffled.
     """
     snapped = snap_cell(points)
-    build = F.broadcast(snapped) if broadcast_points else snapped
     value_cols = value_cols or [
         c for c in raster_cells.columns if c not in ("date", "row", "col")]
-    return raster_cells.join(build, ["row", "col"], "inner").select(
+    return raster_cells.join(F.broadcast(snapped), ["row", "col"],
+                             "inner").select(
         *[c for c in snapped.columns if c not in ("row", "col")],
         "date", *value_cols,
     )

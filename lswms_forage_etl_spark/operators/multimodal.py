@@ -603,7 +603,7 @@ def byte_histogram(media: DataFrame, bins: int = 16,
                     continue
                 arr = np.frombuffer(bytes(buf), dtype=np.uint8)
                 h, _ = np.histogram(arr, bins=edges)
-                # portable 9-dp rounding (repo convention, = pround /
+                # portable 9-dp rounding (repo convention, = portable_round /
                 # DuckDB floor(x*1e9+0.5)/1e9) — np.round would banker's-
                 # round half boundaries and diverge from the oracle
                 feats.append((np.floor(h / len(arr) * 1e9 + 0.5) / 1e9)

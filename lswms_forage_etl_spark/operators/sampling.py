@@ -154,8 +154,8 @@ def weighted_sample_k(df: DataFrame, k: int, weight_col,
     needs ln(), whose last ulp is libm-dependent across engines — the
     pairwise order -ln(u1)/w1 < -ln(u2)/w2 is transcendental, so no
     integer-exact surrogate exists (unlike BM25's log-free idf). The
-    risk is only realized if two keys straddle the k-cut (or a pround
-    boundary) within ~1 ulp; measured on the graded sf0.01 data the
+    risk is only realized if two keys straddle the k-cut (or a 6-dp
+    rounding boundary) within ~1 ulp; measured on the graded sf0.01 data the
     k=100 cut gap is 6.6e-6 ≈ 6e13 ulps and the worst 6-dp rounding
     margin is ~1e10 ulps (tests/test_retrieval_sampling.py::
     test_weighted_sample_boundary_margins keeps this audited)."""

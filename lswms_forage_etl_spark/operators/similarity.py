@@ -340,8 +340,7 @@ def band_buckets(embeddings: DataFrame, id_col: str = "vec_id",
 def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.95,
                         id_col: str = "vec_id", vec_col: str = "embedding",
                         num_planes: int = 8, dim: int = 64,
-                        seed: int = 1234, num_bands: int = 4,
-                        max_bucket_size: int | None = None) -> DataFrame:
+                        seed: int = 1234, num_bands: int = 4) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via banded multi-table
     hyperplane LSH: a pair is a candidate if it shares a bucket in ANY of
     `num_bands` independent hyperplane tables; exact cosine verifies
@@ -352,19 +351,11 @@ def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.95,
     one implementation, round-6 review consolidation): m identical
     vectors carry ONE row through every band table, so exact-duplicate
     skew never reaches the self-join, and doc pairs are recovered by
-    output-bound membership joins. This also CLOSES a recall hole the
-    doc-level cap had: identical vectors bucketed AND chunked
-    identically in every band (row_number over id is deterministic), so
-    cross-chunk clone pairs were lost; as one signature row they never
-    chunk at all.
+    output-bound membership joins.
 
     Scale design (VERDICT r1): no single fixed 2^planes bucketing — band
     count buys recall, plane count caps bucket size (choose num_planes ~
-    log2(n / target_bucket)). `max_bucket_size` additionally salts any
-    oversized bucket of distinct signatures into deterministic chunks;
-    pairs of DIFFERENT signatures split across chunks are the documented
-    recall cost of the cap (caught by other bands, which cut
-    differently).
+    log2(n / target_bucket)).
     """
     from lswms_forage_etl_spark.operators.dedup import (
         _banded_sig_pairs, _expand_sig_pairs, _spread)
@@ -378,7 +369,7 @@ def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.95,
         .select(F.col(id_col), sigs_udf(F.col(vec_col)).alias("_bhs"))
         .select(F.col(id_col), F.col("_bhs"), sig_fp.alias("_sfp")),
         checkpoint=True)
-    banded, pair_fps = _banded_sig_pairs(base, num_bands, max_bucket_size)
+    banded, pair_fps = _banded_sig_pairs(base, num_bands)
     cand = _expand_sig_pairs(base, banded, pair_fps, id_col)
 
     vecs = embeddings.select(F.col(id_col), F.col(vec_col))
@@ -567,7 +558,7 @@ def _ivf_assign(embeddings: DataFrame,
             nrm += v[:, i] * v[:, i]
         with np.errstate(divide="ignore", invalid="ignore"):
             sims = dots / (np.sqrt(nrm)[:, None] * cent_norms[None, :])
-        sims = np.floor(sims * 1e9 + 0.5) / 1e9               # pround(.., 9)
+        sims = np.floor(sims * 1e9 + 0.5) / 1e9               # portable_round(.., 9)
         return pd.Series(np.argmax(sims, axis=1).astype("int32"))
 
     return embeddings.withColumn("cent_id", assign(F.col(vec_col)))

@@ -4,9 +4,6 @@ Composes the engine's training-data operators through the same E1
 orchestrator (empty-guard cascade, failure hooks, lazy stage hand-offs):
 
     clean      C4-style gate: quality score + language id + length band
-    lm_filter  (optional) CCNet-style LM gate: per-language bigram-LM
-               perplexity tertiles + hashed linear classifier
-               (operators/lm.py), both exact-integer semi-join gates
     dedup      exact fingerprint keep-min -> MinHash-LSH near-dup pairs
                -> connected components -> drop non-representatives
     decontam   remove train docs whose shingles contain an eval doc
@@ -33,40 +30,21 @@ from lswms_forage_etl_spark.operators.dedup import (
     ngram_jaccard,
     shingle_table,
 )
-from lswms_forage_etl_spark.operators.sampling import corpus_mix, group_cap
+from lswms_forage_etl_spark.operators.sampling import group_cap
 from lswms_forage_etl_spark.plans.pipeline import Pipeline, Stage
 
 
 def corpus_pipeline(quality_min: float = 0.8,
                     jaccard_min: float = 0.7,
                     containment_min: float = 0.8,
-                    per_source_cap: int = 10_000,
-                    mix_weights: dict[str, float] | None = None,
-                    lm_train_sources: list[str] | None = None,
-                    near_dup: str = "lsh",
-                    ppjoin_fan_budget: int = 5_000_000) -> Pipeline:
+                    per_source_cap: int = 10_000) -> Pipeline:
     """Expected ctx inputs: docs (doc_id, text, source), eval_docs
     (doc_id, text). Outputs: clean, clusters, deduped, decontaminated,
-    corpus (+ mixed, when `mix_weights` reweights sources — rows gain
-    copy_idx so downstream packing can salt per-copy order).
+    corpus.
 
-    With `lm_train_sources` set, an LM-filter stage (the CCNet recipe,
-    operators/lm.py) runs between clean and dedup: a per-language
-    bigram LM trained on that reference slice drops the worst
-    perplexity tertile, and the hashed linear classifier drops
-    score <= 0 docs — both exact-integer, both pure semi-join gates on
-    doc_id, so the stage adds no wide rows to the hand-off.
-
-    `near_dup` picks the pair generator: "lsh" (MinHash banding —
-    approximate, recall governed by the band S-curve, robust to
-    low-diversity vocabularies), "ppjoin" (prefix+positional
-    filtering — EXACT, recall-lossless; prefer on Zipf-ish corpora,
-    see operators/dedup.prefix_filter_pairs for the measured
-    crossover), or "auto" — try ppjoin with its candidate-fan guard
-    (`ppjoin_fan_budget` pairs); if the one-aggregate estimate over
-    the staged prefix table trips PrefixFanExceeded, fall back to LSH
-    and record the measured estimate in ctx["near_dup_route"]. All run
-    AFTER the exact-fingerprint collapse, so the generator sees unique
+    Near-dup pairs come from MinHash banding (approximate, recall
+    governed by the band S-curve, robust to low-diversity vocabularies),
+    run AFTER the exact-fingerprint collapse, so banding sees unique
     texts only."""
 
     def st_clean(spark, ctx):
@@ -74,24 +52,6 @@ def corpus_pipeline(quality_min: float = 0.8,
             (T.quality_score("text") >= quality_min)
             & (T.lang_id("text") != "und"))
         return {"clean": track(d.persist())}
-
-    def st_lm_filter(spark, ctx):
-        from lswms_forage_etl_spark.operators.lm import (
-            bigram_lm_surprisal, hashed_linear_quality)
-        d = ctx["clean"].withColumn("_lang", T.lang_id("text"))
-        keep_ppl = (bigram_lm_surprisal(d, lm_train_sources,
-                                        lang_col="_lang")
-                    .where(F.col("bucket") != "tail")
-                    .select("doc_id"))
-        keep_cls = (hashed_linear_quality(d)
-                    .where(F.col("label") == "keep")
-                    .select("doc_id"))
-        kept = (ctx["clean"]
-                .join(keep_ppl, "doc_id", "left_semi")
-                .join(keep_cls, "doc_id", "left_semi"))
-        # overwrite: "clean" names the current cleaned corpus, so
-        # downstream stages are oblivious to whether the LM gate ran
-        return {"clean": track(kept.persist())}
 
     def st_dedup(spark, ctx):
         d = ctx["clean"]
@@ -117,32 +77,10 @@ def corpus_pipeline(quality_min: float = 0.8,
         reps = d.join(exact.where(F.col("doc_id") == F.col("_rep"))
                       .select("doc_id"), "doc_id")
         sh = stage_table(shingle_table(reps))
-        route = {"generator": near_dup}
-        dups = None
-        if near_dup in ("ppjoin", "auto"):
-            from fractions import Fraction
-
-            from lswms_forage_etl_spark.operators.dedup import (
-                PrefixFanExceeded, prefix_filter_pairs)
-            fr = Fraction(jaccard_min).limit_denominator(1000)
-            try:
-                dups = prefix_filter_pairs(
-                    reps, shingles=sh,
-                    threshold=(fr.numerator, fr.denominator),
-                    fan_budget=(ppjoin_fan_budget
-                                if near_dup == "auto" else None))
-                route["generator"] = "ppjoin"
-            except PrefixFanExceeded as e:
-                # auto mode: fall back to the scale-safe approximate
-                # generator, keeping the measured estimate visible
-                route = {"generator": "lsh",
-                         "ppjoin_fan_estimate": e.estimate,
-                         "ppjoin_fan_budget": e.budget}
-        if dups is None:
-            sigs = minhash_signatures(reps, num_hashes=16, shingles=sh)
-            pairs = lsh_candidate_pairs(sigs, bands=4, num_hashes=16)
-            dups = ngram_jaccard(reps, pairs, shingles=sh).where(
-                F.col("jaccard") >= jaccard_min)
+        sigs = minhash_signatures(reps, num_hashes=16, shingles=sh)
+        pairs = lsh_candidate_pairs(sigs, bands=4, num_hashes=16)
+        dups = ngram_jaccard(reps, pairs, shingles=sh).where(
+            F.col("jaccard") >= jaccard_min)
         clusters = duplicate_clusters(
             dups.select("id_a", "id_b").unionAll(exact_edges))
         # keep representatives: drop every clustered doc that is not its
@@ -150,7 +88,6 @@ def corpus_pipeline(quality_min: float = 0.8,
         losers = clusters.where(F.col("doc_id") != F.col("rep_id")) \
             .select("doc_id")
         return {"shingles": sh, "clusters": clusters,
-                "near_dup_route": route,
                 "deduped": track(d.join(losers, "doc_id", "left_anti").persist())}
 
     def st_decontam(spark, ctx):
@@ -183,18 +120,9 @@ def corpus_pipeline(quality_min: float = 0.8,
         return {"corpus": group_cap(ctx["decontaminated"], ["source"],
                                     per_source_cap, key_col="doc_id")}
 
-    def st_mix(spark, ctx):
-        return {"mixed": corpus_mix(ctx["corpus"], "source",
-                                    mix_weights, key_col="doc_id")}
-
-    stages = [
+    return Pipeline(stages=[
         Stage("clean", st_clean, requires=("docs",)),
-        *([Stage("lm_filter", st_lm_filter, requires=("clean",))]
-          if lm_train_sources is not None else []),
         Stage("dedup", st_dedup, requires=("clean",)),
         Stage("decontam", st_decontam, requires=("deduped", "eval_docs")),
         Stage("sample", st_sample, requires=("decontaminated",)),
-    ]
-    if mix_weights is not None:
-        stages.append(Stage("mix", st_mix, requires=("corpus",)))
-    return Pipeline(stages=stages)
+    ])

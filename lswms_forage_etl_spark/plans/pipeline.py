@@ -155,7 +155,7 @@ def forage_pipeline(series_start: dt.date, current_date: dt.date,
             "biom", biomass_calibration("pred")).persist())}
 
     def st_rasterize(spark, ctx):
-        cells = rasterize_points(ctx["results"], spark, dense=False)
+        cells = rasterize_points(ctx["results"])
         return {"raster_cells": cells, "manifest": manifest(cells)}
 
     def st_zonal(spark, ctx):

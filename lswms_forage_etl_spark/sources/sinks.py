@@ -10,8 +10,10 @@ Scale notes:
     `toLocalIterator` when small, mapPartitions when large) with an
     injectable transport so tests never open sockets.
   * `geotiff_export` groups by date and materializes each date's dense
-    grid in one Arrow batch — the per-date file write the reference does
-    (rasterize.py:79-91), parallel over dates. TIFF encoding is native
+    grid in one Arrow batch — the only place the nodata-filled grid is
+    built (`rasterize_points` stays sparse); the per-date file write the
+    reference does (rasterize.py:79-91), parallel over dates. TIFF
+    encoding is native
     (`geotiff.encode_geotiff_bytes` — the same strip layout rasterio
     writes for the reference, no rasterio needed).
 """
@@ -135,16 +137,15 @@ def rest_post_sink(df: DataFrame, url: str, token: str,
             "failed": sum(bad for _, bad in stats)}
 
 
-def geotiff_export(cells: DataFrame, out_dir: str,
-                   fake: bool = False) -> DataFrame:
+def geotiff_export(cells: DataFrame, out_dir: str) -> DataFrame:
     """S11 — per-date raster file export (rasterize.py:79-91).
 
-    Groups the long-format cell table by date; each group materializes the
-    dense 300x260 float32 grid (nodata-filled) and writes
-    `biomass_YYYYMMDD.tif` — a native uncompressed-strip GeoTIFF in the
-    same layout the reference's rasterio writer produces (rasterize.py:
-    63,90-91), round-trippable through `read_geotiff`. `fake=True` keeps
-    the raw-grid `.bin` + JSON-header artifact shape (legacy/debug).
+    Groups the sparse long-format cell table (`rasterize_points`) by date;
+    each group materializes the dense 300x260 float32 grid (nodata-filled:
+    the reference's fill=0 then `<=0 -> nodata`, rasterize.py:85-86) and
+    writes `biomass_YYYYMMDD.tif` — a native uncompressed-strip GeoTIFF in
+    the same layout the reference's rasterio writer produces (rasterize.py:
+    63,90-91), round-trippable through `read_geotiff`.
 
     Returns the written-file manifest as a DataFrame(filename, n_valid)."""
     from lswms_forage_etl_spark.sources.geotiff import encode_geotiff_bytes
@@ -161,25 +162,13 @@ def geotiff_export(cells: DataFrame, out_dir: str,
         v = pdf["value"].to_numpy(float)
         ok = ~np.isnan(v)
         grid[r[ok], c[ok]] = v[ok]
-        name = f"biomass_{date.strftime('%Y%m%d')}"
-        if fake:
-            grid.tofile(os.path.join(out_dir, name + ".bin"))
-            with open(os.path.join(out_dir, name + ".json"), "w") as fh:
-                json.dump({"transform": [schemas.GRID_ORIGIN_LON,
-                                         schemas.GRID_ORIGIN_LAT,
-                                         schemas.GRID_CELL_DEG],
-                           "crs": "EPSG:4326", "nodata": nodata,
-                           "shape": [nrows, ncols]}, fh)
-            out_name = name + ".bin"
-        else:
-            tif = encode_geotiff_bytes(grid, schemas.GRID_ORIGIN_LON,
-                                       schemas.GRID_ORIGIN_LAT,
-                                       schemas.GRID_CELL_DEG,
-                                       nodata=nodata)
-            with open(os.path.join(out_dir, name + ".tif"), "wb") as fh:
-                fh.write(tif)
-            out_name = name + ".tif"
-        return pd.DataFrame({"filename": [out_name],
+        name = f"biomass_{date.strftime('%Y%m%d')}.tif"
+        tif = encode_geotiff_bytes(grid, schemas.GRID_ORIGIN_LON,
+                                   schemas.GRID_ORIGIN_LAT,
+                                   schemas.GRID_CELL_DEG, nodata=nodata)
+        with open(os.path.join(out_dir, name), "wb") as fh:
+            fh.write(tif)
+        return pd.DataFrame({"filename": [name],
                              "n_valid": [int(ok.sum())]})
 
     return (cells.groupBy("date")

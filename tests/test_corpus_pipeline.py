@@ -52,53 +52,6 @@ def test_corpus_pipeline_end_to_end(spark):
     assert {1, 4, 6} <= corpus_ids
 
 
-def test_corpus_pipeline_mix_stage(spark):
-    pipe = corpus_pipeline(quality_min=0.8, jaccard_min=0.5,
-                           containment_min=0.8, per_source_cap=10,
-                           mix_weights={"web": 2.0})
-    ctx = pipe.run(spark, {"docs": _docs(spark), "eval_docs": _eval(spark)})
-    assert [r.status for r in pipe.results] == ["ok"] * 5
-    mixed = ctx["mixed"].collect()
-    per_doc = {}
-    for r in mixed:
-        per_doc.setdefault(r["doc_id"], set()).add(r["copy_idx"])
-    corpus = {(r["doc_id"], r["source"])
-              for r in ctx["corpus"].collect()}
-    for doc_id, src in corpus:
-        assert per_doc[doc_id] == ({1, 2} if src == "web" else {1})
-
-
-def test_corpus_pipeline_lm_filter_stage(spark):
-    from pyspark.sql import functions as F
-
-    from lswms_forage_etl_spark.functions.text import lang_id
-    from lswms_forage_etl_spark.operators.lm import (
-        bigram_lm_surprisal, hashed_linear_quality)
-    pipe = corpus_pipeline(quality_min=0.8, jaccard_min=0.5,
-                           containment_min=0.8, per_source_cap=10,
-                           lm_train_sources=["srcA"])
-    ctx = pipe.run(spark, {"docs": _docs(spark), "eval_docs": _eval(spark)})
-    names = [r.name for r in pipe.results]
-    assert names == ["clean", "lm_filter", "dedup", "decontam", "sample"]
-    assert [r.status for r in pipe.results] == ["ok"] * 5
-
-    # the stage must equal composing the two operators directly over
-    # the unfiltered clean table (wiring check, exact ids)
-    base = _docs(spark).where(
-        "doc_id != 3")  # the quality gate drops doc 3
-    d = base.withColumn("_lang", lang_id("text"))
-    keep_ppl = {r["doc_id"] for r in
-                bigram_lm_surprisal(d, ["srcA"], lang_col="_lang")
-                .where(F.col("bucket") != "tail")
-                .select("doc_id").collect()}
-    keep_cls = {r["doc_id"] for r in hashed_linear_quality(base)
-                .where(F.col("label") == "keep")
-                .select("doc_id").collect()}
-    got = {r["doc_id"] for r in ctx["clean"].select("doc_id").collect()}
-    assert got == keep_ppl & keep_cls
-    assert got < {1, 2, 4, 5, 6}   # a strict subset: the gate bit
-
-
 def test_corpus_pipeline_empty_guard_cascade(spark):
     pipe = corpus_pipeline()
     empty = _docs(spark).where("doc_id < 0")
@@ -148,73 +101,3 @@ def test_chunk_dedup_stats(spark):
     assert out[2]["dup_chunk_frac"] == 1.0
     assert out[3]["n_chunks"] == 1 and out[3]["dup_chunk_frac"] == 1.0
     assert out[4]["dup_chunk_frac"] == 0.0
-
-
-def test_corpus_pipeline_ppjoin_matches_lsh_path(spark):
-    """near_dup='ppjoin' (exact prefix filtering) must keep the same
-    documents as the LSH path on a fixture where banding recall is
-    complete — the two pair generators are interchangeable stages."""
-    outs = {}
-    for mode in ("lsh", "ppjoin"):
-        pipe = corpus_pipeline(quality_min=0.0, jaccard_min=0.5,
-                               containment_min=0.8, near_dup=mode)
-        ctx = pipe.run(spark, {"docs": _docs(spark),
-                               "eval_docs": _eval(spark)})
-        outs[mode] = sorted(
-            r["doc_id"] for r in ctx["deduped"].collect())
-    assert outs["lsh"] == outs["ppjoin"]
-
-
-def test_corpus_pipeline_auto_routes_on_fan_budget(spark):
-    """near_dup='auto': a tiny fan budget trips the PPJoin guard on a
-    low-diversity fixture (every doc shares the same shingles) and the
-    pipeline falls back to LSH, recording the measured estimate; a
-    generous budget keeps the exact generator. Same deduped output
-    either way on this fixture."""
-    base = {"docs": None, "eval_docs": None}
-    outs = {}
-    for budget in (0, 10_000_000):
-        pipe = corpus_pipeline(quality_min=0.0, jaccard_min=0.5,
-                               containment_min=0.8, near_dup="auto",
-                               ppjoin_fan_budget=budget)
-        ctx = pipe.run(spark, {"docs": _docs(spark),
-                               "eval_docs": _eval(spark)})
-        route = ctx["near_dup_route"]
-        if budget == 0:
-            assert route["generator"] == "lsh"
-            assert route["ppjoin_fan_estimate"] > 0
-            assert route["ppjoin_fan_budget"] == 0
-        else:
-            assert route["generator"] == "ppjoin"
-            assert "ppjoin_fan_estimate" not in route
-        outs[budget] = sorted(
-            r["doc_id"] for r in ctx["deduped"].collect())
-    assert outs[0] == outs[10_000_000]
-
-
-def test_prefix_filter_fan_guard_estimate_exact(spark):
-    """The guard's estimate is the exact candidate-pair upper bound
-    sum_s (prefix_df(s) choose 2): on m clones of one text every
-    prefix shingle appears in ONE distinct set (clone collapse), so
-    the estimate is 0 and the guard never trips; on m DISTINCT texts
-    sharing a rare head shingle the estimate counts the real fan."""
-    import pytest as _pytest
-
-    from lswms_forage_etl_spark.operators.dedup import (
-        PrefixFanExceeded, prefix_filter_pairs)
-    # distinct texts engineered to share shingles: doc i = common
-    # 5-token head + unique tail => overlapping prefixes
-    rows = [(i, "alpha beta gamma delta epsilon tail%d x%d y%d"
-             % (i, i, i), "s") for i in range(6)]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, source string")
-    with _pytest.raises(PrefixFanExceeded) as ei:
-        prefix_filter_pairs(docs, threshold=(1, 2), fan_budget=0)
-    assert ei.value.estimate > 0
-    assert ei.value.budget == 0
-    assert str(ei.value.estimate) in str(ei.value)
-    # generous budget: runs to completion, exactness unchanged
-    out = prefix_filter_pairs(docs, threshold=(1, 2),
-                              fan_budget=10_000_000)
-    assert out.columns == ["id_a", "id_b", "jaccard"]
-    out.collect()

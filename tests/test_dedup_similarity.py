@@ -274,12 +274,33 @@ def test_embedding_near_dups(spark):
     assert (0, 7) in pairs
 
 
+def _banded_embeddings(emb, planes, bands):
+    """The banding core's (base, banded) tables for an embedding frame,
+    built the way embedding_near_dups builds them."""
+    from lswms_forage_etl_spark import lifecycle
+    from lswms_forage_etl_spark.operators.dedup import _banded_sig_pairs
+    from lswms_forage_etl_spark.operators.similarity import \
+        band_signatures_udf
+
+    sigs_udf = band_signatures_udf(planes, 16, 1234, bands)
+    sig_fp = F.md5(F.concat_ws(
+        "|", F.transform(F.col("_bhs"), lambda v: v.cast("string"))))
+    base = lifecycle.stage_table(
+        emb.select(F.col("vec_id"), sigs_udf(F.col("embedding")).alias("_bhs"))
+        .select("vec_id", "_bhs", sig_fp.alias("_sfp")),
+        checkpoint=True)
+    banded, _ = _banded_sig_pairs(base, bands)
+    return base, banded
+
+
 def test_embedding_lsh_bucket_cap_under_skew(spark):
     # VERDICT r1: no join group may grow quadratic in n. Skewed set: 300 of
-    # 360 vectors cluster around one direction (they'd all share a bucket
-    # in every band), so without the cap one group would hold ~300 rows.
+    # 360 vectors cluster around one direction (they share a bucket in
+    # every band), so a per-vector banding would put ~300 rows in one join
+    # group. The banding core joins DISTINCT signatures, so the cluster's
+    # near-identical vectors enter each group once per signature.
+    from lswms_forage_etl_spark import lifecycle
     from lswms_forage_etl_spark.operators.similarity import band_buckets
-    from pyspark.sql import Window
 
     rng = np.random.RandomState(11)
     hub = rng.standard_normal(16)
@@ -292,23 +313,18 @@ def test_embedding_lsh_bucket_cap_under_skew(spark):
     emb = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int")
 
-    cap = 50
     b = band_buckets(emb, dim=16, num_bands=2)
-    w = Window.partitionBy("band", "bucket").orderBy("vec_id")
-    capped = b.withColumn(
-        "chunk", F.floor((F.row_number().over(w) - 1) / F.lit(cap)))
-    max_group = (capped.groupBy("band", "bucket", "chunk").count()
+    max_per_vector = (b.groupBy("band", "bucket").count()
+                      .agg(F.max("count")).collect()[0][0])
+    _, banded = _banded_embeddings(emb.select("vec_id", "embedding"), 8, 2)
+    max_group = (banded.groupBy("band_id", "band_hash").count()
                  .agg(F.max("count")).collect()[0][0])
-    max_uncapped = (b.groupBy("band", "bucket").count()
-                    .agg(F.max("count")).collect()[0][0])
-    assert max_uncapped > cap          # the skew is real
-    assert max_group <= cap            # the salted cap bounds every group
+    lifecycle.release_tracked()
+    assert max_per_vector > 250        # the skew is real
+    assert max_group * 10 < max_per_vector
 
-    # the capped operator still finds planted near-dups: members of the
-    # same chunk verify; banding keeps cross-chunk recall (bands chunk
-    # differently only when bucketings differ — document, don't hide).
-    pairs = embedding_near_dups(emb, threshold=0.999, dim=16,
-                                num_bands=2, max_bucket_size=cap)
+    # the operator still finds the planted near-dups inside the cluster
+    pairs = embedding_near_dups(emb, threshold=0.999, dim=16, num_bands=2)
     got = {(r["id_a"], r["id_b"]) for r in
            pairs.where("id_a < 10 AND id_b < 10").collect()}
     assert len(got) > 0
@@ -494,68 +510,34 @@ def test_simhash_wide_doc_raises_clear_guard(spark):
 
 
 def test_embedding_cap_keeps_identical_vector_recall(spark):
-    """Round-6 distinct-signature banding closes the cap's recall hole:
-    identical vectors used to bucket AND chunk identically in every
-    band (deterministic row_number), losing every cross-chunk pair; as
-    ONE signature row they never chunk, and the membership expansion
-    recovers all C(m,2) pairs.
-
-    The test PINS the hard case (second review catch: the band-0
-    (sfp, sfp) slice must not filter on chunk): it searches seeds until
-    the clone signature's band-0 row salts past chunk 0, asserts that
-    precondition through the banding internals, and then demands full
-    clone recall."""
-    import numpy as np
-
+    """Identical vectors carry ONE signature row through every band
+    table, and the membership expansion recovers all C(m,2) pairs among
+    them: 20 clones next to 30 random vectors, few planes and bands."""
     from lswms_forage_etl_spark import lifecycle
-    from lswms_forage_etl_spark.operators.dedup import _banded_sig_pairs
-    from pyspark.sql import functions as SF
 
-    from lswms_forage_etl_spark.operators.similarity import \
-        band_signatures_udf
-
-    cap, planes, bands = 2, 2, 2
-    sigs_udf = band_signatures_udf(planes, 16, 1234, bands)
-    for seed in range(20):
-        rng = np.random.RandomState(seed)
-        clone = [float(x) for x in rng.standard_normal(16)]
-        rows = [(i, clone) for i in range(20)] + \
-               [(100 + i, [float(x) for x in rng.standard_normal(16)])
-                for i in range(30)]
-        emb = spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>")
-        sig_fp = SF.md5(SF.concat_ws(
-            "|", SF.transform(SF.col("_bhs"), lambda v: v.cast("string"))))
-        base = lifecycle.stage_table(
-            emb.select(SF.col("vec_id"),
-                       sigs_udf(SF.col("embedding")).alias("_bhs"))
-            .select("vec_id", "_bhs", sig_fp.alias("_sfp")),
-            checkpoint=True)
-        banded, _ = _banded_sig_pairs(base, bands, max_bucket_size=cap)
-        clone_fp = base.where("vec_id = 0").first()["_sfp"]
-        chunk0 = banded.where((SF.col("band_id") == 0)
-                              & (SF.col("_sfp") == SF.lit(clone_fp))) \
-            .first()["chunk"]
-        lifecycle.release_tracked()
-        spark.catalog.clearCache()
-        if chunk0 >= 1:
-            break
-    else:
-        raise AssertionError("no seed salted the clone past chunk 0")
+    planes, bands = 2, 2
+    rng = np.random.RandomState(0)
+    clone = [float(x) for x in rng.standard_normal(16)]
+    rows = [(i, clone) for i in range(20)] + \
+           [(100 + i, [float(x) for x in rng.standard_normal(16)])
+            for i in range(30)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    base, banded = _banded_embeddings(emb, planes, bands)
+    clone_fp = base.where("vec_id = 0").first()["_sfp"]
+    assert banded.where(F.col("_sfp") == F.lit(clone_fp)).count() == bands
+    lifecycle.release_tracked()
 
     pairs = embedding_near_dups(emb, threshold=0.999, dim=16,
-                                num_planes=planes, num_bands=bands,
-                                max_bucket_size=cap)
+                                num_planes=planes, num_bands=bands)
     got = {(r["id_a"], r["id_b"]) for r in
            pairs.where("id_a < 100 AND id_b < 100").collect()}
     lifecycle.release_tracked()
-    assert len(got) == 20 * 19 // 2     # all clone pairs, despite the cap
+    assert len(got) == 20 * 19 // 2     # all clone pairs
 
 
 def test_lsh_bucket_cap_bounds_groups_keeps_identical_recall(spark):
-    """The shared-core bucket cap on the MinHash path: join groups are
-    bounded at the cap, and identical-text pairs survive regardless
-    (they bypass banding via the membership expansion)."""
+    """Identical-text pairs on the MinHash path are all found: they
+    bypass banding via the membership expansion."""
     from lswms_forage_etl_spark.operators.dedup import (
         lsh_candidate_pairs, minhash_signatures)
     rows = [(i, "the quick brown fox jumps over the lazy dog") for i in
@@ -565,7 +547,7 @@ def test_lsh_bucket_cap_bounds_groups_keeps_identical_recall(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     sigs = minhash_signatures(docs, num_hashes=16)
     pairs = {(r["id_a"], r["id_b"]) for r in lsh_candidate_pairs(
-        sigs, bands=4, num_hashes=16, max_bucket_size=2).collect()}
+        sigs, bands=4, num_hashes=16).collect()}
     from lswms_forage_etl_spark import lifecycle
     lifecycle.release_tracked()
     clone_pairs = {(a, b) for a, b in pairs if a < 100 and b < 100}
@@ -661,6 +643,36 @@ def test_prefix_filter_threshold_and_edges(spark):
               for r in prefix_filter_pairs(docs, threshold=(2, 3)).collect()}
     assert (0, 1) not in strict        # 0.6 < 2/3 dropped
     assert (0, 2) in strict
+
+
+def test_prefix_filter_matches_lsh_pairs(spark):
+    """The exact generator and the MinHash-LSH path (minhash_dedup) give
+    the same verified pairs and jaccard values on a fixture where banding
+    recall is complete: one near-dup pair among unrelated documents."""
+    from lswms_forage_etl_spark.operators.dedup import (
+        minhash_dedup, prefix_filter_pairs)
+    good = ("the quick brown fox jumps over the lazy dog and then runs "
+            "along the river bank toward the old mill where the miller "
+            "waits")
+    rows = [
+        (1, good),
+        (2, good + " every single evening"),
+        (4, "completely different words about spark engines and their "
+            "shuffle behavior when joins repartition the fact tables"),
+        (5, "this training document quotes the held out benchmark answer "
+            "which is forty two exactly as the evaluation expects it to "
+            "appear in context"),
+        (6, "an innocuous paragraph describing weather patterns over the "
+            "highlands with rain expected in the afternoon hours"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    exact = prefix_filter_pairs(docs, threshold=(1, 2))
+    assert exact.columns == ["id_a", "id_b", "jaccard"]
+    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in exact.collect()}
+    lsh = {(r["id_a"], r["id_b"]): r["jaccard"]
+           for r in minhash_dedup(docs, threshold=0.5).collect()}
+    assert set(got) == {(1, 2)}
+    assert got == lsh
 
 
 def test_covariance_upper_matches_numpy(spark):

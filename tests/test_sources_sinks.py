@@ -107,20 +107,6 @@ def test_rest_post_sink_batches(spark, tmp_path):
     assert n == {"delivered": 0, "failed": 3}
 
 
-def test_geotiff_export_stub(spark, tmp_path):
-    out = str(tmp_path / "tifs")
-    cells = spark.createDataFrame(
-        [(D1, 0, 0, 5.0), (D1, 299, 259, 7.0)], schemas.RASTER_CELLS)
-    man = geotiff_export(cells, out, fake=True).collect()
-    assert man[0]["n_valid"] == 2
-    grid = np.fromfile(os.path.join(out, "biomass_20240116.bin"),
-                       dtype=np.float32).reshape(300, 260)
-    assert grid[0, 0] == 5.0 and grid[299, 259] == 7.0
-    assert grid[5, 5] == schemas.RASTER_NODATA
-    hdr = json.load(open(os.path.join(out, "biomass_20240116.json")))
-    assert hdr["crs"] == "EPSG:4326" and hdr["nodata"] == -99999.0
-
-
 def test_geotiff_export_real_roundtrip(spark, tmp_path):
     """VERDICT r1 #4: the sink writes a real strip TIFF that the engine's
     own reader (the reference-layout spec) decodes to identical cells."""

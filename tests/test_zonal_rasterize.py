@@ -4,12 +4,10 @@
 from __future__ import annotations
 
 import datetime as dt
-
-from pyspark.sql import functions as F
+import os
 
 from lswms_forage_etl_spark.functions.cleansing import mask_sentinels
 from lswms_forage_etl_spark.operators.rasterize import (
-    full_grid,
     manifest,
     rasterize_points,
 )
@@ -116,37 +114,39 @@ def test_zonal_mean_independent_of_summation_order(spark):
     assert means[0] == float(sum(map(Fraction, map(str, vals))) / 32)
 
 
-def test_rasterize_dense_fill(spark):
+def test_rasterize_dense_fill(spark, tmp_path):
+    # the reference's dense raster (fill 0, then <= 0 -> -99999) is the
+    # grid geotiff_export writes from the sparse rasterize_points cells
+    import numpy as np
+
+    from lswms_forage_etl_spark.sources.geotiff import read_geotiff
+    from lswms_forage_etl_spark.sources.sinks import geotiff_export
+
     pts = spark.createDataFrame(
         [(36.02, 14.98, D1, 1.234), (36.02, 14.98, D1, 2.346),  # same cell
-         (36.07, 14.98, D1, -0.5)],                              # abs -> 0.5
+         (36.07, 14.98, D1, -0.5),                               # abs -> 0.5
+         (36.12, 14.98, D1, 0.0)],                               # 0 -> nodata
         "lon double, lat double, date date, biom double")
-    out = rasterize_points(pts, spark, dense=True)
-    assert out.count() == 260 * 300  # full frame for the single date
-    got = {(r["row"], r["col"]): r["value"]
-           for r in out.where("value != -99999.0").collect()}
-    # collision resolved by mean of round(abs(v), 2)
-    assert abs(got[(0, 0)] - (1.23 + 2.35) / 2) < 1e-9
-    assert got[(0, 1)] == 0.5
-    assert len(got) == 2  # everything else filled with nodata
-    # fill is exactly the reference sentinel
-    n_nodata = out.where("value = -99999.0").count()
-    assert n_nodata == 260 * 300 - 2
+    out = str(tmp_path / "tifs")
+    geotiff_export(rasterize_points(pts), out).collect()
+    arr, _, nd = read_geotiff(os.path.join(out, "biomass_20240116.tif"))
+    assert arr.shape == (300, 260)   # full frame for the single date
+    # collision resolved by mean of round(abs(v), 2), stored as float32
+    assert arr[0, 0] == np.float32((1.23 + 2.35) / 2)
+    assert arr[0, 1] == np.float32(0.5)
+    # fill is exactly the reference sentinel (the reader masks it to NaN)
+    assert nd == -99999.0
+    assert np.isnan(arr[0, 2])
+    assert np.isnan(arr).sum() == 300 * 260 - 2
 
 
 def test_rasterize_sparse_and_manifest(spark):
     pts = spark.createDataFrame(
         [(36.02, 14.98, D1, 1.0), (36.02, 14.98, dt.date(2024, 2, 1), 0.0)],
         "lon double, lat double, date date, biom double")
-    sparse = rasterize_points(pts, spark, dense=False)
+    sparse = rasterize_points(pts)
     got = {(r["date"]): r["value"] for r in sparse.collect()}
     assert got[D1] == 1.0
     assert got[dt.date(2024, 2, 1)] == -99999.0  # <=0 -> nodata
     names = {r["filename"] for r in manifest(pts).collect()}
     assert names == {"biomass_20240116.tif", "biomass_20240201.tif"}
-
-
-def test_full_grid_shape(spark):
-    g = full_grid(spark, 3, 4)
-    assert g.count() == 12
-    assert g.agg(F.max("row"), F.max("col")).collect()[0][0:2] == (2, 3)

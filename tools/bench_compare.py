@@ -7,7 +7,9 @@ run is slower than the old worst run with margin. IMPROVED is the
 mirror image. Everything else is noise.
 
 Usage: python tools/bench_compare.py OLD.json NEW.json [--band 0.2]
-Exit code 1 if any query regressed (usable as a gate).
+Exit code 1 if any query regressed (usable as a gate). Exit code 2 if the
+two records cannot be compared: one has no "host" fingerprint (it is
+history, not a baseline), or their core counts differ.
 
 The driver's BENCH_r{N}.json wraps the bench line under a truncated
 "tail" field; this reads either the raw bench.py output or a file whose
@@ -45,6 +47,19 @@ def load(path: str) -> dict:
         f"bench.py's raw JSON line")
 
 
+def comparable(old: dict, new: dict, paths: list[str]) -> str | None:
+    """Why OLD and NEW cannot be compared, or None if they can."""
+    for rec, path in zip((old, new), paths):
+        if "host" not in rec:
+            return (f"{path} has no host fingerprint: it is history, not "
+                    f"a baseline")
+    cores = [rec["host"].get("cores") for rec in (old, new)]
+    if None not in cores and cores[0] != cores[1]:
+        return (f"core counts differ: {paths[0]} ran on {cores[0]}, "
+                f"{paths[1]} on {cores[1]}")
+    return None
+
+
 def main() -> None:
     band = 0.2
     argv, args, skip = sys.argv[1:], [], False
@@ -61,6 +76,10 @@ def main() -> None:
         else:
             args.append(a)
     old, new = load(args[0]), load(args[1])
+    why = comparable(old, new, args[:2])
+    if why:
+        print(f"not comparable: {why}")
+        sys.exit(2)
     os_, ns = old.get("spread", {}), new.get("spread", {})
     regressed = []
     print(f"| query | old min..max | new min..max | verdict |")

@@ -222,6 +222,8 @@ def main() -> None:
                             prev_copy, prev])
             if rc == 0:
                 status = "no regressions"
+            elif rc == 2:
+                status = outp.strip()
             else:
                 # Regressions require a COMPLETE adjudication: every
                 # flagged query must have a row in ADJUDICATIONS.md
