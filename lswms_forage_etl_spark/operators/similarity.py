@@ -558,7 +558,7 @@ def _ivf_assign(embeddings: DataFrame,
             nrm += v[:, i] * v[:, i]
         with np.errstate(divide="ignore", invalid="ignore"):
             sims = dots / (np.sqrt(nrm)[:, None] * cent_norms[None, :])
-        sims = np.floor(sims * 1e9 + 0.5) / 1e9               # portable_round(.., 9)
+        sims = np.floor(sims * 1e9 + 0.5) / 1e9       # portable_round(.., 9)
         return pd.Series(np.argmax(sims, axis=1).astype("int32"))
 
     return embeddings.withColumn("cent_id", assign(F.col(vec_col)))

@@ -29,9 +29,10 @@ from pyspark.sql import functions as F
 
 _TIERS = ("strict", "touched", "c0", "c3")
 
-# Zone means are summed exactly in decimal and divided once. A double sum
-# follows the shuffle-read order, and a 32-cell zone's mean (k/3200) can
-# sit on a 6-dp half boundary, so its rounding flipped from run to run.
+# Zone means are summed exactly, in decimal with 12 places, and divided
+# once. A double sum follows the shuffle-read order, and a 32-cell zone of
+# 2-dp values has a mean of k/3200, which can sit on a 6-dp half boundary:
+# its rounded value flipped between runs.
 _EXACT = "decimal(28,12)"
 
 
