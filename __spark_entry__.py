@@ -2204,8 +2204,7 @@ def q_mm_decode_ppm(spark, sf):
     stubs': this path has no fake, no metadata echo."""
     from lswms_forage_etl_spark.operators.multimodal import (
         decode_media, synth_ppm_media)
-    out = decode_media(synth_ppm_media(_t(spark, sf, "documents")),
-                       fake=False)
+    out = decode_media(synth_ppm_media(_t(spark, sf, "documents")))
     return out.select(
         "media_id", "decoded_width", "decoded_height",
         portable_round(F.col("mean_intensity"), 9).alias("mean_intensity"))
@@ -2225,8 +2224,7 @@ def q_mm_decode_png(spark, sf):
     12 (`q_mm_decode_jpeg`)."""
     from lswms_forage_etl_spark.operators.multimodal import (
         decode_media, synth_png_media)
-    out = decode_media(synth_png_media(_t(spark, sf, "documents")),
-                       fake=False)
+    out = decode_media(synth_png_media(_t(spark, sf, "documents")))
     return out.select(
         "media_id", "decoded_width", "decoded_height",
         portable_round(F.col("mean_intensity"), 9).alias("mean_intensity"))
@@ -2249,8 +2247,7 @@ def q_mm_decode_jpeg(spark, sf):
     (lossy paths can't hash against SQL)."""
     from lswms_forage_etl_spark.operators.multimodal import (
         decode_media, synth_jpeg_media)
-    out = decode_media(synth_jpeg_media(_t(spark, sf, "documents")),
-                       fake=False)
+    out = decode_media(synth_jpeg_media(_t(spark, sf, "documents")))
     return out.select(
         "media_id", "decoded_width", "decoded_height",
         portable_round(F.col("mean_intensity"), 9).alias("mean_intensity"))
@@ -3413,8 +3410,7 @@ def q_mm_decode_gif(spark, sf):
     shortcut or any LZW/interlace defect hash-mismatches."""
     from lswms_forage_etl_spark.operators.multimodal import (
         decode_media, synth_gif_media)
-    out = decode_media(synth_gif_media(_t(spark, sf, "documents")),
-                       fake=False)
+    out = decode_media(synth_gif_media(_t(spark, sf, "documents")))
     return out.select(
         "media_id", "decoded_width", "decoded_height",
         portable_round(F.col("mean_intensity"), 9).alias("mean_intensity"))
@@ -3435,8 +3431,7 @@ def q_mm_decode_webp(spark, sf):
     hash-mismatches."""
     from lswms_forage_etl_spark.operators.multimodal import (
         decode_media, synth_webp_media)
-    out = decode_media(synth_webp_media(_t(spark, sf, "documents")),
-                       fake=False)
+    out = decode_media(synth_webp_media(_t(spark, sf, "documents")))
     return out.select(
         "media_id", "decoded_width", "decoded_height",
         portable_round(F.col("mean_intensity"), 9).alias("mean_intensity"))

@@ -40,11 +40,6 @@ def biomass_calibration(pred: Column | str) -> Column:
     return (F.lit(6480.2) * _c(pred) - F.lit(958.6)) / F.lit(1000.0)
 
 
-def scale_offset(col: Column | str, scale: float = 1.0, offset: float = 0.0) -> Column:
-    """C11 — `x*scale + offset` (BiomassAggregate.py:147)."""
-    return _c(col) * F.lit(scale) + F.lit(offset)
-
-
 def portable_round(col: Column | str, digits: int) -> Column:
     """Engine-portable rounding: floor(x*10^d + 0.5)/10^d.
 

@@ -26,19 +26,8 @@ def yyyymmdd_to_date(col: Column | str) -> Column:
     return F.to_date(_c(col).cast("string"), "yyyyMMdd")
 
 
-def days_since_series_start(date_col: Column | str, start_col: Column | str) -> Column:
-    """C4 — (date - series_start).days (BiomassHindcasts.py:57)."""
-    return F.datediff(_c(date_col), _c(start_col))
-
-
 def raster_filename(date_col: Column | str, prefix: str = "biomass_",
                     ext: str = ".tif") -> Column:
     """C15 — `biomass_{y}{m:02d}{d:02d}.tif` (rasterize.py:87)."""
     return F.concat(F.lit(prefix), F.date_format(_c(date_col), "yyyyMMdd"),
                     F.lit(ext))
-
-
-def date_from_filename(col: Column | str) -> Column:
-    """C13 — extract the 8-digit date from a raster filename
-    (data_extraction_v2.py:411-423)."""
-    return F.to_date(F.regexp_extract(_c(col), r"(\d{8})", 1), "yyyyMMdd")

@@ -32,9 +32,6 @@ def token_count(col: Column | str) -> Column:
     return F.size(tokens(col))
 
 
-BPE_ISH_PATTERN = r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"
-
-
 def bpe_ish_token_count(col: Column | str) -> Column:
     """BPE-ish proxy: alnum runs + individual punctuation marks — a
     cheap, deterministic stand-in for a real BPE count. The pattern

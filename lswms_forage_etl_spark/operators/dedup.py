@@ -102,7 +102,11 @@ def _spread(df: DataFrame) -> DataFrame:
     shingle/signature work on one thread. The shuffle moves only the raw
     text (tiny next to the compute); on a real multi-split 100 TB source
     `spark.sql.files.maxPartitionBytes` already yields enough tasks and
-    this is a no-op."""
+    this is a no-op. A streaming DataFrame passes through unchanged: it
+    cannot be partition-probed via .rdd, and its file-source batches
+    already split per file."""
+    if df.isStreaming:
+        return df
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df

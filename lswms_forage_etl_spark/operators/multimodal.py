@@ -21,6 +21,17 @@ extend. Everything
 Spark-side — schemas, Arrow-batched `mapInPandas` signatures, per-kind
 partitioning, frame explosion — is real and tested.
 
+Two helpers own the Arrow plumbing; each codec supplies only its
+per-item function:
+
+  * `synth_payloads(docs, need, encode)` builds one payload per
+    document (`encode(doc_id, raw)`), keeping only documents whose UTF-8
+    text has at least `need` bytes — a JVM-side filter ahead of the
+    Arrow stage.
+  * `scan_payloads(media, key, schema, rows)` makes one Arrow pass over
+    (key, payload) and emits the rows `rows(key, payload)` yields, each
+    column built with its schema type.
+
 Scale notes:
   * payloads stay in ``binary`` columns end-to-end; no base64 round-trips,
     no driver collection. Arrow moves them to Python workers zero-copy.
@@ -32,12 +43,12 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -45,22 +56,11 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
 
-MEDIA_SCHEMA = StructType([
-    StructField("media_id", LongType(), False),
-    StructField("kind", StringType(), False),        # image | audio | video
-    StructField("payload", BinaryType(), True),
-    StructField("meta", StructType([
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("frames", IntegerType(), True),
-        StructField("sample_rate", IntegerType(), True),
-    ]), True),
-])
+from lswms_forage_etl_spark.operators.dedup import _spread
 
 KINDS = ["image", "audio", "video"]
 
@@ -113,41 +113,88 @@ def synth_ppm_media(docs: DataFrame, height: int = 3) -> DataFrame:
                     .alias("payload")))
 
 
+_PAYLOAD_SCHEMA = StructType([
+    StructField("media_id", LongType(), False),
+    StructField("payload", BinaryType(), False),
+])
+
+
+def _pm(n: int) -> Column:
+    """pmod(doc_id, n): non-negative like Python's %, so a JVM-side
+    length filter agrees with the Python build for negative ids."""
+    return F.pmod(F.col("doc_id"), F.lit(n))
+
+
+def synth_payloads(docs: DataFrame, need: Column,
+                   encode: Callable[[int, bytes], bytes]) -> DataFrame:
+    """(media_id long, payload binary): one payload per document whose
+    UTF-8 text has at least `need` bytes (a Column over `docs`, so the
+    filter runs in the JVM ahead of the Arrow stage). The survivors are
+    spread over every core and `encode(doc_id, raw)` builds each payload
+    in one `mapInPandas` pass — codecs whose packing lives in Python."""
+    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame({
+                "media_id": pdf["media_id"],
+                "payload": [encode(int(i), bytes(r)) for i, r
+                            in zip(pdf["media_id"], pdf["raw"])]})
+
+    raw = F.encode(F.col("text"), "UTF-8")
+    src = docs.where(F.octet_length(raw) >= need).select(
+        F.col("doc_id").alias("media_id"), raw.alias("raw"))
+    return _spread(src).mapInPandas(build, schema=_PAYLOAD_SCHEMA)
+
+
+def _pandas_dtype(field: StructField) -> str | None:
+    """Column dtype that carries `field` through Arrow exactly: nullable
+    ints as pandas Int32/Int64 (never via float64)."""
+    bits = {IntegerType: "32", LongType: "64"}.get(type(field.dataType))
+    if bits:
+        return ("Int" if field.nullable else "int") + bits
+    return "float64" if isinstance(field.dataType, DoubleType) else None
+
+
+def scan_payloads(media: DataFrame, key: str, schema: StructType,
+                  rows: Callable[[int, bytes | None], Iterable[tuple]]
+                  ) -> DataFrame:
+    """One Arrow pass over `media`'s (key, payload) columns: per payload,
+    `rows(key, payload)` yields output tuples in `schema` order (a NULL
+    payload arrives as None). Each column is built with its schema
+    type. No shuffle — callers spread the input first where it arrives
+    in fewer splits than cores. An exception raised in `rows` fails
+    the task, so a codec's in-kernel gate (bad magic bytes, truncated
+    stream) reaches the action."""
+    dtypes = [_pandas_dtype(f) for f in schema.fields]
+
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = [r for k, p in zip(pdf[key], pdf["payload"])
+                   for r in rows(int(k), None if p is None else bytes(p))]
+            cols = list(zip(*out)) or [()] * len(dtypes)
+            yield pd.DataFrame({
+                f.name: pd.Series(c, dtype=d)
+                for f, c, d in zip(schema.fields, cols, dtypes)})
+
+    return media.select(key, "payload").mapInPandas(scan, schema=schema)
+
+
 def synth_png_media(docs: DataFrame) -> DataFrame:
     """REAL PNG payloads from `documents`: each doc's first w*9 UTF-8
     text bytes (w = 4 + doc_id % 8; shorter docs filtered out) become
     the pixel raster of a spec-conformant PNG — even doc_ids as
     (3, w, 3) RGB, odd as (9, w) greyscale, scanline filter type
     doc_id % 5 so the graded decode exercises every unfilter branch.
-    Deflate lives in Python, so the build is an Arrow `mapInPandas`
-    stage (contrast `synth_ppm_media`, whose header is JVM concat);
-    the filter/length predicates stay JVM-side ahead of it."""
-    out_schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
+    Deflate lives in Python, so the build goes through
+    `synth_payloads` (contrast `synth_ppm_media`, whose header is JVM
+    concat)."""
+    def encode(doc_id: int, raw: bytes) -> bytes:
+        w = 4 + doc_id % 8
+        pix = np.frombuffer(raw, dtype=np.uint8, count=w * 9)
+        arr = pix.reshape(3, w, 3) if doc_id % 2 == 0 \
+            else pix.reshape(9, w)
+        return encode_png(arr, filter_type=doc_id % 5)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, raw in zip(pdf["media_id"], pdf["raw"]):
-                doc_id = int(doc_id)
-                w = 4 + doc_id % 8
-                pix = np.frombuffer(bytes(raw), dtype=np.uint8,
-                                    count=w * 9)
-                arr = pix.reshape(3, w, 3) if doc_id % 2 == 0 \
-                    else pix.reshape(9, w)
-                ids.append(doc_id)
-                payloads.append(encode_png(arr, filter_type=doc_id % 5))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    from lswms_forage_etl_spark.operators.dedup import _spread
-    w = (F.pmod(F.col("doc_id"), F.lit(8)) + F.lit(4)).cast("int")
-    src = (docs.select(F.col("doc_id").alias("media_id"),
-                       F.encode(F.col("text"), "UTF-8").alias("raw"),
-                       (w * 9).alias("npix"))
-           .where(F.octet_length("raw") >= F.col("npix")))
-    return _spread(src).mapInPandas(build, schema=out_schema)
+    return synth_payloads(docs, (_pm(8) + 4) * 9, encode)
 
 
 def synth_gif_media(docs: DataFrame) -> DataFrame:
@@ -159,34 +206,14 @@ def synth_gif_media(docs: DataFrame) -> DataFrame:
     non-degenerate `synth_palette` (palette[i] = (i, 255-i, i^0x55)),
     so the decode's palette lookup is honest: per-index RGB sum =
     255 + (i ^ 0x55), which is the integer identity the DuckDB oracle
-    replays. LZW lives in Python, so the build is an Arrow
-    `mapInPandas` stage like `synth_png_media`."""
-    out_schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    replays. LZW lives in Python (`synth_payloads`)."""
+    def encode(doc_id: int, raw: bytes) -> bytes:
         from lswms_forage_etl_spark.operators.gif import encode_gif
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, raw in zip(pdf["media_id"], pdf["raw"]):
-                doc_id = int(doc_id)
-                w = 4 + doc_id % 8
-                ix = np.frombuffer(bytes(raw), dtype=np.uint8,
-                                   count=w * 9).reshape(9, w)
-                ids.append(doc_id)
-                payloads.append(encode_gif(ix,
-                                           interlaced=bool(doc_id % 2)))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+        w = 4 + doc_id % 8
+        ix = np.frombuffer(raw, dtype=np.uint8, count=w * 9).reshape(9, w)
+        return encode_gif(ix, interlaced=bool(doc_id % 2))
 
-    from lswms_forage_etl_spark.operators.dedup import _spread
-    w = (F.pmod(F.col("doc_id"), F.lit(8)) + F.lit(4)).cast("int")
-    src = (docs.select(F.col("doc_id").alias("media_id"),
-                       F.encode(F.col("text"), "UTF-8").alias("raw"),
-                       (w * 9).alias("npix"))
-           .where(F.octet_length("raw") >= F.col("npix")))
-    return _spread(src).mapInPandas(build, schema=out_schema)
+    return synth_payloads(docs, (_pm(8) + 4) * 9, encode)
 
 
 def synth_webp_media(docs: DataFrame) -> DataFrame:
@@ -206,36 +233,16 @@ def synth_webp_media(docs: DataFrame) -> DataFrame:
     appear) — every VP8L transform and both distance-code forms run
     on the graded path at scale. All variants are lossless, so the
     oracle's integer identity is unchanged."""
-    out_schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def encode(doc_id: int, raw: bytes) -> bytes:
         from lswms_forage_etl_spark.operators.webp import (
             VARIANTS, encode_webp)
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, raw in zip(pdf["media_id"], pdf["raw"]):
-                doc_id = int(doc_id)
-                w = 4 + doc_id % 8
-                g = np.frombuffer(bytes(raw), dtype=np.uint8,
-                                  count=w * 9).reshape(9, w)
-                img = np.stack([g ^ 0x55, g, 255 - g], axis=-1)
-                ids.append(doc_id)
-                payloads.append(
-                    encode_webp(img,
-                                variant=VARIANTS[doc_id % len(VARIANTS)],
-                                seed=doc_id))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+        w = 4 + doc_id % 8
+        g = np.frombuffer(raw, dtype=np.uint8, count=w * 9).reshape(9, w)
+        img = np.stack([g ^ 0x55, g, 255 - g], axis=-1)
+        return encode_webp(img, variant=VARIANTS[doc_id % len(VARIANTS)],
+                           seed=doc_id)
 
-    from lswms_forage_etl_spark.operators.dedup import _spread
-    w = (F.pmod(F.col("doc_id"), F.lit(8)) + F.lit(4)).cast("int")
-    src = (docs.select(F.col("doc_id").alias("media_id"),
-                       F.encode(F.col("text"), "UTF-8").alias("raw"),
-                       (w * 9).alias("npix"))
-           .where(F.octet_length("raw") >= F.col("npix")))
-    return _spread(src).mapInPandas(build, schema=out_schema)
+    return synth_payloads(docs, (_pm(8) + 4) * 9, encode)
 
 
 def synth_webp_anim_media(docs: DataFrame) -> DataFrame:
@@ -249,40 +256,33 @@ def synth_webp_anim_media(docs: DataFrame) -> DataFrame:
     streams — the GIF discipline). Frame k rotates the VP8L encoder
     variant by (doc_id + k) % 7, so every transform family appears
     inside animations at scale."""
-    out_schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def encode(doc_id: int, raw: bytes) -> bytes:
         from lswms_forage_etl_spark.operators.webp import (
             VARIANTS, encode_webp_anim)
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, raw in zip(pdf["media_id"], pdf["raw"]):
-                doc_id = int(doc_id)
-                w = 4 + doc_id % 8
-                pix = np.frombuffer(bytes(raw), dtype=np.uint8,
-                                    count=w * 9)
-                frames = []
-                for k in range(3):
-                    g = pix[k * 3 * w:(k + 1) * 3 * w].reshape(3, w)
-                    rgb = np.stack([g ^ 0x55, g, 255 - g], axis=-1)
-                    frames.append((0, 0, rgb, 40 + 10 * k, False,
-                                   True))
-                ids.append(doc_id)
-                payloads.append(encode_webp_anim(
-                    w, 3, frames,
-                    variant=VARIANTS[doc_id % len(VARIANTS)]))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+        w = 4 + doc_id % 8
+        pix = np.frombuffer(raw, dtype=np.uint8, count=w * 9)
+        frames = []
+        for k in range(3):
+            g = pix[k * 3 * w:(k + 1) * 3 * w].reshape(3, w)
+            rgb = np.stack([g ^ 0x55, g, 255 - g], axis=-1)
+            frames.append((0, 0, rgb, 40 + 10 * k, False, True))
+        return encode_webp_anim(w, 3, frames,
+                                variant=VARIANTS[doc_id % len(VARIANTS)])
 
-    from lswms_forage_etl_spark.operators.dedup import _spread
-    w = (F.pmod(F.col("doc_id"), F.lit(8)) + F.lit(4)).cast("int")
-    src = (docs.select(F.col("doc_id").alias("media_id"),
-                       F.encode(F.col("text"), "UTF-8").alias("raw"),
-                       (w * 9).alias("npix"))
-           .where(F.octet_length("raw") >= F.col("npix")))
-    return _spread(src).mapInPandas(build, schema=out_schema)
+    return synth_payloads(docs, (_pm(8) + 4) * 9, encode)
+
+
+def _frame_schema(timing: str) -> StructType:
+    """(media_id, frame_idx, <timing>, decoded_width, decoded_height,
+    mean_intensity): the animated-frame table of GIF and WebP."""
+    return StructType([
+        StructField("media_id", LongType(), False),
+        StructField("frame_idx", IntegerType(), False),
+        StructField(timing, IntegerType(), False),
+        StructField("decoded_width", IntegerType(), False),
+        StructField("decoded_height", IntegerType(), False),
+        StructField("mean_intensity", DoubleType(), True),
+    ])
 
 
 def webp_frame_table(media: DataFrame) -> DataFrame:
@@ -291,47 +291,18 @@ def webp_frame_table(media: DataFrame) -> DataFrame:
     mean over the COMPOSITED canvas — the animated twin of
     `gif_frame_table`, riding the real VP8X/ANIM/ANMF walk +
     full-feature VP8L decode."""
-    out_schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("frame_idx", IntegerType(), False),
-        StructField("duration_ms", IntegerType(), False),
-        StructField("decoded_width", IntegerType(), False),
-        StructField("decoded_height", IntegerType(), False),
-        StructField("mean_intensity", DoubleType(), True),
-    ])
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def rows(media_id: int, buf: bytes):
         from lswms_forage_etl_spark.operators.webp import parse_webp_anim
-        for pdf in batches:
-            mid, fi, du, dw, dh, mi = [], [], [], [], [], []
-            for media_id, buf in zip(pdf["media_id"], pdf["payload"]):
-                cw, ch, _loops, _bg, frames = parse_webp_anim(
-                    bytes(buf))
-                for k, fr in enumerate(frames):
-                    canvas = fr["canvas"]
-                    r = (canvas >> np.uint32(16)) & np.uint32(0xFF)
-                    g = (canvas >> np.uint32(8)) & np.uint32(0xFF)
-                    b = canvas & np.uint32(0xFF)
-                    total = int(r.sum(dtype=np.int64)
-                                + g.sum(dtype=np.int64)
-                                + b.sum(dtype=np.int64))
-                    mid.append(int(media_id))
-                    fi.append(k)
-                    du.append(fr["duration_ms"])
-                    dw.append(cw)
-                    dh.append(ch)
-                    mi.append(float(total / (3 * cw * ch)))
-            yield pd.DataFrame({
-                "media_id": mid,
-                "frame_idx": pd.array(fi, dtype="int32"),
-                "duration_ms": pd.array(du, dtype="int32"),
-                "decoded_width": pd.array(dw, dtype="int32"),
-                "decoded_height": pd.array(dh, dtype="int32"),
-                "mean_intensity": mi})
+        cw, ch, _loops, _bg, frames = parse_webp_anim(buf)
+        for k, fr in enumerate(frames):
+            canvas = fr["canvas"]
+            total = sum(int(((canvas >> np.uint32(s)) & np.uint32(0xFF))
+                            .sum(dtype=np.int64)) for s in (16, 8, 0))
+            yield (media_id, k, fr["duration_ms"], cw, ch,
+                   float(total / (3 * cw * ch)))
 
-    from lswms_forage_etl_spark.operators.dedup import _spread
-    return _spread(media.select("media_id", "payload")).mapInPandas(
-        decode, schema=out_schema)
+    return scan_payloads(_spread(media), "media_id",
+                         _frame_schema("duration_ms"), rows)
 
 
 def synth_vp8_media(docs: DataFrame) -> DataFrame:
@@ -349,36 +320,18 @@ def synth_vp8_media(docs: DataFrame) -> DataFrame:
     token trees + category extras + signs, entropy contexts) rides
     the graded path. Chroma levels are all zero -> both planes decode
     to constant 128."""
-    out_schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def encode(doc_id: int, raw: bytes) -> bytes:
         from lswms_forage_etl_spark.operators.vp8 import encode_webp_vp8
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, raw in zip(pdf["media_id"], pdf["raw"]):
-                doc_id = int(doc_id)
-                nmb = 4 + doc_id % 5
-                bs = bytes(raw)[:nmb]
-                levels = []
-                pred = 128
-                for b in bs:
-                    v = 64 + (b % 127)
-                    levels.append(8 * (v - pred))
-                    pred = v
-                ids.append(doc_id)
-                payloads.append(encode_webp_vp8(16 * nmb, 16, levels))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+        nmb = 4 + doc_id % 5
+        levels = []
+        pred = 128
+        for b in raw[:nmb]:
+            v = 64 + (b % 127)
+            levels.append(8 * (v - pred))
+            pred = v
+        return encode_webp_vp8(16 * nmb, 16, levels)
 
-    from lswms_forage_etl_spark.operators.dedup import _spread
-    nmb = (F.pmod(F.col("doc_id"), F.lit(5)) + F.lit(4)).cast("int")
-    src = (docs.select(F.col("doc_id").alias("media_id"),
-                       F.encode(F.col("text"), "UTF-8").alias("raw"),
-                       nmb.alias("nmb"))
-           .where(F.octet_length("raw") >= F.col("nmb")))
-    return _spread(src).mapInPandas(build, schema=out_schema)
+    return synth_payloads(docs, _pm(5) + 4, encode)
 
 
 def vp8_luma_table(media: DataFrame) -> DataFrame:
@@ -395,43 +348,28 @@ def vp8_luma_table(media: DataFrame) -> DataFrame:
         StructField("chroma_ok", IntegerType(), True),
     ])
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def rows(media_id: int, buf: bytes):
         import struct as _struct
 
         from lswms_forage_etl_spark.operators.vp8 import decode_frame
-        for pdf in batches:
-            ids, ws, hs, sums, oks = [], [], [], [], []
-            for mid, buf in zip(pdf["media_id"], pdf["payload"]):
-                buf = bytes(buf)
-                if buf[:4] != b"RIFF" or buf[8:12] != b"WEBP":
-                    raise ValueError("not a RIFF/WEBP stream")
-                pos = 12
-                frame = None
-                while pos + 8 <= len(buf):
-                    fourcc = buf[pos:pos + 4]
-                    size, = _struct.unpack_from("<I", buf, pos + 4)
-                    if fourcc == b"VP8 ":
-                        frame = buf[pos + 8:pos + 8 + size]
-                        break
-                    pos += 8 + size + (size & 1)
-                if frame is None:
-                    raise ValueError("WebP: no VP8 chunk found")
-                w, h, Y, U, V = decode_frame(frame)
-                ids.append(int(mid))
-                ws.append(w)
-                hs.append(h)
-                sums.append(int(Y.astype(np.int64).sum()))
-                oks.append(int((U == 128).all() and (V == 128).all()))
-            yield pd.DataFrame({
-                "media_id": ids,
-                "decoded_width": pd.array(ws, dtype="Int32"),
-                "decoded_height": pd.array(hs, dtype="Int32"),
-                "sum_luma": pd.array(sums, dtype="Int64"),
-                "chroma_ok": pd.array(oks, dtype="Int32")})
+        if buf[:4] != b"RIFF" or buf[8:12] != b"WEBP":
+            raise ValueError("not a RIFF/WEBP stream")
+        pos = 12
+        frame = None
+        while pos + 8 <= len(buf):
+            fourcc = buf[pos:pos + 4]
+            size, = _struct.unpack_from("<I", buf, pos + 4)
+            if fourcc == b"VP8 ":
+                frame = buf[pos + 8:pos + 8 + size]
+                break
+            pos += 8 + size + (size & 1)
+        if frame is None:
+            raise ValueError("WebP: no VP8 chunk found")
+        w, h, Y, U, V = decode_frame(frame)
+        yield (media_id, w, h, int(Y.astype(np.int64).sum()),
+               int((U == 128).all() and (V == 128).all()))
 
-    from lswms_forage_etl_spark.operators.dedup import _spread
-    return _spread(media.select("media_id", "payload")) \
-        .mapInPandas(decode, schema=out_schema)
+    return scan_payloads(_spread(media), "media_id", out_schema, rows)
 
 
 def synth_gif_anim_media(docs: DataFrame) -> DataFrame:
@@ -440,34 +378,15 @@ def synth_gif_anim_media(docs: DataFrame) -> DataFrame:
     GIF89a animation (per-frame Graphic Control Extensions carry
     varying delays; odd doc_ids interlaced). The video twin of
     `synth_gif_media`."""
-    out_schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def encode(doc_id: int, raw: bytes) -> bytes:
         from lswms_forage_etl_spark.operators.gif import encode_gif_frames
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, raw in zip(pdf["media_id"], pdf["raw"]):
-                doc_id = int(doc_id)
-                w = 4 + doc_id % 8
-                pix = np.frombuffer(bytes(raw), dtype=np.uint8,
-                                    count=w * 9)
-                frames = [pix[k * 3 * w:(k + 1) * 3 * w].reshape(3, w)
-                          for k in range(3)]
-                ids.append(doc_id)
-                payloads.append(encode_gif_frames(
-                    frames, interlaced=bool(doc_id % 2)))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+        w = 4 + doc_id % 8
+        pix = np.frombuffer(raw, dtype=np.uint8, count=w * 9)
+        frames = [pix[k * 3 * w:(k + 1) * 3 * w].reshape(3, w)
+                  for k in range(3)]
+        return encode_gif_frames(frames, interlaced=bool(doc_id % 2))
 
-    from lswms_forage_etl_spark.operators.dedup import _spread
-    w = (F.pmod(F.col("doc_id"), F.lit(8)) + F.lit(4)).cast("int")
-    src = (docs.select(F.col("doc_id").alias("media_id"),
-                       F.encode(F.col("text"), "UTF-8").alias("raw"),
-                       (w * 9).alias("npix"))
-           .where(F.octet_length("raw") >= F.col("npix")))
-    return _spread(src).mapInPandas(build, schema=out_schema)
+    return synth_payloads(docs, (_pm(8) + 4) * 9, encode)
 
 
 def gif_frame_table(media: DataFrame) -> DataFrame:
@@ -475,40 +394,15 @@ def gif_frame_table(media: DataFrame) -> DataFrame:
     (media_id, frame_idx) with the GCE delay and the exact RGB mean —
     the decoded-video twin of `patch_grid`/`frame sampling`: real LZW +
     de-interlace + palette per frame, shuffle-free Arrow scan."""
-    out_schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("frame_idx", IntegerType(), False),
-        StructField("delay_cs", IntegerType(), False),
-        StructField("decoded_width", IntegerType(), False),
-        StructField("decoded_height", IntegerType(), False),
-        StructField("mean_intensity", DoubleType(), True),
-    ])
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def rows(media_id: int, buf: bytes):
         from lswms_forage_etl_spark.operators.gif import parse_gif_frames
-        for pdf in batches:
-            mid, fi, dc, dw, dh, mi = [], [], [], [], [], []
-            for media_id, buf in zip(pdf["media_id"], pdf["payload"]):
-                for k, (delay, w, h, pix) in enumerate(
-                        parse_gif_frames(bytes(buf))):
-                    mid.append(int(media_id))
-                    fi.append(k)
-                    dc.append(delay)
-                    dw.append(w)
-                    dh.append(h)
-                    mi.append(float(int(pix.sum(dtype=np.int64))
-                                    / len(pix)) if len(pix) else None)
-            yield pd.DataFrame({
-                "media_id": mid,
-                "frame_idx": pd.array(fi, dtype="int32"),
-                "delay_cs": pd.array(dc, dtype="int32"),
-                "decoded_width": pd.array(dw, dtype="int32"),
-                "decoded_height": pd.array(dh, dtype="int32"),
-                "mean_intensity": mi})
+        for k, (delay, w, h, pix) in enumerate(parse_gif_frames(buf)):
+            yield (media_id, k, delay, w, h,
+                   float(int(pix.sum(dtype=np.int64)) / len(pix))
+                   if len(pix) else None)
 
-    from lswms_forage_etl_spark.operators.dedup import _spread
-    return _spread(media.select("media_id", "payload")).mapInPandas(
-        decode, schema=out_schema)
+    return scan_payloads(_spread(media), "media_id",
+                         _frame_schema("delay_cs"), rows)
 
 
 def synth_jpeg_media(docs: DataFrame) -> DataFrame:
@@ -521,40 +415,18 @@ def synth_jpeg_media(docs: DataFrame) -> DataFrame:
     for a constant block), so the graded decode is replayable by the
     oracle from the same text bytes with no float boundary anywhere —
     while the Huffman/DC-diff/EOB/marker machinery all run for real.
-    Same Arrow `mapInPandas` build shape as `synth_png_media`."""
-    out_schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    Every 3rd doc lands as PROGRESSIVE (SOF2) — identical decoded
+    pixels by construction (same quantized coefficients), so the
+    oracle is unchanged while the gate runs the multi-scan
+    successive-approximation decode path end-to-end."""
+    def encode(doc_id: int, raw: bytes) -> bytes:
         from lswms_forage_etl_spark.operators.jpeg import encode_jpeg
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, raw in zip(pdf["media_id"], pdf["raw"]):
-                doc_id = int(doc_id)
-                nb = 4 + doc_id % 8
-                vals = (np.frombuffer(bytes(raw), dtype=np.uint8,
-                                      count=2 * nb) & 0xFE)
-                arr = np.repeat(np.repeat(vals.reshape(2, nb), 8, 0),
-                                8, 1)
-                ids.append(doc_id)
-                # every 3rd doc lands as PROGRESSIVE (SOF2) — identical
-                # decoded pixels by construction (same quantized
-                # coefficients), so the oracle is unchanged while the
-                # gate runs the multi-scan successive-approximation
-                # decode path end-to-end
-                payloads.append(encode_jpeg(
-                    arr, quality=50, progressive=doc_id % 3 == 0))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+        nb = 4 + doc_id % 8
+        vals = np.frombuffer(raw, dtype=np.uint8, count=2 * nb) & 0xFE
+        arr = np.repeat(np.repeat(vals.reshape(2, nb), 8, 0), 8, 1)
+        return encode_jpeg(arr, quality=50, progressive=doc_id % 3 == 0)
 
-    from lswms_forage_etl_spark.operators.dedup import _spread
-    nb = (F.pmod(F.col("doc_id"), F.lit(8)) + F.lit(4)).cast("int")
-    src = (docs.select(F.col("doc_id").alias("media_id"),
-                       F.encode(F.col("text"), "UTF-8").alias("raw"),
-                       (nb * 2).alias("nbytes"))
-           .where(F.octet_length("raw") >= F.col("nbytes")))
-    return _spread(src).mapInPandas(build, schema=out_schema)
+    return synth_payloads(docs, (_pm(8) + 4) * 2, encode)
 
 
 def media_stats(media: DataFrame) -> DataFrame:
@@ -1386,43 +1258,20 @@ def synth_wav_media(docs: DataFrame) -> DataFrame:
     shorter docs filtered out). 8-bit payloads take the bytes as
     unsigned samples; 16-bit takes consecutive byte PAIRS as signed LE
     int16 — both replayable by the oracle from the same hex bytes.
-    Struct packing lives in Python, so the build is an Arrow
-    `mapInPandas` stage like synth_png_media; the length predicate
-    stays JVM-side ahead of it."""
-    out_schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
+    Struct packing lives in Python (`synth_payloads`)."""
+    def encode(doc_id: int, raw: bytes) -> bytes:
+        bits = 8 if doc_id % 2 == 0 else 16
+        ch = 2 if doc_id % 3 == 0 else 1
+        nf = 24 + (doc_id % 8) * 4
+        rate = 8000 * (1 + doc_id % 3)
+        b = raw[:nf * ch * bits // 8]
+        s = np.frombuffer(b, dtype=np.uint8 if bits == 8 else "<i2")
+        return encode_wav(s, rate, bits, ch)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, raw in zip(pdf["media_id"], pdf["raw"]):
-                doc_id = int(doc_id)
-                bits = 8 if doc_id % 2 == 0 else 16
-                ch = 2 if doc_id % 3 == 0 else 1
-                nf = 24 + (doc_id % 8) * 4
-                rate = 8000 * (1 + doc_id % 3)
-                need = nf * ch * bits // 8
-                b = bytes(raw)[:need]
-                if bits == 8:
-                    s = np.frombuffer(b, dtype=np.uint8)
-                else:
-                    s = np.frombuffer(b, dtype="<i2")
-                ids.append(doc_id)
-                payloads.append(encode_wav(s, rate, bits, ch))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    from lswms_forage_etl_spark.operators.dedup import _spread
-    bits = F.when(F.col("doc_id") % 2 == 0, F.lit(8)).otherwise(F.lit(16))
-    ch = F.when(F.col("doc_id") % 3 == 0, F.lit(2)).otherwise(F.lit(1))
-    nf = (F.lit(24) + (F.col("doc_id") % 8) * 4)
-    need = nf * ch * bits / F.lit(8)
-    src = (docs.select(F.col("doc_id").alias("media_id"),
-                       F.encode(F.col("text"), "UTF-8").alias("raw"),
-                       need.cast("int").alias("need"))
-           .where(F.octet_length("raw") >= F.col("need")))
-    return _spread(src).mapInPandas(build, schema=out_schema)
+    nf = 24 + _pm(8) * 4
+    ch = F.when(_pm(3) == 0, 2).otherwise(1)
+    bytes_per_sample = F.when(_pm(2) == 0, 1).otherwise(2)
+    return synth_payloads(docs, nf * ch * bytes_per_sample, encode)
 
 
 def synth_wav_ext_media(docs: DataFrame) -> DataFrame:
@@ -1431,51 +1280,29 @@ def synth_wav_ext_media(docs: DataFrame) -> DataFrame:
     sample), odd ids IEEE-float32 PCM (4 text bytes reinterpreted as a
     little-endian float32 — ASCII text yields normal finite floats);
     every 5th id wraps its fmt chunk in WAVE_FORMAT_EXTENSIBLE so the
-    GUID-unwrap path runs in the gate. Same Arrow build shape as
+    GUID-unwrap path runs in the gate. Built by `synth_payloads`, like
     `synth_wav_media`."""
-    out_schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
+    def encode(doc_id: int, raw: bytes) -> bytes:
+        ch = 2 if doc_id % 3 == 0 else 1
+        rate = 8000 * (1 + doc_id % 3)
+        ext = doc_id % 5 == 0
+        if doc_id % 2 == 0:
+            nf = 20 + (doc_id % 6) * 4
+            trip = np.frombuffer(raw[:nf * ch * 3], dtype=np.uint8) \
+                .reshape(-1, 3).astype(np.int32)
+            v = trip[:, 0] | (trip[:, 1] << 8) | (trip[:, 2] << 16)
+            s = np.where(v >= 1 << 23, v - (1 << 24), v)
+            return encode_wav(s, rate, 24, ch, extensible=ext)
+        nf = 16 + (doc_id % 5) * 4
+        s = np.frombuffer(raw[:nf * ch * 4], dtype="<f4")
+        return encode_wav(s, rate, 32, ch, audio_format="float",
+                          extensible=ext)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, raw in zip(pdf["media_id"], pdf["raw"]):
-                doc_id = int(doc_id)
-                ch = 2 if doc_id % 3 == 0 else 1
-                rate = 8000 * (1 + doc_id % 3)
-                ext = doc_id % 5 == 0
-                if doc_id % 2 == 0:
-                    nf = 20 + (doc_id % 6) * 4
-                    b = bytes(raw)[:nf * ch * 3]
-                    trip = np.frombuffer(b, dtype=np.uint8) \
-                        .reshape(-1, 3).astype(np.int32)
-                    v = trip[:, 0] | (trip[:, 1] << 8) | (trip[:, 2] << 16)
-                    s = np.where(v >= 1 << 23, v - (1 << 24), v)
-                    wav = encode_wav(s, rate, 24, ch, extensible=ext)
-                else:
-                    nf = 16 + (doc_id % 5) * 4
-                    b = bytes(raw)[:nf * ch * 4]
-                    s = np.frombuffer(b, dtype="<f4")
-                    wav = encode_wav(s, rate, 32, ch,
-                                     audio_format="float",
-                                     extensible=ext)
-                ids.append(doc_id)
-                payloads.append(wav)
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    from lswms_forage_etl_spark.operators.dedup import _spread
-    nf = F.when(F.col("doc_id") % 2 == 0,
-                F.lit(20) + (F.col("doc_id") % 6) * 4) \
-        .otherwise(F.lit(16) + (F.col("doc_id") % 5) * 4)
-    ch = F.when(F.col("doc_id") % 3 == 0, F.lit(2)).otherwise(F.lit(1))
-    bpers = F.when(F.col("doc_id") % 2 == 0, F.lit(3)).otherwise(F.lit(4))
-    src = (docs.select(F.col("doc_id").alias("media_id"),
-                       F.encode(F.col("text"), "UTF-8").alias("raw"),
-                       (nf * ch * bpers).cast("int").alias("need"))
-           .where(F.octet_length("raw") >= F.col("need")))
-    return _spread(src).mapInPandas(build, schema=out_schema)
+    even = _pm(2) == 0
+    nf = F.when(even, 20 + _pm(6) * 4).otherwise(16 + _pm(5) * 4)
+    ch = F.when(_pm(3) == 0, 2).otherwise(1)
+    bytes_per_sample = F.when(even, 3).otherwise(4)
+    return synth_payloads(docs, nf * ch * bytes_per_sample, encode)
 
 
 def synth_wav_law_media(docs: DataFrame) -> DataFrame:
@@ -1483,36 +1310,16 @@ def synth_wav_law_media(docs: DataFrame) -> DataFrame:
     bytes are the CODE bytes of a mu-law (even ids) / A-law (odd ids)
     WAV — the telephony transport form. One byte per sample, so the
     oracle replays the exact integer expansion formulas per byte."""
-    out_schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
+    def encode(doc_id: int, raw: bytes) -> bytes:
+        ch = 2 if doc_id % 3 == 0 else 1
+        nf = 24 + (doc_id % 8) * 4
+        rate = 8000 * (1 + doc_id % 3)
+        fmt = "mulaw" if doc_id % 2 == 0 else "alaw"
+        codes = np.frombuffer(raw[:nf * ch], dtype=np.uint8)
+        return encode_wav(codes, rate, 8, ch, audio_format=fmt)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, raw in zip(pdf["media_id"], pdf["raw"]):
-                doc_id = int(doc_id)
-                ch = 2 if doc_id % 3 == 0 else 1
-                nf = 24 + (doc_id % 8) * 4
-                rate = 8000 * (1 + doc_id % 3)
-                fmt = "mulaw" if doc_id % 2 == 0 else "alaw"
-                codes = np.frombuffer(bytes(raw)[:nf * ch],
-                                      dtype=np.uint8)
-                ids.append(doc_id)
-                payloads.append(encode_wav(codes, rate, 8, ch,
-                                           audio_format=fmt))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    from lswms_forage_etl_spark.operators.dedup import _spread
-    ch = F.when(F.pmod(F.col("doc_id"), F.lit(3)) == 0,
-                F.lit(2)).otherwise(F.lit(1))
-    nf = F.lit(24) + F.pmod(F.col("doc_id"), F.lit(8)) * 4
-    src = (docs.select(F.col("doc_id").alias("media_id"),
-                       F.encode(F.col("text"), "UTF-8").alias("raw"),
-                       (nf * ch).cast("int").alias("need"))
-           .where(F.octet_length("raw") >= F.col("need")))
-    return _spread(src).mapInPandas(build, schema=out_schema)
+    ch = F.when(_pm(3) == 0, 2).otherwise(1)
+    return synth_payloads(docs, (24 + _pm(8) * 4) * ch, encode)
 
 
 def synth_wav_adpcm_media(docs: DataFrame) -> DataFrame:
@@ -1522,34 +1329,13 @@ def synth_wav_adpcm_media(docs: DataFrame) -> DataFrame:
     output is exactly the encoder's predictor sequence, the DuckDB
     oracle replays encode+decode as ONE recursive integer state
     machine over the same source bytes."""
-    out_schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
+    def encode(doc_id: int, raw: bytes) -> bytes:
+        nf = 24 + (doc_id % 8) * 4
+        rate = 8000 * (1 + doc_id % 3)
+        b = np.frombuffer(raw[:nf], dtype=np.uint8)
+        return encode_wav_adpcm((b.astype(np.int64) - 128) * 256, rate)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, raw in zip(pdf["media_id"], pdf["raw"]):
-                doc_id = int(doc_id)
-                nf = 24 + (doc_id % 8) * 4
-                rate = 8000 * (1 + doc_id % 3)
-                b = np.frombuffer(bytes(raw)[:nf], dtype=np.uint8)
-                s = (b.astype(np.int64) - 128) * 256
-                ids.append(doc_id)
-                payloads.append(encode_wav_adpcm(s, rate))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    from lswms_forage_etl_spark.operators.dedup import _spread
-    # F.pmod, not %: Spark % follows the dividend's sign while the
-    # Python build recomputes nf with non-negative %, so a negative
-    # doc_id would pass the filter with a smaller nf (ADVICE r13)
-    nf = F.lit(24) + F.pmod(F.col("doc_id"), F.lit(8)) * 4
-    src = (docs.select(F.col("doc_id").alias("media_id"),
-                       F.encode(F.col("text"), "UTF-8").alias("raw"),
-                       nf.alias("npix"))
-           .where(F.octet_length("raw") >= F.col("npix")))
-    return _spread(src).mapInPandas(build, schema=out_schema)
+    return synth_payloads(docs, 24 + _pm(8) * 4, encode)
 
 
 def adpcm_oracle_sql(doc_source: str = "documents") -> str:
@@ -1650,42 +1436,26 @@ def decode_audio_ext(media: DataFrame) -> DataFrame:
         StructField("amp_q", LongType(), True),
     ])
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sr, ch, bt, nf, aq = [], [], [], [], []
-            for buf in pdf["payload"]:
-                rate, c, b, n, samples = _parse_wav(bytes(buf))
-                v = samples.astype(np.float64)
-                v = np.where(np.isfinite(v), v, 0.0)
-                q = np.floor(np.clip(v, -1e6, 1e6) * 1e6 + 0.5) \
-                    .astype(np.int64)
-                sr.append(rate)
-                ch.append(c)
-                bt.append(b)
-                nf.append(n)
-                aq.append(int(q.sum()))
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "sample_rate": pd.array(sr, dtype="Int32"),
-                "n_channels": pd.array(ch, dtype="Int32"),
-                "bits_per_sample": pd.array(bt, dtype="Int32"),
-                "n_frames": pd.array(nf, dtype="Int32"),
-                "amp_q": pd.array(aq, dtype="Int64"),
-            })
+    def rows(media_id: int, buf: bytes):
+        rate, ch, bits, nf, samples = _parse_wav(buf)
+        v = samples.astype(np.float64)
+        v = np.where(np.isfinite(v), v, 0.0)
+        q = np.floor(np.clip(v, -1e6, 1e6) * 1e6 + 0.5).astype(np.int64)
+        yield (media_id, rate, ch, bits, nf, int(q.sum()))
 
-    from lswms_forage_etl_spark.operators.dedup import _spread
-    return _spread(media.select("media_id", "payload")).mapInPandas(
-        decode, schema=out_schema)
+    return scan_payloads(_spread(media), "media_id", out_schema, rows)
 
 
 def decode_audio(media: DataFrame) -> DataFrame:
     """Decode WAV payloads to (sample_rate, n_channels, bits_per_sample,
-    n_frames, mean_amp): one Arrow batch loop running the real
-    `_parse_wav` per payload — format fields come from the parsed fmt
-    chunk (NOT echoed metadata) and mean_amp is the exact integer sample
-    sum divided once in float64. The audio twin of decode_media's image
-    path; same 100 TB shape (binary column in, scan-side Arrow pass, no
-    shuffle)."""
+    n_frames, mean_amp): one Arrow pass running the real `_parse_wav`
+    per payload — format fields come from the parsed fmt chunk (NOT
+    echoed metadata) and mean_amp is the exact integer sample sum
+    divided once in float64. The audio twin of decode_media; same
+    100 TB shape (binary column in, scan-side Arrow pass, no shuffle).
+    It does not `_spread` its input: its callers pass `synth_payloads`
+    output, already spread, where the spread's partition probe would
+    only add a job."""
     out_schema = StructType([
         StructField("media_id", LongType(), False),
         StructField("sample_rate", IntegerType(), True),
@@ -1695,17 +1465,13 @@ def decode_audio(media: DataFrame) -> DataFrame:
         StructField("mean_amp", DoubleType(), True),
     ])
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, ch, bits, nf, samples = _parse_wav(bytes(payload))
-                mean = (float(samples.astype(np.int64).sum())
-                        / len(samples)) if len(samples) else None
-                rows.append((int(mid), rate, ch, bits, nf, mean))
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
+    def rows(media_id: int, buf: bytes):
+        rate, ch, bits, nf, samples = _parse_wav(buf)
+        mean = (float(samples.astype(np.int64).sum()) / len(samples)
+                if len(samples) else None)
+        yield (media_id, rate, ch, bits, nf, mean)
 
-    return media.mapInPandas(decode, schema=out_schema)
+    return scan_payloads(media, "media_id", out_schema, rows)
 
 
 def audio_energy(media: DataFrame, window_frames: int = 16,
@@ -1750,21 +1516,19 @@ def audio_energy(media: DataFrame, window_frames: int = 16,
         "is_silence", (F.col("rms") < F.lit(float(silence_rms))))
 
 
-def decode_media(media: DataFrame, fake: bool = False) -> DataFrame:
+def decode_media(media: DataFrame) -> DataFrame:
     """Decode payloads to (decoded_width, decoded_height, mean_intensity).
 
-    The real path (`fake=False`) runs `decode_image_bytes` — an actual
-    pure-numpy netpbm/BMP decode — per payload inside the Arrow batch
-    loop: dimensions come from the parsed header (NOT the metadata
-    struct) and mean_intensity is the exact integer pixel sum divided
-    once. PNG decodes for real too (stdlib-zlib inflate + all five
-    scanline filters via `_parse_png`), as do baseline+progressive
-    JPEG (`operators/jpeg.py`; arithmetic/hierarchical raise
-    in-kernel) and single-image GIF (`operators/gif.py`; real LZW +
-    interlace + color-table lookup, animated raises in-kernel).
-    With ``fake=True`` a deterministic stand-in (metadata echo + raw byte
-    mean) exercises the identical Arrow path for opaque payloads."""
-
+    Runs `decode_image_bytes` — an actual pure-numpy netpbm/BMP decode
+    — per payload inside one Arrow pass: dimensions come from the
+    parsed header (NOT the metadata struct) and mean_intensity is the
+    exact integer pixel sum divided once. PNG decodes for real too
+    (stdlib-zlib inflate + all five scanline filters via `_parse_png`),
+    as do baseline+progressive JPEG (`operators/jpeg.py`;
+    arithmetic/hierarchical raise in-kernel) and single-image GIF
+    (`operators/gif.py`; real LZW + interlace + color-table lookup,
+    animated raises in-kernel). An opaque payload raises `unsupported
+    image magic` at action time; a NULL payload decodes to NULLs."""
     out_schema = StructType([
         StructField("media_id", LongType(), False),
         StructField("decoded_width", IntegerType(), True),
@@ -1772,51 +1536,19 @@ def decode_media(media: DataFrame, fake: bool = False) -> DataFrame:
         StructField("mean_intensity", DoubleType(), True),
     ])
 
-    def decode_fake(batches: Iterator[pd.DataFrame]
-                    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            w, h, m = [], [], []
-            for buf, meta in zip(pdf["payload"], pdf["meta"]):
-                if buf is None:
-                    w.append(None); h.append(None); m.append(None)
-                    continue
-                arr = np.frombuffer(bytes(buf), dtype=np.uint8)
-                w.append(int(meta["width"]))
-                h.append(int(meta["height"]))
-                m.append(float(arr.mean()) if len(arr) else None)
-            yield pd.DataFrame({"media_id": pdf["media_id"],
-                                "decoded_width": pd.array(w, dtype="Int32"),
-                                "decoded_height": pd.array(h, dtype="Int32"),
-                                "mean_intensity": m})
+    def rows(media_id: int, buf: bytes | None):
+        if buf is None:
+            yield (media_id, None, None, None)
+            return
+        dw, dh, pix = decode_image_bytes(buf)
+        # exact integer sum, one float division — oracle's avg() over
+        # the same bytes reproduces it bit-for-bit; a zero-pixel raster
+        # means NULL, matching avg() over zero rows (ADVICE r8)
+        yield (media_id, dw, dh,
+               float(int(pix.sum(dtype=np.int64)) / len(pix))
+               if len(pix) else None)
 
-    def decode_real(batches: Iterator[pd.DataFrame]
-                    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            w, h, m = [], [], []
-            for buf in pdf["payload"]:
-                if buf is None:
-                    w.append(None); h.append(None); m.append(None)
-                    continue
-                dw, dh, pix = decode_image_bytes(bytes(buf))
-                w.append(dw)
-                h.append(dh)
-                # exact integer sum, one float division — oracle's avg()
-                # over the same bytes reproduces it bit-for-bit; a
-                # zero-pixel raster means NULL, matching avg() over
-                # zero rows (ADVICE r8)
-                m.append(float(int(pix.sum(dtype=np.int64)) / len(pix))
-                         if len(pix) else None)
-            yield pd.DataFrame({"media_id": pdf["media_id"],
-                                "decoded_width": pd.array(w, dtype="Int32"),
-                                "decoded_height": pd.array(h, dtype="Int32"),
-                                "mean_intensity": m})
-
-    if fake:
-        return media.select("media_id", "payload", "meta").mapInPandas(
-            decode_fake, schema=out_schema)
-    from lswms_forage_etl_spark.operators.dedup import _spread
-    return _spread(media.select("media_id", "payload")).mapInPandas(
-        decode_real, schema=out_schema)
+    return scan_payloads(_spread(media), "media_id", out_schema, rows)
 
 
 def patch_grid(media: DataFrame, width: int = 32,
@@ -1835,7 +1567,6 @@ def patch_grid(media: DataFrame, width: int = 32,
     byte semantics are exact, so the DuckDB oracle replays every patch
     mean bit-for-bit (hex-decode + integer grid arithmetic)."""
     from lswms_forage_etl_spark.functions.cleansing import portable_round
-    from lswms_forage_etl_spark.operators.dedup import _spread
 
     out_schema = StructType([
         StructField("media_id", LongType(), False),

@@ -347,10 +347,6 @@ def idct4x4(coeffs: list[int]) -> list[int]:
     return out
 
 
-def _clamp255(v: int) -> int:
-    return 0 if v < 0 else 255 if v > 255 else v
-
-
 # ------------------------------------------------------------ decoder
 
 

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DateType,
     DoubleType,
     FloatType,
@@ -117,16 +116,4 @@ EMBEDDINGS = StructType([
     StructField("vec_id", LongType(), False),
     StructField("embedding", ArrayType(FloatType()), True),
     StructField("label", IntegerType(), True),
-])
-
-# Multimodal: opaque payload + typed metadata (binary decode is stubbed —
-# image/audio libs are not in this container; the Spark plumbing is real).
-MEDIA = StructType([
-    StructField("media_id", LongType(), False),
-    StructField("kind", StringType(), False),     # 'image'|'audio'|'video'
-    StructField("payload", BinaryType(), True),
-    StructField("mime", StringType(), True),
-    StructField("width", IntegerType(), True),
-    StructField("height", IntegerType(), True),
-    StructField("duration_ms", IntegerType(), True),
 ])

@@ -27,23 +27,32 @@ layout constant lives in ONE place (`_FIXED`) shared by the encoder
 and the oracle-SQL generator, so the graded box table replays
 arithmetically from the documents table.
 
-Scale shape: identical to sources/archive.py — archives synthesize in
-one groupBy, scans are embarrassingly-parallel Arrow passes with no
-shuffle; at 100 TB the box/frame tables ride executor counts.
+Scale shape: identical to sources/archive.py — containers synthesize
+through `archive.synth_archives` (one groupBy), and the box and frame
+scans are `multimodal.scan_payloads` Arrow passes with no shuffle; at
+100 TB the box/frame tables ride executor counts.
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
+from lswms_forage_etl_spark.operators.dedup import _spread
+from lswms_forage_etl_spark.operators.multimodal import scan_payloads
 from lswms_forage_etl_spark.sources.archive import (
     ARCHIVE_GROUP,
-    _maybe_spread,
+    _raw,
+    synth_archives,
 )
 
 CONTAINER_BOXES = frozenset(
@@ -457,103 +466,58 @@ def parse_mp4_frames(buf: bytes) -> list[tuple[int, int, int, int, int,
 # Spark plumbing (archive.py shapes) + oracle-SQL generator
 # ---------------------------------------------------------------------------
 
-_BOX_SCHEMA = ("archive_id long, box_path string, box_offset long, "
-               "n_bytes long")
-_FRAME_SCHEMA = ("archive_id long, frame_idx int, dts long, cts long, "
-                 "duration long, n_bytes long, content_fp string")
+_BOX_SCHEMA = StructType([
+    StructField("archive_id", LongType()),
+    StructField("box_path", StringType()),
+    StructField("box_offset", LongType()),
+    StructField("n_bytes", LongType()),
+])
+_FRAME_SCHEMA = StructType([
+    StructField("archive_id", LongType()),
+    StructField("frame_idx", IntegerType()),
+    StructField("dts", LongType()),
+    StructField("cts", LongType()),
+    StructField("duration", LongType()),
+    StructField("n_bytes", LongType()),
+    StructField("content_fp", StringType()),
+])
 
 
-def synth_mp4_media(docs: DataFrame,
-                    group_size: int = ARCHIVE_GROUP) -> DataFrame:
-    """(archive_id, payload): every `group_size` documents (by doc_id
+def synth_mp4_media(docs: DataFrame) -> DataFrame:
+    """(archive_id, payload): every ARCHIVE_GROUP documents (by doc_id
     div) become one mp4; frame i is doc i's UTF-8 text bytes, sorted
     by id. One groupBy shuffle; each container builds independently."""
-    import pyspark.sql.functions as F
-
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        frames = [bytes(r) for _, r in
-                  sorted(zip(pdf["doc_id"], pdf["raw"]),
-                         key=lambda t: int(t[0]))]
-        return pd.DataFrame({"archive_id": [int(key[0])],
-                             "payload": [encode_mp4(frames)]})
-
-    src = docs.select(
-        (F.col("doc_id") - F.pmod("doc_id", F.lit(group_size)))
-        .alias("archive_id"),
-        "doc_id", F.encode("text", "UTF-8").alias("raw"))
-    from lswms_forage_etl_spark.sources.archive import _spread_groups
-    return _spread_groups(src).groupBy("archive_id").applyInPandas(
-        build, schema="archive_id long, payload binary")
+    return synth_archives(docs, lambda _aid, rows: encode_mp4(
+        [r for _, r in rows]), [_raw()])
 
 
-def synth_mp4_frag_media(docs: DataFrame,
-                         group_size: int = ARCHIVE_GROUP) -> DataFrame:
+def synth_mp4_frag_media(docs: DataFrame) -> DataFrame:
     """The fragmented twin of `synth_mp4_media`: same doc->frame
     mapping, container assembled as moof/mdat fragments of
     FRAG_SAMPLES samples with trun composition offsets."""
-    import pyspark.sql.functions as F
-
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        frames = [bytes(r) for _, r in
-                  sorted(zip(pdf["doc_id"], pdf["raw"]),
-                         key=lambda t: int(t[0]))]
-        return pd.DataFrame({"archive_id": [int(key[0])],
-                             "payload": [encode_mp4_fragmented(frames)]})
-
-    src = docs.select(
-        (F.col("doc_id") - F.pmod("doc_id", F.lit(group_size)))
-        .alias("archive_id"),
-        "doc_id", F.encode("text", "UTF-8").alias("raw"))
-    from lswms_forage_etl_spark.sources.archive import _spread_groups
-    return _spread_groups(src).groupBy("archive_id").applyInPandas(
-        build, schema="archive_id long, payload binary")
+    return synth_archives(docs, lambda _aid, rows: encode_mp4_fragmented(
+        [r for _, r in rows]), [_raw()])
 
 
 def scan_mp4_boxes(media: DataFrame) -> DataFrame:
     """Box-level scan: (archive_id, box_path, box_offset, n_bytes) per
     box, depth-first file order per container."""
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            aid, path, off, nb = [], [], [], []
-            for a, buf in zip(pdf["archive_id"], pdf["payload"]):
-                for p, o, s in parse_mp4_boxes(bytes(buf)):
-                    aid.append(int(a))
-                    path.append(p)
-                    off.append(o)
-                    nb.append(s)
-            yield pd.DataFrame({"archive_id": aid, "box_path": path,
-                                "box_offset": off, "n_bytes": nb})
-
-    return _maybe_spread(media.select("archive_id", "payload")) \
-        .mapInPandas(scan, schema=_BOX_SCHEMA)
+    return scan_payloads(
+        _spread(media), "archive_id", _BOX_SCHEMA,
+        lambda aid, buf: [(aid, *box) for box in parse_mp4_boxes(buf)])
 
 
 def scan_mp4_frames(media: DataFrame, every_n: int = 1) -> DataFrame:
     """Frame-table scan with optional sampling: one row per sample
     whose index % every_n == 0 — the REAL mm_frame_sample (timing from
     stts, sizes from stsz, payload sliced by stco/stsc)."""
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {k: [] for k in (
-                "archive_id", "frame_idx", "dts", "cts", "duration",
-                "n_bytes", "content_fp")}
-            for a, buf in zip(pdf["archive_id"], pdf["payload"]):
-                for idx, dts, cts, dur, size, payload in \
-                        parse_mp4_frames(bytes(buf)):
-                    if idx % every_n:
-                        continue
-                    cols["archive_id"].append(int(a))
-                    cols["frame_idx"].append(idx)
-                    cols["dts"].append(dts)
-                    cols["cts"].append(cts)
-                    cols["duration"].append(dur)
-                    cols["n_bytes"].append(size)
-                    cols["content_fp"].append(
-                        hashlib.md5(payload).hexdigest())
-            yield pd.DataFrame(cols)
+    def rows(aid: int, buf: bytes):
+        for idx, dts, cts, dur, size, payload in parse_mp4_frames(buf):
+            if idx % every_n == 0:
+                yield (aid, idx, dts, cts, dur, size,
+                       hashlib.md5(payload).hexdigest())
 
-    return _maybe_spread(media.select("archive_id", "payload")) \
-        .mapInPandas(scan, schema=_FRAME_SCHEMA)
+    return scan_payloads(_spread(media), "archive_id", _FRAME_SCHEMA, rows)
 
 
 # Fixed box sizes (bytes), the single source of truth shared with the
@@ -566,8 +530,7 @@ _FIXED = {
 }
 
 
-def mp4_boxes_sql(doc_source: str = "documents",
-                  group_size: int = ARCHIVE_GROUP) -> str:
+def mp4_boxes_sql(doc_source: str = "documents") -> str:
     """DuckDB replay of scan_mp4_boxes over synth_mp4_media: box sizes
     and offsets are pure arithmetic over per-archive (n frames, total
     payload bytes) — every constant comes from _FIXED, the same table
@@ -625,7 +588,7 @@ def mp4_boxes_sql(doc_source: str = "documents",
         for path in o)
     return f"""
         WITH g AS (
-          SELECT doc_id - (doc_id % {group_size}) AS archive_id,
+          SELECT doc_id - (doc_id % {ARCHIVE_GROUP}) AS archive_id,
                  CAST(count(*) AS BIGINT) AS n,
                  CAST(sum(octet_length(encode(text))) AS BIGINT)
                    AS payload
@@ -634,9 +597,8 @@ def mp4_boxes_sql(doc_source: str = "documents",
     """
 
 
-def mp4_frames_sql(doc_source: str = "documents",
-                   group_size: int = ARCHIVE_GROUP,
-                   every_n: int = 1, fragmented: bool = False) -> str:
+def mp4_frames_sql(doc_source: str = "documents", every_n: int = 1,
+                   fragmented: bool = False) -> str:
     """DuckDB replay of scan_mp4_frames: frame order is doc_id order
     within the archive, dts = idx * FRAME_DURATION. Progressive
     containers carry no ctts -> cts = dts; the fragmented twin's trun
@@ -647,9 +609,9 @@ def mp4_frames_sql(doc_source: str = "documents",
            if fragmented else f"frame_idx * {FRAME_DURATION}")
     return f"""
         WITH fr AS (
-          SELECT doc_id - (doc_id % {group_size}) AS archive_id,
+          SELECT doc_id - (doc_id % {ARCHIVE_GROUP}) AS archive_id,
                  CAST(row_number() OVER (
-                     PARTITION BY doc_id - (doc_id % {group_size})
+                     PARTITION BY doc_id - (doc_id % {ARCHIVE_GROUP})
                      ORDER BY doc_id) - 1 AS INT) AS frame_idx,
                  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
                  md5(text) AS content_fp

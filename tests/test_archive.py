@@ -352,3 +352,24 @@ def test_jsonl_shard_scan_roundtrip(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
     assert "from_json" in plan.lower() or "JsonToStructs" in plan
+
+
+def test_synth_archives_hands_rows_in_doc_id_order(spark):
+    """`encode` sees each archive's (doc_id, *cols) rows sorted by
+    doc_id, however the shuffle delivered them."""
+    import json
+
+    from lswms_forage_etl_spark.sources.archive import (
+        ARCHIVE_GROUP, synth_archives)
+    ids = [13, 2, 7, 0, 11, 5, 9, 3, 14, 1, 6, 12, 4, 10, 8, 15]
+    docs = spark.createDataFrame([(i, f"t{i}") for i in ids],
+                                 "doc_id long, text string").repartition(5)
+    out = synth_archives(
+        docs, lambda aid, rows: json.dumps([aid, rows]).encode(),
+        ["text"]).collect()
+    got = {r["archive_id"]: json.loads(r["payload"]) for r in out}
+    assert set(got) == {0, ARCHIVE_GROUP}
+    for aid, (seen_aid, rows) in got.items():
+        assert seen_aid == aid
+        assert rows == [[i, f"t{i}"]
+                        for i in range(aid, aid + ARCHIVE_GROUP)]

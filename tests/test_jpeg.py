@@ -175,7 +175,7 @@ def test_decode_image_bytes_dispatches_jpeg(spark):
     # end-to-end Arrow path over the graded synth
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet").limit(40)
-    out = decode_media(synth_jpeg_media(docs), fake=False).collect()
+    out = decode_media(synth_jpeg_media(docs)).collect()
     assert len(out) > 0
     for r in out:
         nb = 4 + r["media_id"] % 8

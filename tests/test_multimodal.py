@@ -78,16 +78,10 @@ def test_byte_histogram_matches_numpy(spark):
 
 def test_decode_media_fake_and_gate(spark):
     m = synth_media(_docs(spark))
-    out = decode_media(m, fake=True).collect()
-    assert len(out) == 12
-    byid = {r["media_id"]: r for r in out}
-    # payload of doc 0 is all 'x' (120): mean intensity exactly 120
-    assert byid[0]["mean_intensity"] == 120.0
-    assert byid[0]["decoded_width"] == (10 * 7) % 1920 + 16
-    # real path on OPAQUE payloads: building the plan is lawful (the
-    # decode is lazy), the per-payload magic-byte gate raises at
-    # ACTION time inside the Arrow stage (round-8 contract)
-    lazy = decode_media(m, fake=False)
+    # OPAQUE payloads: building the plan is lawful (the decode is
+    # lazy), the per-payload magic-byte gate raises at ACTION time
+    # inside the Arrow stage (round-8 contract)
+    lazy = decode_media(m)
     with pytest.raises(Exception, match="unsupported image magic"):
         lazy.collect()
 
@@ -97,7 +91,7 @@ def test_decode_media_real_ppm_payloads(spark):
     built by synth_ppm_media: header-parsed dimensions and the exact
     raster mean (every text byte is 'x' = 120)."""
     from lswms_forage_etl_spark.operators.multimodal import synth_ppm_media
-    rows = decode_media(synth_ppm_media(_docs(spark)), fake=False).collect()
+    rows = decode_media(synth_ppm_media(_docs(spark))).collect()
     # docs 8-11 are the ones long enough for their w*3*3-byte raster
     assert {r["media_id"] for r in rows} == {8, 9, 10, 11}
     for r in rows:
@@ -247,7 +241,7 @@ def test_synth_png_media_decodes_end_to_end(spark):
     as 9-row greyscale."""
     from lswms_forage_etl_spark.operators.multimodal import (
         decode_media, synth_png_media)
-    rows = decode_media(synth_png_media(_docs(spark)), fake=False).collect()
+    rows = decode_media(synth_png_media(_docs(spark))).collect()
     assert {r["media_id"] for r in rows} == {8, 9, 10, 11}
     for r in rows:
         assert r["decoded_width"] == r["media_id"] % 8 + 4
@@ -637,3 +631,74 @@ def test_wav_float64_decodes():
     assert r64[3] == r32[3] == len(vals)
     assert r64[4].dtype == np.float32
     assert np.array_equal(r64[4], r32[4])
+
+
+def test_wav_length_filter_matches_build_for_negative_ids(spark):
+    """The JVM length filter and the Python build compute the frame
+    count with the same non-negative modulus: a negative doc_id whose
+    text is shorter than the build needs yields no row. (Spark's %
+    follows the dividend's sign; a filter written with it lets such a
+    doc through as a truncated WAV or a crashed Arrow task.)"""
+    from lswms_forage_etl_spark.operators.multimodal import (
+        decode_audio, synth_wav_ext_media, synth_wav_media)
+    schema = "doc_id long, text string"
+    # doc -5: 16-bit mono, 36 frames -> 72 bytes needed
+    short = spark.createDataFrame([(-5, "a" * 20), (-5, "a" * 21)], schema)
+    assert synth_wav_media(short).collect() == []
+    # doc -3: float32 stereo, 24 frames -> 192 bytes needed
+    short_ext = spark.createDataFrame([(-3, "a" * 40), (-3, "a" * 42)],
+                                      schema)
+    assert synth_wav_ext_media(short_ext).collect() == []
+    # long enough, the negative id builds and decodes in full
+    ok = spark.createDataFrame([(-5, "a" * 72)], schema)
+    [row] = decode_audio(synth_wav_media(ok)).collect()
+    assert (row["media_id"], row["n_frames"], row["bits_per_sample"]) == \
+        (-5, 36, 16)
+
+
+def test_scan_payloads_keeps_wide_ints_and_nulls_exact(spark):
+    """Nullable long columns go through Arrow as pandas Int64, so a value
+    above 2**53 next to a NULL is not rounded through float64."""
+    from pyspark.sql.types import (
+        IntegerType, LongType, StructField, StructType)
+
+    from lswms_forage_etl_spark.operators.multimodal import scan_payloads
+    big = 2 ** 53 + 1
+    media = spark.createDataFrame(
+        [(1, b"\x01"), (2, b"\x02\x02"), (3, None)],
+        "media_id long, payload binary")
+    schema = StructType([
+        StructField("media_id", LongType(), False),
+        StructField("wide", LongType(), True),
+        StructField("n", IntegerType(), True),
+    ])
+
+    def rows(mid, buf):
+        if buf is None:
+            yield mid, None, None
+            return
+        yield mid, big + mid, len(buf)
+        yield mid, None, None
+
+    got = sorted(map(tuple, scan_payloads(media, "media_id", schema,
+                                          rows).collect()),
+                 key=lambda r: (r[0], r[1] is None))
+    assert got == [(1, big + 1, 1), (1, None, None),
+                   (2, big + 2, 2), (2, None, None), (3, None, None)]
+
+
+def test_scan_payloads_error_reaches_the_action(spark):
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from lswms_forage_etl_spark.operators.multimodal import scan_payloads
+    media = spark.createDataFrame([(1, b"junk")],
+                                  "media_id long, payload binary")
+
+    def rows(mid, buf):
+        raise ValueError(f"bad magic {buf[:2]!r} in payload {mid}")
+
+    lazy = scan_payloads(media, "media_id",
+                         StructType([StructField("media_id", LongType())]),
+                         rows)
+    with pytest.raises(Exception, match="bad magic b'ju' in payload 1"):
+        lazy.collect()

@@ -123,3 +123,41 @@ def test_lifecycle_failure_fails_one_query_and_gate_continues(
     assert "PASS  stub_query" in out
     assert "1 pass, 1 fail" in out
     lifecycle.assert_no_cached_rdds(spark, context="gate-continue-test")
+
+
+class _LoggingEntry(_StubEntry):
+    """A correct query that writes one line to fd 2 while it runs — the
+    stream the JVM's log4j output shares."""
+
+    def __init__(self, line: str):
+        super().__init__(empty=False)
+        self.line = line
+
+    def queries(self):
+        import os
+        good = super().queries()["stub_query"]
+
+        def q(spark, sf_dir):
+            os.write(2, self.line.encode() + b"\n")
+            return good(spark, sf_dir)
+        return {"stub_query": q}
+
+
+def test_scheduler_error_line_fails_a_correct_query(gate, capsys):
+    rc = gate(_LoggingEntry(
+        "26/10/20 01:02:03 ERROR DAGScheduler: Failed to update "
+        "accumulator 4521 (org.apache.spark.sql.execution.metric."
+        "SQLMetric) for task 7"))
+    out = capsys.readouterr().out
+    assert rc == 1
+    assert "FAIL  stub_query: 1 scheduler ERROR line(s)" in out
+    assert "0 pass, 1 fail" in out
+
+
+def test_scheduler_warn_line_does_not_fail(gate, capsys):
+    rc = gate(_LoggingEntry(
+        "26/10/20 01:02:03 WARN DAGScheduler: Broadcasting large task "
+        "binary with size 1100.0 KiB"))
+    out = capsys.readouterr().out
+    assert rc == 0
+    assert "PASS  stub_query" in out

@@ -1,6 +1,9 @@
 """Local replica of the driver's correctness gate: run every queries()
 entry on Spark AND its oracle_sql() on DuckDB over the same parquet dir,
 compare row-count + column names + order-insensitive value-hash.
+The JVM's stderr goes to a temp log (its path is printed first); a
+query during which Spark's scheduler or executor logs an ERROR line
+fails, even when its hash matches.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -114,26 +117,28 @@ def type_problems(con, sql, spark_dtypes):
 
 
 def main():
+    import tempfile
+
     import duckdb
     import __spark_entry__ as entrymod
     from lswms_forage_etl_spark import get_spark
     from lswms_forage_etl_spark import lifecycle
+    from perfbench.tracing import scheduler_errors
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    spark = get_spark("oracle-check")
-    con = duckdb.connect()
-    for t in entrymod.TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    # the JVM and its Python workers inherit fd 2: send it to a file
+    # before the session starts, so each query's scheduler ERROR lines
+    # can be counted (a correct result that logged one still fails)
+    fd, jvm_log = tempfile.mkstemp(prefix="check_oracle-", suffix=".log")
+    print(f"JVM log: {jvm_log}")
+    saved_fd2 = os.dup(2)
+    os.dup2(fd, 2)
+    os.close(fd)
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    n_pass = n_fail = n_rows_only = 0
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    def grade(name, fn) -> tuple[str, str]:
+        """(PASS|FAIL|ROWS, message) for one query."""
         t0 = time.time()
         err = None
         try:
@@ -162,28 +167,21 @@ def main():
             for k in list(jmap.keySet().toArray()):
                 jmap.get(k).unpersist(False)
         if err:
-            print(f"FAIL  {name}: {err}")
-            n_fail += 1
-            continue
+            return "FAIL", err
         if not srows and name not in EMPTY_OK:
-            print(f"FAIL  {name}: trivially empty (0 spark rows — an "
-                  f"empty result hash-passes vacuously; add to EMPTY_OK "
-                  f"with a justification if genuinely expected)")
-            n_fail += 1
-            continue
+            return "FAIL", (
+                "trivially empty (0 spark rows — an empty result "
+                "hash-passes vacuously; add to EMPTY_OK with a "
+                "justification if genuinely expected)")
         if name not in oracles:
-            print(f"ROWS  {name}: {len(srows)} rows (no oracle) "
-                  f"[{time.time()-t0:.1f}s]")
-            n_rows_only += 1
-            continue
+            return "ROWS", (f"{len(srows)} rows (no oracle) "
+                            f"[{time.time()-t0:.1f}s]")
         try:
             res = con.execute(oracles[name])
             dcols = [d[0] for d in res.description]
             drows = res.fetchall()
         except Exception as e:
-            print(f"FAIL  {name}: duckdb error: {e}")
-            n_fail += 1
-            continue
+            return "FAIL", f"duckdb error: {e}"
         problems = type_problems(con, oracles[name], sdtypes)
         if len(srows) != len(drows):
             problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
@@ -202,13 +200,34 @@ def main():
                 if do:
                     problems.append(f"duck-only={do}")
         if problems:
-            print(f"FAIL  {name}: {'; '.join(str(p) for p in problems)}")
-            n_fail += 1
-        else:
-            print(f"PASS  {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
-            n_pass += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
-    return 1 if n_fail else 0
+            return "FAIL", "; ".join(str(p) for p in problems)
+        return "PASS", f"{len(srows)} rows [{time.time()-t0:.1f}s]"
+
+    counts = {"PASS": 0, "FAIL": 0, "ROWS": 0}
+    try:
+        spark = get_spark("oracle-check")
+        con = duckdb.connect()
+        for t in entrymod.TABLES:
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        oracles = entrymod.oracle_sql()
+        for name, fn in entrymod.queries().items():
+            if only and name not in only:
+                continue
+            before = scheduler_errors(jvm_log)
+            status, msg = grade(name, fn)
+            n_err = scheduler_errors(jvm_log) - before
+            if n_err:
+                status, msg = "FAIL", (f"{n_err} scheduler ERROR line(s) "
+                                       f"(graded {status}: {msg})")
+            print(f"{status:<5} {name}: {msg}")
+            counts[status] += 1
+    finally:
+        os.dup2(saved_fd2, 2)
+        os.close(saved_fd2)
+    print(f"\n{counts['PASS']} pass, {counts['FAIL']} fail, "
+          f"{counts['ROWS']} rows-only")
+    return 1 if counts["FAIL"] else 0
 
 
 if __name__ == "__main__":
