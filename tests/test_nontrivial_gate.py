@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import importlib.util
 import sys
+import tempfile
 from pathlib import Path
 
 import pytest
@@ -54,8 +55,9 @@ class _StubEntry:
 
 
 @pytest.fixture()
-def gate(monkeypatch, spark):
+def gate(monkeypatch, spark, tmp_path):
     co = _load_check_oracle()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))  # JVM log
 
     def run(entry, argv_extra=(), empty_ok=None):
         monkeypatch.setitem(sys.modules, "__spark_entry__", entry)
