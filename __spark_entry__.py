@@ -3706,11 +3706,10 @@ def q_mm_decode_vp8(spark, sf):
 def q_mm_scan_tarbz2(spark, sf):
     """Archive-container ingest, .tar.bz2 (round 15, VERDICT r14 next
     #2): stdlib tarfile + stdlib bz2 as INDEPENDENT writers (odd
-    archives = two concatenated bz2 streams, the pbzip2 shape); the
-    FROM-SCRATCH bzip2 decoder (sources/bzip2.py: bit-level Huffman
-    groups, MTF'd selectors, RLE2, inverse MTF, inverse BWT, RLE1,
-    both CRC layers verified) feeds the ustar walk. Same
-    member/fingerprint oracle as mm_scan_tar."""
+    archives = two concatenated bz2 streams, the pbzip2 shape); a
+    stream loop over the stdlib C bzip2 decoder (sources/bzip2.py,
+    every concatenated stream read, trailing data rejected) feeds the
+    ustar walk. Same member/fingerprint oracle as mm_scan_tar."""
     from lswms_forage_etl_spark.sources.archive import (
         scan_tar_members, synth_tarbz2_media)
     return scan_tar_members(
@@ -3722,10 +3721,10 @@ def q_mm_scan_tarxz(spark, sf):
     """Archive-container ingest, .tar.xz (round 15, VERDICT r14 next
     #2): stdlib tarfile + stdlib lzma as INDEPENDENT writers (odd
     archives = two concatenated xz streams with stream padding, the
-    second using CHECK_CRC32); the FROM-SCRATCH xz container walk +
-    LZMA2/LZMA range decoder (sources/xz.py: block headers, index and
-    footer verified record-for-record, CRC32/CRC64-ECMA/SHA-256
-    checks over the uncompressed bytes) feeds the ustar walk. Same
+    second using CHECK_CRC32); a stream loop over the stdlib C xz
+    decoder (sources/xz.py: every concatenated stream read, stream
+    padding checked, lzma.decompress avoided because it drops the
+    streams after padding) feeds the ustar walk. Same
     member/fingerprint oracle as mm_scan_tar."""
     from lswms_forage_etl_spark.sources.archive import (
         scan_tar_members, synth_tarxz_media)

@@ -271,14 +271,15 @@ def parse_tar(buf: bytes) -> list[tuple[str, bytes]]:
     if buf[:2] == b"\x1f\x8b":
         buf = gunzip_members(buf)
     elif buf[:3] == b"BZh":
-        # .tar.bz2 — from-scratch bzip2 decode (multi-stream handled
-        # inside, mirroring the gzip member loop above)
+        # .tar.bz2 — stdlib bz2 through a stream loop (concatenated
+        # streams, mirroring the gzip member loop above)
         from lswms_forage_etl_spark.sources.bzip2 import (
             decompress as _bunzip2)
         buf = _bunzip2(buf)
     elif buf[:6] == b"\xfd7zXZ\x00":
-        # .tar.xz — from-scratch xz/LZMA2 decode (concatenated
-        # streams + padding handled inside)
+        # .tar.xz — stdlib lzma through a stream loop (concatenated
+        # streams + stream padding; never lzma.decompress, which drops
+        # the streams after padding)
         from lswms_forage_etl_spark.sources.xz import (
             decompress as _unxz)
         buf = _unxz(buf)
@@ -540,8 +541,8 @@ def synth_tarbz2_media(docs: DataFrame) -> DataFrame:
     """(archive_id, payload): the .tar.bz2 composite (round 15).
     INDEPENDENT writers: stdlib tarfile + stdlib bz2; odd archives
     are TWO concatenated bz2 streams (legal, what pbzip2 emits) so
-    the graded path exercises the from-scratch decoder's stream loop,
-    not just one stream."""
+    the graded path exercises the decoder's stream loop, not just one
+    stream."""
     import bz2
 
     def encode(aid: int, rows: list[tuple]) -> bytes:
@@ -559,9 +560,8 @@ def synth_tarxz_media(docs: DataFrame) -> DataFrame:
     INDEPENDENT writers: stdlib tarfile + stdlib lzma; odd archives
     are TWO concatenated xz streams separated by 4 bytes of stream
     padding (both legal per the xz spec) and the second stream uses
-    CHECK_CRC32, so the graded path exercises the from-scratch
-    container walk's stream loop, padding rule, and both CRC check
-    variants."""
+    CHECK_CRC32, so the graded path exercises the decoder's stream
+    loop, padding rule, and both CRC check variants."""
     import lzma
 
     def encode(aid: int, rows: list[tuple]) -> bytes:

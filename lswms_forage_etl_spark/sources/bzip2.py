@@ -1,255 +1,30 @@
-"""From-scratch bzip2 DECODER (round 15, VERDICT r14 next #2): the
-member codec behind `.tar.bz2` composite scans, pinned against the
-INDEPENDENT stdlib `bz2` writer (the round-14 tar.gz discipline — a
-real third-party byte producer catches framing bugs twin
-self-consistency cannot).
+"""bzip2 member codec behind `.tar.bz2` composite scans: a stream loop
+over the stdlib C decoder (`bz2.BZ2Decompressor`).
 
-Implements the full public format (there is no spec document; the
-format is fixed by the reference implementation and widely documented):
-stream header `BZh<level>`, per-block 48-bit magics, bit-level Huffman
-groups with MTF'd selectors and delta-coded code lengths, RLE2
-(RUNA/RUNB zero-run) decode, inverse MTF over the used-symbol map,
-inverse BWT via the origPtr counting-sort walk, final RLE1 (4-byte run
-+ count) decode, per-block and combined CRCs verified (bzip2's CRC32
-is the MSB-first/non-reflected variant), and CONCATENATED streams
-(stdlib-decompress-compatible). The deprecated `randomized` block bit
-raises — honest gate.
-
-Reference counterpart: none (the reference ETL reads no archives);
-this is the beyond-reference LLM-pipeline ingest surface.
+Concatenated streams are legal (what pbzip2 emits), so every stream is
+read: a fresh decompressor starts on the previous one's `unused_data`
+until the buffer is empty. Unlike `bz2.decompress`, which ignores
+trailing bytes that are not a stream, anything after the last stream
+raises. Errors surface as `ValueError`, the type every other archive
+reader here raises.
 """
 
 from __future__ import annotations
 
-# ------------------------------------------------------------- crc32b
-
-# bzip2 CRC32: poly 0x04C11DB7, MSB-first (NOT the reflected zlib one)
-_CRC_TABLE = []
-for _i in range(256):
-    _c = _i << 24
-    for _ in range(8):
-        _c = ((_c << 1) ^ 0x04C11DB7) if (_c & 0x80000000) else (_c << 1)
-    _CRC_TABLE.append(_c & 0xFFFFFFFF)
-
-
-def _crc32b(data: bytes, crc: int = 0xFFFFFFFF) -> int:
-    for b in data:
-        crc = ((crc << 8) & 0xFFFFFFFF) ^ _CRC_TABLE[((crc >> 24) ^ b)
-                                                     & 0xFF]
-    return crc
-
-
-class _Bits:
-    """MSB-first bit reader."""
-
-    def __init__(self, buf: bytes, pos_bits: int = 0):
-        self.buf = buf
-        self.pos = pos_bits
-
-    def read(self, n: int) -> int:
-        v = 0
-        buf, pos = self.buf, self.pos
-        if pos + n > len(buf) * 8:
-            raise ValueError("bzip2: truncated stream")
-        for _ in range(n):
-            v = (v << 1) | ((buf[pos >> 3] >> (7 - (pos & 7))) & 1)
-            pos += 1
-        self.pos = pos
-        return v
-
-
-def _decode_block(bits: _Bits) -> bytes:
-    if bits.read(1):
-        raise NotImplementedError(
-            "bzip2: deprecated randomized blocks not supported")
-    orig_ptr = bits.read(24)
-
-    # used-symbol map: 16-bit coarse map + 16-bit fine maps
-    used = []
-    coarse = bits.read(16)
-    for i in range(16):
-        if coarse & (0x8000 >> i):
-            fine = bits.read(16)
-            for j in range(16):
-                if fine & (0x8000 >> j):
-                    used.append(i * 16 + j)
-    if not used:
-        raise ValueError("bzip2: empty symbol map")
-    alpha = len(used) + 2                 # RUNA, RUNB, MTFV.., EOB
-
-    n_groups = bits.read(3)
-    if not 2 <= n_groups <= 6:
-        raise ValueError("bzip2: bad group count")
-    n_selectors = bits.read(15)
-    # selectors: unary count of 1-bits, then inverse-MTF over group ids
-    mtf_g = list(range(n_groups))
-    selectors = []
-    for _ in range(n_selectors):
-        j = 0
-        while bits.read(1):
-            j += 1
-            if j >= n_groups:
-                raise ValueError("bzip2: selector overflow")
-        g = mtf_g.pop(j)
-        mtf_g.insert(0, g)
-        selectors.append(g)
-
-    # per-group delta-coded code lengths -> canonical decode tables
-    tables = []
-    for _ in range(n_groups):
-        ln = bits.read(5)
-        lengths = []
-        for _ in range(alpha):
-            while bits.read(1):
-                ln += 1 if bits.read(1) == 0 else -1
-                if not 1 <= ln <= 23:
-                    raise ValueError("bzip2: bad code length")
-            lengths.append(ln)
-        min_len, max_len = min(lengths), max(lengths)
-        # canonical decode tables (the limit/base/perm construction):
-        # perm lists symbols by (code length, alphabet order); base[l]
-        # starts as the count of symbols shorter than l, then becomes
-        # the subtraction offset; limit[l] is the largest code of
-        # length l.
-        perm = [s for l in range(min_len, max_len + 1)
-                for s in range(alpha) if lengths[s] == l]
-        base = [0] * (max_len + 2)
-        for s in range(alpha):
-            base[lengths[s] + 1] += 1
-        for i in range(1, max_len + 2):
-            base[i] += base[i - 1]
-        limit = [0] * (max_len + 2)
-        vec = 0
-        for l in range(min_len, max_len + 1):
-            vec += base[l + 1] - base[l]
-            limit[l] = vec - 1
-            vec <<= 1
-        for l in range(min_len + 1, max_len + 1):
-            base[l] = ((limit[l - 1] + 1) << 1) - base[l]
-        base[min_len] = 0
-        tables.append((min_len, max_len, limit, base, perm))
-
-    # Huffman-decode the MTF/RLE2 symbol stream
-    def read_sym(tbl):
-        min_len, max_len, limit, base, perm = tbl
-        l = min_len
-        v = bits.read(min_len)
-        while v > limit[l]:
-            l += 1
-            if l > max_len:
-                raise ValueError("bzip2: Huffman walk past max length")
-            v = (v << 1) | bits.read(1)
-        return perm[v - base[l]]
-
-    eob = alpha - 1
-    mtf = list(used)
-    bwt = bytearray()
-    group_pos = 0
-    cur_tbl = None
-    run_len = 0
-    run_bit = 0
-    while True:
-        if group_pos == 0:
-            if not selectors:
-                raise ValueError("bzip2: ran out of selectors")
-            cur_tbl = tables[selectors.pop(0)]
-            group_pos = 50
-        group_pos -= 1
-        s = read_sym(cur_tbl)
-        if s <= 1:                        # RUNA / RUNB zero runs
-            run_len += (s + 1) << run_bit
-            run_bit += 1
-            continue
-        if run_len:
-            bwt.extend(bytes([mtf[0]]) * run_len)
-            run_len = run_bit = 0
-        if s == eob:
-            break
-        v = mtf.pop(s - 1)               # inverse MTF
-        mtf.insert(0, v)
-        bwt.append(v)
-    if run_len:
-        # EOB flushed above; a run can only end before EOB
-        raise ValueError("bzip2: dangling zero run")
-
-    # inverse BWT (counting walk)
-    n = len(bwt)
-    if orig_ptr >= n:
-        raise ValueError("bzip2: origPtr out of range")
-    counts = [0] * 256
-    for b in bwt:
-        counts[b] += 1
-    starts = [0] * 256
-    tot = 0
-    for i in range(256):
-        starts[i] = tot
-        tot += counts[i]
-    t_vec = [0] * n
-    seen = [0] * 256
-    for i, b in enumerate(bwt):
-        t_vec[starts[b] + seen[b]] = i
-        seen[b] += 1
-    out = bytearray(n)
-    p = t_vec[orig_ptr]
-    for i in range(n):
-        out[i] = bwt[p]
-        p = t_vec[p]
-
-    # RLE1 decode: 4 identical bytes are followed by a count byte
-    res = bytearray()
-    i = 0
-    while i < n:
-        b = out[i]
-        run = 1
-        while i + run < n and run < 4 and out[i + run] == b:
-            run += 1
-        if run == 4:
-            if i + 4 >= n:
-                raise ValueError("bzip2: truncated RLE1 run")
-            extra = out[i + 4]
-            res.extend(bytes([b]) * (4 + extra))
-            i += 5
-        else:
-            res.extend(bytes([b]) * run)
-            i += run
-    return bytes(res)
+import bz2
 
 
 def decompress(buf: bytes) -> bytes:
-    """Full-stream decode; handles concatenated streams like stdlib
-    `bz2.decompress`."""
-    out = bytearray()
-    pos_bits = 0
-    total_bits = len(buf) * 8
-    while True:
-        # stream header (byte-aligned)
-        byte_pos = pos_bits // 8
-        if buf[byte_pos:byte_pos + 3] != b"BZh":
-            raise ValueError("bzip2: bad stream magic")
-        level = buf[byte_pos + 3] - 0x30
-        if not 1 <= level <= 9:
-            raise ValueError("bzip2: bad block-size level")
-        bits = _Bits(buf, (byte_pos + 4) * 8)
-        combined = 0
-        while True:
-            magic = bits.read(48)
-            if magic == 0x314159265359:
-                want_crc = bits.read(32)
-                block = _decode_block(bits)
-                got_crc = (~_crc32b(block)) & 0xFFFFFFFF
-                if got_crc != want_crc:
-                    raise ValueError("bzip2: block CRC mismatch")
-                combined = (((combined << 1) | (combined >> 31))
-                            ^ got_crc) & 0xFFFFFFFF
-                out.extend(block)
-            elif magic == 0x177245385090:
-                want = bits.read(32)
-                if want != combined:
-                    raise ValueError("bzip2: stream CRC mismatch")
-                break
-            else:
-                raise ValueError("bzip2: bad block magic")
-        # streams are byte-aligned; skip pad bits, maybe another stream
-        pos_bits = (bits.pos + 7) & ~7
-        if pos_bits >= total_bits:
-            return bytes(out)
+    """All concatenated bzip2 streams of `buf`, decoded; `ValueError` on
+    corrupt, truncated or trailing data."""
+    out = []
+    while buf:
+        d = bz2.BZ2Decompressor()
+        try:
+            out.append(d.decompress(buf))
+        except OSError as e:
+            raise ValueError(f"bzip2: {e}") from e
+        if not d.eof:
+            raise ValueError("bzip2: truncated stream")
+        buf = d.unused_data
+    return b"".join(out)

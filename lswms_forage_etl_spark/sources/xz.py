@@ -1,502 +1,34 @@
-"""From-scratch .xz container + LZMA2/LZMA DECODER (round 15, VERDICT
-r14 next #2): the member codec behind `.tar.xz` composite scans,
-pinned against the INDEPENDENT stdlib `lzma` writer (same discipline
-as tar.gz/tar.bz2 — a real third-party byte producer catches framing
-bugs twin self-consistency cannot).
+""".xz member codec behind `.tar.xz` composite scans: a stream loop over
+the stdlib C decoder (`lzma.LZMADecompressor(FORMAT_XZ)`).
 
-Implements the public formats end to end:
-
-- xz container: stream header (magic + flags + CRC32), block headers
-  (filter chain — only the LZMA2 filter 0x21 is accepted, honest gate
-  otherwise), 4-byte-aligned compressed data, integrity check over the
-  uncompressed bytes (None/CRC32/CRC64/SHA256 — CRC64-ECMA built
-  table-driven here), index (record-for-record verified against the
-  blocks actually read), stream footer (backward size verified), and
-  CONCATENATED streams with 4-byte null padding, matching stdlib
-  `lzma.decompress`.
-- LZMA2 chunk layer: dict/state/props reset control bytes,
-  uncompressed chunks, size-framed LZMA chunks.
-- LZMA proper: binary range decoder with adaptive 11-bit
-  probabilities, literal decoding with match-byte context after match
-  states, length coders, position-slot bit trees, aligned/spec-pos
-  reverse trees, and the 4-slot rep-distance machine.
-
-Everything is derived from the published format specifications
-(xz file format spec; LZMA spec as published with the SDK) and
-implemented fresh in Python. Reference counterpart: none.
+The loop is load-bearing: `lzma.decompress` silently drops every
+stream after xz stream padding (pinned in tests/test_bzip2_xz.py), so
+never replace it with that call. Per the xz file format, streams may
+be concatenated and each may be followed by stream padding, a run of
+NUL bytes whose length is a multiple of 4; any other run, trailing
+garbage, or the legacy `.lzma` alone format raises. Errors surface as
+`ValueError`, the type every other archive reader here raises.
 """
 
 from __future__ import annotations
 
-import hashlib
-import zlib
-
-# ---------------------------------------------------------- CRC64-ECMA
-
-_C64_POLY = 0xC96C5795D7870F42
-_C64_TABLE = []
-for _i in range(256):
-    _c = _i
-    for _ in range(8):
-        _c = (_c >> 1) ^ (_C64_POLY if _c & 1 else 0)
-    _C64_TABLE.append(_c)
-
-
-def crc64(data: bytes, crc: int = 0) -> int:
-    crc ^= 0xFFFFFFFFFFFFFFFF
-    for b in data:
-        crc = (crc >> 8) ^ _C64_TABLE[(crc ^ b) & 0xFF]
-    return crc ^ 0xFFFFFFFFFFFFFFFF
-
-
-# --------------------------------------------------------------- LZMA
-
-_K_NUM_STATES = 12
-
-
-class _RangeDec:
-    def __init__(self, buf: bytes, pos: int):
-        if buf[pos] != 0:
-            raise ValueError("lzma: nonzero first range-coder byte")
-        self.code = int.from_bytes(buf[pos + 1:pos + 5], "big")
-        self.range = 0xFFFFFFFF
-        self.buf = buf
-        self.pos = pos + 5
-
-    def _norm(self):
-        if self.range < (1 << 24):
-            self.range = (self.range << 8) & 0xFFFFFFFF
-            self.code = ((self.code << 8) | self.buf[self.pos]) \
-                & 0xFFFFFFFF
-            self.pos += 1
-
-    def bit(self, probs: list[int], i: int) -> int:
-        p = probs[i]
-        bound = (self.range >> 11) * p
-        if self.code < bound:
-            self.range = bound
-            probs[i] = p + ((2048 - p) >> 5)
-            b = 0
-        else:
-            self.range -= bound
-            self.code -= bound
-            probs[i] = p - (p >> 5)
-            b = 1
-        self._norm()
-        return b
-
-    def direct(self, n: int) -> int:
-        res = 0
-        for _ in range(n):
-            self.range >>= 1
-            self.code = (self.code - self.range) & 0xFFFFFFFF
-            t = 0 - (self.code >> 31)
-            self.code = (self.code + (self.range & t)) & 0xFFFFFFFF
-            if self.code == self.range:
-                raise ValueError("lzma: range decoder corrupt")
-            res = (res << 1) + (t + 1)
-            self._norm()
-        return res
-
-    def tree(self, probs: list[int], nbits: int, off: int = 0) -> int:
-        m = 1
-        for _ in range(nbits):
-            m = (m << 1) | self.bit(probs, off + m)
-        return m - (1 << nbits)
-
-    def tree_rev(self, probs: list[int], nbits: int, off: int = 0) -> int:
-        m = 1
-        sym = 0
-        for i in range(nbits):
-            b = self.bit(probs, off + m)
-            m = (m << 1) | b
-            sym |= b << i
-        return sym
-
-
-def _probs(n: int) -> list[int]:
-    return [1024] * n
-
-
-class _LenDec:
-    def __init__(self):
-        self.choice = _probs(2)
-        self.low = [_probs(8) for _ in range(16)]
-        self.mid = [_probs(8) for _ in range(16)]
-        self.high = _probs(256)
-
-    def decode(self, rd: _RangeDec, pos_state: int) -> int:
-        if rd.bit(self.choice, 0) == 0:
-            return rd.tree(self.low[pos_state], 3)
-        if rd.bit(self.choice, 1) == 0:
-            return 8 + rd.tree(self.mid[pos_state], 3)
-        return 16 + rd.tree(self.high, 8)
-
-
-class _Lzma:
-    """LZMA decoder state; the output window is the shared LZMA2
-    dictionary (a plain bytearray — dict sizes at our member scale
-    never need a ring)."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.lc = self.lp = self.pb = None
-        self.reset_state()
-
-    def set_props(self, props: int):
-        if props >= 9 * 5 * 5:
-            raise ValueError("lzma: bad props byte")
-        self.lc = props % 9
-        self.lp = (props // 9) % 5
-        self.pb = props // 45
-
-    def reset_dict(self):
-        self.out = bytearray()
-
-    def reset_state(self):
-        self.state = 0
-        self.reps = [0, 0, 0, 0]
-        self.is_match = _probs(_K_NUM_STATES << 4)
-        self.is_rep = _probs(_K_NUM_STATES)
-        self.is_rep_g0 = _probs(_K_NUM_STATES)
-        self.is_rep_g1 = _probs(_K_NUM_STATES)
-        self.is_rep_g2 = _probs(_K_NUM_STATES)
-        self.is_rep0_long = _probs(_K_NUM_STATES << 4)
-        self.pos_slot = [_probs(64) for _ in range(4)]
-        self.spec_pos = _probs(115)
-        self.align = _probs(16)
-        self.len_dec = _LenDec()
-        self.rep_len_dec = _LenDec()
-        self.lit = None                  # sized on first use (lc/lp)
-
-    def _lit_probs(self):
-        if self.lit is None:
-            self.lit = [_probs(0x300)
-                        for _ in range(1 << (self.lc + self.lp))]
-        return self.lit
-
-    def decode_chunk(self, rd: _RangeDec, unpacked: int):
-        out = self.out
-        target = len(out) + unpacked
-        lp_mask = (1 << self.lp) - 1
-        pb_mask = (1 << self.pb) - 1
-        lit = self._lit_probs()
-        while len(out) < target:
-            pos = len(out)
-            pos_state = pos & pb_mask
-            state = self.state
-            if rd.bit(self.is_match, (state << 4) + pos_state) == 0:
-                # literal
-                prev = out[-1] if out else 0
-                lst = ((pos & lp_mask) << self.lc) \
-                    + (prev >> (8 - self.lc))
-                probs = lit[lst]
-                sym = 1
-                if state >= 7:
-                    mb = out[-self.reps[0] - 1]
-                    while sym < 0x100:
-                        match_bit = (mb >> 7) & 1
-                        mb = (mb << 1) & 0xFF
-                        b = rd.bit(probs,
-                                   ((1 + match_bit) << 8) + sym)
-                        sym = (sym << 1) | b
-                        if match_bit != b:
-                            break
-                while sym < 0x100:
-                    sym = (sym << 1) | rd.bit(probs, sym)
-                out.append(sym & 0xFF)
-                self.state = (0 if state < 4
-                              else state - 3 if state < 10
-                              else state - 6)
-                continue
-            # match
-            if rd.bit(self.is_rep, state) == 0:
-                # new distance
-                self.reps[3] = self.reps[2]
-                self.reps[2] = self.reps[1]
-                self.reps[1] = self.reps[0]
-                ln = self.len_dec.decode(rd, pos_state) + 2
-                slot_ctx = min(ln - 2, 3)
-                slot = rd.tree(self.pos_slot[slot_ctx], 6)
-                if slot < 4:
-                    dist = slot
-                else:
-                    nd = (slot >> 1) - 1
-                    dist = (2 | (slot & 1)) << nd
-                    if slot < 14:
-                        dist += rd.tree_rev(self.spec_pos, nd,
-                                            dist - slot - 1)
-                    else:
-                        dist += rd.direct(nd - 4) << 4
-                        dist += rd.tree_rev(self.align, 4)
-                if dist == 0xFFFFFFFF:
-                    raise ValueError(
-                        "lzma2: end marker inside size-framed chunk")
-                self.reps[0] = dist
-                self.state = 7 if state < 7 else 10
-            else:
-                if rd.bit(self.is_rep_g0, state) == 0:
-                    if rd.bit(self.is_rep0_long,
-                              (state << 4) + pos_state) == 0:
-                        # short rep: one byte at rep0
-                        self.state = 9 if state < 7 else 11
-                        out.append(out[-self.reps[0] - 1])
-                        continue
-                else:
-                    if rd.bit(self.is_rep_g1, state) == 0:
-                        dist = self.reps[1]
-                        self.reps[1] = self.reps[0]
-                    elif rd.bit(self.is_rep_g2, state) == 0:
-                        dist = self.reps[2]
-                        self.reps[2] = self.reps[1]
-                        self.reps[1] = self.reps[0]
-                    else:
-                        dist = self.reps[3]
-                        self.reps[3] = self.reps[2]
-                        self.reps[2] = self.reps[1]
-                        self.reps[1] = self.reps[0]
-                    self.reps[0] = dist
-                ln = self.rep_len_dec.decode(rd, pos_state) + 2
-                self.state = 8 if state < 7 else 11
-            if self.reps[0] >= len(out):
-                raise ValueError("lzma: match distance past dict start")
-            d = self.reps[0] + 1
-            for _ in range(ln):
-                out.append(out[-d])
-            if len(out) > target:
-                raise ValueError("lzma2: chunk overran unpacked size")
-
-
-def lzma2_decompress(buf: bytes, pos: int, end: int) -> bytes:
-    """Decode one LZMA2 filter payload occupying buf[pos:end]."""
-    dec = _Lzma()
-    have_props = False
-    while True:
-        if pos >= end:
-            raise ValueError("lzma2: missing end-of-stream control")
-        c = buf[pos]
-        pos += 1
-        if c == 0x00:
-            break
-        if c in (0x01, 0x02):
-            if c == 0x01:
-                dec.reset_dict()
-            size = int.from_bytes(buf[pos:pos + 2], "big") + 1
-            pos += 2
-            if pos + size > end:
-                raise ValueError("lzma2: truncated uncompressed chunk")
-            dec.out.extend(buf[pos:pos + size])
-            pos += size
-            # an uncompressed chunk leaves LZMA state undefined; the
-            # spec requires the next LZMA chunk to reset it, and
-            # resetting here enforces that invariant unconditionally
-            dec.reset_state()
-            continue
-        if c < 0x80:
-            raise ValueError(f"lzma2: bad control byte {c:#x}")
-        unpacked = ((c & 0x1F) << 16) \
-            + int.from_bytes(buf[pos:pos + 2], "big") + 1
-        packed = int.from_bytes(buf[pos + 2:pos + 4], "big") + 1
-        pos += 4
-        mode = (c >> 5) & 0x3
-        if mode >= 2:
-            dec.set_props(buf[pos])
-            pos += 1
-            have_props = True
-        if not have_props:
-            raise ValueError("lzma2: chunk before any props")
-        if mode >= 1:
-            dec.reset_state()
-        if mode == 3:
-            dec.reset_dict()
-        if pos + packed > end:
-            raise ValueError("lzma2: truncated LZMA chunk")
-        rd = _RangeDec(buf, pos)
-        dec.decode_chunk(rd, unpacked)
-        if rd.pos > pos + packed:
-            raise ValueError("lzma2: chunk read past packed size")
-        pos += packed
-    return bytes(dec.out)
-
-
-# ------------------------------------------------------- xz container
-
-_XZ_MAGIC = b"\xfd7zXZ\x00"
-_FOOTER_MAGIC = b"YZ"
-_CHECKS = {0x00: ("none", 0), 0x01: ("crc32", 4),
-           0x04: ("crc64", 8), 0x0A: ("sha256", 32)}
-
-
-def _vli(buf: bytes, pos: int) -> tuple[int, int]:
-    v = 0
-    for i in range(9):
-        b = buf[pos + i]
-        v |= (b & 0x7F) << (7 * i)
-        if not b & 0x80:
-            return v, pos + i + 1
-    raise ValueError("xz: VLI too long")
-
-
-def _verify_check(kind: str, data: bytes, field: bytes):
-    if kind == "none":
-        return
-    if kind == "crc32":
-        want = int.from_bytes(field, "little")
-        if zlib.crc32(data) & 0xFFFFFFFF != want:
-            raise ValueError("xz: CRC32 check mismatch")
-    elif kind == "crc64":
-        want = int.from_bytes(field, "little")
-        if crc64(data) != want:
-            raise ValueError("xz: CRC64 check mismatch")
-    elif kind == "sha256":
-        if hashlib.sha256(data).digest() != field:
-            raise ValueError("xz: SHA-256 check mismatch")
+import lzma
 
 
 def decompress(buf: bytes) -> bytes:
-    """Full .xz decode; handles concatenated streams + stream padding
-    like stdlib `lzma.decompress`."""
-    out = bytearray()
-    pos = 0
-    n = len(buf)
-    while pos < n:
-        # stream padding between streams: 4-byte-aligned null runs
-        if buf[pos] == 0:
-            run = 0
-            while pos + run < n and buf[pos + run] == 0:
-                run += 1
-            if run % 4 or pos + run < n and \
-                    buf[pos + run:pos + run + 6] != _XZ_MAGIC:
-                raise ValueError("xz: bad stream padding")
-            pos += run
-            if pos >= n:
-                break
-        if buf[pos:pos + 6] != _XZ_MAGIC:
-            raise ValueError("xz: bad stream magic")
-        if buf[pos + 6] != 0 or buf[pos + 7] not in _CHECKS:
-            raise NotImplementedError(
-                f"xz: unsupported stream flags "
-                f"{buf[pos + 6]:#x}{buf[pos + 7]:02x}")
-        flags = buf[pos + 6:pos + 8]
-        if zlib.crc32(flags) & 0xFFFFFFFF != int.from_bytes(
-                buf[pos + 8:pos + 12], "little"):
-            raise ValueError("xz: stream header CRC mismatch")
-        check_kind, check_len = _CHECKS[buf[pos + 7]]
-        pos += 12
-
-        records = []                     # (unpadded_size, unc_size)
-        while True:
-            hdr_start = pos
-            size_byte = buf[pos]
-            if size_byte == 0x00:        # index indicator
-                break
-            hdr_size = (size_byte + 1) * 4
-            hdr = buf[pos:pos + hdr_size]
-            if zlib.crc32(hdr[:-4]) & 0xFFFFFFFF != int.from_bytes(
-                    hdr[-4:], "little"):
-                raise ValueError("xz: block header CRC mismatch")
-            bflags = hdr[1]
-            n_filters = (bflags & 0x03) + 1
-            if bflags & 0x3C:
-                raise ValueError("xz: reserved block flags set")
-            p = 2
-            comp_size = unc_size = None
-            if bflags & 0x40:
-                comp_size, p = _vli(hdr, p)
-            if bflags & 0x80:
-                unc_size, p = _vli(hdr, p)
-            if n_filters != 1:
-                raise NotImplementedError(
-                    "xz: filter chains beyond a single LZMA2 filter "
-                    "are not supported")
-            fid, p = _vli(hdr, p)
-            if fid != 0x21:
-                raise NotImplementedError(
-                    f"xz: filter {fid:#x} not supported (LZMA2 only)")
-            psize, p = _vli(hdr, p)
-            if psize != 1:
-                raise ValueError("xz: bad LZMA2 props size")
-            dict_prop = hdr[p]
-            if dict_prop > 40:
-                raise ValueError("xz: bad LZMA2 dict-size prop")
-            p += 1
-            if any(hdr[p:-4]):
-                raise ValueError("xz: nonzero block header padding")
-            pos += hdr_size
-
-            data_start = pos
-            block = lzma2_decompress(buf, pos, n)
-            # find consumed length: lzma2_decompress walks chunk
-            # frames; re-walk to get the exact end
-            pos = _lzma2_end(buf, data_start)
-            comp_len = pos - data_start
-            if comp_size is not None and comp_len != comp_size:
-                raise ValueError("xz: compressed size mismatch")
-            if unc_size is not None and len(block) != unc_size:
-                raise ValueError("xz: uncompressed size mismatch")
-            pad = (4 - (hdr_size + comp_len) % 4) % 4
-            if any(buf[pos:pos + pad]):
-                raise ValueError("xz: nonzero block padding")
-            pos += pad
-            _verify_check(check_kind, block,
-                          buf[pos:pos + check_len])
-            pos += check_len
-            unpadded = hdr_size + comp_len + check_len
-            records.append((unpadded, len(block)))
-            out.extend(block)
-
-        # index
-        index_start = pos
-        pos += 1                          # 0x00 indicator
-        nrec, pos = _vli(buf, pos)
-        if nrec != len(records):
-            raise ValueError("xz: index record count mismatch")
-        for want_up, want_unc in records:
-            up, pos = _vli(buf, pos)
-            unc, pos = _vli(buf, pos)
-            if (up, unc) != (want_up, want_unc):
-                raise ValueError("xz: index record mismatch")
-        pad = (4 - (pos - index_start) % 4) % 4
-        if any(buf[pos:pos + pad]):
-            raise ValueError("xz: nonzero index padding")
-        pos += pad
-        if zlib.crc32(buf[index_start:pos]) & 0xFFFFFFFF != \
-                int.from_bytes(buf[pos:pos + 4], "little"):
-            raise ValueError("xz: index CRC mismatch")
-        pos += 4
-        index_size = pos - index_start
-
-        # stream footer
-        footer = buf[pos:pos + 12]
-        if footer[10:12] != _FOOTER_MAGIC:
-            raise ValueError("xz: bad footer magic")
-        if zlib.crc32(footer[4:10]) & 0xFFFFFFFF != int.from_bytes(
-                footer[0:4], "little"):
-            raise ValueError("xz: footer CRC mismatch")
-        backward = (int.from_bytes(footer[4:8], "little") + 1) * 4
-        if backward != index_size:
-            raise ValueError("xz: footer backward-size mismatch")
-        if footer[8:10] != flags:
-            raise ValueError("xz: footer flags mismatch")
-        pos += 12
-    return bytes(out)
-
-
-def _lzma2_end(buf: bytes, pos: int) -> int:
-    """Walk LZMA2 chunk frames without decoding to find the byte after
-    the 0x00 end-of-stream control."""
-    while True:
-        c = buf[pos]
-        pos += 1
-        if c == 0x00:
-            return pos
-        if c in (0x01, 0x02):
-            pos += 2 + int.from_bytes(buf[pos:pos + 2], "big") + 1
-            continue
-        if c < 0x80:
-            raise ValueError(f"lzma2: bad control byte {c:#x}")
-        packed = int.from_bytes(buf[pos + 2:pos + 4], "big") + 1
-        pos += 4
-        if ((c >> 5) & 0x3) >= 2:
-            pos += 1                      # props byte
-        pos += packed
+    """All concatenated xz streams of `buf`, decoded; `ValueError` on
+    corrupt, truncated, misaligned-padding or trailing data."""
+    out = []
+    while buf:
+        d = lzma.LZMADecompressor(lzma.FORMAT_XZ)
+        try:
+            out.append(d.decompress(buf))
+        except lzma.LZMAError as e:
+            raise ValueError(f"xz: {e}") from e
+        if not d.eof:
+            raise ValueError("xz: truncated stream")
+        rest = d.unused_data
+        buf = rest.lstrip(b"\x00")
+        if (len(rest) - len(buf)) % 4:
+            raise ValueError("xz: stream padding not a multiple of 4")
+    return b"".join(out)

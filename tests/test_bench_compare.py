@@ -1,6 +1,8 @@
 """tools/bench_compare.py compares like with like: two records on the
 same core count are diffed as before; a record without a host fingerprint,
-or a pair on different core counts, exits 2 without a verdict."""
+or a pair on different core counts, exits 2 without a verdict. It reads
+bench.py's raw stdout, whose record line is followed by driver-tail
+lines."""
 
 from __future__ import annotations
 
@@ -64,3 +66,14 @@ def test_record_without_host_is_history(tmp_path, monkeypatch, capsys):
     assert _run(monkeypatch, old, new) == 2
     out = capsys.readouterr().out
     assert "history, not a baseline" in out and "REGRESSED" not in out
+
+
+def test_raw_bench_output_with_driver_tail_lines(tmp_path, monkeypatch):
+    host = {"cores": 4, "calib_s": 0.2}
+    old = _record(tmp_path, "old.json", 1.0, 1.1, host)
+    new = tmp_path / "raw.json"
+    tail = {"metric": "headline_queries_total", "value": 1.0,
+            "unit": "sec", "queries": {"q": 1.0}, "sf": 0.1,
+            "compact": True}       # bench.driver_tail_lines' shape
+    new.write_text(Path(old).read_text() + "\n" + json.dumps(tail) + "\n")
+    assert _run(monkeypatch, old, str(new)) == 0

@@ -1,7 +1,8 @@
-"""From-scratch bzip2 and xz/LZMA2 decoders pinned against the
-INDEPENDENT stdlib writers (bz2 / lzma), plus framing edge cases:
-multi-block bz2 streams, concatenated streams, stream padding, all xz
-check variants, truncation and corruption detection, and the
+"""The bzip2 and xz stream loops (`sources/bzip2.py`, `sources/xz.py`)
+over the stdlib C decoders, checked against the stdlib writers
+(bz2 / lzma) and on framing edge cases: multi-block bz2 streams,
+concatenated streams, stream padding, all xz check variants,
+truncation, trailing data and corruption detection, and the
 tar.bz2/tar.xz composite scans end to end."""
 
 from __future__ import annotations
@@ -137,15 +138,34 @@ def test_xz_check_field_verified():
         X.decompress(bytes(comp))
 
 
-def test_crc64_reference_vector():
-    # published CRC-64/XZ check value for "123456789"
-    assert X.crc64(b"123456789") == 0x995DC9BBDF1939FA
-
-
 def test_lzma1_alone_format_rejected():
     comp = std_lzma.compress(b"legacy", format=std_lzma.FORMAT_ALONE)
     with pytest.raises(ValueError):
         X.decompress(comp)
+
+
+_XZ = std_lzma.compress(b"payload " * 50)
+_BZ = std_bz2.compress(b"payload " * 50, 9)
+
+
+@pytest.mark.parametrize("codec, buf, want", [
+    (X, _XZ + b"\x00" * 4, b"payload " * 50),
+    (X, _XZ + b"\x00" * 3, ValueError),
+    (X, _XZ[:-5], ValueError),
+    (X, _XZ + b"garbage!", ValueError),
+    (B, _BZ + b"garbage!", ValueError),
+    (X, _XZ + _XZ[:-5], ValueError),
+    (B, _BZ + _BZ[:-5], ValueError),
+    (X, b"", b""),
+], ids=["xz-pad4", "xz-pad3", "xz-truncated", "xz-trailing",
+        "bz2-trailing", "xz-truncated-2nd", "bz2-truncated-2nd",
+        "xz-empty"])
+def test_decoder_edge_case_contract(codec, buf, want):
+    if want is ValueError:
+        with pytest.raises(ValueError):
+            codec.decompress(buf)
+    else:
+        assert codec.decompress(buf) == want
 
 
 # ------------------------------------------------- composite scans

@@ -24,8 +24,10 @@ import sys
 
 
 def load(path: str) -> dict:
+    # bench.py prints the full record first, then its compact
+    # driver-tail lines: read only the first JSON value.
     with open(path) as f:
-        d = json.load(f)
+        d, _ = json.JSONDecoder().raw_decode(f.read().lstrip())
     if "queries" in d:
         return d
     # driver BENCH_r{N}.json: the raw line survives truncated in "tail".
